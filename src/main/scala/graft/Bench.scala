@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times every SparkEntry query at the target
   * scale factor and prints the results as JSON on stdout: one ~13 KB
   * detail line (all per-query maps, "queries" last) followed by one
@@ -27,9 +25,7 @@ import org.apache.spark.sql.SparkSession
   * Env knobs (all optional):
   *  - SPARK_GRAFT_SF_DIR: table directory (default sf0.1)
   *  - SPARK_GRAFT_CPUS: local[N] parallelism AND shuffle partitions
-  *  - SPARK_GRAFT_BROADCAST_MB: autoBroadcastJoinThreshold in MB
-  *    (default 10 = Spark's default; the round-3 64 MB setting was
-  *    A/B'd in round 5 and showed no measurable win — BASELINE.md)
+  *    (default 32; see [[GraftSession]])
   *  - SPARK_GRAFT_ONLY: comma-separated query-name filter for
   *    single-query timing / A/B runs
   *  - SPARK_GRAFT_SLOPE: set 0 to skip the sf0.01 scale-slope
@@ -220,8 +216,7 @@ object Bench {
     val cpuStart = procCpuSec()
     val gcStart = gcSec()
     val blkioStart = blkioSec()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val broadcastMb = sys.env.getOrElse("SPARK_GRAFT_BROADCAST_MB", "10").toLong
+    val queries = GraftSession.selectQueries(sys.env.get("SPARK_GRAFT_ONLY"))
     // VERDICT r17 item 6: the sink queries (q128 shard export, q103/
     // q105/q114 partitioned writes, Hive-table ops) derive their
     // output path from the warehouse dir and rewrite it every rep —
@@ -237,35 +232,8 @@ object Bench {
       if (shm.isDirectory && shm.canWrite)
         Some(new java.io.File(shm, "graft_bench_warehouse").getAbsolutePath)
       else None
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // threshold A/B'd in BASELINE.md §bench-config: 64 MB vs the
-      // 10 MB default showed no measurable difference at sf0.1 (AQE
-      // re-plans small shuffle joins to broadcast at runtime), so the
-      // Spark default stands.
-      .config("spark.sql.autoBroadcastJoinThreshold", (broadcastMb * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-    val spark = benchWarehouse
-      .fold(builder)(w => builder.config("spark.sql.warehouse.dir", w))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.cpus(32), warehouse = benchWarehouse)
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val queries = SparkEntry.queries.filter {
-      case (name, _) => only.forall(_.contains(name))
-    }
-    // an empty/typo'd filter silently timing NOTHING would report a
-    // plausible-looking near-zero total — fail loudly instead
-    if (queries.isEmpty) {
-      System.err.println(s"SPARK_GRAFT_ONLY=${sys.env.getOrElse("SPARK_GRAFT_ONLY", "")} " +
-        s"matched none of ${SparkEntry.queries.size} registered queries")
-      spark.stop()
-      sys.exit(2)
-    }
     // full evaluation of every output column; result rows discarded
     def run(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()

@@ -19,9 +19,8 @@ import graft.functions.{CosineSimilarity, IntDotProduct}
   * be a scalar subquery (or constant), a shape only the SQL path can
   * express.
   *
-  * Install with
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.GraftExtensions`.
+  * Install with `spark.sql.extensions=graft.GraftExtensions` or the
+  * session builder's `withExtensions(new GraftExtensions)`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-dump tool for the optimization rounds: writes the
   * `.explain("formatted")` output of selected declared queries to
   * files, so plan-shape claims in OPTIMIZATION_r*.md are checkable
@@ -11,38 +9,20 @@ import org.apache.spark.sql.SparkSession
   *   - outDir: directory for <query>.txt files (created if absent)
   *   - query list: optional filter; default = every declared query
   *
-  * Session config mirrors Bench (local[$SPARK_GRAFT_CPUS], shuffle
-  * partitions = cpus, AQE on, 10 MB broadcast threshold) so the
-  * dumped INITIAL plans are the ones the bench actually starts from;
-  * AQE's runtime re-planning (broadcast promotion, coalescing) is by
-  * definition not visible in a static dump and is asserted by
+  * The session is Bench's ([[GraftSession]] at 32 cpus unless
+  * SPARK_GRAFT_CPUS says otherwise; only the tmpfs warehouse differs)
+  * so the dumped INITIAL plans are the ones the bench actually starts
+  * from; AQE's runtime re-planning (broadcast promotion, coalescing)
+  * is by definition not visible in a static dump and is asserted by
   * PlanSpec on executed plans instead. */
 object Plans {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: Plans <outDir> [query,query,...]")
     val outDir = new java.io.File(args(0))
     outDir.mkdirs()
-    val only: Option[Set[String]] =
-      if (args.length > 1) Some(args(1).split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      else None
+    val queries = GraftSession.selectQueries(args.lift(1))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (10L * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val queries = SparkEntry.queries.filter {
-      case (name, _) => only.forall(_.contains(name))
-    }
-    if (queries.isEmpty) {
-      System.err.println("no queries matched")
-      spark.stop(); sys.exit(2)
-    }
+    val spark = GraftSession(GraftSession.cpus(32))
     queries.foreach { case (name, fn) =>
       try {
         // queryExecution.explainString gives the same text explain()

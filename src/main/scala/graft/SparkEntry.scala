@@ -256,7 +256,7 @@ object SparkEntry {
     // local clustering coefficient: q171's triangle credits normalized
     // by the wedge count — clique-vs-hub comparable across degrees
     "q198_clustering_coef" -> ((s, d) => DedupOps.clusteringCoefficients(s, d)),
-    "q26_neardup_minhash"  -> ((s, d) => DedupOps.nearDupMinHash(s, d)),
+    "q26_neardup_minhash"  -> ((s, d) => DedupOps.nearDupMinHashMd5(s, d)),
     "q27_neardup_simhash"  -> ((s, d) => DedupOps.nearDupSimHash(s, d)),
     "q28_neardup_embedding"-> ((s, d) => DedupOps.nearDupEmbedding(s, d)),
     "q29_sim_topk"         -> ((s, d) => SimilarityOps.bruteForceTopK(s, d)),
@@ -1308,21 +1308,12 @@ object SparkEntry {
       |        i -> CAST(q.q_emb[i] AS DOUBLE) * CAST(q.q_emb[i] AS DOUBLE))))), 4) AS cos
       |  FROM embeddings e, q WHERE e.vec_id <> 0)""".stripMargin
 
-  /** Full md5-LSH replay shared by q75 (the md5 variant itself) and
-    * q26 (the xxhash production variant, gated on set EQUALITY with
-    * the md5-verified pairs). The equality gate is sound on this
-    * corpus because every planted near-dup pair verifies at J ≥ 0.9,
-    * where both S-curves (8 bands × 4 rows and 8 × 3) have recall
-    * > 0.999 — the candidate DRAWS differ, the verified SETS cannot,
-    * so a hash mismatch means a real recall/verify regression, not
-    * hash-draw luck. If a future regeneration plants borderline pairs
-    * (J in [0.5, 0.7), where the curves genuinely diverge), relax q26
-    * to the containment form and document it. Program-generated SQL
-    * mirroring nearDupMinHashMd5: one md5 per shingle, double-hashing
-    * h_i = (h1 + i*h2) mod p over two 60-bit big-endian hex windows of
-    * the digest (chars 17-31 and 1-15; DuckDB parses '0x...' straight
-    * to BIGINT, the exact twin of Spark's conv(substr(hex),16,10)),
-    * 8 three-row band buckets. */
+  /** Full md5-LSH replay shared by q75 and q26, which both run
+    * nearDupMinHashMd5. Program-generated SQL mirroring it: one md5
+    * per shingle, double-hashing h_i = (h1 + i*h2) mod p over two
+    * 60-bit big-endian hex windows of the digest (chars 17-31 and
+    * 1-15; DuckDB parses '0x...' straight to BIGINT, the exact twin
+    * of Spark's conv(substr(hex),16,10)), 8 three-row band buckets. */
   /** q216 oracle: the q190 ordered-fold device generalized — per
     * source, every Σx/Σx²/Σxy is a doc_id-ordered list_sum; each of
     * the 10 signal pairs emits one long-form row with a guarded
@@ -2584,8 +2575,7 @@ object SparkEntry {
     // keep-the-atypical window; both cosines rounded at 4 and every
     // DECISION compares the rounded value (q40 convention)
     "q162_semdedup" -> semDedupOracleSql,
-    // q26: the xxhash production LSH, gated on equality with the
-    // md5-twin replay (see minHashMd5OracleSql's soundness argument)
+    // q26: the md5 MinHash LSH (q75's operator), replayed end to end
     "q26_neardup_minhash" -> minHashMd5OracleSql,
     // q46: exact top-10 values + literal TRUE recall envelope (the
     // ANN side cannot be SQL-replayed; its recall feeds the flag)
@@ -4274,7 +4264,7 @@ object SparkEntry {
         |        l_extendedprice
         |      FROM lineitem WHERE l_suppkey < 5) t""".stripMargin,
     // shared program-generated md5-LSH replay (also gates q26 — see
-    // minHashMd5OracleSql's scaladoc for construction + soundness)
+    // minHashMd5OracleSql's scaladoc for its construction)
     "q75_minhash_md5" -> minHashMd5OracleSql,
     "q77_dedup_survivors" ->
       """SELECT d.doc_id, d.lang, d.source, length(d.text) AS n_chars_calc

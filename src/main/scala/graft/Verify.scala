@@ -1,36 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY: comma-separated query filter for local
     // single-query oracle checks (same contract as Bench); the driver
     // sets nothing and always dumps the full set
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
-    // an empty or typo'd filter matching nothing would dump zero
-    // parquet results and a local oracle run would pass vacuously —
-    // warn and exit nonzero instead of silently verifying nothing
-    if (selected.isEmpty) {
-      System.err.println(s"[verify] SPARK_GRAFT_ONLY=" +
-        s"${sys.env.getOrElse("SPARK_GRAFT_ONLY", "")} matched none of " +
-        s"${SparkEntry.queries.size} registered queries")
-      spark.stop()
-      sys.exit(2)
-    }
+    val selected = GraftSession.selectQueries(sys.env.get("SPARK_GRAFT_ONLY"))
+    val spark = GraftSession(GraftSession.cpus(4))
+    new java.io.File(outDir).mkdirs()
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

@@ -1477,12 +1477,10 @@ object DedupOps {
     * higher-order lambdas are interpreted in Spark and dominated
     * runtime at k=32). collect_set(xxhash64(s)) rebuilds the distinct
     * shingle-hash set in the same pass, so verification needs no
-    * second shuffle. The production xxhash variant ([[nearDupMinHash]])
-    * and the oracle-checkable md5 variant ([[nearDupMinHashMd5]]) both
-    * call straight into this method — only the (h1, h2) base-hash
-    * derivation differs — so their cost profiles are identical by
-    * construction (round 3 measured the old 32-coefficient
-    * universal-hash build 4× slower than this double-hash form). */
+    * second shuffle. [[nearDupMinHashMd5]] calls straight into this
+    * method with md5-derived (h1, h2) base hashes (round 3 measured
+    * the old 32-coefficient universal-hash build 4× slower than this
+    * double-hash form). */
   /** Banded signature rows — one row per (doc, band) with the doc's
     * xxhash64'd shingle set and the band's bucket string — the shared
     * signature build behind [[minHashLshPairs]] (within-corpus pairs)
@@ -1559,21 +1557,6 @@ object DedupOps {
       .filter(col("jaccard") >= threshold)
   }
 
-  /** Banded MinHash LSH candidate pairs + exact Jaccard verification.
-    * numHashes = bands * rowsPerBand; docs colliding in ANY band are
-    * candidates (the classic S-curve: bands=8 × rows=4 targets
-    * J≈0.5+). One explode (docs × bands), one shuffle on the band
-    * bucket, then exact verify per pair. Base hashes are two
-    * independent xxhash64 draws (the tuple-hash (s, salt) form), run
-    * through the shared double-hashing signature build. */
-  def nearDupMinHash(spark: SparkSession, dir: String,
-                     threshold: Double = 0.5, bands: Int = 8, rowsPerBand: Int = 4): DataFrame = {
-    val tok = shingleRows(spark, dir)
-      .withColumn("h1", pmod(xxhash64(col("s")), lit(MinHashP)))
-      .withColumn("h2", pmod(xxhash64(col("s"), lit(0x9e3779b9L)), lit(MinHashP)))
-    minHashLshPairs(tok, bands, rowsPerBand, threshold)
-  }
-
   /** Banded MinHash LSH in a fully cross-engine-expressible form. The
     * base hashes are two 60-bit big-endian windows of ONE md5 hex
     * digest (chars 1–15 and 17–31), each parsed with a single
@@ -1586,20 +1569,19 @@ object DedupOps {
     * arithmetic per hash. Every step exists identically in DuckDB
     * (('0x' || substr(md5(s), ...))::BIGINT), so signature build,
     * banding, candidate generation and exact Jaccard verify are all
-    * hash-checked by the oracle end to end, anchoring the xxhash-based
-    * production variant (which the oracle can only row-count) via the
-    * shared bucketPairs/jaccardVerify machinery. An earlier form used
-    * one salted md5 PER hash function — 24 digests per shingle row
-    * dominated the whole operator (~4s of a 4.4s runtime at sf0.1).
+    * hash-checked by the oracle end to end (q26 and q75 both run
+    * it). An earlier form used one salted md5 PER hash function — 24
+    * digests per shingle row dominated the whole operator (~4s of a
+    * 4.4s runtime at sf0.1).
     * Defaults bands=8 × rows=3: candidate probability ≈0.97 at j=0.7,
     * ≈6% for j≈0.2 noise pairs.
     *
-    * Scale: identical shape to nearDupMinHash — one explode, one
-    * groupBy(doc), one bucket shuffle. Verification carries xxhash64'd
-    * shingles: Jaccard over distinct sets is invariant under an
-    * (effectively) injective per-element hash, so the value matches
-    * the oracle's string-list Jaccard exactly (same argument as
-    * nearDupNgram) while moving longs instead of ~20-char strings. */
+    * Scale: one explode, one groupBy(doc), one bucket shuffle.
+    * Verification carries xxhash64'd shingles: Jaccard over distinct
+    * sets is invariant under an (effectively) injective per-element
+    * hash, so the value matches the oracle's string-list Jaccard
+    * exactly (same argument as nearDupNgram) while moving longs
+    * instead of ~20-char strings. */
   def nearDupMinHashMd5(spark: SparkSession, dir: String, threshold: Double = 0.5,
                         bands: Int = 8, rowsPerBand: Int = 3): DataFrame =
     minHashLshPairs(md5BaseHashes(shingleRows(spark, dir)), bands, rowsPerBand, threshold)

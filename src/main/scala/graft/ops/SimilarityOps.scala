@@ -966,7 +966,8 @@ object SimilarityOps {
     * (bounded query-time model state, the house IVF-probe rule), one
     * tiny argmax action per pick via lazy localCheckpoint (the q159
     * round shape). k and candK are query constants — plan size is
-    * static. */
+    * static. Fewer than k candidates yield one pick per candidate;
+    * none (a one-vector corpus, or no query vector) yields no rows. */
   def mmrRerank(spark: SparkSession, dir: String, queryId: Long = 0L,
                 k: Int = 10, candK: Int = 50, lam: Double = 0.7): DataFrame = {
     val e = Tables.embeddings(spark, dir)
@@ -1009,7 +1010,7 @@ object SimilarityOps {
       .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     val msim = scala.collection.mutable.Map.empty[Long, Double]
     var picks = Vector.empty[(Long, Long, Double, Double)] // rank, id, rel, mmr
-    for (r <- 1 to k) {
+    for (r <- 1 to math.min(k, candLocal.length)) {
       val chosen =
         if (r == 1) {
           val (id, rel) = candLocal.head // already (rel desc, vec_id asc)

@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
+import graft.GraftSession
 import graft.sources.WaterML
 
 /** One-shot generator for the hydro ORACLE FIXTURE: the flattened
@@ -30,13 +31,7 @@ object HydroFixture {
   val FixtureFile = "/root/repo/fixtures/hydro/timeseries.parquet"
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(4)
     import org.apache.spark.sql.functions._
     val ts = WaterML.timeSeriesOf(spark,
         "/root/repo/src/test/resources/waterml/*.json")

@@ -1,7 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.GraftSession
 
 /** Program entry for the hydro pipeline — the engine's analog of the
   * reference's `node harvest.js` run (harvest.js:146-149): read
@@ -14,15 +14,10 @@ import org.apache.spark.sql.functions._
 object HydroMain {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: HydroMain <watermlDir> [outDir]")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-hydro")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_MASTER is the deployment address; shuffle partitions
+    // still follow SPARK_GRAFT_CPUS (default 4)
+    val spark = GraftSession(GraftSession.cpus(4), appName = Some("graft-hydro"),
+      master = Some(sys.env.getOrElse("SPARK_MASTER", "local[4]")))
     val doc = HydroPipeline.run(spark, args(0))
       .select(to_json(struct(lit("FeatureCollection").as("type"), col("data"))))
       .head().getString(0)

@@ -79,4 +79,20 @@ class MMRSpec extends AnyFunSuite {
     assert(got.map(_._2).distinct.size == k)
     assert(got.map(_._1) == (1L to k.toLong))
   }
+
+  test("degenerate input: fewer candidates than k pick each once; a lone vector picks none") {
+    // vec_id 0 is the query; vector i is 1.0 on axis i mod 4, 0.5 elsewhere
+    def corpus(n: Int): String = {
+      val dir = java.nio.file.Files.createTempDirectory("graft-mmr").toString
+      (0 until n).map(i => (i.toLong, Array.tabulate(4)(j => if (j == i % 4) 1.0f else 0.5f), 0))
+        .toDF("vec_id", "embedding", "label")
+        .write.parquet(s"$dir/embeddings.parquet")
+      dir
+    }
+    assert(SimilarityOps.mmrRerank(spark, corpus(1), k = k).count() == 0L)
+    val picks = SimilarityOps.mmrRerank(spark, corpus(4), k = k)
+      .as[(Long, Long, Double, Double)].collect().toSeq
+    assert(picks.map(_._1) == Seq(1L, 2L, 3L))
+    assert(picks.map(_._2).sorted == Seq(1L, 2L, 3L))
+  }
 }

@@ -629,7 +629,6 @@ class PlanSpec extends AnyFunSuite {
     // carrying sh means the payload crept back into the banding.
     for ((name, df) <- Seq(
       "minhash-md5" -> DedupOps.nearDupMinHashMd5(spark, sf),
-      "minhash-xx" -> DedupOps.nearDupMinHash(spark, sf),
       "oph" -> DedupOps.nearDupOPH(spark, sf))) {
       val p = plan(df)
       val cl = p.linesIterator.filter(_.contains("collect_list")).toSeq

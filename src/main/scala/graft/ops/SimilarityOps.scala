@@ -731,7 +731,7 @@ object SimilarityOps {
                shortlist: Int = 50, topK: Int = 10): DataFrame = {
     import spark.implicits._
     val e = Tables.embeddings(spark, dir)
-    val dim = e.select(size(col("embedding"))).head().getInt(0) // 1-row probe
+    val dim = Tables.embeddingDim(spark, dir)
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
     val sub = dim / m
     // all m subspace codebooks in ONE grouped training loop (one
@@ -1445,6 +1445,8 @@ object SimilarityOps {
         .select(col("vec_id"), col("embedding")).collect()
         .map(r => (r.getLong(0),
           r.getSeq[Any](1).map(_.asInstanceOf[Number].doubleValue).toArray)).toSeq
+    require(cents.nonEmpty,
+      s"Lloyd training has no seed centroid: no embedding row has vec_id < $k")
     val dim = cents.head._2.length
     for (_ <- 1 until iters) {
       val sums = lloydAssign(spark, e, cents)

@@ -4,14 +4,14 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 import graft.sources.WaterML
 
 /** DataSource V2 TableProvider fetching USGS-shaped WaterML JSON over
@@ -133,25 +133,26 @@ object HttpObservations {
   }
 
   private class ObsReader(p: ObsPartition, schema: StructType)
-      extends PartitionReader[InternalRow] {
-    private val serializer =
-      ExpressionEncoder(RowEncoder.encoderFor(schema)).createSerializer()
+      extends TimeSeriesRows(schema) with PartitionReader[InternalRow] {
+    import TimeSeriesRows._
+
     private var remaining = p.states
-    private var rows: Iterator[Row] = Iterator.empty
+    private var nodes: Iterator[JsonNode] = Iterator.empty
+    private var node: JsonNode = _
     private var current: InternalRow = _
 
     override def next(): Boolean = {
-      while (!rows.hasNext && remaining.nonEmpty) {
-        rows = fetchPage(remaining.head)
+      while (!nodes.hasNext && remaining.nonEmpty) {
+        nodes = fetchPage(remaining.head)
         remaining = remaining.tail
       }
-      if (!rows.hasNext) false
-      else { current = serializer(rows.next()).copy(); true }
+      if (!nodes.hasNext) false
+      else { node = nodes.next(); current = row(); true }
     }
 
     /** GET one page and flatten its timeSeries array; null elements
       * are skipped exactly as the reference does (harvest.js:37). */
-    private def fetchPage(state: String): Iterator[Row] = {
+    private def fetchPage(state: String): Iterator[JsonNode] = {
       val url = p.template.replace("%s", state)
       val body =
         try {
@@ -167,20 +168,18 @@ object HttpObservations {
         }
       val ts = body.path("value").path("timeSeries")
       if (!ts.isArray) Iterator.empty
-      else ts.elements().asScala
-        .filterNot(n => n.isNull || n.isMissingNode)
-        .map(toRow)
+      else ts.elements().asScala.filterNot(n => n.isNull || n.isMissingNode)
     }
 
-    // --- JsonNode → Row along exactly the schema-declared paths.
+    // --- JsonNode → InternalRow along exactly the schema-declared paths.
     // Missing/null leaves become SQL NULLs and a missing object
     // becomes a NULL struct — the same shape Spark's own JSON
     // datasource produces for these files, so the DSv2 path and
     // WaterML.timeSeriesOf are row-for-row interchangeable (asserted
     // by HttpObservationsSpec).
 
-    private def strOrNull(n: JsonNode): String =
-      if (n.isMissingNode || n.isNull) null else n.asText()
+    private def strOrNull(n: JsonNode): UTF8String =
+      if (n.isMissingNode || n.isNull) null else str(n.asText())
     // NOT Jackson's asDouble(): that coerces unparseable text to 0.0
     // silently — a "n/a" latitude would become a plausible-looking
     // coordinate. Numeric tokens pass through; string-encoded numbers
@@ -197,38 +196,41 @@ object HttpObservations {
         }
       else throw new IllegalStateException(
         s"unexpected ${n.getNodeType} token in a double field")
-    private def objOrNull(n: JsonNode)(f: JsonNode => Row): Row =
+    private def objOrNull(n: JsonNode)(f: JsonNode => InternalRow): InternalRow =
       if (n.isMissingNode || n.isNull) null else f(n)
-    private def arrOrNull(n: JsonNode)(f: JsonNode => Any): Seq[Any] =
-      if (!n.isArray) null else n.elements().asScala.map(f).toSeq
+    private def arrOrNull(n: JsonNode)(f: JsonNode => Any): ArrayData =
+      if (!n.isArray) null else array(n.elements().asScala.map(f).toArray[Any])
+    private def codes(n: JsonNode): ArrayData =
+      arrOrNull(n)(c => code(strOrNull(c.path("value"))))
 
-    private def toRow(n: JsonNode): Row = {
-      val sourceInfo = objOrNull(n.path("sourceInfo")) { si =>
-        Row(
+    override protected def name(): UTF8String = strOrNull(node.path("name"))
+
+    override protected def sourceInfo(): InternalRow =
+      objOrNull(node.path("sourceInfo")) { si =>
+        TimeSeriesRows.sourceInfo(
           strOrNull(si.path("siteName")),
-          arrOrNull(si.path("siteCode"))(c => Row(strOrNull(c.path("value")))),
+          codes(si.path("siteCode")),
           objOrNull(si.path("geoLocation")) { gl =>
-            Row(objOrNull(gl.path("geogLocation")) { gg =>
-              Row(strOrNull(gg.path("srs")),
-                dblOrNull(gg.path("latitude")),
-                dblOrNull(gg.path("longitude")))
+            geoLocation(objOrNull(gl.path("geogLocation")) { gg =>
+              geogLocation(strOrNull(gg.path("srs")),
+                dblOrNull(gg.path("latitude")), dblOrNull(gg.path("longitude")))
             })
           })
       }
-      val variable = objOrNull(n.path("variable")) { v =>
-        Row(
-          arrOrNull(v.path("variableCode"))(c => Row(strOrNull(c.path("value")))),
-          objOrNull(v.path("unit"))(u => Row(strOrNull(u.path("unitAbbreviation")))),
+
+    override protected def variable(): InternalRow =
+      objOrNull(node.path("variable")) { v =>
+        TimeSeriesRows.variable(
+          codes(v.path("variableCode")),
+          objOrNull(v.path("unit"))(u => unit(strOrNull(u.path("unitAbbreviation")))),
           dblOrNull(v.path("noDataValue")))
       }
-      val values = arrOrNull(n.path("values")) { vs =>
-        Row(arrOrNull(vs.path("value"))(o =>
-          Row(strOrNull(o.path("value")), strOrNull(o.path("dateTime")))))
+
+    override protected def values(): ArrayData =
+      arrOrNull(node.path("values")) { vs =>
+        valueBlock(arrOrNull(vs.path("value"))(o =>
+          observation(strOrNull(o.path("value")), strOrNull(o.path("dateTime")))))
       }
-      val full = Row(strOrNull(n.path("name")), sourceInfo, variable, values)
-      val byName = WaterML.timeSeries.fieldNames.zip(full.toSeq).toMap
-      Row.fromSeq(schema.fieldNames.toSeq.map(byName))
-    }
 
     override def get(): InternalRow = current
     override def close(): Unit = ()

@@ -3,16 +3,16 @@ package graft.sources.v2
 import java.util
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 import graft.sources.WaterML
 
 /** DataSource V2 TableProvider generating deterministic synthetic
@@ -36,9 +36,13 @@ import graft.sources.WaterML
   * source parallelizes to any cluster width and any row count.
   * Top-level column pruning is honored via
   * SupportsPushDownRequiredColumns: unprojected top-level fields are
-  * neither generated nor serialized (nested pruning is declined by
+  * never built (nested pruning is declined by
   * re-expanding to the full field — readSchema() reports exactly what
-  * the reader produces, so Spark projects the rest).
+  * the reader produces, so Spark projects the rest). Rows are built
+  * as Catalyst rows directly ([[TimeSeriesRows]]), and the reading and
+  * timestamp text is printed from integers, so it does not depend on
+  * the JVM's default locale. `sites` must be >= 0 and `partitions`
+  * >= 1; anything else fails the scan with an IllegalArgumentException.
   *
   * Every row is a pure function of (site id, series index, seed):
   * rerunning a failed task regenerates identical data — the property
@@ -100,15 +104,18 @@ object SyntheticObservations {
         pushedCounts = agg.aggregateExpressions.length; true
       } else false
 
-    override def build(): Scan =
+    // validated here, so the count scan and the generating scan both see it
+    override def build(): Scan = {
+      val sites = options.getLong("sites", 100L)
+      val partitions = options.getInt("partitions", 4)
+      require(sites >= 0, s"SyntheticObservations option 'sites' must be >= 0, got $sites")
+      require(partitions >= 1,
+        s"SyntheticObservations option 'partitions' must be >= 1, got $partitions")
       if (pushedCounts > 0)
-        new ObsCountScan(
-          options.getLong("sites", 100L) * VariableCodes.length, pushedCounts)
-      else new ObsScan(
-        sites = options.getLong("sites", 100L),
-        partitions = options.getInt("partitions", 4),
-        seed = options.getLong("seed", 42L),
+        new ObsCountScan(sites * VariableCodes.length, pushedCounts)
+      else new ObsScan(sites, partitions, seed = options.getLong("seed", 42L),
         schema = required)
+    }
   }
 
   /** The O(1) answer to a completely-pushed COUNT(*): one partition,
@@ -166,9 +173,15 @@ object SyntheticObservations {
   }
 
   private class ObsReader(p: ObsPartition, schema: StructType)
-      extends PartitionReader[InternalRow] {
-    private val serializer =
-      ExpressionEncoder(RowEncoder.encoderFor(schema)).createSerializer()
+      extends TimeSeriesRows(schema) with PartitionReader[InternalRow] {
+    import TimeSeriesRows._
+
+    // per-partition constants, shared by every row and never mutated
+    private val srs = str("EPSG:4326")
+    private val variables = VariableCodes.map { case (c, u, _) =>
+      TimeSeriesRows.variable(array(Array[Any](code(str(c)))), unit(str(u)), -999999.0)
+    }.toArray
+
     private var site = p.startSite
     private var series = 0
     private var current: InternalRow = _
@@ -176,41 +189,55 @@ object SyntheticObservations {
     override def next(): Boolean =
       if (site >= p.endSite) false
       else {
-        current = serializer(generate(site, series)).copy()
+        current = row()
         series += 1
         if (series == VariableCodes.length) { series = 0; site += 1 }
         true
       }
 
-    /** One deterministic time series for (site, variable index) —
-      * mixes the seed through splitmix64-style multiplies so every
-      * field is a pure function of its coordinates. */
-    private def generate(siteId: Long, v: Int): Row = {
-      val (code, unit, _) = VariableCodes(v)
-      def h(x: Long): Long = {
-        var z = x + p.seed * 0x9E3779B97F4A7C15L
-        z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-        (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-      }
-      val siteCode = f"${10000000 + siteId}%08d"
-      val lat = 25.0 + math.abs(h(siteId)) % 250000 / 10000.0
-      val lon = -125.0 + math.abs(h(siteId + 1)) % 550000 / 10000.0
-      val reading = (math.abs(h(siteId * 2 + v)) % 100000) / 100.0
-      val minute = math.abs(h(siteId * 3 + v)) % 60
-      val full = Row(
-        s"USGS:$siteCode:$code:00000",
-        Row( // sourceInfo
-          s"SYNTHETIC GAUGE $siteId",
-          Seq(Row(siteCode)),
-          Row(Row("EPSG:4326", lat, lon))),
-        Row( // variable
-          Seq(Row(code)),
-          Row(unit),
-          -999999.0),
-        Seq(Row(Seq(Row(f"$reading%.2f", f"2026-01-01T10:$minute%02d:00.000-05:00")))))
-      val byName = WaterML.timeSeries.fieldNames.zip(full.toSeq).toMap
-      Row.fromSeq(schema.fieldNames.toSeq.map(byName))
+    // Every field is a pure function of (site id, variable index, seed):
+    // the seed mixes through splitmix64-style multiplies.
+    private def h(x: Long): Long = {
+      var z = x + p.seed * 0x9E3779B97F4A7C15L
+      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
+      (z ^ (z >>> 27)) * 0x94D049BB133111EBL
     }
+
+    // site ids are >= 0, so codes from 10000000 up are 8 digits wide
+    private def siteCode: String = (10000000L + site).toString
+
+    override protected def name(): UTF8String =
+      str("USGS:" + siteCode + ":" + VariableCodes(series)._1 + ":00000")
+
+    override protected def sourceInfo(): InternalRow = {
+      val lat = 25.0 + math.abs(h(site)) % 250000 / 10000.0
+      val lon = -125.0 + math.abs(h(site + 1)) % 550000 / 10000.0
+      TimeSeriesRows.sourceInfo(
+        str("SYNTHETIC GAUGE " + site),
+        array(Array[Any](code(str(siteCode)))),
+        geoLocation(geogLocation(srs, lat, lon)))
+    }
+
+    override protected def variable(): InternalRow = variables(series)
+
+    override protected def values(): ArrayData = {
+      val cents = math.abs(h(site * 2 + series)) % 100000
+      val minute = math.abs(h(site * 3 + series)) % 60
+      // cents / 100 with two decimals; the sign covers
+      // math.abs(Long.MinValue), which stays negative
+      val reading = new java.lang.StringBuilder(8)
+      if (cents < 0) reading.append('-')
+      reading.append(math.abs(cents) / 100).append('.')
+      twoDigits(reading, math.abs(cents) % 100)
+      val dateTime = new java.lang.StringBuilder(29).append("2026-01-01T10:")
+      twoDigits(dateTime, minute).append(":00.000-05:00")
+      array(Array[Any](valueBlock(array(Array[Any](
+        observation(str(reading.toString), str(dateTime.toString)))))))
+    }
+
+    /** Zero-pads 0..9 to two digits; any other value prints as is. */
+    private def twoDigits(sb: java.lang.StringBuilder, n: Long): java.lang.StringBuilder =
+      (if (n >= 0 && n < 10) sb.append('0') else sb).append(n)
 
     override def get(): InternalRow = current
     override def close(): Unit = ()

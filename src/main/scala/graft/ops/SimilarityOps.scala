@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.CosineSimilarity.cosineSimilarity
@@ -1393,8 +1393,7 @@ object SimilarityOps {
     var cents: Seq[(Long, Long, Array[Double])] =
       e.filter(col("vec_id") < k).orderBy(col("g"), col("vec_id"))
         .select(col("g"), col("vec_id"), col("embedding")).collect()
-        .map(r => (r.getLong(0), r.getLong(1),
-          r.getSeq[Any](2).map(_.asInstanceOf[Number].doubleValue).toArray)).toSeq
+        .map(r => (r.getLong(0), r.getLong(1), seedVector(r, 2))).toSeq
     for (_ <- 1 until iters) {
       val sums = groupedAssign(spark, e, cents)
         .groupBy(col("g"), col("cluster"))
@@ -1428,6 +1427,15 @@ object SimilarityOps {
   }
 
 
+  /** A Lloyd seed's embedding (column `i`, preceded by its `vec_id`)
+    * as doubles; a null embedding fails by name rather than as a bare
+    * NullPointerException. */
+  private def seedVector(r: Row, i: Int): Array[Double] = {
+    require(!r.isNullAt(i),
+      s"Lloyd training seed vec_id ${r.getLong(i - 1)} has a null embedding")
+    r.getSeq[Any](i).map(_.asInstanceOf[Number].doubleValue).toArray
+  }
+
   /** The Lloyd training loop: seed from the first k vectors, `iters`
     * assignment passes with an update after each but the last; the
     * k×dim model is collected per round (bounded MODEL STATE, the
@@ -1443,8 +1451,7 @@ object SimilarityOps {
     var cents: Seq[(Long, Array[Double])] =
       e.filter(col("vec_id") < k).orderBy(col("vec_id"))
         .select(col("vec_id"), col("embedding")).collect()
-        .map(r => (r.getLong(0),
-          r.getSeq[Any](1).map(_.asInstanceOf[Number].doubleValue).toArray)).toSeq
+        .map(r => (r.getLong(0), seedVector(r, 1))).toSeq
     require(cents.nonEmpty,
       s"Lloyd training has no seed centroid: no embedding row has vec_id < $k")
     val dim = cents.head._2.length

@@ -33,14 +33,15 @@ import graft.sources.WaterML
   *    deterministic across runs.
   *
   * Scale notes (100 TB): the whole pipeline is one shuffle — the
-  * groupBy(siteCode) merge. The two variable branches are conditional
-  * aggregates inside that single shuffle, not two jobs re-reducing
-  * into shared state (mongodb.js:96-115), so there is no cross-job
-  * coordination and no second pass over the data. Collect-to-one is
-  * kept for reference parity but [[writeFeatureCollectionStreamed]] is
-  * the scale path — a distributed JSON-lines write instead of
-  * buffering every feature in one driver document (the reference's
-  * 16 MB BSON ceiling, mongodb.js:125-137).
+  * per-site merge on siteCode ([[SiteMerge]]). The two variable
+  * branches are two winner slots of that one fold, not two jobs
+  * re-reducing into shared state (mongodb.js:96-115), so there is no
+  * cross-job coordination and no second pass over the data.
+  * Collect-to-one is kept for reference parity but
+  * [[writeFeatureCollectionStreamed]] is the scale path — a
+  * distributed JSON-lines write instead of buffering every feature in
+  * one driver document (the reference's 16 MB BSON ceiling,
+  * mongodb.js:125-137).
   */
 object HydroPipeline {
 
@@ -99,7 +100,7 @@ object HydroPipeline {
   /** O9–O10: one variable branch — equality filter on the nested
     * variableCode (streamFlowMap/gageHeightMap, mapreduce.js:40-50).
     * Exposed for parity; [[mergeSites]] fuses both branches into its
-    * single aggregation so production plans never run two passes. */
+    * single fold so production plans never run two passes. */
   def byVariable(features: DataFrame, code: String): DataFrame =
     features.filter(
       arrHead(col("properties.variables")).getField("variableCode") === code)
@@ -107,8 +108,8 @@ object HydroPipeline {
   /** O11: the per-site merge — semantically a key-equi full outer join
     * of the two variable streams (mergeReduce, mapreduce.js:52-99 +
     * the shared `out:{reduce:'joined'}`, mongodb.js:96-115), expressed
-    * as ONE conditional aggregation: a single shuffle on siteCode,
-    * partial (map-side) aggregation included.
+    * as ONE per-site fold ([[SiteMerge]]): a single shuffle on
+    * siteCode, with a map-side partial fold before it.
     *
     * Decomposed as [[sitePartials]] → [[reduceStates]] →
     * [[finalizeState]]; the middle stage is associative + idempotent,
@@ -118,19 +119,22 @@ object HydroPipeline {
     finalizeState(reduceStates(sitePartials(features)))
 
   /** O11 stage 1: one mergeable state row per input feature — every
-    * aggregate input paired with the ordering key that will pick the
+    * merged value paired with the ordering key that will pick the
     * per-site winner. */
-  private def sitePartials(features: DataFrame): DataFrame = {
+  private[graft] def sitePartials(features: DataFrame): DataFrame = {
     val varCode = arrHead(col("properties.variables")).getField("variableCode")
     val var0 = arrHead(col("properties.variables"))
-    // min_by on a total ordering key instead of first(ignoreNulls):
-    // first() picks encounter order, which is only deterministic when
-    // a site has a single series per variable — with duplicates the
+    val isFlow = col("var0.variableCode") === StreamFlowCode
+    val isGage = col("var0.variableCode") === GageHeightCode
+    // The merge keeps the row with the smallest key (min_by) instead
+    // of the first one (first(ignoreNulls)): first() picks encounter
+    // order, which is only deterministic when a site has a single
+    // series per variable — with duplicates the
     // reference's last-writer-wins nondeterminism would leak back in.
     // The key is (series id, reading, timestamp), a total order even
     // for pathological feeds repeating a series id with different
-    // readings. min_by keys with a null ordering value are skipped,
-    // so the conditional keys select within each variable branch only.
+    // readings. Rows with a null key never win, so the conditional
+    // keys select within each variable branch only.
     // SOH (\u0001)-separated so the key is injective: an empty
     // separator would let distinct (value, timeStamp) pairs
     // concatenate equal ("1"+"23" vs "12"+"3") and reintroduce a
@@ -144,7 +148,7 @@ object HydroPipeline {
       // feed can redeliver a series id with identical (value,
       // timeStamp) but revised sourceInfo (a geolocation correction
       // between fetches) or a revised variable unit/noData sentinel;
-      // without the tail those rows tie and min_by picks by partition
+      // without the tail those rows tie and the merge picks by partition
       // encounter order — silently breaking the order-independence
       // this key exists to provide. The hash covers every surviving
       // column NOT already in the key head: the four metadata fields
@@ -180,14 +184,10 @@ object HydroPipeline {
       // guard: empty-obs features carry a null code, and null
       // isin(...) is filtered.
       .filter(varCode.isin(StreamFlowCode, GageHeightCode))
-      // Pre-project every aggregate input to a plain attribute before
-      // the groupBy: min_by over when()-derived keys sharing
-      // subexpressions trips a janino scope bug in HashAggregate
-      // codegen ("isNull_N is not an rvalue") and the whole aggregate
-      // silently falls back to interpreted eval. With attribute-only
-      // children the aggregate stays inside WholeStageCodegen; the
-      // projection fuses into the preceding narrow stage (no extra
-      // pass over the data).
+      // ord_key is built once per row: project it and var0 to
+      // attributes first, then derive both branch keys from the
+      // attribute (the two projections stay separate: each attribute
+      // is read more than once and neither expression is cheap).
       .select(
         col("properties.siteCode").as("siteCode"),
         col("geometry"),
@@ -195,10 +195,14 @@ object HydroPipeline {
         col("properties.site").as("site"),
         col("properties.srs").as("srs"),
         ordKey.as("ord_key"),
-        when(varCode === StreamFlowCode, var0).as("flow_var"),
-        when(varCode === StreamFlowCode, ordKey).as("flow_key"),
-        when(varCode === GageHeightCode, var0).as("gage_var"),
-        when(varCode === GageHeightCode, ordKey).as("gage_key"))
+        var0.as("var0"))
+      .select(
+        col("siteCode"), col("geometry"), col("record"), col("site"), col("srs"),
+        col("ord_key"),
+        when(isFlow, col("var0")).as("flow_var"),
+        when(isFlow, col("ord_key")).as("flow_key"),
+        when(isGage, col("var0")).as("gage_var"),
+        when(isGage, col("ord_key")).as("gage_key"))
   }
 
   /** O11 stage 2: reduce state rows to one per site, KEEPING the
@@ -206,23 +210,11 @@ object HydroPipeline {
     * and raw partials and reduced states share one schema, the
     * reduction is associative and idempotent: any mix of
     * already-reduced states and fresh partials reduces to exactly the
-    * one-shot aggregation over all underlying features. (The
+    * one-shot merge over all underlying features. (The
     * reference's re-reduce is neither: re-running it throws,
-    * mapreduce.js:62-63.) One shuffle on siteCode with map-side
-    * partial aggregation. */
-  private def reduceStates(state: DataFrame): DataFrame =
-    state
-      .groupBy(col("siteCode"))
-      .agg(
-        min_by(col("geometry"), col("ord_key")).as("geometry"),
-        min_by(col("record"), col("ord_key")).as("record"),
-        min_by(col("site"), col("ord_key")).as("site"),
-        min_by(col("srs"), col("ord_key")).as("srs"),
-        min(col("ord_key")).as("ord_key"),
-        min_by(col("flow_var"), col("flow_key")).as("flow_var"),
-        min(col("flow_key")).as("flow_key"),
-        min_by(col("gage_var"), col("gage_key")).as("gage_var"),
-        min(col("gage_key")).as("gage_key"))
+    * mapreduce.js:62-63.) [[SiteMerge]] runs it as a partial fold per
+    * input partition, one shuffle on siteCode, and a final fold. */
+  private def reduceStates(state: DataFrame): DataFrame = SiteMerge(state)
 
   /** O11 stage 3: project the mergeable state to the published merged
     * shape (drops the ordering keys). Public because it is the read
@@ -274,7 +266,7 @@ object HydroPipeline {
     * directories written by an older build
     * mix old- and new-format keys on re-reduce: winner selection
     * stays deterministic (any total order on strings is), but the
-    * "equals the one-shot aggregation over all features" invariant
+    * "equals the one-shot merge over all features" invariant
     * only holds within one format generation. After upgrading,
     * rebuild the state once from the underlying features (or accept
     * that pre-upgrade winners were chosen under the old order). */

@@ -445,18 +445,24 @@ class PlanSpec extends AnyFunSuite {
     assert(p.linesIterator.count(_.contains("Join type:")) == 1, p)
   }
 
-  test("hydro merge: single shuffle, codegen'd aggregate (no ObjectHashAggregate)") {
+  test("hydro merge: one exchange between the two SiteMerge folds, no aggregate") {
     val feats = graft.pipeline.HydroPipeline.toFeatures(
       graft.sources.WaterML.timeSeriesOf(spark, "src/test/resources/waterml"))
     val df = graft.pipeline.HydroPipeline.mergeSites(feats)
-    // simple mode prints one line per operator (AQE hides the physical
-    // tree from executedPlan.collect before execution)
+    // simple mode prints one line per operator, parents above children
+    // (AQE hides the physical tree from executedPlan.collect before
+    // execution)
     val simple = df.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("simple"))
-    assert(simple.linesIterator.count(_.contains("Exchange")) == 1,
-      "merge must shuffle exactly once")
-    assert(!plan(df).contains("ObjectHashAggregate"),
-      "min_by merge fell out of codegen aggregation")
+    val lines = simple.linesIterator.toSeq
+    assert(lines.count(_.contains("Exchange")) == 1, s"merge must shuffle exactly once:\n$simple")
+    for (agg <- Seq("SortAggregate", "ObjectHashAggregate", "HashAggregate"))
+      assert(!simple.contains(agg), s"the merge planned a $agg:\n$simple")
+    val exchange = lines.indexWhere(_.contains("Exchange"))
+    val partial = lines.indexWhere(_.contains("SiteMerge partial"))
+    val folded = lines.indexWhere(_.contains("SiteMerge final"))
+    assert(folded >= 0 && folded < exchange, s"no final fold above the exchange:\n$simple")
+    assert(partial > exchange, s"no partial fold below the exchange:\n$simple")
   }
 
   test("q182: weighted sums are a codegen'd hash aggregation (no ObjectHashAggregate)") {

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.TextNorm
+import graft.functions.{ShingleSignature, TextNorm}
 import graft.functions.CosineSimilarity.cosineSimilarity
 
 /** Deduplication operators for LLM-data pipelines (SURVEY.md §2c):
@@ -62,14 +62,11 @@ object DedupOps {
     * interpreted and dominated near-dup runtime (~1ms/doc). The
     * window's doc_id shuffle is reused verbatim by the downstream
     * per-doc aggregation, so this costs no extra exchange. */
-  private def shingleRows(spark: SparkSession, dir: String): DataFrame =
-    shingleRowsOf(Tables.documents(spark, dir))
-
-  private def shingleRowsOf(docs: DataFrame): DataFrame = {
+  private def shingleRows(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val words = TextNorm.words(col("text"))
     val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    docs
+    Tables.documents(spark, dir)
       // spread BEFORE the 50x explode: a small documents file is one
       // input split, so without this the entire shingle stage runs in
       // a single task; hashing by doc_id also pre-satisfies the
@@ -1463,88 +1460,71 @@ object DedupOps {
   // MinHash + LSH near-dup
   // ---------------------------------------------------------------
 
-  private val MinHashP = 2147483647L // Mersenne prime 2^31-1
-
-  /** Shared banded-LSH tail for the MinHash variants: a
-    * Kirsch-Mitzenmacher double-hashing signature build
-    * h_i = (h1 + i·h2) mod p over two base-hash columns of the
-    * (doc_id, s, h1, h2) shingle rows, band buckets via concat_ws,
-    * one bucket shuffle, exact Jaccard verify.
-    *
-    * Explode-then-aggregate keeps everything codegen'd: one row per
-    * (doc, shingle), k pure-long-arithmetic hashes per row, k
-    * min-aggregates per doc with map-side partial aggregation (array
-    * higher-order lambdas are interpreted in Spark and dominated
-    * runtime at k=32). collect_set(xxhash64(s)) rebuilds the distinct
-    * shingle-hash set in the same pass, so verification needs no
-    * second shuffle. [[nearDupMinHashMd5]] calls straight into this
-    * method with md5-derived (h1, h2) base hashes (round 3 measured
-    * the old 32-coefficient universal-hash build 4× slower than this
-    * double-hash form). */
-  /** Banded signature rows — one row per (doc, band) with the doc's
-    * xxhash64'd shingle set and the band's bucket string — the shared
-    * signature build behind [[minHashLshPairs]] (within-corpus pairs)
-    * and [[nearDupAdmissionVerdicts]] (batch-vs-corpus probe). `tok`
-    * must carry (doc_id, s, h1, h2). */
-  private def bandedRows(tok: DataFrame, bands: Int, rowsPerBand: Int): DataFrame = {
-    val k = bands * rowsPerBand
-    val keyed = tok.groupBy(col("doc_id")).agg(
-      collect_set(xxhash64(col("s"))).as("sh"), // 64-bit shingle hashes for exact-Jaccard verify
-      (0 until k).map(i =>
-        min(pmod(col("h1") + lit(i.toLong) * col("h2"), lit(MinHashP))).as(s"m$i")): _*)
-    keyed.select(
-      col("doc_id"), col("sh"),
-      posexplode(array((0 until bands).map { bd =>
-        concat_ws(",",
-          (0 until rowsPerBand).map(r => col(s"m${bd * rowsPerBand + r}")): _*)
-      }: _*)))
-      .select(col("doc_id"), col("sh"), col("pos").as("band"), col("col").as("bucket"))
+  /** Per-document signature rows (doc_id, sh, m0..m{k-1}) of a
+    * (doc_id, text) frame: the [[ShingleSignature]] kernel over the
+    * normalized words — `oph` bin minima or k double-hash minima, plus
+    * the doc's xxhash64 shingle set — computed row by row in the
+    * scan's own tasks, with no shingle explode, exchange, window or
+    * per-doc aggregate. Docs with null text have no shingles and no
+    * row. One row per input row: doc_id is the documents key. */
+  private[graft] def signatureRows(docs: DataFrame, oph: Boolean, k: Int): DataFrame = {
+    val words = TextNorm.words(col("text"))
+    val sig =
+      if (oph) ShingleSignature.ophSignature(words, k)
+      else ShingleSignature.minHashSignature(words, k)
+    docs.filter(col("text").isNotNull)
+      .select(col("doc_id"), sig.as("sig"))
+      .select(col("doc_id") +: col("sig.sh").as("sh") +:
+        (0 until k).map(i => col("sig.m").getItem(i).as(s"m$i")): _*)
   }
 
-  private def minHashLshPairs(tok: DataFrame, bands: Int, rowsPerBand: Int,
-                              threshold: Double): DataFrame = {
-    // Banding previously rode [[bandedRows]], which carries each doc's
-    // full xxhash64 shingle set on every band row — the heaviest column
-    // duplicated ×bands through the band-bucket exchange and again per
-    // candidate collision (r20 clean run: q75 at 3.0 s vs q25's 0.9 s
-    // on the SAME shingle base — the delta was almost entirely these
-    // payload bytes). Guide §2.3: shuffle keys and metadata, not
-    // payloads. Band rows now carry (doc_id, n=|sh|) only; candidate
-    // pairs are size-ratio-prefiltered on that metadata, deduped
-    // across bands BEFORE any payload moves (verify once per pair,
-    // not once per collision), and the two set fetches join the
-    // pair-sized candidate list against the once-materialized keyed
-    // frame on doc_id (the prefixJoinNearDup shape). The checkpoint
-    // materializes doc-sized model rows (sh + k minima), shared by
-    // banding and both fetches. [[nearDupAdmissionVerdicts]] keeps the
-    // payload-carrying [[bandedRows]]: its batch side is broadcast
-    // (bounded) and the index side never repartitions — fetching sets
-    // post-hoc would add the corpus-side shuffle the admission
-    // contract exists to avoid.
-    val k = bands * rowsPerBand
-    val keyed = tok.groupBy(col("doc_id")).agg(
-      collect_set(xxhash64(col("s"))).as("sh"),
-      (0 until k).map(i =>
-        min(pmod(col("h1") + lit(i.toLong) * col("h2"), lit(MinHashP))).as(s"m$i")): _*)
-      .localCheckpoint(false)
-    val banded = keyed.select(
-      col("doc_id"), size(col("sh")).as("n"),
-      posexplode(array((0 until bands).map { bd =>
-        concat_ws(",",
-          (0 until rowsPerBand).map(r => col(s"m${bd * rowsPerBand + r}")): _*)
-      }: _*)))
+  /** Band bucket strings of double-hash signature rows: band bd joins
+    * minima bd·r … bd·r + r − 1 with commas. */
+  private def minHashBands(bands: Int, rowsPerBand: Int): Seq[Column] =
+    (0 until bands).map { bd =>
+      concat_ws(",", (0 until rowsPerBand).map(r => col(s"m${bd * rowsPerBand + r}")): _*)
+    }
+
+  /** Banded signature rows — one row per (doc, band) with the doc's
+    * xxhash64'd shingle set and the band's bucket string — the
+    * batch-vs-corpus probe's index shape ([[nearDupAdmissionVerdicts]]).
+    * `keyed` is [[signatureRows]] output. */
+  private def bandedRows(keyed: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
+    keyed.select(col("doc_id"), col("sh"), posexplode(array(minHashBands(bands, rowsPerBand): _*)))
+      .select(col("doc_id"), col("sh"), col("pos").as("band"), col("col").as("bucket"))
+
+  /** The shared LSH tail of the within-corpus MinHash variants (q26,
+    * q75, q243): band the signature rows into `buckets` (one bucket
+    * string per band), generate candidate pairs per bucket, verify
+    * exact Jaccard.
+    *
+    * Band rows carry (doc_id, n = |sh|) only, never the shingle set:
+    * carrying it duplicated the heaviest column ×bands through the
+    * bucket exchange and again per collision (r20 clean run: q75 at
+    * 3.0 s vs q25's 0.9 s on the same shingle base; guide §2.3:
+    * shuffle keys and metadata, not payloads). Candidate pairs are
+    * size-ratio-prefiltered on n (J ≤ min/max, so min < t·max can
+    * never pass), deduped across bands before any payload moves, and
+    * the two set fetches join the pair-sized candidate list against
+    * the signature rows on doc_id (the prefixJoinNearDup shape). The
+    * checkpoint materializes the doc-sized signature rows once for
+    * banding and both fetches. [[nearDupAdmissionVerdicts]] keeps the
+    * payload-carrying [[bandedRows]]: its batch side is broadcast
+    * (bounded) and the index side never repartitions. */
+  private def bandedPairs(keyed: DataFrame, buckets: Seq[Column],
+                          threshold: Double): DataFrame = {
+    val model = keyed.localCheckpoint(false)
+    val banded = model.select(
+      col("doc_id"), size(col("sh")).as("n"), posexplode(array(buckets: _*)))
       .select(col("doc_id"), col("n"), col("pos").as("band"), col("col").as("bucket"))
-    val buckets = banded.groupBy(col("band"), col("bucket"))
+    val members = banded.groupBy(col("band"), col("bucket"))
       .agg(collect_list(struct(col("doc_id"), col("n"))).as("members"))
-    val cand = bucketPairs(buckets)
-      // the jaccardVerify size-ratio prefilter, applied to the n
-      // metadata before the distinct and the payload fetch:
-      // J ≤ min/max, so min < t·max can never pass
+    val cand = bucketPairs(members)
       .filter(least(col("x.n"), col("y.n")).cast("double") >=
         greatest(col("x.n"), col("y.n")) * threshold)
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .distinct()
-    val sets = keyed.select(col("doc_id"), col("sh"))
+    val sets = model.select(col("doc_id"), col("sh"))
     val joined = cand
       .join(sets.select(col("doc_id").as("doc_a"), col("sh").as("sha")), "doc_a")
       .join(sets.select(col("doc_id").as("doc_b"), col("sh").as("shb")), "doc_b")
@@ -1559,24 +1539,21 @@ object DedupOps {
 
   /** Banded MinHash LSH in a fully cross-engine-expressible form. The
     * base hashes are two 60-bit big-endian windows of ONE md5 hex
-    * digest (chars 1–15 and 17–31), each parsed with a single
-    * conv(·,16,10) — 60 bits fits signed long, so no byte reversal
-    * and no decimal detour (the earlier little-endian
-    * md5_number_lower/_upper twin cost 16 substrings + decimal
-    * arithmetic per shingle row; this form halved the signature-build
-    * time). They seed k double-hashing functions h_i = (h1 + i·h2)
-    * mod p — the standard Kirsch-Mitzenmacher construction, pure long
-    * arithmetic per hash. Every step exists identically in DuckDB
+    * digest (chars 17–31 and 1–15; 60 bits fits a signed long), the
+    * seeds of k double-hashing functions h_i = (h1 + i·h2) mod p — the
+    * standard Kirsch-Mitzenmacher construction, pure long arithmetic
+    * per hash ([[ShingleSignature]] computes all k minima per doc).
+    * Every step exists identically in DuckDB
     * (('0x' || substr(md5(s), ...))::BIGINT), so signature build,
     * banding, candidate generation and exact Jaccard verify are all
     * hash-checked by the oracle end to end (q26 and q75 both run
     * it). An earlier form used one salted md5 PER hash function — 24
-    * digests per shingle row dominated the whole operator (~4s of a
+    * digests per shingle dominated the whole operator (~4s of a
     * 4.4s runtime at sf0.1).
     * Defaults bands=8 × rows=3: candidate probability ≈0.97 at j=0.7,
     * ≈6% for j≈0.2 noise pairs.
     *
-    * Scale: one explode, one groupBy(doc), one bucket shuffle.
+    * Scale: one per-doc signature map, one bucket shuffle.
     * Verification carries xxhash64'd shingles: Jaccard over distinct
     * sets is invariant under an (effectively) injective per-element
     * hash, so the value matches the oracle's string-list Jaccard
@@ -1584,17 +1561,9 @@ object DedupOps {
     * instead of ~20-char strings. */
   def nearDupMinHashMd5(spark: SparkSession, dir: String, threshold: Double = 0.5,
                         bands: Int = 8, rowsPerBand: Int = 3): DataFrame =
-    minHashLshPairs(md5BaseHashes(shingleRows(spark, dir)), bands, rowsPerBand, threshold)
-
-  /** The md5 double-hashing seeds (h1, h2) on shingle rows — shared by
-    * [[nearDupMinHashMd5]] and [[nearDupAdmissionMd5]] so their
-    * S-curves are identical by construction. */
-  private def md5BaseHashes(tok: DataFrame): DataFrame = tok
-    .withColumn("mhex", md5(col("s")))
-    .withColumn("h1",
-      pmod(conv(substring(col("mhex"), 17, 15), 16, 10).cast("long"), lit(MinHashP)))
-    .withColumn("h2",
-      pmod(conv(substring(col("mhex"), 1, 15), 16, 10).cast("long"), lit(MinHashP)))
+    bandedPairs(
+      signatureRows(Tables.documents(spark, dir), oph = false, bands * rowsPerBand),
+      minHashBands(bands, rowsPerBand), threshold)
 
   /** q249: winnowing fingerprint overlap (Schleimer, Wilkerson &
     * Aiken 2003 — the MOSS algorithm): slide a window of `w`
@@ -1674,10 +1643,9 @@ object DedupOps {
     * (Li, Owen & Zhang 2012) hashes each shingle ONCE and partitions
     * the hash space into `bins` residue classes — the per-bin minima
     * ARE the signature, so the signature build is O(|shingles|)
-    * instead of O(k·|shingles|): same one-explode/one-groupBy shape,
-    * 1/k-th the hash arithmetic and the same map-side-combined
-    * shuffle. Empty bins (short docs) are filled by ROTATION
-    * densification (Shrivastava & Li 2014): bin i borrows the first
+    * instead of O(k·|shingles|): the same per-doc kernel
+    * ([[ShingleSignature]]) with 1/k-th the hash arithmetic. Empty
+    * bins (short docs) are filled by ROTATION densification (Shrivastava & Li 2014): bin i borrows the first
     * non-empty bin at i, i+1, … (mod bins) — a plain coalesce chain,
     * identical on both engines. Signatures band into `bands` buckets
     * of bins/bands values; docs colliding in any band are candidates,
@@ -1685,8 +1653,8 @@ object DedupOps {
     * [[jaccardVerify]] machinery as the whole near-dup family, so the
     * output contract matches q26 row for row where both fire.
     *
-    * The base hash is the md5 60-bit window (the [[md5BaseHashes]] h1
-    * construction), so signature build, densification, banding,
+    * The base hash is the md5 60-bit window (the [[nearDupMinHashMd5]]
+    * h1 construction), so signature build, densification, banding,
     * candidate generation and verification are ALL hash-checked by
     * the DuckDB oracle end to end; swap xxhash64 in for production.
     *
@@ -1703,46 +1671,12 @@ object DedupOps {
                                   bins: Int, bands: Int): DataFrame = {
     require(bins % bands == 0, "bands must evenly partition bins")
     val rowsPerBand = bins / bands
-    val tok = shingleRowsOf(docs)
-      .withColumn("h",
-        pmod(conv(substring(md5(col("s")), 17, 15), 16, 10).cast("long"), lit(MinHashP)))
-    // ONE aggregation: the doc's shingle-hash set (for exact verify)
-    // plus per-bin conditional minima — empty bins stay null
-    val keyed = tok.groupBy(col("doc_id")).agg(
-      collect_set(xxhash64(col("s"))).as("sh"),
-      (0 until bins).map(i =>
-        min(when(pmod(col("h"), lit(bins.toLong)) === i, col("h"))).as(s"m$i")): _*)
-      .localCheckpoint(false) // feeds banding AND both set fetches
     def densified(i: Int): Column =
       coalesce((0 until bins).map(j => col(s"m${(i + j) % bins}")): _*)
-    // band rows carry (doc_id, |sh|) metadata only — the shingle-set
-    // payload is fetched per deduped candidate pair, never duplicated
-    // ×bands through the bucket exchange (the minHashLshPairs
-    // restructure; guide §2.3)
-    val banded = keyed.select(col("doc_id"), size(col("sh")).as("n"),
-      posexplode(array((0 until bands).map { bd =>
-        concat_ws(",", (0 until rowsPerBand).map(r =>
-          densified(bd * rowsPerBand + r)): _*)
-      }: _*)))
-      .select(col("doc_id"), col("n"), col("pos").as("band"), col("col").as("bucket"))
-    val buckets = banded.groupBy(col("band"), col("bucket"))
-      .agg(collect_list(struct(col("doc_id"), col("n"))).as("members"))
-    val cand = bucketPairs(buckets)
-      .filter(least(col("x.n"), col("y.n")).cast("double") >=
-        greatest(col("x.n"), col("y.n")) * threshold)
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct()
-    val sets = keyed.select(col("doc_id"), col("sh"))
-    val joined = cand
-      .join(sets.select(col("doc_id").as("doc_a"), col("sh").as("sha")), "doc_a")
-      .join(sets.select(col("doc_id").as("doc_b"), col("sh").as("shb")), "doc_b")
-    val sa = size(col("sha"))
-    val sb = size(col("shb"))
-    val inter = size(array_intersect(col("sha"), col("shb")))
-    joined
-      .select(col("doc_a"), col("doc_b"),
-        round(inter.cast("double") / (sa + sb - inter), 4).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    bandedPairs(signatureRows(docs, oph = true, bins),
+      (0 until bands).map { bd =>
+        concat_ws(",", (0 until rowsPerBand).map(r => densified(bd * rowsPerBand + r)): _*)
+      }, threshold)
   }
 
   /** Near-dup ADMISSION: probe an arriving batch against the standing
@@ -1773,7 +1707,7 @@ object DedupOps {
     val docs = Tables.documents(spark, dir)
     val isBatch = pmod(col("doc_id"), lit(batchMod)) === batchRem
     def bandedOf(side: DataFrame) =
-      bandedRows(md5BaseHashes(shingleRowsOf(side)), bands, rowsPerBand)
+      bandedRows(signatureRows(side, oph = false, bands * rowsPerBand), bands, rowsPerBand)
     nearDupAdmissionVerdicts(
       docs.filter(isBatch).select(col("doc_id")),
       bandedOf(docs.filter(isBatch)),

@@ -1518,8 +1518,8 @@ object RelationalExt {
       val eff = if (base > 0) (base - rem) / base else 0.0
       (c, r6(base), r6(rem), r6(eff))
     }
-    rows.toDF("channel", "base_conv", "removed_conv", "removal_effect")
-      .orderBy(col("channel"))
+    DriverResults.sortedLocal(
+      rows.toDF("channel", "base_conv", "removed_conv", "removal_effect"), col("channel"))
   }
 
   /** q233: per-user behavioral predictability — Shannon entropy of
@@ -1725,6 +1725,10 @@ object RelationalExt {
       .orderBy(col("user_id"))
   }
 
+  /** Row bound of q256's collected (s, t) count matrix: 256 event
+    * types, squared. */
+  private[graft] val MaxTransitionCells: Int = 1 << 16
+
   /** q256: stationary distribution of the event-transition Markov
     * chain — the long-run attention share per event type, the
     * equilibrium the q133 matrix implies but never states: q133 says
@@ -1773,8 +1777,8 @@ object RelationalExt {
       .groupBy(col("event_type").as("s"), col("t"))
       .agg(count(lit(1)).as("c"))
     // types²-bounded model state — the q237 collect rule
-    val cells = tc.collect().map(r =>
-      (r.getString(0), r.getString(1), r.getLong(2)))
+    val cells = DriverResults.collectBounded(tc, MaxTransitionCells, "q256 transition counts")
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
     val states = cells.map(_._1).distinct.sorted // states WITH outgoing mass
     val idx = states.zipWithIndex.toMap
     val k = states.length
@@ -1801,9 +1805,9 @@ object RelationalExt {
       pi = nx.map(quant)
     }
     import spark.implicits._
-    states.indices.map(i => (states(i), rt(i), pi(i)))
-      .toDF("event_type", "n_out", "pi")
-      .orderBy(col("event_type"))
+    DriverResults.sortedLocal(
+      states.indices.map(i => (states(i), rt(i), pi(i))).toDF("event_type", "n_out", "pi"),
+      col("event_type"))
   }
 
   /** q255: CUPED variance reduction (Deng et al. 2013 — the
@@ -2140,8 +2144,16 @@ object RelationalExt {
     * state (see the body comment; the in-plan form re-folded every
     * prefix with an interpreted HOF — O(H²) interpreted steps). */
   def ewmaRateSmoothing(spark: SparkSession, dir: String,
-                        spikeFactor: Double = 2.0): DataFrame = {
-    val hourly = Tables.events(spark, dir)
+                        spikeFactor: Double = 2.0): DataFrame =
+    ewmaOf(Tables.events(spark, dir), spikeFactor)
+
+  /** Row bound of q221's collected (type, hour) table: about 15
+    * type-years of hours. */
+  private[graft] val MaxHourlyRows: Int = 1 << 17
+
+  /** [[ewmaRateSmoothing]] over any (event_type, ts) frame. */
+  private[graft] def ewmaOf(events: DataFrame, spikeFactor: Double): DataFrame = {
+    val hourly = events
       .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hour"))
       .agg(count(lit(1)).as("n_events"))
     // The recurrence runs DRIVER-SIDE over the collected hourly table
@@ -2163,7 +2175,8 @@ object RelationalExt {
     // local relation re-declares the exact incoming type: the output
     // schema is bit-for-bit the old plan's.
     val hourType = hourly.schema("hour").dataType
-    val local = hourly.collect().map(r => (r.getString(0), r.get(1), r.getLong(2)))
+    val local = DriverResults.collectBounded(hourly, MaxHourlyRows, "q221 hourly event counts")
+      .map(r => (r.getString(0), r.get(1), r.getLong(2)))
     val hourOrd: Ordering[Any] =
       Ordering.fromLessThan((a, b) => a.asInstanceOf[Comparable[Any]].compareTo(b) < 0)
     val out = local.groupBy(_._1).toSeq.flatMap { case (tpe, rows) =>
@@ -2182,10 +2195,11 @@ object RelationalExt {
       StructField("n_events", LongType), StructField("ewma_raw", DoubleType),
       StructField("is_spike", BooleanType)))
     import scala.jdk.CollectionConverters._
-    spark.createDataFrame(out.asJava, schema)
-      .select(col("event_type"), col("hour"), col("n_events"),
-        round(col("ewma_raw"), 6).as("ewma"), col("is_spike"))
-      .orderBy(col("event_type"), col("hour"))
+    DriverResults.sortedLocal(
+      events.sparkSession.createDataFrame(out.asJava, schema)
+        .select(col("event_type"), col("hour"), col("n_events"),
+          round(col("ewma_raw"), 6).as("ewma"), col("is_spike")),
+      col("event_type"), col("hour"))
   }
 
   /** q246's streaming state: the distinct (user_id, day) activity

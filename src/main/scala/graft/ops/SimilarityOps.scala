@@ -1038,10 +1038,10 @@ object SimilarityOps {
       }
     }
     import spark.implicits._
-    picks.toDF("rank", "vec_id", "rel", "mmr")
-      .select(col("rank"), col("vec_id"), col("rel"),
-        round(col("mmr"), 6).as("mmr"))
-      .orderBy(col("rank"))
+    DriverResults.sortedLocal(
+      picks.toDF("rank", "vec_id", "rel", "mmr")
+        .select(col("rank"), col("vec_id"), col("rel"), round(col("mmr"), 6).as("mmr")),
+      col("rank"))
   }
 
   /** q169: Lloyd's k-means TRAINING loop (the real thing — q87/q162
@@ -1550,6 +1550,15 @@ object SimilarityOps {
   def kmeansRefresh(spark: SparkSession, dir: String, k: Int = 8,
                     iters: Int = 3): DataFrame = {
     import spark.implicits._
+    DriverResults.sortedLocal(
+      kmeansRefreshState(spark, dir, k, iters).toDF("cluster", "n_members", "centroid"),
+      col("cluster"))
+  }
+
+  /** The refreshed centroid state as (cluster, n_members, centroid)
+    * driver rows, cluster-ascending, centroids floor-rounded at 6. */
+  private def kmeansRefreshState(spark: SparkSession, dir: String, k: Int = 8,
+                                 iters: Int = 3): Seq[(Long, Long, Seq[Double])] = {
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val dim = Tables.embeddingDim(spark, dir)
     val total = e.agg(max(col("vec_id"))).head().getLong(0) + 1L
@@ -1562,8 +1571,7 @@ object SimilarityOps {
     }
     state.sortBy(_._1).map { case (cl, n, s) =>
       (cl, n, s.map(v => math.floor(v / n * 1e6 + 0.5) / 1e6).toSeq)
-    }.toDF("cluster", "n_members", "centroid")
-      .orderBy(col("cluster"))
+    }
   }
 
   /** q210 gate shape: [[kmeansRefresh]] with the centroid array
@@ -1571,14 +1579,16 @@ object SimilarityOps {
     * — the q150 flatten convention, because the driver's oracle
     * compare sorts rows by every column and an array<double> cell is
     * unsortable there (CORRECTNESS_r17 recorded q210 as `err`).
-    * Same state, same floor-form rounding; shape only. */
+    * Same state, same floor-form rounding; shape only. The rows are
+    * flattened from the driver-side state, not from a DataFrame. */
   def kmeansRefreshRows(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    kmeansRefresh(spark, dir).as[(Long, Long, Seq[Double])]
-      .flatMap { case (cl, n, c) =>
-        c.iterator.zipWithIndex.map { case (v, i) => (cl, n, i.toLong, v) }
-      }.toDF("cluster", "n_members", "dim", "c_v")
-      .orderBy(col("cluster"), col("dim"))
+    val rows = for {
+      (cl, n, c) <- kmeansRefreshState(spark, dir)
+      (v, i) <- c.zipWithIndex
+    } yield (cl, n, i.toLong, v)
+    DriverResults.sortedLocal(rows.toDF("cluster", "n_members", "dim", "c_v"),
+      col("cluster"), col("dim"))
   }
 
   /** q184: IVF with a LEARNED codebook, end to end — q169's Lloyd
@@ -1966,13 +1976,13 @@ object SimilarityOps {
     val trace = (0 until dim).map(i => m(i)(i)).sum
     val explained = lambda / trace.toDouble
     import spark.implicits._
-    rows.indices.map { i =>
+    val out = rows.indices.map { i =>
       (i.toLong,
         math.floor(sq(i).toDouble / (n * 1000000.0) * 1e6 + 0.5) / 1e6,
         v(i),
         math.floor(explained * 1e6 + 0.5) / 1e6)
     }.toDF("dim", "mu", "pc1", "explained")
-      .orderBy(col("dim"))
+    DriverResults.sortedLocal(out, col("dim"))
   }
 
   /** q242: DBSCAN-style density clustering over the embedding corpus —

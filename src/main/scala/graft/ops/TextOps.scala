@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.TextNorm
@@ -1359,7 +1359,7 @@ object TextOps {
     * ordered fold — at w·qint ≤ 9·10⁶ the long headroom holds to
     * ~10¹¹ rows per source; beyond that the sums switch to decimal
     * (the q191 device). The B replicate means are sorted and reduced
-    * in sorted order (array_sort + fold ↔ list_sort + list_sum), so
+    * in sorted order (driver sort + fold ↔ list_sort + list_sum), so
     * the CI bounds and the bootstrap se are fixed IEEE trees. A
     * replicate that draws zero total weight (P ≈ e⁻ⁿ, impossible in
     * practice) reads mean 0.0 on both engines rather than relying on
@@ -1369,10 +1369,18 @@ object TextOps {
     * replicate explode (B modmuls per row, combined map-side to
     * S×B partial rows per partition before the exchange), one
     * (source, b)-keyed aggregation; everything after is
-    * sources-sized. */
+    * sources-sized and runs on the driver. */
   def qualityBootstrap(spark: SparkSession, dir: String,
-                       reps: Int = 64): DataFrame = {
-    val base = Tables.documents(spark, dir)
+                       reps: Int = 64): DataFrame =
+    qualityBootstrapOf(Tables.documents(spark, dir), reps)
+
+  /** Source bound of q217's driver-side rollup, which collects
+    * sources × reps rows. */
+  private[graft] val MaxBootstrapSources: Int = 1024
+
+  /** [[qualityBootstrap]] over any documents-shaped frame. */
+  private[graft] def qualityBootstrapOf(docs: DataFrame, reps: Int): DataFrame = {
+    val base = docs
       .select(col("source"),
         floor(qualityRawCol * 1e6 + lit(0.5)).cast("long").as("qint"),
         md5(concat(lit("pb_"), col("doc_id").cast("string"))).as("mhex"))
@@ -1407,32 +1415,45 @@ object TextOps {
       .groupBy(col("source"), col("b"))
       .agg(sum(col("w")).as("sw"), sum(col("w") * col("qint")).as("swq"),
         count(lit(1)).as("nb"), sum(col("qint")).as("sqb"))
-    val meanB = when(col("sw") === 0L, lit(0.0d))
-      .otherwise(col("swq").cast("double") / (col("sw").cast("double") * lit(1e6)))
-    // per-source rollup: every b-row carries the identical n_docs/sq
-    // (each replicate sees every doc once), so max() recovers them
-    // without a second corpus pass; means sort ascending, so the
-    // collect_list order is irrelevant (array_sort of the same B
-    // doubles the wide form sorted)
-    val grouped = perRep.groupBy(col("source"))
-      .agg(max(col("nb")).as("n"), max(col("sqb")).as("sq"),
-        array_sort(collect_list(meanB)).as("ms"))
+    // Per-source rollup, DRIVER-SIDE over the collected (source, b)
+    // rows — sources × B rows of bounded model state; rolling it up in
+    // the plan cost a second exchange, interpreted array HOFs and a
+    // three-job global sort for a sources-sized table. The fold is the
+    // oracle's IEEE op sequence: per-replicate mean swq / (sw · 1e6)
+    // (0.0 for a zero-weight replicate), the B means sorted ascending
+    // and folded from 0.0 (Σm and Σm²), the se as
+    // sqrt(max(0, (Σm² − (Σm)²/B) / (B − 1))), and floor-form rounding
+    // at 6 through a long, as Spark's floor rounds. Every b-row of a
+    // source carries the identical n_docs/sq (each replicate sees every
+    // doc once), and every source has all B replicates. qint is never
+    // null: the blend's least() terms skip null operands.
+    val rows = DriverResults.collectBounded(
+      perRep.select(col("source"), col("sw"), col("swq"), col("nb"), col("sqb")),
+      MaxBootstrapSources * reps, "q217 per-source bootstrap rollup")
     val loIdx = math.ceil(0.025 * reps).toInt.max(1)
     val hiIdx = math.ceil(0.975 * reps).toInt
-    val sm = aggregate(col("ms"), lit(0.0d), (a, x) => a + x)
-    val smm = aggregate(col("ms"), lit(0.0d), (a, x) => a + x * x)
-    val nB = lit(reps.toDouble)
-    val se = sqrt(greatest(lit(0.0d), (smm - sm * sm / nB) / (nB - lit(1.0))))
-    grouped
-      .select(col("source"), col("n").as("n_docs"),
-        roundAt(col("sq").cast("double") /
-          (col("n").cast("double") * lit(1e6)), 6).as("mean_q"),
-        col("ms"))
-      .select(col("source"), col("n_docs"), col("mean_q"),
-        roundAt(element_at(col("ms"), loIdx), 6).as("boot_lo"),
-        roundAt(element_at(col("ms"), hiIdx), 6).as("boot_hi"),
-        roundAt(se, 6).as("boot_se"))
-      .orderBy(col("source"))
+    def r6(x: Double): Double = math.floor(x * 1e6 + 0.5).toLong / 1e6
+    val out = rows.toSeq.groupBy(_.getString(0)).toSeq.map { case (source, rs) =>
+      val n = rs.map(_.getLong(3)).max
+      val sq = rs.map(_.getLong(4)).max
+      val ms = rs.map { r =>
+        if (r.getLong(1) == 0L) 0.0d
+        else r.getLong(2).toDouble / (r.getLong(1).toDouble * 1e6)
+      }.sorted
+      val sm = ms.foldLeft(0.0d)(_ + _)
+      val smm = ms.foldLeft(0.0d)((a, x) => a + x * x)
+      val nB = reps.toDouble
+      val se = math.sqrt(math.max(0.0d, (smm - sm * sm / nB) / (nB - 1.0d)))
+      Row(source, n, r6(sq.toDouble / (n.toDouble * 1e6)),
+        r6(ms(loIdx - 1)), r6(ms(hiIdx - 1)), r6(se))
+    }
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("source", StringType), StructField("n_docs", LongType),
+      StructField("mean_q", DoubleType), StructField("boot_lo", DoubleType),
+      StructField("boot_hi", DoubleType), StructField("boot_se", DoubleType)))
+    import scala.jdk.CollectionConverters._
+    DriverResults.sortedLocal(docs.sparkSession.createDataFrame(out.asJava, schema), col("source"))
   }
 
   /** q204: decile lift table for the hashed-feature linear quality
@@ -2295,8 +2316,8 @@ object TextOps {
     val docs = Tables.documents(spark, dir)
     val (learned, _) = bpeLearnState(spark, docs, merges)
     import spark.implicits._
-    learned.toDF("merge_rank", "left_sym", "right_sym", "pair_count")
-      .orderBy(col("merge_rank"))
+    DriverResults.sortedLocal(
+      learned.toDF("merge_rank", "left_sym", "right_sym", "pair_count"), col("merge_rank"))
   }
 
   /** q160 — tokenize the corpus with the learned merges: per document,

@@ -445,6 +445,33 @@ class PlanSpec extends AnyFunSuite {
     assert(p.linesIterator.count(_.contains("Join type:")) == 1, p)
   }
 
+  test("driver-finished q217, q221 and q256: no rangepartitioning exchange, a local result") {
+    for ((q, df) <- Seq("q217" -> TextOps.qualityBootstrap(spark, sf),
+        "q221" -> RelationalExt.ewmaRateSmoothing(spark, sf),
+        "q256" -> RelationalExt.stationaryDistribution(spark, sf))) {
+      val p = plan(df)
+      assert(!p.toLowerCase.contains("rangepartitioning"), s"$q plans a global sort:\n$p")
+      assert(p.contains("LocalTableScan"), s"$q is not a local result:\n$p")
+    }
+  }
+
+  test("near-dup signatures: a narrow per-doc map; q26/q75/q110/q243 plan no window or per-doc aggregate") {
+    // the signature rows themselves: scan → filter → kernel projection
+    for (oph <- Seq(true, false)) {
+      val p = plan(DedupOps.signatureRows(Tables.documents(spark, sf), oph, 16))
+      for (op <- Seq("Window", "Exchange", "Aggregate", "Generate", "Sort"))
+        assert(!p.contains(op), s"signature rows (oph=$oph) plan a $op:\n$p")
+      assert(p.contains("shinglesignature"), s"no signature kernel:\n$p")
+    }
+    val perDocKey = """Keys \[\d+\]: \[doc_id#""".r
+    for (q <- Seq("q26_neardup_minhash", "q75_minhash_md5", "q110_neardup_admission",
+        "q243_neardup_oph")) {
+      val p = plan(SparkEntry.queries(q)(spark, sf))
+      assert(!p.contains("Window"), s"$q plans a window:\n$p")
+      assert(perDocKey.findFirstIn(p).isEmpty, s"$q aggregates per doc_id:\n$p")
+    }
+  }
+
   test("hydro merge: one exchange between the two SiteMerge folds, no aggregate") {
     val feats = graft.pipeline.HydroPipeline.toFeatures(
       graft.sources.WaterML.timeSeriesOf(spark, "src/test/resources/waterml"))

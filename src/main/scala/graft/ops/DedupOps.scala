@@ -1502,27 +1502,27 @@ object DedupOps {
     * carrying it duplicated the heaviest column ×bands through the
     * bucket exchange and again per collision (r20 clean run: q75 at
     * 3.0 s vs q25's 0.9 s on the same shingle base; guide §2.3:
-    * shuffle keys and metadata, not payloads). Candidate pairs are
-    * size-ratio-prefiltered on n (J ≤ min/max, so min < t·max can
-    * never pass), deduped across bands before any payload moves, and
-    * the two set fetches join the pair-sized candidate list against
-    * the signature rows on doc_id (the prefixJoinNearDup shape). The
-    * checkpoint materializes the doc-sized signature rows once for
-    * banding and both fetches. [[nearDupAdmissionVerdicts]] keeps the
-    * payload-carrying [[bandedRows]]: its batch side is broadcast
-    * (bounded) and the index side never repartitions. */
+    * shuffle keys and metadata, not payloads). Candidate pairs come
+    * from [[bandPairs]]: the band rows self-joined on (band, bucket).
+    * They are size-ratio-prefiltered on n (J ≤ min/max, so
+    * min < t·max can never pass), deduped across bands before any
+    * payload moves, and the two set fetches join the pair-sized
+    * candidate list against the signature rows on doc_id (the
+    * prefixJoinNearDup shape). The checkpoint materializes the
+    * doc-sized signature rows once for banding and both fetches.
+    * [[nearDupAdmissionVerdicts]] keeps the payload-carrying
+    * [[bandedRows]]: its batch side is broadcast (bounded) and the
+    * index side never repartitions. */
   private def bandedPairs(keyed: DataFrame, buckets: Seq[Column],
                           threshold: Double): DataFrame = {
     val model = keyed.localCheckpoint(false)
     val banded = model.select(
       col("doc_id"), size(col("sh")).as("n"), posexplode(array(buckets: _*)))
       .select(col("doc_id"), col("n"), col("pos").as("band"), col("col").as("bucket"))
-    val members = banded.groupBy(col("band"), col("bucket"))
-      .agg(collect_list(struct(col("doc_id"), col("n"))).as("members"))
-    val cand = bucketPairs(members)
-      .filter(least(col("x.n"), col("y.n")).cast("double") >=
-        greatest(col("x.n"), col("y.n")) * threshold)
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
+    val cand = bandPairs(banded)
+      .filter(least(col("n_a"), col("n_b")).cast("double") >=
+        greatest(col("n_a"), col("n_b")) * threshold)
+      .select(col("doc_a"), col("doc_b"))
       .distinct()
     val sets = model.select(col("doc_id"), col("sh"))
     val joined = cand
@@ -1535,6 +1535,26 @@ object DedupOps {
       .select(col("doc_a"), col("doc_b"),
         round(inter.cast("double") / (sa + sb - inter), 4).as("jaccard"))
       .filter(col("jaccard") >= threshold)
+  }
+
+  /** Every pair of band rows (doc_id, n, band, bucket) that share a
+    * band and a bucket, as (doc_a, n_a, doc_b, n_b) with
+    * doc_a < doc_b: the band rows joined with themselves on (band,
+    * bucket). A null bucket matches a null bucket, as a group by the
+    * pair would group them. This is the pair set [[bucketPairs]]
+    * builds from a `collect_list` of each bucket's members, without
+    * the list: collecting structs is an ObjectHashAggregate that falls
+    * back to sorting, and the two explodes over the members add a
+    * Generate, each with its own generated classes; a bucket's pairs
+    * are quadratic in its size either way. */
+  private[graft] def bandPairs(banded: DataFrame): DataFrame = {
+    val a = banded.select(col("band"), col("bucket"),
+      col("doc_id").as("doc_a"), col("n").as("n_a"))
+    val b = banded.select(col("band").as("band_b"), col("bucket").as("bucket_b"),
+      col("doc_id").as("doc_b"), col("n").as("n_b"))
+    a.join(b, col("band") === col("band_b") && col("bucket") <=> col("bucket_b") &&
+        col("doc_a") < col("doc_b"))
+      .select(col("doc_a"), col("n_a"), col("doc_b"), col("n_b"))
   }
 
   /** Banded MinHash LSH in a fully cross-engine-expressible form. The

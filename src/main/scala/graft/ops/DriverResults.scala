@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions.{InterpretedOrdering, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalLimit, LocalRelation, Sort}
 import org.apache.spark.sql.graftbridge.DatasetBridge
@@ -18,8 +19,19 @@ import org.apache.spark.sql.graftbridge.DatasetBridge
   *    sampling job, the exchange, the sort) over a few thousand rows
   *    at most. Sorting the relation's rows on the driver with
   *    Catalyst's own ordering gives the same order, and the result
-  *    stays a local relation: collecting it launches no job. */
+  *    stays a local relation: collecting it launches no job.
+  *
+  * Both stay off Spark's generated-class cache where they can: the
+  * rows a fold collects are converted by Catalyst's interpreted
+  * converters, not a per-schema generated deserializer, since a few
+  * hundred rows never repay a compile and every class a query adds
+  * competes for the cache's 100 entries. */
 object DriverResults {
+
+  /** The named error of a driver-side fold whose input outgrew it. */
+  def pastBound(what: String, maxRows: Int): IllegalArgumentException =
+    new IllegalArgumentException(
+      s"$what: more than $maxRows rows, past the bound of this driver-side fold")
 
   /** `df`'s rows, or an IllegalArgumentException naming `what` when
     * `df` has more than `maxRows` rows. One job: every partition
@@ -29,10 +41,10 @@ object DriverResults {
     require(maxRows >= 0 && maxRows < Int.MaxValue, s"$what: bad row bound $maxRows")
     val capped = DatasetBridge.ofRows(df,
       LocalLimit(Literal(maxRows + 1), df.queryExecution.analyzed))
-    val rows = capped.collect()
-    if (rows.length > maxRows) throw new IllegalArgumentException(
-      s"$what: more than $maxRows rows, past the bound of this driver-side fold")
-    rows
+    val rows = DatasetBridge.collectInternal(capped, what)
+    if (rows.length > maxRows) throw pastBound(what, maxRows)
+    val toRow = CatalystTypeConverters.createToScalaConverter(capped.schema)
+    rows.map(r => toRow(r).asInstanceOf[Row])
   }
 
   /** `df` ordered by `cols`, exactly as `df.orderBy(cols: _*)` orders

@@ -1,8 +1,17 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.SparkEnv
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, InterpretedOrdering,
+  SortOrder, UnsafeRow}
+import org.apache.spark.sql.execution.UnsafeExternalRowSorter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftbridge.DatasetBridge
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.collection.unsafe.sort.PrefixComparators
 import graft.Tables
 import graft.functions.TextNorm
 
@@ -112,20 +121,54 @@ object RelationalExt {
           .filter(col("c_acctbal") > 5000)
           .select(col("c_custkey").as("custkey")))
 
-  /** Exact multi-column distinct counting per group. At scale each
-    * count(DISTINCT x) expands the aggregate; [[approxDistinct]] is
-    * the sketch-based alternative. */
+  /** Exact multi-column distinct counting per group, through
+    * [[distinctCounts]]; [[approxDistinct]] is the sketch-based
+    * alternative. */
   def countDistinctAgg(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .groupBy(col("l_returnflag"))
-      .agg(
-        countDistinct(col("l_suppkey")).as("n_supp"),
-        countDistinct(col("l_partkey")).as("n_part"),
-        // tuple-distinct via concat_ws: DuckDB's multi-arg DISTINCT
-        // tuple syntax builds a STRUCT whose hash the driver can't
-        // compare; an injective string key keeps both engines scalar
-        countDistinct(concat_ws("_", col("l_orderkey"), col("l_linenumber"))).as("n_lines"),
-        count(lit(1)).as("n_rows"))
+    distinctCounts(Tables.lineitem(spark, dir), Seq("l_returnflag"), Seq(
+      "n_supp" -> col("l_suppkey"),
+      "n_part" -> col("l_partkey"),
+      // tuple-distinct via concat_ws: DuckDB's multi-arg DISTINCT
+      // tuple syntax builds a STRUCT whose hash the driver can't
+      // compare; an injective string key keeps both engines scalar
+      "n_lines" -> concat_ws("_", col("l_orderkey"), col("l_linenumber"))),
+      rowCount = Some("n_rows"))
+
+  /** `count(DISTINCT key)` for each named key per group of `groups`
+    * (one global row when `groups` is empty), then the group's row
+    * count as `count(*)` when `rowCount` names it — the same rows as
+    * those aggregates in one `agg`, planned as graft orders it.
+    *
+    * Spark rewrites several distinct aggregates into an Expand whose
+    * projections it orders by a hash of the aggregates' expression ids,
+    * so each build of the same query can generate different code, and
+    * every variant is another compile and another entry in the
+    * generated-class cache. Here the expansion is explicit: each row
+    * is exploded once per key, with the key's position `i` and its
+    * value in slot `k<i>` (the other slots null, so every key keeps its
+    * type and Spark's own normalization of floating-point keys); one
+    * aggregate on (groups, i, slots) makes each (key, value) distinct
+    * and counts its rows; a second, on the groups, counts the non-null
+    * values per key and sums the rows of key 0, where every input row
+    * has exactly one entry. Both are ordinary hash aggregates. */
+  private[graft] def distinctCounts(df: DataFrame, groups: Seq[String],
+                                    keys: Seq[(String, Column)],
+                                    rowCount: Option[String] = None): DataFrame = {
+    require(keys.nonEmpty, "distinctCounts needs a key")
+    val slots = keys.indices.map(j => s"k$j")
+    val exploded = df
+      .select(groups.map(col) ++ keys.indices.map(j => keys(j)._2.as(slots(j))) :+
+        explode(array(keys.indices.map(lit): _*)).as("i"): _*)
+      .select(groups.map(col) ++ (col("i") +: keys.indices.map(j =>
+        when(col("i") === j, col(slots(j))).as(slots(j)))): _*)
+    val distinct = exploded.groupBy((groups ++ ("i" +: slots)).map(col): _*)
+      .agg(count(lit(1)).as("c"))
+    val counts = keys.indices.map(j =>
+      count(when(col("i") === j && col(slots(j)).isNotNull, lit(1))).as(keys(j)._1))
+    val rows = rowCount.map(n =>
+      coalesce(sum(when(col("i") === 0, col("c"))), lit(0L)).as(n)).toSeq
+    distinct.groupBy(groups.map(col): _*).agg(counts.head, counts.tail ++ rows: _*)
+  }
 
   /** HyperLogLog++ distinct sketches — the 100 TB path for distinct
     * counting: fixed-size state, associative merge, one shuffle.
@@ -147,9 +190,8 @@ object RelationalExt {
     // Expand (x3 rows through every HLL update) — measured 6.5 s vs
     // 2.2 + 1.7 s for the split form at sf0.1.
     val li = Tables.lineitem(spark, dir)
-    val exact = li.groupBy(col("l_returnflag")).agg(
-      countDistinct(col("l_suppkey")).as("n_supp"),
-      countDistinct(col("l_partkey")).as("n_part"))
+    val exact = distinctCounts(li, Seq("l_returnflag"),
+      Seq("n_supp" -> col("l_suppkey"), "n_part" -> col("l_partkey")))
     val approx = li.groupBy(col("l_returnflag")).agg(
       approx_count_distinct(col("l_suppkey"), 0.01).as("a_supp"),
       approx_count_distinct(col("l_partkey"), 0.01).as("a_part"))
@@ -773,34 +815,29 @@ object RelationalExt {
         | AS (check_name, n_violations)""".stripMargin))
   }
 
-  /** ANALYZE-style column statistics in ONE table pass: per column,
-    * row/null counts, exact NDV, and min/max — the stats a
-    * cost-based optimizer (or a data catalog) wants, computed as a
-    * single wide aggregate and unpivoted IN THE PLAN (`stack`), so
-    * adding a column adds expressions, never a scan. The multi-column
-    * exact count(DISTINCT) plans as Spark's expand (k× the rows map-
-    * side, still one shuffle); swap approx_count_distinct per column
-    * for the sketch path when NDV precision can relax (q54's
-    * trade-off, documented there). */
   /** [[columnStats]]' 100 TB twin for the NDV column (the q100/q54
-    * sketch-twin pattern): exact multi-column count(DISTINCT) plans an
-    * expand (k× the rows map-side) with per-group state proportional
-    * to cardinality — at corpus scale the profiler runs
+    * sketch-twin pattern): exact multi-column count(DISTINCT) expands
+    * the rows k× map-side ([[distinctCounts]]) with per-group state
+    * proportional to cardinality — at corpus scale the profiler runs
     * approx_count_distinct (fixed-size HLL registers, one ordinary
     * aggregate) instead. Output is the EXACT stats plus an in-plan
     * boolean asserting the sketch landed inside a 4·rsd envelope
     * (floored at ±1 for tiny cardinalities) — the oracle recomputes
     * the exact side and expects literal TRUE, so a sketch regression
-    * fails the hash gate without the oracle ever evaluating a sketch. */
+    * fails the hash gate without the oracle ever evaluating a sketch.
+    * The exact and sketch sides are two one-row aggregates, crossed
+    * (the split q54 measured: sketches fed by the expansion update k×
+    * as often). */
   def columnStatsSketch(spark: SparkSession, dir: String,
                         rsd: Double = 0.05): DataFrame = {
-    val wide = Tables.lineitem(spark, dir).agg(
-      countDistinct(col("l_quantity")).as("qty_ndv"),
+    val li = Tables.lineitem(spark, dir)
+    val exact = distinctCounts(li, Nil, Seq("qty_ndv" -> col("l_quantity"),
+      "price_ndv" -> col("l_extendedprice"), "disc_ndv" -> col("l_discount")))
+    val approx = li.agg(
       approx_count_distinct(col("l_quantity"), rsd).as("qty_ap"),
-      countDistinct(col("l_extendedprice")).as("price_ndv"),
       approx_count_distinct(col("l_extendedprice"), rsd).as("price_ap"),
-      countDistinct(col("l_discount")).as("disc_ndv"),
       approx_count_distinct(col("l_discount"), rsd).as("disc_ap"))
+    val wide = exact.crossJoin(approx)
     wide.select(expr(
       """stack(3,
         | 'l_quantity', qty_ndv, qty_ap,
@@ -890,21 +927,31 @@ object RelationalExt {
       TextOps.roundAt(psi, 6).as("psi"))
   }
 
+  /** ANALYZE-style column statistics: per column, row/null counts,
+    * exact NDV, and min/max — the stats a cost-based optimizer (or a
+    * data catalog) wants, computed as two one-row aggregates (the
+    * plain statistics, and the exact NDVs through [[distinctCounts]],
+    * which expands the rows k× map-side, still one shuffle) crossed
+    * and unpivoted IN THE PLAN (`stack`), so adding a column adds
+    * expressions, never a scan. Swap approx_count_distinct per column
+    * for the sketch path when NDV precision can relax (q54's
+    * trade-off, documented there; [[columnStatsSketch]]). */
   def columnStats(spark: SparkSession, dir: String): DataFrame = {
-    val wide = Tables.lineitem(spark, dir).agg(
+    val li = Tables.lineitem(spark, dir)
+    val plain = li.agg(
       count(lit(1)).as("n_rows"),
       sum(when(col("l_quantity").isNull, 1L).otherwise(0L)).as("qty_nulls"),
-      countDistinct(col("l_quantity")).as("qty_ndv"),
       min(col("l_quantity")).cast("double").as("qty_min"),
       max(col("l_quantity")).cast("double").as("qty_max"),
       sum(when(col("l_extendedprice").isNull, 1L).otherwise(0L)).as("price_nulls"),
-      countDistinct(col("l_extendedprice")).as("price_ndv"),
       min(col("l_extendedprice")).cast("double").as("price_min"),
       max(col("l_extendedprice")).cast("double").as("price_max"),
       sum(when(col("l_discount").isNull, 1L).otherwise(0L)).as("disc_nulls"),
-      countDistinct(col("l_discount")).as("disc_ndv"),
       min(col("l_discount")).cast("double").as("disc_min"),
       max(col("l_discount")).cast("double").as("disc_max"))
+    val ndv = distinctCounts(li, Nil, Seq("qty_ndv" -> col("l_quantity"),
+      "price_ndv" -> col("l_extendedprice"), "disc_ndv" -> col("l_discount")))
+    val wide = plain.crossJoin(ndv)
     wide.select(col("n_rows"), expr(
       """stack(3,
         | 'l_quantity', qty_nulls, qty_ndv, qty_min, qty_max,
@@ -1449,7 +1496,7 @@ object RelationalExt {
     * Architecture: the corpus collapses in ONE user-keyed shuffle
     * (three windows + the pair build share the partitioning) into the
     * (state, target) count matrix — BOUNDED MODEL STATE (≤ (types+1)
-    * ×(types+2) rows, the lloydCentroids collect rule); the value
+    * ×(types+2) rows, collected under [[MaxRemovalCells]]); the value
     * iteration (80 synchronous rounds — the per-round contraction is
     * the non-absorbing transition mass ≈ 0.8, so 80 rounds leave a
     * ~2e-8 residual; the spec pins the fixpoint) runs driver-side on that matrix exactly
@@ -1463,10 +1510,20 @@ object RelationalExt {
     * Scale: the only corpus-sized work is the journey shuffle;
     * everything after runs on the types-sized model. */
   def removalEffectAttribution(spark: SparkSession, dir: String,
-                               rounds: Int = 80): DataFrame = {
+                               rounds: Int = 80): DataFrame =
+    removalEffectOf(Tables.events(spark, dir), rounds)
+
+  /** Row bound of q237's collected transition matrix: (types + START)
+    * × (types + DROP) cells for up to 256 event types, q256's bound. */
+  private[graft] val MaxRemovalCells: Int = 257 * 258
+
+  /** [[removalEffectAttribution]] over any (user_id, ts, event_id,
+    * event_type) frame — split out so specs can drive its bound. */
+  private[graft] def removalEffectOf(events: DataFrame, rounds: Int): DataFrame = {
+    val spark = events.sparkSession
     import spark.implicits._
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val ev = Tables.events(spark, dir)
+    val ev = events
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
       .withColumn("rn", row_number().over(w).cast("long"))
     val firstP = ev.filter(col("event_type") === "purchase")
@@ -1486,9 +1543,9 @@ object RelationalExt {
       .unionByName(wp.filter(col("krd") === 1 && col("fp").isNull)
         .select(col("event_type").as("s"), lit("DROP").as("t")))
       .groupBy(col("s"), col("t")).agg(count(lit(1)).as("n"))
-    // bounded model state: (types+1) x (types+2) rows
-    val mat: Map[(String, String), Long] = trans.collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    val mat: Map[(String, String), Long] =
+      DriverResults.collectBounded(trans, MaxRemovalCells, "q237 transition matrix")
+        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     val states = mat.keys.map(_._1).toSeq.distinct.sorted
     val rowTot = states.map(s =>
       s -> mat.collect { case ((`s`, _), n) => n }.sum).toMap
@@ -1738,11 +1795,11 @@ object RelationalExt {
     * (raw event frequencies ≠ stationary mass when transition
     * structure is asymmetric).
     *
-    * Mechanism: exact transition counts (q133's pair construction
-    * verbatim), row-normalized to P implicitly (each update term is
-    * π_s · c_st/rt_s), 50 synchronous power rounds from the uniform
-    * start with ascending-(s) folds per target and the q251 1e-12
-    * per-round re-quantization. Closed-chain contract: the corpus
+    * Mechanism: exact transition counts (q133's pairs: consecutive
+    * events per user in (ts, event_id) order), row-normalized to P
+    * implicitly (each update term is π_s · c_st/rt_s), 50 synchronous
+    * power rounds from the uniform start with ascending-(s) folds per
+    * target and the q251 1e-12 per-round re-quantization. Closed-chain contract: the corpus
     * must be OUTGOING-CLOSED — every transition target also appears
     * as a source; an absorbing target would leak mass out of the
     * restricted chain, so the engine require()-crashes and the
@@ -1756,29 +1813,102 @@ object RelationalExt {
     * emitted π values are the 1e-12-quantized round-`iters` vector,
     * identical on both engines by construction (the q251 contract).
     *
-    * Scale: ONE user-keyed shuffle to the types²-sized count matrix
-    * (bounded model state — the q237 collect rule); iteration is
-    * driver-side types² per round, corpus-free. */
+    * Scale: ONE user-keyed shuffle and a sort within partitions feed
+    * a per-partition fold to the types²-sized count matrix (bounded
+    * model state — the q237 collect rule; [[transitionCounts]]);
+    * iteration is driver-side types² per round, corpus-free. */
   def stationaryDistribution(spark: SparkSession, dir: String,
                              iters: Int = 50): DataFrame =
     stationaryOf(Tables.events(spark, dir), iters)
 
+  /** Each user's events on one partition, as (user_id, ts, event_id,
+    * event_type): one exchange on user_id, the input of
+    * [[transitionCounts]]' fold. Null user ids form one stream, as a
+    * window partitioned by user_id groups them. */
+  private[graft] def transitionStreams(events: DataFrame): DataFrame =
+    events.select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
+      .repartition(col("user_id"))
+
+  /** One partition of `schema`'s rows in ascending order of its first
+    * `keys` columns, nulls first — the order of a `sortWithinPartitions`
+    * on them — through Spark's spilling external row sorter, compared
+    * by Catalyst's interpreted ordering: a sort that compiles no class.
+    * A leading long key is the sort prefix, so most comparisons are
+    * of one long. The rows are reused buffers. */
+  private def sortedPartition(rows: Iterator[InternalRow], schema: StructType,
+                              keys: Int): Iterator[InternalRow] = {
+    val ordering = new InterpretedOrdering(schema.fields.toSeq.take(keys).zipWithIndex.map {
+      case (f, i) => SortOrder(BoundReference(i, f.dataType, f.nullable), Ascending)
+    })
+    val longPrefix = schema.fields(0).dataType == LongType
+    val prefixes = new UnsafeExternalRowSorter.PrefixComputer {
+      private val p = new UnsafeExternalRowSorter.PrefixComputer.Prefix
+      // equal prefixes fall through to the ordering; nulls sort first
+      def computePrefix(r: InternalRow): UnsafeExternalRowSorter.PrefixComputer.Prefix = {
+        p.isNull = r.isNullAt(0)
+        p.value = if (p.isNull || !longPrefix) Long.MinValue else r.getLong(0)
+        p
+      }
+    }
+    UnsafeExternalRowSorter.create(schema, ordering, PrefixComparators.LONG, prefixes,
+      SparkEnv.get.memoryManager.pageSizeBytes, false)
+      .sort(rows.map(_.asInstanceOf[UnsafeRow]))
+  }
+
+  /** The (s, t) event-type transition counts of [[transitionStreams]]:
+    * every pair of consecutive events of one user, in (ts, event_id)
+    * order, whose second type `t` is not null, counted by (s, t) — the
+    * pairs and counts of `lead(event_type)` over a (ts, event_id)-
+    * ordered user window followed by a `groupBy(s, t)`, computed as a
+    * sorted fold: each partition sorts its rows by (user_id, ts,
+    * event_id), counts its pairs in a map of at most
+    * [[MaxTransitionCells]] cells, and the driver merges the maps. No
+    * window, aggregate, per-row driver collect or generated class past
+    * the exchange; past the bound, an IllegalArgumentException named
+    * "q256 transition counts". */
+  private[graft] def transitionCounts(events: DataFrame): Map[(String, String), Long] = {
+    val streams = transitionStreams(events)
+    val schema = streams.schema
+    val bound = MaxTransitionCells
+    val parts = DatasetBridge.foldPartitions(streams, "q256 transition counts") { rows =>
+      val counts = scala.collection.mutable.HashMap.empty[(String, String), Long]
+      val sorted = sortedPartition(rows, schema, keys = 3)
+      val userType = schema.fields(0).dataType
+      var first = true
+      var prevUser: Any = null
+      var prevType: String = null
+      // past the bound one partition's map already fails the fold
+      while (sorted.hasNext && counts.size <= bound) {
+        val r = sorted.next()
+        val user = if (r.isNullAt(0)) null else r.get(0, userType)
+        val t = if (r.isNullAt(3)) null else r.getUTF8String(3).toString
+        if (!first && user == prevUser) {
+          if (t != null) counts((prevType, t)) = counts.getOrElse((prevType, t), 0L) + 1L
+        } else prevUser = user match { // the row buffer is reused
+          case s: UTF8String => s.clone()
+          case v => v
+        }
+        prevType = t
+        first = false
+      }
+      counts.toArray
+    }
+    val merged = scala.collection.mutable.HashMap.empty[(String, String), Long]
+    for (part <- parts; (st, c) <- part) merged(st) = merged.getOrElse(st, 0L) + c
+    if (merged.size > bound) throw DriverResults.pastBound("q256 transition counts", bound)
+    merged.toMap
+  }
+
   /** [[stationaryDistribution]] over any (user_id, event_id,
     * event_type, ts) frame — split out so specs can drive chains with
-    * closed-form stationary vectors. */
+    * closed-form stationary vectors. A transition out of a null
+    * event type names no state and is dropped, as a transition into
+    * one is: a table whose types are all null has no states, and
+    * yields no rows. */
   private[graft] def stationaryOf(events: DataFrame, iters: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val spark = events.sparkSession
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val tc = events
-      .select(col("user_id"), col("event_id"), col("event_type"), col("ts"))
-      .withColumn("t", lead(col("event_type"), 1).over(w))
-      .filter(col("t").isNotNull)
-      .groupBy(col("event_type").as("s"), col("t"))
-      .agg(count(lit(1)).as("c"))
-    // types²-bounded model state — the q237 collect rule
-    val cells = DriverResults.collectBounded(tc, MaxTransitionCells, "q256 transition counts")
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+    val cells = transitionCounts(events).toSeq.collect {
+      case ((s, t), c) if s != null => (s, t, c)
+    }
     val states = cells.map(_._1).distinct.sorted // states WITH outgoing mass
     val idx = states.zipWithIndex.toMap
     val k = states.length
@@ -1804,9 +1934,12 @@ object RelationalExt {
       }
       pi = nx.map(quant)
     }
-    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val schema = StructType(Seq(StructField("event_type", StringType),
+      StructField("n_out", LongType, nullable = false), StructField("pi", DoubleType, nullable = false)))
     DriverResults.sortedLocal(
-      states.indices.map(i => (states(i), rt(i), pi(i))).toDF("event_type", "n_out", "pi"),
+      events.sparkSession.createDataFrame(
+        states.indices.map(i => Row(states(i), rt(i), pi(i))).asJava, schema),
       col("event_type"))
   }
 

@@ -148,6 +148,23 @@ class DriverResultsSpec extends AnyFunSuite {
       e.getMessage)
   }
 
+  test("q237's transition-matrix collect fails by name past its bound") {
+    // 258² distinct (s, t) transitions, one two-event user each, and
+    // no purchase: START and DROP rows come on top
+    val types = 258
+    val n = RelationalExt.MaxRemovalCells
+    assert(types * types > n)
+    val events = spark.range(types.toLong * types).select(
+      col("id").as("user_id"), explode(array(lit(0L), lit(1L))).as("step"))
+      .select(col("user_id"), (col("user_id") * 2 + col("step")).as("event_id"),
+        concat(lit("t"), when(col("step") === 0, col("user_id") / types)
+          .otherwise(col("user_id") % types).cast("long").cast("string")).as("event_type"),
+        col("step").as("ts"))
+    val e = intercept[IllegalArgumentException](RelationalExt.removalEffectOf(events, 2))
+    assert(e.getMessage.contains("q237 transition matrix") && e.getMessage.contains(n.toString),
+      e.getMessage)
+  }
+
   test("q221's hourly collect fails by name past its bound") {
     val n = RelationalExt.MaxHourlyRows
     val events = spark.range(n.toLong + 1).select(lit("click").as("event_type"),

@@ -655,20 +655,50 @@ class PlanSpec extends AnyFunSuite {
 
   test("minhash banding: band rows carry size metadata, never the shingle-set payload") {
     // the r21 restructure (guide §2.3 — shuffle keys and metadata, not
-    // payloads): the band-bucket aggregation must collect (doc_id, n)
-    // structs; the xxhash64 shingle SET is fetched per deduped
+    // payloads): the band rows that pair on (band, bucket) carry
+    // (doc_id, n) only; the xxhash64 shingle SET is fetched per deduped
     // candidate pair from the checkpointed keyed frame, never
-    // duplicated ×bands through the bucket exchange. A collect_list
+    // duplicated ×bands through the band join. A band-join side
     // carrying sh means the payload crept back into the banding.
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
     for ((name, df) <- Seq(
       "minhash-md5" -> DedupOps.nearDupMinHashMd5(spark, sf),
       "oph" -> DedupOps.nearDupOPH(spark, sf))) {
-      val p = plan(df)
-      val cl = p.linesIterator.filter(_.contains("collect_list")).toSeq
-      assert(cl.nonEmpty, s"$name: expected a bucket-members collect_list")
-      assert(cl.forall(l => !l.contains("sh#")),
-        s"$name: a band/bucket aggregation carries the sh payload:\n" +
-          cl.mkString("\n"))
+      val bandJoins = df.queryExecution.sparkPlan.collect {
+        case j: BaseJoinExec if j.leftKeys.exists(_.references.exists(_.name == "band")) => j
+      }
+      assert(bandJoins.size == 1, s"$name: expected one band join:\n${df.queryExecution.sparkPlan}")
+      for (j <- bandJoins; side <- Seq(j.left, j.right))
+        assert(!side.output.exists(_.name.startsWith("sh")),
+          s"$name: a band-join side carries the sh payload: ${side.output.mkString(", ")}")
+    }
+  }
+
+  test("band pairs: q26, q75 and q243 plan no ObjectHashAggregate and no Generate over bucket members") {
+    for (q <- Seq("q26_neardup_minhash", "q75_minhash_md5", "q243_neardup_oph")) {
+      val p = plan(SparkEntry.queries(q)(spark, sf))
+      assert(!p.contains("ObjectHashAggregate") && !p.contains("collect_list"),
+        s"$q collects bucket members:\n$p")
+      assert(!p.linesIterator.exists(l => l.contains("Generate") && l.contains("members")),
+        s"$q explodes bucket members:\n$p")
+    }
+  }
+
+  test("q256 transitions: one exchange on user_id, no window, no aggregate") {
+    val p = plan(RelationalExt.transitionStreams(Tables.events(spark, sf)))
+    for (op <- Seq("Window", "Aggregate", "Sort"))
+      assert(!p.contains(op), s"the transition fold's input plans a $op:\n$p")
+    val exchanges = p.linesIterator.filter(_.contains("hashpartitioning(")).toSeq
+    assert(exchanges.size == 1 && exchanges.head.contains("hashpartitioning(user_id"),
+      s"expected one exchange on user_id:\n$p")
+  }
+
+  test("explicit distinct expansion: q53, q54, q123 and q124 plan no Expand") {
+    for (q <- Seq("q53_count_distinct", "q54_approx_distinct", "q123_column_stats",
+        "q124_column_stats_sketch")) {
+      val p = plan(SparkEntry.queries(q)(spark, sf))
+      assert(!p.contains("Expand"), s"$q plans Spark's distinct-rewrite Expand:\n$p")
+      assert(p.contains("Arguments: explode(["), s"$q has no explicit key expansion:\n$p")
     }
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.functions.JsonLine
 
 /** Relational operator suite: scan/filter/project, hash & broadcast
   * joins (inner/semi/anti/outer), aggregation (plain, rollup,
@@ -252,14 +253,16 @@ object Relational {
 
   /** O5 analog over testdata: nested-struct construction serialized
     * to JSON — the same Feature-building shape as the hydro pipeline
-    * (reference mapreduce.js:3-34), hash-comparable as a string. */
+    * (reference mapreduce.js:3-34), hash-comparable as a string. It
+    * serializes with the hydro sink's kernel ([[graft.functions.JsonLine]]),
+    * so the oracle's `to_json` checks that kernel too. */
   def featureJson(spark: SparkSession, dir: String): DataFrame = {
     val n = Tables.nation(spark, dir)
     val s = Tables.supplier(spark, dir)
     s.join(broadcast(n), col("s_nationkey") === col("n_nationkey"))
       .select(
         col("s_suppkey"),
-        to_json(struct(
+        JsonLine(struct(
           lit("Feature").as("type"),
           struct(
             col("s_name").as("name"),

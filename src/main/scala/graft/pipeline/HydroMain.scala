@@ -1,7 +1,10 @@
 package graft.pipeline
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.GraftSession
+import graft.functions.JsonLine
+import graft.ops.DriverResults
 
 /** Program entry for the hydro pipeline — the engine's analog of the
   * reference's `node harvest.js` run (harvest.js:146-149): read
@@ -18,10 +21,7 @@ object HydroMain {
     // still follow SPARK_GRAFT_CPUS (default 4)
     val spark = GraftSession(GraftSession.cpus(4), appName = Some("graft-hydro"),
       master = Some(sys.env.getOrElse("SPARK_MASTER", "local[4]")))
-    val doc = HydroPipeline.run(spark, args(0))
-      .select(to_json(struct(lit("FeatureCollection").as("type"), col("data"))))
-      .head().getString(0)
-    println(doc)
+    println(document(HydroPipeline.run(spark, args(0))))
     args.lift(1).foreach { out =>
       val merged = HydroPipeline.mergeSites(
         HydroPipeline.toFeatures(
@@ -30,4 +30,12 @@ object HydroMain {
     }
     spark.stop()
   }
+
+  /** The FeatureCollection document of a [[HydroPipeline.toFeatureCollection]]
+    * result: its one row's `data` framed as `{"type":"FeatureCollection",
+    * "data":[…]}`. */
+  def document(collection: DataFrame): String =
+    DriverResults.collectBounded(
+      collection.select(JsonLine(struct(lit("FeatureCollection").as("type"), col("data")))),
+      1, "hydro FeatureCollection document").head.getString(0)
 }

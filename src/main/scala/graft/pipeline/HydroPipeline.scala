@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.{ArrayHead, JsonLine}
 import graft.sources.WaterML
 
 /** The reference's whole dataflow — source → flatten → project →
@@ -50,16 +51,19 @@ object HydroPipeline {
 
   private def undef(c: Column): Column = coalesce(c, lit("undefined"))
 
-  /** First array element, null-safe under ANSI: null when the array is
-    * null or empty, otherwise element 0. Semantically identical to
+  /** First array element: null when the array is null or empty,
+    * otherwise element 0 ([[ArrayHead]]). Semantically identical to
     * try_element_at(c, 1), but avoids TryEval: nested try_element_at
     * chains inlined into a pushed-down filter predicate hit a janino
     * scope bug under subexpression elimination ("isNull_N is not an
     * rvalue", Spark 4.1.2) and silently dropped the whole
-    * scan-project-filter stage out of codegen. The when-guard keeps
-    * GetArrayItem from ever evaluating out of bounds, so ANSI mode
-    * never throws. */
-  private def arrHead(c: Column): Column = when(size(c) > 0, c.getItem(0))
+    * scan-project-filter stage out of codegen. It is not
+    * `when(size(c) > 0, c.getItem(0))` either: that form reads `c`
+    * twice, and Catalyst substitutes toFeatures' synthesized
+    * `properties.variables` array into both reads at every nesting
+    * level, which pushed the map stage's generated method past the
+    * 8,000 bytes HotSpot will JIT-compile (CodegenBudgetSpec). */
+  private def arrHead(c: Column): Column = ArrayHead(c)
 
   /** O5–O8: project each time series into a GeoJSON Feature
     * (geojsonMap, mapreduce.js:3-34). Pure narrow map — no shuffle.
@@ -102,8 +106,20 @@ object HydroPipeline {
     * Exposed for parity; [[mergeSites]] fuses both branches into its
     * single fold so production plans never run two passes. */
   def byVariable(features: DataFrame, code: String): DataFrame =
-    features.filter(
-      arrHead(col("properties.variables")).getField("variableCode") === code)
+    features.filter(variableCode === code)
+
+  /** The variable code of a feature's first variable entry. */
+  private def variableCode: Column = arrHead(col("properties.variables")).getField("variableCode")
+
+  /** The filter of [[sitePartials]]: the reference merges ONLY the
+    * 00060/00065 branch outputs (mapreduce.js:40-50 filters before each
+    * mapReduce). A series with any other USGS parameter code
+    * contributes nothing there, so admitting every non-null code would
+    * emit all-null merged rows for sites the reference never emits, and
+    * let them compete for a site's metadata. isin doubles as the O7
+    * guard: empty-obs features carry a null code, and null isin(...)
+    * is filtered. */
+  private[graft] def branchFilter: Column = variableCode.isin(StreamFlowCode, GageHeightCode)
 
   /** O11: the per-site merge — semantically a key-equi full outer join
     * of the two variable streams (mergeReduce, mapreduce.js:52-99 +
@@ -122,7 +138,6 @@ object HydroPipeline {
     * merged value paired with the ordering key that will pick the
     * per-site winner. */
   private[graft] def sitePartials(features: DataFrame): DataFrame = {
-    val varCode = arrHead(col("properties.variables")).getField("variableCode")
     val var0 = arrHead(col("properties.variables"))
     val isFlow = col("var0.variableCode") === StreamFlowCode
     val isGage = col("var0.variableCode") === GageHeightCode
@@ -175,15 +190,7 @@ object HydroPipeline {
         coalesce(var0.getField("noDataValue"), lit("\u0000")))
         .cast("string"))
     features
-      // the reference merges ONLY the 00060/00065 branch outputs
-      // (mapreduce.js:40-50 filters before each mapReduce): a series
-      // with any other USGS parameter code contributes nothing there,
-      // so admitting every non-null code here would emit all-null
-      // merged rows for sites the reference never emits — and let
-      // them compete for a site's metadata. isin doubles as the O7
-      // guard: empty-obs features carry a null code, and null
-      // isin(...) is filtered.
-      .filter(varCode.isin(StreamFlowCode, GageHeightCode))
+      .filter(branchFilter)
       // ord_key is built once per row: project it and var0 to
       // attributes first, then derive both branch keys from the
       // attribute (the two projections stay separate: each attribute
@@ -419,13 +426,19 @@ object HydroPipeline {
   /** Scale path replacing O13's driver-side buffer: features as
     * distributed JSON lines (+ the enclosing FeatureCollection frame
     * is a trivial concat at read time). No single-point memory
-    * ceiling, unlike the reference's one 16 MB document. */
+    * ceiling, unlike the reference's one 16 MB document. Each line is
+    * written by [[JsonLine]] straight from the row's UTF-8 bytes,
+    * byte-identical to `to_json` of the same struct. */
   def writeFeatureCollectionStreamed(merged: DataFrame, path: String): Unit =
+    featureLines(merged).write.mode(SaveMode.Overwrite).text(path)
+
+  /** The lines [[writeFeatureCollectionStreamed]] writes, one `value`
+    * string per feature. */
+  private[graft] def featureLines(merged: DataFrame): DataFrame =
     merged
       .filter(col("geometry").isNotNull && col("properties").isNotNull)
-      .select(to_json(struct(
+      .select(JsonLine(struct(
         lit("Feature").as("type"), col("properties"), col("geometry"))).as("value"))
-      .write.mode(SaveMode.Overwrite).text(path)
 
   /** Incremental ingest: response files landing in `inputPath` stream
     * through parse→flatten→project and append to a features table;

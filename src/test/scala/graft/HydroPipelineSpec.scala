@@ -94,6 +94,30 @@ class HydroPipelineSpec extends AnyFunSuite {
     assert(data.forall(_.getString(0) == "Feature"))
   }
 
+  test("HydroMain's document: one bounded collect of the FeatureCollection, parses back") {
+    def parsed(collection: org.apache.spark.sql.DataFrame) = {
+      val doc = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(graft.pipeline.HydroMain.document(collection))
+      assert(doc.path("type").asText == "FeatureCollection")
+      val data = doc.path("data")
+      assert(data.isArray)
+      val fs = (0 until data.size).map(data.get)
+      val codes = fs.map(_.path("properties").path("siteCode").asText)
+      assert(codes == codes.sorted && codes.forall(_.nonEmpty))
+      assert(fs.forall(f => f.path("type").asText == "Feature" &&
+        f.path("geometry").path("coordinates").size == 2))
+      codes
+    }
+    // HydroMain's own path over the golden WaterML responses
+    assert(parsed(HydroPipeline.run(spark, fixtures)) ==
+      Seq("01646500", "02096960", "09380000", "11530500"))
+    // the oracle fixture: the golden responses plus three crafted sites
+    val fixture = HydroPipeline.mergeSites(
+      HydroPipeline.toFeatures(spark.read.parquet("fixtures/hydro/timeseries.parquet")))
+    assert(parsed(HydroPipeline.toFeatureCollection(fixture)).size == 7)
+    assert(fixture.count() == 7)
+  }
+
   test("O14: end-to-end run, lazy and checkpointed variants agree") {
     val lazyDoc = HydroPipeline.run(spark, fixtures)
       .select(to_json(col("data"))).head().getString(0)

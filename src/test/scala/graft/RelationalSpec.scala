@@ -7,6 +7,21 @@ object TestSpark {
   lazy val spark: SparkSession = GraftSession(4, appName = Some("graft-test"),
     warehouse = Some(java.nio.file.Files.createTempDirectory("graft-wh").toString))
   val sf: String = "/root/testdata/sf0.001"
+
+  /** `f` with the session confs `kv` set, each restored after. */
+  def withConf[T](kv: (String, String)*)(f: => T): T = {
+    val prior = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally prior.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  /** Whole-stage and expression codegen, with no interpreted fallback. */
+  val CodegenOnly: Seq[(String, String)] = Seq("spark.sql.codegen.wholeStage" -> "true",
+    "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY", "spark.sql.codegen.fallback" -> "false")
+
+  /** Interpreted evaluation only. */
+  val InterpretedOnly: Seq[(String, String)] = Seq("spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
 }
 
 class RelationalSpec extends AnyFunSuite {

@@ -53,24 +53,29 @@ case class CosineSimilarity(left: Expression, right: Expression)
     if (denom == 0.0) null else java.lang.Double.valueOf(dot / denom)
   }
 
+  // locals via ctx.freshName, as in IntDotProduct: fixed identifiers
+  // collide when two calls land in one generated method (Janino
+  // "Redefinition of local variable" → interpreted fallback).
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
+      val Seq(n, dot, na, nb, i, x, y, denom) =
+        Seq("n", "dot", "na", "nb", "i", "x", "y", "denom").map(ctx.freshName)
       s"""
-         |int n = $a.numElements();
-         |if (n != $b.numElements()) {
+         |int $n = $a.numElements();
+         |if ($n != $b.numElements()) {
          |  ${ev.isNull} = true;
          |} else {
-         |  double dot = 0.0, na = 0.0, nb = 0.0;
-         |  for (int i = 0; i < n; i++) {
-         |    double x = $a.getFloat(i);
-         |    double y = $b.getFloat(i);
-         |    dot += x * y; na += x * x; nb += y * y;
+         |  double $dot = 0.0, $na = 0.0, $nb = 0.0;
+         |  for (int $i = 0; $i < $n; $i++) {
+         |    double $x = $a.getFloat($i);
+         |    double $y = $b.getFloat($i);
+         |    $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
          |  }
-         |  double denom = java.lang.Math.sqrt(na) * java.lang.Math.sqrt(nb);
-         |  if (denom == 0.0) {
+         |  double $denom = java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb);
+         |  if ($denom == 0.0) {
          |    ${ev.isNull} = true;
          |  } else {
-         |    ${ev.value} = dot / denom;
+         |    ${ev.value} = $dot / $denom;
          |  }
          |}
        """.stripMargin

@@ -524,7 +524,7 @@ object RelationalExt {
     * lands in exactly 2 windows, expanded map-side by the window()
     * generator — no self-join, one shuffle on the window start.
     * Identical logic runs under Structured Streaming with a watermark
-    * (EventStream.hourly is the tumbling twin). */
+    * ([[Relational.eventsHourly]] is the tumbling form). */
   def slidingWindow(spark: SparkSession, dir: String): DataFrame =
     Tables.events(spark, dir)
       .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"))
@@ -879,35 +879,9 @@ object RelationalExt {
       binned.groupBy(col("source"), col("bin")).agg(count(lit(1)).as("c")), nBins)
   }
 
-  /** The mergeable (source, bin, c) state the drift monitor persists —
-    * binned against a FIXED reference band [mn, mx] (the reference
-    * snapshot's, NOT each batch's own: drift is measured against a
-    * frozen yardstick, and a per-batch band would silently re-define
-    * the bins every refresh). Counts are exact longs, so the merge is
-    * associative+commutative addition — any chopping of the corpus
-    * into ingest batches folds to the same state.
-    *
-    * Out-of-band rows CLAMP to the edge bins (standard PSI practice):
-    * the frozen band never covers a drifted refresh by definition, and
-    * an unclamped index would fall outside the pivot's 0..nBins-1
-    * column list in [[psiFromBinCounts]] — silently vanishing from
-    * both the bin counts and n_src, making precisely the most-drifted
-    * documents invisible to the monitor that exists to flag them. */
-  def driftBinPartials(docs: DataFrame, mn: Long, mx: Long,
-                       nBins: Int = 10): DataFrame =
-    docs.select(col("source"),
-        greatest(lit(0L), least(lit(nBins - 1L),
-          expr(s"((n_chars - $mn) * $nBins) div ($mx - $mn + 1)"))).as("bin"))
-      .groupBy(col("source"), col("bin")).agg(count(lit(1)).as("c"))
-
-  def driftBinMerge(state: DataFrame, refresh: DataFrame): DataFrame =
-    state.unionByName(refresh)
-      .groupBy(col("source"), col("bin")).agg(sum(col("c")).as("c"))
-
   /** PSI per source from a (source, bin, c) count table: pivot to one
     * column per bin, corpus-wide expected row broadcast back, fixed
-    * left-to-right chain (see [[sourceDrift]]'s exactness contract).
-    * Serves both the one-shot query and the folded streaming state. */
+    * left-to-right chain (see [[sourceDrift]]'s exactness contract). */
   private[graft] def psiFromBinCounts(binCounts: DataFrame, nBins: Int): DataFrame = {
     val bins = (0 until nBins).toList
     def cnt(i: Int) = coalesce(col(s"$i"), lit(0L))
@@ -2159,16 +2133,10 @@ object RelationalExt {
     * shuffle with map-side partials — then a user-keyed count and a
     * day-bounded rollup; the window runs on the histogram, never the
     * corpus. */
-  def activeDaysHistogram(spark: SparkSession, dir: String): DataFrame =
-    activeDaysHistogramOf(
-      Tables.events(spark, dir)
-        .select(col("user_id"), date_trunc("day", col("ts")).as("day")).distinct())
-
-  /** The q246 rollup served from any distinct (user_id, day) activity
-    * table — shared by the batch query and the streaming state twin so
-    * the two cannot diverge. */
-  def activeDaysHistogramOf(ud: DataFrame): DataFrame = {
+  def activeDaysHistogram(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    val ud = Tables.events(spark, dir)
+      .select(col("user_id"), date_trunc("day", col("ts")).as("day")).distinct()
     val perUser = ud.groupBy(col("user_id")).agg(count(lit(1)).as("active_days"))
     val hist = perUser.groupBy(col("active_days")).agg(count(lit(1)).as("n_users"))
     val tot = hist.agg(sum(col("n_users")).as("nu"))
@@ -2333,92 +2301,6 @@ object RelationalExt {
         .select(col("event_type"), col("hour"), col("n_events"),
           round(col("ewma_raw"), 6).as("ewma"), col("is_spike")),
       col("event_type"), col("hour"))
-  }
-
-  /** q246's streaming state: the distinct (user_id, day) activity
-    * table. Fully mergeable — set union is associative, commutative
-    * AND idempotent — so the contract is the widest in the state
-    * family: batches may arrive in any order and may re-deliver
-    * events (at-least-once), and the histogram re-derives from the
-    * state each time. State is (users × observation days)-sized —
-    * the dedup-index class, never corpus-sized. */
-  def activeDaysStateMerge(state: DataFrame, batch: DataFrame): DataFrame =
-    state.unionByName(
-        batch.select(col("user_id"), date_trunc("day", col("ts")).as("day")))
-      .distinct()
-
-  /** The q246 histogram served from the merged state. */
-  def activeDaysHistogramFromState(state: DataFrame): DataFrame =
-    activeDaysHistogramOf(state)
-
-  /** Empty activity state with the right schema. */
-  def activeDaysStateEmpty(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Long, java.sql.Timestamp)].toDF("user_id", "day")
-  }
-
-  /** q222's streaming state: the (user_id, first_day) MIN-MERGE table.
-    * Fully mergeable (min is associative + commutative + idempotent),
-    * so unlike [[ewmaStateAppend]] the contract is unordered: batches
-    * may arrive in ANY order and may even re-deliver events — a
-    * user's first-seen day only ever ratchets DOWN, and the
-    * acquisition curve is re-derived from the state, so a late early
-    * event correctly MOVES the user's cohort (the mutation a
-    * curve-increment state could never express). State is
-    * users-sized — the dedup-index state class, not corpus-sized. */
-  def acquisitionStateMerge(state: DataFrame, batch: DataFrame): DataFrame =
-    state.unionByName(
-        batch.groupBy(col("user_id"))
-          .agg(min(date_trunc("day", col("ts"))).as("first_day")))
-      .groupBy(col("user_id")).agg(min(col("first_day")).as("first_day"))
-
-  /** The q222 curve served from the merged state. */
-  def acquisitionCurveFromState(state: DataFrame): DataFrame = {
-    val daily = state.groupBy(col("first_day").as("day"))
-      .agg(count(lit(1)).as("n_new"))
-    globalRunningSum(daily, Seq(col("day")), col("n_new"), "cum_users")
-      .select(col("day"), col("n_new"), col("cum_users"))
-      .orderBy(col("day"))
-  }
-
-  /** Empty acquisition state with the right schema. */
-  def acquisitionStateEmpty(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Long, java.sql.Timestamp)].toDF("user_id", "first_day")
-  }
-
-  /** q221's streaming state: (event_type, n_hours, ewma), appendable
-    * per micro-batch of FINALIZED hourly buckets. Unlike the
-    * count/sum/index states of the q121/q167/q180 family this fold is
-    * ORDER-DEPENDENT, so the streaming contract is narrower and
-    * explicit: batches must arrive in hour order and carry whole
-    * hours (what a watermarked hourly aggregation emits on close) —
-    * under that contract appending batch-by-batch is bit-identical to
-    * the one-shot q221 fold, which StreamingMultimodalSpec proves
-    * across different chop points. Types absent from a batch pass
-    * through unchanged; a type's first batch seeds the EWMA with its
-    * first hour (the q221 convention). */
-  def ewmaStateAppend(state: DataFrame, batch: DataFrame): DataFrame = {
-    val arr = batch.groupBy(col("event_type"))
-      .agg(array_sort(collect_list(struct(col("hour"), col("n_events")))).as("ts"),
-        count(lit(1)).as("nb"))
-    val vals = transform(col("ts"), t => t.getField("n_events").cast("double"))
-    arr.join(state, Seq("event_type"), "full_outer")
-      .select(col("event_type"),
-        (coalesce(col("n_hours"), lit(0L)) + coalesce(col("nb"), lit(0L))).as("n_hours"),
-        when(col("ts").isNull, col("ewma"))
-          .when(col("ewma").isNull,
-            aggregate(slice(vals, lit(2), size(col("ts")) - 1),
-              element_at(vals, 1), (a, x) => (a + x) / lit(2.0d)))
-          .otherwise(
-            aggregate(vals, col("ewma"), (a, x) => (a + x) / lit(2.0d)))
-          .as("ewma"))
-  }
-
-  /** Empty EWMA state with the right schema, for bootstrap. */
-  def ewmaStateEmpty(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(String, Long, Double)].toDF("event_type", "n_hours", "ewma")
   }
 
   def eventRateAnomaly(spark: SparkSession, dir: String,

@@ -243,12 +243,17 @@ object SimilarityOps {
     * frame — the admission path indexes only the standing-corpus
     * slice, so the codebook and assignments must derive from that
     * slice alone. */
-  def writeIvfIndexOf(e: DataFrame, table: String, buckets: Int = 8): Unit = {
-    val assigned = e.crossJoin(broadcast(ivfCodebook(e)))
+  def writeIvfIndexOf(e: DataFrame, table: String, buckets: Int = 8): Unit =
+    graft.sources.Formats.writeBucketed(
+      ivfAssigned(e, ivfCodebook(e)), table, "clabel", buckets)
+
+  /** Each (vec_id, label, embedding) row with its rk=1 coarse label
+    * `clabel` against `codebook` — the assignment the index write, the
+    * streaming append and q180's rebuild witness share. */
+  private def ivfAssigned(e: DataFrame, codebook: DataFrame): DataFrame =
+    e.crossJoin(broadcast(codebook))
       .withColumn("clabel", ivfDists.getItem(0).getField("clabel"))
       .select(col("vec_id"), col("label"), col("embedding"), col("clabel"))
-    graft.sources.Formats.writeBucketed(assigned, table, "clabel", buckets)
-  }
 
   /** Streaming-ingest append: assign an arriving (vec_id, label,
     * embedding) batch against a SUPPLIED frozen codebook — never the
@@ -265,12 +270,9 @@ object SimilarityOps {
     * mode creates the table when absent, so a rebuild is this method
     * applied to the full corpus in one call. */
   def appendIvfIndexOf(batch: DataFrame, codebook: DataFrame,
-                       table: String, buckets: Int = 8): Unit = {
-    val assigned = batch.crossJoin(broadcast(codebook))
-      .withColumn("clabel", ivfDists.getItem(0).getField("clabel"))
-      .select(col("vec_id"), col("label"), col("embedding"), col("clabel"))
-    graft.sources.Formats.appendBucketed(assigned, table, "clabel", buckets)
-  }
+                       table: String, buckets: Int = 8): Unit =
+    graft.sources.Formats.appendBucketed(
+      ivfAssigned(batch, codebook), table, "clabel", buckets)
 
   /** Probe a [[writeIvfIndex]]-persisted index with BUCKET PRUNING:
     * the nprobe nearest coarse labels are resolved first (one tiny
@@ -900,12 +902,8 @@ object SimilarityOps {
     val standing = e.filter(!isBatch)
     val batch = e.filter(isBatch)
     val codebook = ivfCodebook(standing) // FROZEN: standing slice only
-    def assigned(df: DataFrame): DataFrame =
-      df.crossJoin(broadcast(codebook))
-        .withColumn("clabel", ivfDists.getItem(0).getField("clabel"))
-        .select(col("vec_id"), col("label"), col("embedding"), col("clabel"))
-    graft.sources.Formats.writeBucketed(assigned(standing), tbl, "clabel", 8)
-    graft.sources.Formats.appendBucketed(assigned(batch), tbl, "clabel", 8)
+    writeIvfIndexOf(standing, tbl, 8)
+    appendIvfIndexOf(batch, codebook, tbl, 8)
 
     // probe labels from the frozen codebook (index state, not corpus)
     val probeLabels = e.filter(col("vec_id") === queryId)
@@ -930,7 +928,7 @@ object SimilarityOps {
       .filter(col("vec_id") === queryId).select(col("embedding").as("q_emb"))
     val incr = serve(pinned.table(tbl), qP)
     val q = e.filter(col("vec_id") === queryId).select(col("embedding").as("q_emb"))
-    val rebuild = serve(assigned(e), q)
+    val rebuild = serve(ivfAssigned(e, codebook), q)
       .select(col("rank").as("r_rank"), col("vec_id").as("r_vec"),
         col("cos").as("r_cos"))
     // coalesce to FALSE: a rebuild leg returning fewer rows must fail

@@ -574,80 +574,6 @@ object TextOps {
         roundAt(col("score_raw"), 6).as("bm25"))
   }
 
-  // ---------------------------------------------------------------
-  // incremental BM25 corpus stats — the retrieval state twin
-  // ---------------------------------------------------------------
-
-  /** Mergeable per-word document-frequency partials of a document
-    * slice — the retrieval analog of `RelationalExt.rollupPartials`.
-    * Ingest slices are disjoint by doc_id, so a word's global df is
-    * the SUM of its per-slice distinct-doc counts: folding partials
-    * is exact, not approximate, and a persisted df state table
-    * refreshes per ingest batch without ever rescanning the corpus
-    * ([[bm25TopK]]'s df/N/avgdl are the only corpus-wide aggregates
-    * in the scoring plan — this state is what makes its re-index
-    * incremental). Vocabulary-grain output, one shuffle. */
-  def bm25DfPartials(docs: DataFrame): DataFrame =
-    wordRowsOf(docs).select(col("doc_id"), col("word")).distinct()
-      .groupBy(col("word")).agg(count(lit(1)).as("df"))
-
-  /** Fold a df state table with a refresh slice's partials: union +
-    * re-sum on word — associative and commutative, so any chopping of
-    * the corpus into ingest batches yields the identical state
-    * (spec-proven boundary-independent, the q121 contract). */
-  def bm25DfMerge(state: DataFrame, refresh: DataFrame): DataFrame =
-    state.unionByName(refresh)
-      .groupBy(col("word")).agg(sum(col("df")).as("df"))
-
-  /** The scalar half of the BM25 state: ONE row per slice —
-    * (n_docs, n_word_docs, sum_dl), every value an exact long (dl is
-    * an integer token count, and integer-valued double/long sums stay
-    * exact below 2^53), so the fold is bit-exact and
-    * avgdl = sum_dl / n_word_docs equals the from-scratch avg(dl)
-    * EXACTLY, not within ulps. */
-  def bm25ScalarPartials(docs: DataFrame): DataFrame = {
-    val dl = wordRowsOf(docs).groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-    docs.agg(count(lit(1)).as("n_docs"))
-      .crossJoin(dl.agg(count(lit(1)).as("n_word_docs"), sum(col("dl")).as("sum_dl")))
-  }
-
-  def bm25ScalarMerge(state: DataFrame, refresh: DataFrame): DataFrame =
-    state.unionByName(refresh)
-      .agg(sum(col("n_docs")).as("n_docs"),
-        sum(col("n_word_docs")).as("n_word_docs"),
-        sum(col("sum_dl")).as("sum_dl"))
-
-  /** [[bm25TopK]] served FROM the incremental state tables instead of
-    * re-deriving df/N/avgdl from the corpus: tf and dl stay per-doc
-    * local (computed at index time on the docs themselves — the
-    * postings side), while every corpus-WIDE statistic comes from the
-    * folded state. When the state covers the same corpus the scores
-    * are bit-identical to the from-scratch plan (see the exactness
-    * arguments on the partials), which is what certifies the
-    * incremental refresh as a real re-index, not an approximation. */
-  def bm25TopKFromState(spark: SparkSession, dir: String,
-                        dfState: DataFrame, scalarState: DataFrame,
-                        query: Seq[String] = Seq("data", "analysis", "model"),
-                        k: Int = 20, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val words = wordRows(spark, dir)
-    val dl = words.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-    val tf = words.filter(col("word").isin(query: _*))
-      .groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("tf"))
-    val df = dfState.filter(col("word").isin(query: _*))
-    val scal = scalarState.select(
-      col("n_docs").cast("double").as("n_docs"),
-      (col("sum_dl").cast("double") / col("n_word_docs")).as("avgdl"))
-    val idf = log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
-    val norm = col("tf") * (k1 + 1) /
-      (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl")))
-    val scored = tf.join(broadcast(df), "word")
-      .join(dl, "doc_id")
-      .crossJoin(broadcast(scal))
-      .groupBy(col("doc_id")).agg(sum(idf * norm).as("score_raw"))
-    scored.orderBy(col("score_raw").desc, col("doc_id")).limit(k)
-      .select(col("doc_id"), roundAt(col("score_raw"), 6).as("bm25"))
-  }
-
   /** Windowed co-occurrence PMI (pointwise mutual information) over
     * word pairs within distance ≤ 2 — the word2vec-era corpus
     * statistic that surfaces collocations: PMI =
@@ -1833,12 +1759,9 @@ object TextOps {
   private def dsirBucket(dim: Int)(w: Column): Column =
     (conv(substring(md5(w), 1, 8), 16, 10).cast("long") % dim).cast("int")
 
-  /** The mergeable reference-distribution state DSIR persists: per
+  /** The reference-distribution state DSIR scores against: per
     * hashed bucket, the target-domain word count and the corpus word
-    * count, from one pass over a (doc_id, source, text) slice. Exact
-    * longs, so [[dsirBucketMerge]] is associative addition — any
-    * chopping of the corpus into ingest batches folds to the same
-    * state, and scoring reads the state without rescanning history. */
+    * count, from one pass over a (doc_id, source, text) slice. */
   def dsirBucketPartials(docs: DataFrame, targetSource: String,
                          dim: Int = 256): DataFrame =
     wordRowsOf(docs.select(col("doc_id"), col("text")))
@@ -1848,11 +1771,7 @@ object TextOps {
       .groupBy(col("b"))
       .agg(sum(col("is_t")).as("t"), count(lit(1)).as("c"))
 
-  def dsirBucketMerge(state: DataFrame, refresh: DataFrame): DataFrame =
-    state.unionByName(refresh)
-      .groupBy(col("b")).agg(sum(col("t")).as("t"), sum(col("c")).as("c"))
-
-  /** Score a document batch against a folded (b, t, c) state: smoothed
+  /** Score a document batch against a (b, t, c) state: smoothed
     * log ratio per bucket (dim-row broadcast), per-doc fold in bucket
     * order (see [[dsirSelect]]'s exactness contract), top-k cut. */
   def dsirScoreFromState(spark: SparkSession, docs: DataFrame, state: DataFrame,
@@ -1898,27 +1817,20 @@ object TextOps {
     * rows — model state, never corpus-sized), and scoring joins the
     * BROADCAST vocabulary onto the word rows — the corpus is touched
     * once and never shuffled by vocabulary size. The frequency state
-    * is mergeable exact-long counts ([[vocabCountMerge]]) so a
-    * streaming ingest folds batches into the same state the batch
-    * build produces ([[vocabCountPartials]]); roster left join keeps
-    * wordless docs at rate 0. */
+    * is [[vocabCountPartials]]; roster left join keeps wordless docs
+    * at rate 0. */
   def vocabCoverage(spark: SparkSession, dir: String, k: Int = 20): DataFrame = {
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     oovFromState(spark, docs, vocabCountPartials(docs), k)
   }
 
-  /** The mergeable vocabulary state: per word, its exact corpus count
-    * from one pass over a (doc_id, text) slice. Associative addition,
-    * so any batch chopping folds to the same state. */
+  /** The vocabulary state: per word, its exact corpus count from one
+    * pass over a (doc_id, text) slice. */
   def vocabCountPartials(docs: DataFrame): DataFrame =
     wordRowsOf(docs.select(col("doc_id"), col("text")))
       .groupBy(col("word")).agg(count(lit(1)).as("c"))
 
-  def vocabCountMerge(state: DataFrame, refresh: DataFrame): DataFrame =
-    state.unionByName(refresh)
-      .groupBy(col("word")).agg(sum(col("c")).as("c"))
-
-  /** Score a document batch against a folded (word, c) state: cut the
+  /** Score a document batch against a (word, c) state: cut the
     * top-k vocabulary on (c desc, word asc), broadcast it onto the
     * batch's word rows, aggregate per doc. */
   def oovFromState(spark: SparkSession, docs: DataFrame, state: DataFrame,

@@ -458,20 +458,7 @@ object HydroPipeline {
       .start(featuresPath)
 
   /** O14: the whole pipeline as one lazy plan (the reference's 5-stage
-    * waterfall, harvest.js:104-139, materialized every stage to Mongo;
-    * `checkpointDir` opts back into per-stage materialization). */
-  def run(spark: SparkSession, inputPath: String,
-          checkpointDir: Option[String] = None): DataFrame = {
-    def stage(df: DataFrame, name: String): DataFrame = checkpointDir match {
-      case Some(dir) =>
-        val p = s"$dir/$name"
-        df.write.mode(SaveMode.Overwrite).parquet(p)
-        spark.read.parquet(p)
-      case None => df
-    }
-    val ts = WaterML.timeSeriesOf(spark, inputPath)
-    val features = stage(toFeatures(ts), "geojson")
-    val merged = stage(mergeSites(features), "joined")
-    toFeatureCollection(merged)
-  }
+    * waterfall, harvest.js:104-139, materialized every stage to Mongo). */
+  def run(spark: SparkSession, inputPath: String): DataFrame =
+    toFeatureCollection(mergeSites(toFeatures(WaterML.timeSeriesOf(spark, inputPath))))
 }

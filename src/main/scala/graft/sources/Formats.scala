@@ -153,6 +153,11 @@ object Formats {
       Seq(partCol), "left_semi")
   }
 
+  /** Bound on the distinct partition values one change batch of
+    * [[mergeIntoPartitioned]] may touch: each is a value collected to
+    * the driver and possibly one directory delete. */
+  private[graft] val MaxMergePartitions: Int = 1 << 16
+
   /** Partition-scoped MERGE (upsert + delete) into a
     * [[writePartitioned]] layout — the missing verb between
     * [[overwritePartitions]] (replace a whole partition's rows) and a
@@ -199,6 +204,11 @@ object Formats {
     import org.apache.spark.sql.functions.{broadcast, col}
     require(changes.columns.contains("op"),
       "changes needs an 'op' column ('upsert' | 'delete')")
+    def partValues(df: DataFrame, what: String): Set[String] =
+      graft.ops.DriverResults.collectBounded(df.select(col(partCol)).distinct(),
+        MaxMergePartitions, what).map(r => String.valueOf(r.get(0))).toSet
+    // checked before anything is written
+    val affected = partValues(changes, "mergeIntoPartitioned change partitions")
     val layout = read(spark, root, format)
     if (validateKeyPartition) {
       val strays = layout
@@ -225,14 +235,11 @@ object Formats {
     // the batch deletes (and re-fills with nothing) contributes no
     // rows, so its directory would survive untouched and the deletes
     // would silently not apply. Remove those directories explicitly.
-    // The two collects are partition-VALUE lists (KBs — the same
-    // plan-time-bounded class as the IVF codebook probe), never rows;
-    // each directory delete is an independent FS operation with the
-    // same per-partition atomicity as the committer's own replacement.
-    val affected = changes.select(col(partCol)).distinct()
-      .collect().map(r => String.valueOf(r.get(0))).toSet
-    val written = merged.select(col(partCol)).distinct()
-      .collect().map(r => String.valueOf(r.get(0))).toSet
+    // The two collects are partition-VALUE lists bounded by
+    // MaxMergePartitions, never rows; each directory delete is an
+    // independent FS operation with the same per-partition atomicity
+    // as the committer's own replacement.
+    val written = partValues(merged, "mergeIntoPartitioned written partitions")
     val emptied = affected -- written
     if (emptied.nonEmpty) {
       val rootPath = new org.apache.hadoop.fs.Path(root)

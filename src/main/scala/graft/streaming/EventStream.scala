@@ -1,97 +1,49 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.Tables
 
-/** Streaming semantics over the `events` table.
+/** Sessionization over the `events` table.
   *
   * The reference's ingestion is chunk-streamed but batch-semantic —
   * HTTP chunks pipe through a parser into inserts with no watermarks,
   * windows, or state (reference harvest.js:19-51,77-85; SURVEY.md
-  * §2b). The engine adds real Structured Streaming: the SAME
-  * windowed-aggregation logic runs batch (driver gate) and streaming
-  * (readStream + watermark), plus stateful sessionization via
-  * flatMapGroupsWithState with an equivalent batch gaps-and-islands
-  * form the oracle can check.
+  * §2b). The engine's session queries are gaps-and-islands forms the
+  * oracle can check (q33, q240, q245 share `withSessionSeq`) plus
+  * Spark's native `session_window` (q85), which also runs unchanged
+  * on a watermarked stream.
   *
-  * Scale notes: hourly aggregation is shuffle-once with partial
-  * aggregation; sessionization state is per-user and bounded by the
-  * session gap (watermark + timeout evict closed sessions — no
-  * unbounded state at 100 TB/day event rates).
+  * Scale notes: every session query is one user-keyed shuffle; on a
+  * stream, session-window state is per-user and bounded by the
+  * session gap (the watermark evicts closed sessions).
   */
 object EventStream {
 
-  // java.sql.Timestamp (TIMESTAMP ltz) rather than LocalDateTime: the
-  // flatMapGroupsWithState state encoder's generated code fails janino
-  // compilation on java.time fields in Spark 4.1; epoch-long state
-  // sidesteps it entirely and is cheaper to serialize per trigger.
-  case class Event(event_id: Long, ts: java.sql.Timestamp,
-                   user_id: Long, event_type: String, value: Double)
-  case class Session(user_id: Long, session_start: java.sql.Timestamp,
-                     session_end: java.sql.Timestamp, n_events: Long)
-  // must be public: the state encoder's generated code instantiates
-  // and reads it from outside this object's scope
-  case class OpenSession(startMs: Long, endMs: Long, nEv: Long)
-
-  /** Tumbling 1-hour aggregation — identical logic to the batch
-    * `Relational.eventsHourly`; on a streaming input add
-    * `.withWatermark("ts", "2 hours")` upstream and this plan runs
-    * under incremental execution unchanged. */
-  def hourly(events: DataFrame): DataFrame =
-    events
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
-      .select(col("w.start").as("hour_start"), col("event_type"), col("n"), col("total"))
-
-  /** Streaming source over the events parquet: same encoding-resilient
-    * `ts` normalization as Tables.events, via readStream — but as
-    * TIMESTAMP (with-local-tz): Structured Streaming watermarks reject
-    * TIMESTAMP_NTZ. Session tz is pinned UTC, so wall-clock values
-    * match the batch NTZ twin. The schema probe (Tables.eventsRawSchema)
-    * scopes the legacy nanos conf to the eager batch inference read only
-    * (the stream itself gets the explicit schema, so its execution never
-    * consults the conf — same scoping as Tables.events). */
-  def readEventStream(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    val path = s"$dir/events.parquet"
-    val raw = Tables.eventsRawSchema(spark, path)
-    // the streaming file source requires a directory; glob down to the
-    // events file inside the sf dir
-    val stream = spark.readStream.schema(raw)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-    raw("ts").dataType match {
-      case TimestampType    => stream
-      case TimestampNTZType => stream.withColumn("ts", col("ts").cast(TimestampType))
-      case LongType         => stream.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case other =>
-        throw new IllegalStateException(
-          s"$path: events.ts has unsupported type $other — expected TIMESTAMP_NTZ, " +
-            "TIMESTAMP, or INT64 nanos; refusing to guess")
-    }
-  }
-
-  /** Batch sessionization (gaps-and-islands): a new session starts
-    * after `gapMinutes` of inactivity. Exactly mirrors the streaming
-    * [[sessionize]] semantics and is SQL-expressible for the oracle. */
-  def sessionizeBatch(spark: SparkSession, dir: String, gapMinutes: Int = 30): DataFrame = {
+  /** Tag each event with `session_seq`, its session's ordinal within
+    * the user: a new session starts after `gapMinutes` of inactivity,
+    * in the deterministic (ts, event_id) order. */
+  private def withSessionSeq(events: DataFrame, gapMinutes: Int): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val newSession = when(
       col("ts") > lag(col("ts"), 1).over(w) + expr(s"INTERVAL $gapMinutes MINUTES"), 1
     ).otherwise(0)
-    Tables.events(spark, dir)
-      .withColumn("session_seq",
-        sum(newSession).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    events.withColumn("session_seq",
+      sum(newSession).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+  }
+
+  /** q33: batch sessionization (gaps-and-islands): a new session
+    * starts after `gapMinutes` of inactivity. SQL-expressible for the
+    * oracle. */
+  def sessionizeBatch(spark: SparkSession, dir: String, gapMinutes: Int = 30): DataFrame =
+    withSessionSeq(Tables.events(spark, dir), gapMinutes)
       .groupBy(col("user_id"), col("session_seq"))
       .agg(
         min(col("ts")).as("session_start"),
         max(col("ts")).as("session_end"),
         count(lit(1)).as("n_events"),
         round(sum(col("value")), 4).as("total_value"))
-  }
 
   /** q240: session conversion by ENTRY channel — sessions from the
     * same 30-minute gaps-and-islands as [[sessionizeBatch]], each
@@ -109,13 +61,7 @@ object EventStream {
     * is channels-sized. */
   def entryChannelConversion(spark: SparkSession, dir: String,
                              gapMinutes: Int = 30): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val newSession = when(
-      col("ts") > lag(col("ts"), 1).over(w) + expr(s"INTERVAL $gapMinutes MINUTES"), 1
-    ).otherwise(0)
-    val sess = Tables.events(spark, dir)
-      .withColumn("session_seq",
-        sum(newSession).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    val sess = withSessionSeq(Tables.events(spark, dir), gapMinutes)
     val ws = Window.partitionBy(col("user_id"), col("session_seq"))
       .orderBy(col("ts"), col("event_id"))
     val perSession = sess
@@ -150,13 +96,7 @@ object EventStream {
     * is types³-bounded — model-state-sized by construction. */
   def sessionPathTrigrams(spark: SparkSession, dir: String,
                           gapMinutes: Int = 30): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val newSession = when(
-      col("ts") > lag(col("ts"), 1).over(w) + expr(s"INTERVAL $gapMinutes MINUTES"), 1
-    ).otherwise(0)
-    val sess = Tables.events(spark, dir)
-      .withColumn("session_seq",
-        sum(newSession).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    val sess = withSessionSeq(Tables.events(spark, dir), gapMinutes)
     val ws = Window.partitionBy(col("user_id"), col("session_seq"))
       .orderBy(col("ts"), col("event_id"))
     sess
@@ -174,11 +114,10 @@ object EventStream {
     * `session_window(ts, gap)` instead of the hand-rolled
     * gaps-and-islands of [[sessionizeBatch]]: the same dynamic-gap
     * merge runs as ONE aggregation operator (and, on a stream with a
-    * watermark, under incremental execution with state merging —
-    * the engine-native path where [[sessionize]] is the
-    * custom-state teaching form). `session_window.end` is
-    * last-event + gap (the eviction bound), NOT max(ts) — the DuckDB
-    * twin mirrors it as max(ts) + INTERVAL gap. */
+    * watermark, under incremental execution with state merging).
+    * `session_window.end` is last-event + gap (the eviction bound),
+    * NOT max(ts) — the DuckDB twin mirrors it as max(ts) + INTERVAL
+    * gap. */
   def sessionizeNative(spark: SparkSession, dir: String, gapMinutes: Int = 30): DataFrame =
     Tables.events(spark, dir)
       .groupBy(col("user_id"),
@@ -188,101 +127,4 @@ object EventStream {
         col("w.start").as("session_start"),
         col("w.end").as("session_evict"),
         col("n_events"), col("total_value"))
-
-  /** Streaming exact dedup: drops rows whose `event_id` was already
-    * seen within the watermark horizon. State is one entry per
-    * distinct key and is evicted once the watermark passes its event
-    * time — bounded by rate × horizon, not by stream lifetime (plain
-    * dropDuplicates on a stream never evicts). The batch twin is
-    * `dropDuplicates("event_id")`, identical when duplicates arrive
-    * within `lateness` of the original. */
-  def dedupStream(events: DataFrame, lateness: String = "30 minutes"): DataFrame =
-    events.withWatermark("ts", lateness)
-      .dropDuplicatesWithinWatermark("event_id")
-
-  /** Stream-stream interval self-join: pairs each event with the same
-    * user's follow-up events arriving within `followMinutes`. Both
-    * inputs are watermarked and the join condition is a bounded time
-    * range, so each side's join state is evicted as the watermark
-    * advances — the conditions Structured Streaming requires to avoid
-    * unbounded buffering. Batch twin: AsofJoin.eventPairsWithin
-    * (strict ordering variant). */
-  def followupJoin(eventsA: DataFrame, eventsB: DataFrame,
-                   followMinutes: Int = 60): DataFrame = {
-    val a = eventsA
-      .select(col("event_id").as("a_id"), col("user_id").as("a_user"), col("ts").as("a_ts"))
-      .withWatermark("a_ts", s"$followMinutes minutes")
-    val b = eventsB
-      .select(col("event_id").as("b_id"), col("user_id").as("b_user"), col("ts").as("b_ts"))
-      .withWatermark("b_ts", s"${followMinutes * 2} minutes")
-    a.join(b,
-      col("a_user") === col("b_user") &&
-        col("b_ts") > col("a_ts") &&
-        col("b_ts") <= col("a_ts") + expr(s"INTERVAL $followMinutes MINUTES"))
-      .select(col("a_id"), col("b_id"), col("a_user").as("user_id"))
-  }
-
-  /** Stateful streaming sessionization: per-user open-session state,
-    * closed sessions emitted as soon as an event beyond the gap
-    * arrives. Within a micro-batch events are sorted by time (event
-    * order inside a batch is not guaranteed by the source).
-    *
-    * State is bounded: the input is watermarked (gap + allowed
-    * lateness) and each group arms an EventTimeTimeout at
-    * session_end + gap. When the watermark passes that instant no
-    * on-time event can extend the session any more, so the timeout
-    * callback emits the session and REMOVES the state — long-running
-    * streams hold state only for users active within the last
-    * gap + lateness window, not one entry per user ever seen. */
-  def sessionize(events: Dataset[Event], gapMinutes: Int = 30,
-                 latenessMinutes: Int = 0): Dataset[Session] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val gapMs = gapMinutes * 60000L
-    def fn(userId: Long, it: Iterator[Event], state: GroupState[OpenSession]): Iterator[Session] = {
-      def emit(s: OpenSession) = Session(userId, new java.sql.Timestamp(s.startMs),
-        new java.sql.Timestamp(s.endMs), s.nEv)
-      if (state.hasTimedOut) {
-        // watermark passed session_end + gap: nothing on-time can
-        // extend this session — emit it and drop the state entry
-        val out = state.getOption.map(emit)
-        state.remove()
-        out.iterator
-      } else {
-        val sorted = it.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-        var open = state.getOption
-        val closed = scala.collection.mutable.ArrayBuffer.empty[Session]
-        sorted.foreach { e =>
-          val t = e.ts.getTime
-          open match {
-            case Some(s) if t - s.endMs <= gapMs =>
-              // cross-batch out-of-order: an event above the watermark
-              // can still be OLDER than the stored endMs — min/max
-              // merge instead of unconditional overwrite, or the
-              // session would move backwards (and diverge from the
-              // batch gaps-and-islands twin, which takes min/max ts)
-              open = Some(s.copy(
-                startMs = math.min(s.startMs, t),
-                endMs = math.max(s.endMs, t),
-                nEv = s.nEv + 1))
-            case Some(s) =>
-              closed += emit(s)
-              open = Some(OpenSession(t, t, 1))
-            case None =>
-              open = Some(OpenSession(t, t, 1))
-          }
-        }
-        open.foreach { s =>
-          state.update(s)
-          // always > current watermark: every event in this batch
-          // passed the watermark filter, so endMs + gap does too
-          state.setTimeoutTimestamp(s.endMs + gapMs)
-        }
-        closed.iterator
-      }
-    }
-    events.withWatermark("ts", s"${gapMinutes + latenessMinutes} minutes")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)
-  }
 }

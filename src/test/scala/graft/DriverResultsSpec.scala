@@ -185,6 +185,23 @@ class DriverResultsSpec extends AnyFunSuite {
     assert(TextOps.qualityBootstrapOf(docs.limit(n), 64).count() == n)
   }
 
+  test("mergeIntoPartitioned's partition collect fails by name past its bound, writing nothing") {
+    val n = graft.sources.Formats.MaxMergePartitions
+    val base = Files.createTempDirectory("graft-mrgbound").toString + "/docs"
+    val layout = Seq((1L, "kept", "p0")).toDF("doc_id", "text", "part")
+    graft.sources.Formats.writePartitioned(layout, base, Seq("part"))
+    val before = spark.read.parquet(base).collect().toSeq
+    val changes = spark.range(n.toLong + 1).select(col("id").as("doc_id"),
+      lit("x").as("text"), concat(lit("p"), col("id").cast("string")).as("part"),
+      lit("delete").as("op"))
+    val e = intercept[IllegalArgumentException](
+      graft.sources.Formats.mergeIntoPartitioned(spark, base, changes, "doc_id", "part"))
+    assert(e.getMessage.contains("mergeIntoPartitioned change partitions") &&
+      e.getMessage.contains(n.toString), e.getMessage)
+    assert(spark.read.parquet(base).collect().toSeq == before,
+      "the layout changed before the bound check")
+  }
+
   private def sources(dir: File): Seq[File] =
     Option(dir.listFiles()).toSeq.flatten.flatMap { f =>
       if (f.isDirectory) sources(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil

@@ -118,16 +118,6 @@ class HydroPipelineSpec extends AnyFunSuite {
     assert(fixture.count() == 7)
   }
 
-  test("O14: end-to-end run, lazy and checkpointed variants agree") {
-    val lazyDoc = HydroPipeline.run(spark, fixtures)
-      .select(to_json(col("data"))).head().getString(0)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    val ckptDoc = HydroPipeline.run(spark, fixtures, Some(dir))
-      .select(to_json(col("data"))).head().getString(0)
-    assert(lazyDoc == ckptDoc)
-    assert(lazyDoc.contains("\"siteCode\":\"01646500\""))
-  }
-
   test("incremental ingest: streamed features merge to the same sites as batch") {
     val base = java.nio.file.Files.createTempDirectory("graft-ingest").toString
     val q = HydroPipeline.ingestStream(spark, fixtures, s"$base/features", s"$base/ckpt")

@@ -54,23 +54,6 @@ class Round18OpsSpec extends AnyFunSuite {
       "CCDF counts must be non-increasing in active_days")
   }
 
-  test("q246 twin: shuffled + re-delivered batches merge to the one-shot histogram") {
-    val ev = graft.Tables.events(spark, sf)
-    // deterministic 3-way chop, merged OUT of order with batch 1
-    // delivered twice — union-distinct state must not care
-    def batch(r: Int) = ev.filter(pmod($"event_id", lit(3)) === r)
-    var state = RelationalExt.activeDaysStateEmpty(spark)
-    Seq(2, 0, 1, 1).foreach { r =>
-      state = RelationalExt.activeDaysStateMerge(state, batch(r)).localCheckpoint()
-    }
-    val fromState = RelationalExt.activeDaysHistogramFromState(state)
-      .collect().map(_.toSeq).toSeq
-    val oneShot = RelationalExt.activeDaysHistogram(spark, sf)
-      .collect().map(_.toSeq).toSeq
-    assert(fromState == oneShot,
-      "streamed state diverged from the one-shot histogram")
-  }
-
   test("q247: star graph reads r = −1, equal-degree cycle reads guarded 0") {
     // star: every edge joins degree 3 to degree 1 — perfect anticorrelation
     val star = Seq((1L, 2L), (1L, 3L), (1L, 4L)).toDF("doc_a", "doc_b")

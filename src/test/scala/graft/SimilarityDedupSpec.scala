@@ -384,6 +384,29 @@ class SimilarityDedupSpec extends AnyFunSuite {
     assert(row.getLong(0) == 32L && row.getLong(1) == 32L)
   }
 
+  test("cosine_similarity codegen: two calls in one projection compile and equal interpreted") {
+    // array(...) is non-nullable, so nullSafeCodeGen leaves both bodies
+    // unbraced in one generated method: fixed Java locals there were a
+    // "Redefinition of local variable" compile failure, hidden by the
+    // interpreted fallback that CodegenOnly switches off.
+    import TestSpark.{withConf, CodegenOnly, InterpretedOnly}
+    import org.apache.spark.sql.Row
+    def run(): Seq[Row] = spark.range(5).select(
+        array(lit(1.0f), col("id").cast("float")).as("x"),
+        array(col("id").cast("float"), lit(2.0f)).as("y"))
+      .select(cosineSimilarity(col("x"), col("y")).as("c1"),
+        cosineSimilarity(col("y"), col("x")).as("c2"))
+      .collect().toSeq
+    val compiled = withConf(CodegenOnly: _*)(run())
+    assert(compiled == withConf(InterpretedOnly: _*)(run()))
+    assert(compiled.forall(r => r.get(0) == r.get(1)) && compiled.exists(!_.isNullAt(0)))
+    // q156 puts two calls in its TakeOrderedAndProject projection
+    def q156(): Seq[Row] = SparkEntry.queries("q156_quantized_rerank")(spark, sf)
+      .collect().toSeq
+    val q156Compiled = withConf(CodegenOnly: _*)(q156())
+    assert(q156Compiled.nonEmpty && q156Compiled == withConf(InterpretedOnly: _*)(q156()))
+  }
+
   test("exact dedup: normalized variants collapse to one fingerprint") {
     val docs = Seq(
       (1L, "Hello, World!"),

@@ -6,80 +6,18 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.MultimodalOps
 import graft.streaming.EventStream
-import graft.streaming.EventStream.{Event, Session}
+import StreamingMultimodalSpec.Event
+
+object StreamingMultimodalSpec {
+  // java.sql.Timestamp (TIMESTAMP ltz): stream watermarks reject
+  // TIMESTAMP_NTZ
+  case class Event(event_id: Long, ts: java.sql.Timestamp,
+                   user_id: Long, event_type: String, value: Double)
+}
 
 class StreamingMultimodalSpec extends AnyFunSuite {
   import TestSpark.{spark, sf}
   import spark.implicits._
-
-  test("streaming hourly agg over events parquet matches the batch twin") {
-    val stream = EventStream.hourly(
-      EventStream.readEventStream(spark, sf).withWatermark("ts", "2 hours"))
-    val q = stream.writeStream.outputMode("complete")
-      .format("memory").queryName("hourly_out").start()
-    try {
-      q.processAllAvailable()
-      // normalize LTZ (stream) vs NTZ (batch) hour_start via formatting
-      def keyed(df: org.apache.spark.sql.DataFrame) = df
-        .select(date_format($"hour_start", "yyyy-MM-dd HH:mm").as("h"),
-          $"event_type", $"n", $"total")
-        .collect().map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getDouble(3))).toMap
-      val streamed = keyed(spark.table("hourly_out"))
-      val batch = keyed(EventStream.hourly(Tables.events(spark, sf)))
-      assert(streamed == batch)
-      assert(batch.nonEmpty)
-    } finally q.stop()
-  }
-
-  test("stateful sessionization: gaps close sessions, state spans micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Event]
-    val sessions = EventStream.sessionize(input.toDS(), gapMinutes = 30)
-    val q = sessions.writeStream.outputMode("append")
-      .format("memory").queryName("sess_out").start()
-    try {
-      def ts(ldt: LocalDateTime) = java.sql.Timestamp.valueOf(ldt)
-      val t0 = LocalDateTime.of(2026, 1, 1, 10, 0)
-      // batch 1: user 1 has two events 10 min apart, then nothing
-      input.addData(
-        Event(1, ts(t0), 1L, "view", 1.0),
-        Event(2, ts(t0.plusMinutes(10)), 1L, "click", 2.0))
-      q.processAllAvailable()
-      assert(spark.table("sess_out").count() == 0) // session still open in state
-      // batch 2: event 2 hours later closes the first session
-      input.addData(Event(3, ts(t0.plusHours(2)), 1L, "view", 1.0))
-      q.processAllAvailable()
-      val closed = spark.table("sess_out").as[Session].collect()
-      assert(closed.length == 1)
-      assert(closed.head.n_events == 2 && closed.head.session_start == ts(t0))
-    } finally q.stop()
-  }
-
-  test("sessionization: cross-batch out-of-order event cannot move a session backwards") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Event]
-    val sessions = EventStream.sessionize(input.toDS(), gapMinutes = 30, latenessMinutes = 30)
-    val q = sessions.writeStream.outputMode("append")
-      .format("memory").queryName("sess_ooo_out").start()
-    try {
-      def ts(ldt: LocalDateTime) = java.sql.Timestamp.valueOf(ldt)
-      val t0 = LocalDateTime.of(2026, 1, 1, 10, 0)
-      input.addData(Event(1, ts(t0.plusMinutes(20)), 1L, "view", 1.0))
-      q.processAllAvailable()
-      // batch 2: above-watermark but OLDER than the stored end — must
-      // extend the session start, not rewind its end
-      input.addData(Event(2, ts(t0), 1L, "view", 1.0))
-      q.processAllAvailable()
-      // batch 3: far-future event closes the session via gap
-      input.addData(Event(3, ts(t0.plusHours(3)), 1L, "view", 1.0))
-      q.processAllAvailable()
-      val s = spark.table("sess_ooo_out").as[Session].collect()
-        .filter(_.n_events == 2)
-      assert(s.length == 1)
-      assert(s.head.session_start == ts(t0))
-      assert(s.head.session_end == ts(t0.plusMinutes(20)))
-    } finally q.stop()
-  }
 
   test("native session_window sessionizes incrementally under a watermark") {
     implicit val sqlCtx = spark.sqlContext
@@ -111,55 +49,6 @@ class StreamingMultimodalSpec extends AnyFunSuite {
       assert(r.getLong(0) == 1L && r.getLong(3) == 2L)
       assert(r.getTimestamp(1) == ts(t0))
       assert(r.getTimestamp(2) == ts(t0.plusMinutes(40))) // last event + gap
-    } finally q.stop()
-  }
-
-  test("streaming dedup drops within-watermark duplicate event_ids across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Event]
-    val out = EventStream.dedupStream(input.toDF())
-    val q = out.writeStream.outputMode("append")
-      .format("memory").queryName("dedup_out").start()
-    try {
-      def ts(m: Int) = java.sql.Timestamp.valueOf(LocalDateTime.of(2026, 1, 1, 10, m))
-      input.addData(
-        Event(1, ts(0), 1L, "view", 1.0),
-        Event(1, ts(1), 1L, "view", 1.0), // same-batch dup
-        Event(2, ts(2), 1L, "click", 2.0))
-      q.processAllAvailable()
-      input.addData(Event(2, ts(5), 1L, "click", 2.0)) // cross-batch dup
-      q.processAllAvailable()
-      val ids = spark.table("dedup_out").select($"event_id")
-        .collect().map(_.getLong(0)).sorted
-      assert(ids.sameElements(Array(1L, 2L)))
-    } finally q.stop()
-  }
-
-  test("stream-stream interval join matches the batch join on the same events") {
-    implicit val sqlCtx = spark.sqlContext
-    val inA = MemoryStream[Event]
-    val inB = MemoryStream[Event]
-    val joined = EventStream.followupJoin(inA.toDF(), inB.toDF(), followMinutes = 60)
-    val q = joined.writeStream.outputMode("append")
-      .format("memory").queryName("follow_out").start()
-    try {
-      def ts(h: Int, m: Int) = java.sql.Timestamp.valueOf(LocalDateTime.of(2026, 1, 1, h, m))
-      val evs = Seq(
-        Event(1, ts(10, 0), 1L, "view", 1.0),
-        Event(2, ts(10, 30), 1L, "click", 1.0),  // follows 1
-        Event(3, ts(11, 45), 1L, "view", 1.0),   // follows neither (>1h after both)
-        Event(4, ts(10, 20), 2L, "view", 1.0))   // other user
-      inA.addData(evs: _*); inB.addData(evs: _*)
-      q.processAllAvailable()
-      val got = spark.table("follow_out")
-        .select($"a_id", $"b_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val batch = evs.toDF().select($"event_id".as("a_id"), $"user_id".as("a_user"), $"ts".as("a_ts"))
-        .join(evs.toDF().select($"event_id".as("b_id"), $"user_id".as("b_user"), $"ts".as("b_ts")),
-          $"a_user" === $"b_user" && $"b_ts" > $"a_ts" &&
-            $"b_ts" <= $"a_ts" + expr("INTERVAL 60 MINUTES"))
-        .select($"a_id", $"b_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(got == batch)
-      assert(got.contains((1L, 2L)) && !got.exists(_._2 == 3L))
     } finally q.stop()
   }
 
@@ -564,65 +453,6 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     assert(oneShot.nonEmpty)
   }
 
-  test("streaming BM25 re-index via foreachBatch: corpus stats are batch-identical and served scores bit-equal") {
-    // q130's streaming twin: BM25's corpus-wide statistics (df, N,
-    // avgdl) folded per ingest micro-batch through bm25DfMerge /
-    // bm25ScalarMerge must equal the from-scratch build — every count
-    // is an exact long over doc-disjoint slices, so the fold is
-    // bit-exact, and scores SERVED from the folded state must equal
-    // the from-scratch bm25TopK row for row. This is what certifies
-    // incremental re-indexing as a real operation (state refresh per
-    // batch) rather than a corpus re-scan.
-    import graft.ops.TextOps
-    implicit val sqlCtx = spark.sqlContext
-    val docs = Tables.documents(spark, sf).select($"doc_id", $"text")
-    val rows = docs.as[(Long, String)].collect()
-    def runChopped(cuts: Seq[Int]) = {
-      var dfState = TextOps.bm25DfPartials(docs.limit(0)).localCheckpoint()
-      var scalState = TextOps.bm25ScalarPartials(docs.limit(0)).localCheckpoint()
-      val input = MemoryStream[(Long, String)]
-      val q = input.toDF().toDF("doc_id", "text").writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          dfState = TextOps.bm25DfMerge(dfState,
-            TextOps.bm25DfPartials(batch)).localCheckpoint()
-          scalState = TextOps.bm25ScalarMerge(scalState,
-            TextOps.bm25ScalarPartials(batch)).localCheckpoint()
-          ()
-        }.start()
-      try {
-        var rest = rows.toSeq
-        for (c <- cuts) {
-          val (bt, r) = rest.splitAt(c); rest = r
-          if (bt.nonEmpty) { input.addData(bt); q.processAllAvailable() }
-        }
-        if (rest.nonEmpty) { input.addData(rest); q.processAllAvailable() }
-      } finally q.stop()
-      (dfState, scalState)
-    }
-    def dfMap(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    def scalRow(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).head
-    val (dfA, scalA) = runChopped(Seq(rows.length / 3, rows.length / 3))
-    val (dfB, scalB) = runChopped(Seq(rows.length / 7))
-    val oneShotDf = dfMap(TextOps.bm25DfPartials(docs))
-    val oneShotScal = scalRow(TextOps.bm25ScalarPartials(docs))
-    assert(dfMap(dfA) == oneShotDf, "folded df state diverged from the from-scratch build")
-    assert(dfMap(dfB) == oneShotDf, "df state depends on micro-batch boundaries")
-    assert(scalRow(scalA) == oneShotScal && scalRow(scalB) == oneShotScal,
-      "scalar state (N, sum_dl) diverged")
-    assert(oneShotDf.nonEmpty && oneShotScal._1 > 0)
-    // serving: scores from the folded state are bit-identical to the
-    // from-scratch plan (ranking, tie-breaks, rounding — everything)
-    def scores(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val served = scores(TextOps.bm25TopKFromState(spark, sf, dfA, scalA))
-    val scratch = scores(TextOps.bm25TopK(spark, sf))
-    assert(served == scratch, "state-served BM25 diverged from the from-scratch scores")
-    assert(scratch.nonEmpty)
-  }
-
   test("streaming cluster fold via foreachBatch: labels are batch-identical and boundary-independent") {
     // q143's streaming twin: the (id, cluster) state table refolded
     // per micro-batch of near-dup pairs through incrementalComponents
@@ -669,260 +499,5 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     // fixture sanity: the pair set actually exercises multi-pair
     // clusters, so the fold had merges to get right
     assert(oneShot.values.groupBy(identity).exists(_._2.size > 2))
-  }
-
-  test("streaming drift fold via foreachBatch: PSI from folded bins is batch-identical and boundary-independent") {
-    // q157's streaming twin: (source, bin, c) counts folded per
-    // ingest micro-batch against the FIXED reference band must serve
-    // the same PSI as binning the whole corpus at once, whatever the
-    // chopping — counts are exact longs, so the merge is associative
-    // addition and the equality is exact, not approximate
-    import graft.ops.RelationalExt
-    implicit val sqlCtx = spark.sqlContext
-    val docs = Tables.documents(spark, sf).select($"source", $"n_chars")
-    val (mn, mx) = docs.agg(min($"n_chars"), max($"n_chars"))
-      .as[(Long, Long)].head()
-    val rows = docs.as[(String, Long)].collect().toSeq
-    def psiMap(df: org.apache.spark.sql.DataFrame): Map[String, (Long, Double)] =
-      df.as[(String, Long, Double)].collect()
-        .map { case (s, n, p) => s -> ((n, p)) }.toMap
-    def runChopped(cuts: Seq[Int]): Map[String, (Long, Double)] = {
-      var state = RelationalExt.driftBinPartials(docs.limit(0), mn, mx)
-        .localCheckpoint()
-      val input = MemoryStream[(String, Long)]
-      val q = input.toDF().toDF("source", "n_chars").writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          state = RelationalExt.driftBinMerge(state,
-            RelationalExt.driftBinPartials(batch, mn, mx)).localCheckpoint()
-          ()
-        }.start()
-      try {
-        var rest = rows
-        for (c <- cuts) {
-          val (b, r) = rest.splitAt(c); rest = r
-          if (b.nonEmpty) { input.addData(b); q.processAllAvailable() }
-        }
-        if (rest.nonEmpty) { input.addData(rest); q.processAllAvailable() }
-      } finally q.stop()
-      psiMap(RelationalExt.psiFromBinCounts(state, 10))
-    }
-    val oneShot = psiMap(RelationalExt.psiFromBinCounts(
-      RelationalExt.driftBinPartials(docs, mn, mx), 10))
-    // the reference-band form equals the q157 production query when
-    // the band is the corpus's own min/max
-    assert(oneShot == psiMap(RelationalExt.sourceDrift(spark, sf)))
-    assert(runChopped(Seq(rows.length / 3, rows.length / 3)) == oneShot,
-      "folded drift state diverged from the one-shot binning")
-    assert(runChopped(Seq(rows.length / 7)) == oneShot,
-      "PSI depends on micro-batch boundaries")
-    assert(oneShot.nonEmpty)
-  }
-
-  test("drift binning clamps out-of-band refresh rows to the edge bins") {
-    // The frozen reference band never covers a drifted refresh by
-    // definition. Pre-clamp, a row outside [mn, mx] produced bin < 0
-    // or bin >= nBins, and psiFromBinCounts' pivot(0..nBins-1)
-    // silently dropped it from BOTH the bin counts and n_docs — the
-    // most-drifted documents were invisible to the drift monitor.
-    // Band [100, 199], rows far outside on both sides:
-    import graft.ops.RelationalExt
-    val refresh = Seq(
-      ("web", 5L), ("web", 1L),         // below band → edge bin 0
-      ("web", 150L),                    // in band → bin 5
-      ("web", 10000L), ("web", 99999L)  // above band → edge bin 9
-    ).toDF("source", "n_chars")
-    val binned = RelationalExt.driftBinPartials(refresh, 100L, 199L, 10)
-    val byBin = binned.collect().map(r => r.getLong(1) -> r.getLong(2)).toMap
-    assert(byBin.keys.forall(b => b >= 0 && b <= 9),
-      s"bins escaped the pivot range: ${byBin.keySet}")
-    assert(byBin(0L) == 2L && byBin(9L) == 2L && byBin(5L) == 1L)
-    // and the PSI table sees every row: one source, n_docs = all 5
-    val psi = RelationalExt.psiFromBinCounts(binned, 10).collect()
-    assert(psi.length == 1 && psi.head.getLong(1) == 5L,
-      "out-of-band rows missing from n_docs")
-  }
-
-  test("streaming DSIR fold via foreachBatch: scores served from folded state are batch-identical") {
-    // q158's production shape: the (b, t, c) reference-distribution
-    // state folds per ingest micro-batch (exact long counts —
-    // associative addition), and scoring any document batch reads the
-    // state without rescanning history. Scores served from the folded
-    // state must be bit-identical to the one-shot q158 ranking,
-    // whatever the chopping.
-    import graft.ops.TextOps
-    implicit val sqlCtx = spark.sqlContext
-    val docs = Tables.documents(spark, sf).select($"doc_id", $"source", $"text")
-    val rows = docs.as[(Long, String, String)].collect().toSeq
-    def scores(state: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
-      TextOps.dsirScoreFromState(spark, docs, state)
-        .as[(Long, Double)].collect().toSeq
-    def runChopped(cuts: Seq[Int]): Seq[(Long, Double)] = {
-      var state = TextOps.dsirBucketPartials(docs.limit(0), "src0").localCheckpoint()
-      val input = MemoryStream[(Long, String, String)]
-      val q = input.toDF().toDF("doc_id", "source", "text").writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          state = TextOps.dsirBucketMerge(state,
-            TextOps.dsirBucketPartials(batch, "src0")).localCheckpoint()
-          ()
-        }.start()
-      try {
-        var rest = rows
-        for (c <- cuts) {
-          val (b, r) = rest.splitAt(c); rest = r
-          if (b.nonEmpty) { input.addData(b); q.processAllAvailable() }
-        }
-        if (rest.nonEmpty) { input.addData(rest); q.processAllAvailable() }
-      } finally q.stop()
-      scores(state)
-    }
-    val oneShot = TextOps.dsirSelect(spark, sf).as[(Long, Double)].collect().toSeq
-    assert(scores(TextOps.dsirBucketPartials(docs, "src0")) == oneShot,
-      "state-served scores diverged from the one-shot query on identical state")
-    assert(runChopped(Seq(rows.length / 3, rows.length / 3)) == oneShot,
-      "folded-state scores diverged from the one-shot ranking")
-    assert(runChopped(Seq(rows.length / 7)) == oneShot,
-      "DSIR scores depend on micro-batch boundaries")
-    assert(oneShot.nonEmpty)
-  }
-
-  test("streaming vocab fold via foreachBatch: OOV rates from folded counts are batch-identical") {
-    // q167's production shape: the (word, c) frequency state folds
-    // per ingest micro-batch (exact longs — associative addition);
-    // the top-k vocabulary cut and OOV scoring read the state without
-    // rescanning history. Whatever the chopping, rates served from
-    // folded state must be bit-identical to the one-shot query —
-    // including the deterministic (count desc, word asc) boundary tie.
-    import graft.ops.TextOps
-    implicit val sqlCtx = spark.sqlContext
-    val docs = Tables.documents(spark, sf).select($"doc_id", $"text")
-    val rows = docs.as[(Long, String)].collect().toSeq
-    def rates(state: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long, Double)] =
-      TextOps.oovFromState(spark, docs, state)
-        .as[(Long, Long, Long, Double)].collect().toSeq
-    def runChopped(cuts: Seq[Int]): Seq[(Long, Long, Long, Double)] = {
-      var state = TextOps.vocabCountPartials(docs.limit(0)).localCheckpoint()
-      val input = MemoryStream[(Long, String)]
-      val q = input.toDF().toDF("doc_id", "text").writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          state = TextOps.vocabCountMerge(state,
-            TextOps.vocabCountPartials(batch)).localCheckpoint()
-          ()
-        }.start()
-      try {
-        var rest = rows
-        for (c <- cuts) {
-          val (b, r) = rest.splitAt(c); rest = r
-          if (b.nonEmpty) { input.addData(b); q.processAllAvailable() }
-        }
-        if (rest.nonEmpty) { input.addData(rest); q.processAllAvailable() }
-      } finally q.stop()
-      rates(state)
-    }
-    val oneShot = TextOps.vocabCoverage(spark, sf)
-      .as[(Long, Long, Long, Double)].collect().toSeq
-    assert(rates(TextOps.vocabCountPartials(docs)) == oneShot,
-      "state-served rates diverged from the one-shot query on identical state")
-    assert(runChopped(Seq(rows.length / 3, rows.length / 3)) == oneShot,
-      "folded-state OOV rates diverged from the one-shot query")
-    assert(runChopped(Seq(rows.length / 7)) == oneShot,
-      "OOV rates depend on micro-batch boundaries")
-    // non-vacuity: both vocab hits and OOV tokens exist in the corpus
-    assert(oneShot.exists(_._3 > 0) && oneShot.exists(r => r._3 < r._2))
-  }
-
-  test("streaming EWMA state via foreachBatch: hour-ordered appends equal the one-shot fold") {
-    // q221's streaming twin — the first ORDER-DEPENDENT fold in the
-    // state family, so the contract is narrower than the mergeable
-    // counts/indexes: batches must arrive in hour order carrying whole
-    // hours (what a watermarked hourly agg emits on close). Under that
-    // contract the appended state must be BIT-identical to the batch
-    // q221's final smoothed value per type, whatever the chop points.
-    import graft.ops.RelationalExt
-    implicit val sqlCtx = spark.sqlContext
-    val hourly = Tables.events(spark, sf)
-      .groupBy($"event_type", date_trunc("hour", $"ts").as("hour"))
-      .agg(count(lit(1)).as("n_events"))
-      .orderBy($"hour", $"event_type") // global hour order for chopping
-      .select($"event_type", $"hour".cast("string").as("hour"), $"n_events")
-    val rows = hourly.as[(String, String, Long)].collect().toSeq
-    def runChopped(cuts: Seq[Int]): Map[String, Double] = {
-      var state = RelationalExt.ewmaStateEmpty(spark).localCheckpoint()
-      val input = MemoryStream[(String, String, Long)]
-      val q = input.toDF().toDF("event_type", "hour", "n_events").writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          state = RelationalExt.ewmaStateAppend(state,
-            batch.select($"event_type", $"hour".cast("timestamp").as("hour"), $"n_events"))
-            .localCheckpoint()
-          ()
-        }.start()
-      try {
-        var rest = rows
-        for (c <- cuts) {
-          val (b, r) = rest.splitAt(c); rest = r
-          if (b.nonEmpty) { input.addData(b); q.processAllAvailable() }
-        }
-        if (rest.nonEmpty) { input.addData(rest); q.processAllAvailable() }
-      } finally q.stop()
-      state.collect().map(r => r.getString(0) -> r.getDouble(2)).toMap
-    }
-    // the batch query's LAST smoothed value per type (unrounded fold
-    // replayed: q221 rounds for output, so recompute the raw final)
-    val oneShot = runChopped(Seq(rows.length)) // single batch = pure batch fold
-    val a = runChopped(Seq(rows.length / 3, rows.length / 3))
-    val b = runChopped(Seq(rows.length / 7))
-    assert(a == oneShot, "EWMA state diverged across hour-aligned chop points")
-    assert(b == oneShot, "EWMA state depends on micro-batch boundaries")
-    // and the single-batch fold must agree with q221's final rows
-    val q221 = RelationalExt.ewmaRateSmoothing(spark, sf)
-    val last = q221.withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy($"event_type")
-          .orderBy($"hour".desc)))
-      .filter($"rn" === 1)
-      .collect().map(r => r.getString(0) -> r.getDouble(3)).toMap
-    oneShot.foreach { case (t, e) =>
-      // last(t) is the rounded-at-6 emission of the same raw fold
-      assert(math.abs(e - last(t)) < 1e-6,
-        s"type $t: state $e vs q221 final ${last(t)}")
-    }
-  }
-
-  test("streaming acquisition state: unordered, re-delivered batches converge to q222") {
-    // q222's twin is MERGEABLE (min-merge), so unlike the EWMA twin
-    // the batches here are deliberately SHUFFLED and one is
-    // re-delivered — the state must still converge to the batch curve,
-    // including a late-arriving EARLY event moving a user's cohort
-    import graft.ops.RelationalExt
-    implicit val sqlCtx = spark.sqlContext
-    val ev = Tables.events(spark, sf).select($"user_id", $"ts")
-    val rows = ev.as[(Long, java.sql.Timestamp)].collect().toSeq
-    // deterministic shuffle: sort by md5 of event index
-    val shuffled = rows.zipWithIndex.sortBy { case (_, i) =>
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(i.toString.getBytes).map("%02x".format(_)).mkString
-    }.map(_._1)
-    var state = RelationalExt.acquisitionStateEmpty(spark).localCheckpoint()
-    val input = MemoryStream[(Long, java.sql.Timestamp)]
-    val q = input.toDF().toDF("user_id", "ts").writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        state = RelationalExt.acquisitionStateMerge(state, batch).localCheckpoint()
-        ()
-      }.start()
-    try {
-      val chunks = shuffled.grouped(math.max(1, shuffled.length / 5)).toSeq
-      chunks.foreach { c => input.addData(c); q.processAllAvailable() }
-      // re-deliver the first chunk: idempotence under at-least-once
-      input.addData(chunks.head); q.processAllAvailable()
-    } finally q.stop()
-    def key(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.get(0).toString, r.getLong(1), r.getLong(2))).toSeq
-    val streamed = key(RelationalExt.acquisitionCurveFromState(state))
-    val batchCurve = key(RelationalExt.userAcquisition(spark, sf))
-    assert(streamed == batchCurve,
-      "min-merged state curve diverged from the one-shot q222")
   }
 }

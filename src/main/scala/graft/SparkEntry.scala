@@ -3,6559 +3,38 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.ops._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract (SURVEY.md §7).
   *
-  * Every operator the engine implements is registered here as a named
-  * query over the driver's testdata, paired (where SQL-expressible)
-  * with an equivalent DuckDB oracle statement in [[oracleSql]]. Column
-  * names are aliased identically on both sides — the driver's compare
-  * sorts columns by name before hashing.
-  */
+  * Every operator the engine implements is registered as a named
+  * [[QuerySpec]] in its family's registry, which pairs the engine plan
+  * with its DuckDB oracle statement. [[queries]] and [[oracleSql]] are
+  * both derived from [[specs]], so a query cannot have one without the
+  * other. */
 object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Relational.aggPricing(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_agg_pricing"      -> ((s, d) => Relational.aggPricing(s, d)),
-    "q02_filter_project"   -> ((s, d) => Relational.filterProject(s, d)),
-    "q03_agg_revenue"      -> ((s, d) => Relational.aggRevenue(s, d)),
-    "q04_join_topk"        -> ((s, d) => Relational.joinTopRevenue(s, d)),
-    "q05_join_multiway"    -> ((s, d) => Relational.joinMultiway(s, d)),
-    "q06_window_rank"      -> ((s, d) => Relational.windowTopOrders(s, d)),
-    "q07_window_running"   -> ((s, d) => Relational.windowRunning(s, d)),
-    "q08_semi_join"        -> ((s, d) => Relational.semiJoin(s, d)),
-    "q09_anti_join"        -> ((s, d) => Relational.antiJoin(s, d)),
-    "q10_distinct"         -> ((s, d) => Relational.distinctFlags(s, d)),
-    "q11_setops"           -> ((s, d) => Relational.setOps(s, d)),
-    "q12_rollup"           -> ((s, d) => Relational.rollupAgg(s, d)),
-    "q13_conditional_merge"-> ((s, d) => Relational.conditionalMerge(s, d)),
-    "q14_scalar_funcs"     -> ((s, d) => Relational.scalarFuncs(s, d)),
-    "q15_date_funcs"       -> ((s, d) => Relational.dateFuncs(s, d)),
-    "q16_events_hourly"    -> ((s, d) => Relational.eventsHourly(s, d)),
-    "q17_json_extract"     -> ((s, d) => Relational.jsonExtract(s, d)),
-    "q18_feature_json"     -> ((s, d) => Relational.featureJson(s, d)),
-    "q19_collect_sorted"   -> ((s, d) => Relational.collectSorted(s, d)),
-    "q20_text_tokens"      -> ((s, d) => TextOps.tokenStats(s, d)),
-    "q21_text_quality"     -> ((s, d) => TextOps.qualityScore(s, d)),
-    "q22_lang_id"          -> ((s, d) => TextOps.langId(s, d)),
-    "q23_fingerprint"      -> ((s, d) => TextOps.fingerprints(s, d)),
-    "q24_dedup_exact"      -> ((s, d) => DedupOps.dedupExact(s, d)),
-    "q25_neardup_ngram"    -> ((s, d) => DedupOps.nearDupNgram(s, d)),
-    // exact-recall τ-Jaccard self-join via rare-first prefix
-    // filtering (SSJoin/PPJoin) — the guaranteed-recall counterpart
-    // of q25's probabilistic min-md5 blocking
-    "q219_prefix_join"     -> ((s, d) => DedupOps.prefixJoinNearDup(s, d)),
-    // k-core coreness of the dup graph via fixed-round h-index
-    // iteration — density triage for survivorship aggressiveness
-    "q220_coreness"        -> ((s, d) => DedupOps.corenessDupGraph(s, d)),
-    // product quantization + ADC: per-subspace learned codebooks,
-    // m LUT adds per candidate, exact rerank of the shortlist
-    "q224_pq_rerank"       -> ((s, d) => SimilarityOps.pqRerank(s, d)),
-    // pairwise source unigram-LM KL (add-1 over the union vocab) —
-    // the lexical member of the source-comparison suite; per-word
-    // terms floor-scaled to 1e12 longs so the sum is order-free
-    "q225_source_kl"       -> ((s, d) => TextOps.sourceUnigramKL(s, d)),
-    // largest-remainder proportional quota sampling: sum(quota) = B
-    // exactly, md5-reproducible membership
-    "q226_quota_sample"    -> ((s, d) => CurationOps.quotaSample(s, d)),
-    // recency-weighted engagement: exact power-of-two decay weights
-    // summed as longs — no window, no sort
-    "q227_recency_score"   -> ((s, d) => RelationalExt.recencyEngagement(s, d)),
-    // corpus-prefix novelty: per-doc share of shingles first seen in
-    // an earlier doc — min-owner inverted index, two shuffles
-    "q228_novelty_curve"   -> ((s, d) => DedupOps.noveltyCurve(s, d)),
-    // co-occurrence lift over user baskets: the order-free complement
-    // of the q133 transition matrix
-    "q229_event_lift"      -> ((s, d) => RelationalExt.eventCooccurrence(s, d)),
-    // lang x source chi-square cells: observed/expected/contribution
-    // per cell, margins broadcast back onto the cell table
-    "q230_lang_source_chi2" -> ((s, d) => TextOps.langSourceChi2(s, d)),
-    // daily-volume OLS slope per type from five EXACT integer sums
-    // (rank x buys exactness — the q223 trick applied to regression)
-    "q231_rate_trend"      -> ((s, d) => RelationalExt.dailyRateTrend(s, d)),
-    // near-dup threshold sensitivity: pair count + mean Jaccard at
-    // four taus from ONE candidate build (1e4-scaled integer means)
-    "q232_threshold_sweep" -> ((s, d) => DedupOps.thresholdSweep(s, d)),
-    // per-user transition entropy: bot-vs-explorer segmentation from
-    // exact transition counts, 1e12-scaled order-free term sums
-    "q233_user_entropy"    -> ((s, d) => RelationalExt.userTransitionEntropy(s, d)),
-    // IVF-PQ with residual encoding: learned coarse cells + per-cell
-    // query-residual ADC over probed cells only, exact rerank
-    "q234_ivf_pq"          -> ((s, d) => SimilarityOps.ivfPqTopK(s, d)),
-    // tokenizer merge-budget ablation: fertility at 8 vs 16 merges —
-    // the vocab-size sensitivity audit, two q159-shape training loops
-    "q235_bpe_ablation"    -> ((s, d) => TextOps.bpeFertilityAblation(s, d)),
-    // decontamination n-gram-size ablation: flag rates at k=5/8/13 —
-    // the precision/recall curve behind the published 13-gram rules
-    "q236_decontam_ablation" -> ((s, d) => CurationOps.decontamAblation(s, d)),
-    // Markov removal-effect attribution: absorbing-chain conversion
-    // value, channels credited by indispensability (q186's complement)
-    "q237_removal_effect"  -> ((s, d) => RelationalExt.removalEffectAttribution(s, d)),
-    // semantic-vs-lexical dedup agreement: q162 groups against q25
-    // pairs — is semantic dedup worth its embedding cost HERE?
-    "q238_sem_lex_agreement" -> ((s, d) => DedupOps.semLexAgreement(s, d)),
-    // alpha-trimmed mean per type: the robust-location completion of
-    // winsorize (q129) / median (q199) — 1e6-quantized exact sums
-    "q239_trimmed_mean"    -> ((s, d) => RelationalExt.trimmedMean(s, d)),
-    // session conversion by entry channel: where a session STARTS
-    // predicts conversion — q33 sessions, rank-1 entry label
-    "q240_entry_conversion" -> ((s, d) =>
-      graft.streaming.EventStream.entryChannelConversion(s, d)),
-    // lang-ID calibration vs the true lang column: accuracy per
-    // q213 margin band — the reliability readout for is_ambiguous
-    "q241_langid_calibration" -> ((s, d) => TextOps.langIdCalibration(s, d)),
-    // DBSCAN-style density clustering: core/border/noise roles +
-    // min-id components of the ε-graph — k-free cluster discovery
-    "q242_density_clusters" -> ((s, d) => SimilarityOps.densityClusters(s, d)),
-    // one-permutation-hashing MinHash: 1 hash/shingle + bin minima +
-    // rotation densification — the O(|shingles|) signature build
-    "q243_neardup_oph"     -> ((s, d) => DedupOps.nearDupOPH(s, d)),
-    // trigram LM with stupid backoff (Brants 2007): per-doc avg NLL +
-    // the backoff RATE — the model-coverage readout q161 can't give
-    "q244_trigram_backoff" -> ((s, d) => TextOps.trigramBackoff(s, d)),
-    // 3-step session paths: occurrence + session-reach counts of exact
-    // event flows — the order-2 complement of q133's matrix
-    "q245_session_paths"   -> ((s, d) =>
-      graft.streaming.EventStream.sessionPathTrigrams(s, d)),
-    // power-user curve: users by distinct active days, share + CCDF —
-    // the distribution behind q187's one-number stickiness
-    "q246_active_days"     -> ((s, d) => RelationalExt.activeDaysHistogram(s, d)),
-    // dup-graph degree assortativity: hub-and-spoke vs peer-to-peer
-    // duplication in one exact-integer Pearson r
-    "q247_assortativity"   -> ((s, d) => DedupOps.dupGraphAssortativity(s, d)),
-    // Good-Turing unseen mass + Chao1 richness floor per source: the
-    // is-this-source-under-sampled readout
-    "q248_unseen_vocab"    -> ((s, d) => TextOps.unseenVocabEstimate(s, d)),
-    // winnowing (MOSS) fingerprint overlap: window-min 3-gram hashes,
-    // guaranteed detection of >= 6-word shared runs — LOCAL overlap
-    "q249_winnow_overlap"  -> ((s, d) => DedupOps.winnowOverlap(s, d)),
-    // weekday x hour seasonality heatmap per type: the baseline an
-    // anomaly detector normalizes by (share + lift vs uniform 1/168)
-    "q250_seasonality"     -> ((s, d) => RelationalExt.seasonalityProfile(s, d)),
-    // leading PC via power iteration on the exact integer scatter
-    // matrix: pc1 + anisotropy (lambda1/trace) — the whitening audit
-    "q251_pca_power"       -> ((s, d) => SimilarityOps.pcaPower(s, d)),
-    // Rocchio pseudo-relevance feedback: BM25 round 1 → top-5 docs →
-    // top-3 TF-IDF expansion terms at beta=0.5 → re-score
-    "q252_rocchio_prf"     -> ((s, d) => TextOps.rocchioPrf(s, d)),
-    // add-1 unigram NB source classifier + held-out confusion matrix:
-    // exact-integer log-prob sums, the source-separability audit
-    "q253_nb_confusion"    -> ((s, d) => TextOps.nbSourceConfusion(s, d)),
-    // Kaplan-Meier churn survival with honest right-censoring: the
-    // what-fraction-survives-past-t curve q118/q222 sidestep
-    "q254_survival_curve"  -> ((s, d) => RelationalExt.survivalCurve(s, d)),
-    // CUPED variance reduction: theta + rho^2 per event-type metric —
-    // what the pre-period covariate is worth experimentally
-    "q255_cuped"           -> ((s, d) => RelationalExt.cupedVarianceReduction(s, d)),
-    // stationary distribution of the q133 transition chain: long-run
-    // attention share per type via 50 mirrored power rounds
-    "q256_stationary"      -> ((s, d) => RelationalExt.stationaryDistribution(s, d)),
-    // asymmetric containment |A∩B|/min(|A|,|B|): subset-duplication
-    // detection over the SAME q25 candidate build
-    "q164_neardup_containment" -> ((s, d) => DedupOps.nearDupContainment(s, d)),
-    // cross-source duplication matrix: q25's verified pairs rolled up
-    // by unordered source pair — the corpus-overlap audit
-    "q165_cross_source_dups" -> ((s, d) => DedupOps.crossSourceDupMatrix(s, d)),
-    // per-doc fraction of distinct 3-gram shingles shared with >=2
-    // docs: the inter-doc boilerplate complement of q80
-    "q166_boilerplate_grams" -> ((s, d) => DedupOps.boilerplateGrams(s, d)),
-    // per-doc OOV rate vs the corpus top-20 word vocabulary
-    // (mergeable exact-count state, broadcast vocab)
-    "q167_vocab_coverage"  -> ((s, d) => TextOps.vocabCoverage(s, d)),
-    // BPE tokens-per-word by source: the tokenizer-efficiency audit
-    "q170_bpe_fertility"   -> ((s, d) => TextOps.bpeFertility(s, d)),
-    // per-doc Shannon entropy of the word distribution (evenness —
-    // the information-density complement of q149's TTR)
-    "q172_token_entropy"   -> ((s, d) => TextOps.tokenEntropy(s, d)),
-    // per-source percent_rank calibration of the quality score
-    "q173_quality_quantile_norm" -> ((s, d) => TextOps.qualityQuantileNorm(s, d)),
-    // hourly event-rate z-score anomalies per event_type (volume
-    // telemetry; q157 watches content drift)
-    "q174_event_rate_anomaly" -> ((s, d) => RelationalExt.eventRateAnomaly(s, d)),
-    // median/MAD modified z — the burst-immune complement of q174
-    "q199_robust_anomaly"  -> ((s, d) => RelationalExt.robustRateAnomaly(s, d)),
-    // EWMA-smoothed rates: regime-tracking baseline, spikes judged
-    // against the PREVIOUS hour's smoothed value (ordered-fold parity)
-    "q221_ewma_rates"      -> ((s, d) => RelationalExt.ewmaRateSmoothing(s, d)),
-    // daily new users (min-ts reduction) + cumulative curve via the
-    // two-phase distributed prefix sum
-    "q222_user_acquisition" -> ((s, d) => RelationalExt.userAcquisition(s, d)),
-    // CUSUM changepoint per type: |S_j| argmax from EXACT integer
-    // cumulatives (no ordered double fold anywhere)
-    "q223_cusum_changepoint" -> ((s, d) => RelationalExt.cusumChangepoint(s, d)),
-    // binning-free exact KS distance between source quality CDFs
-    "q200_ks_distance"     -> ((s, d) => TextOps.ksSourceDistance(s, d)),
-    // epoch budget: token-budget allocation via the α=0.5 mixture,
-    // flagging sources past the ~4-epoch repetition cliff
-    "q201_epoch_budget"    -> ((s, d) => CurationOps.epochBudget(s, d)),
-    // cluster topic cards: top TF-IDF terms per learned k-means
-    // cluster — the "what did the clustering find" readout
-    "q202_cluster_topics"  -> ((s, d) => SimilarityOps.clusterTopics(s, d)),
-    // detector-selection audit: pair-set Jaccard between the three
-    // text near-dup methods (blocking recall vs metric divergence)
-    "q203_method_agreement" -> ((s, d) => DedupOps.methodAgreement(s, d)),
-    // decile lift table: q147's learned margin vs the heuristic label
-    "q204_quality_lift"    -> ((s, d) => TextOps.qualityLiftTable(s, d)),
-    // top-k centroid-distance outliers: the embedding-quality audit
-    "q205_embedding_outliers" -> ((s, d) => SimilarityOps.embeddingOutliers(s, d)),
-    // IR eval harness: precision@10 / MRR / nDCG@10 of the exact
-    // ranking under binary label relevance
-    "q206_retrieval_metrics" -> ((s, d) => SimilarityOps.retrievalMetrics(s, d)),
-    // cross-source vocabulary overlap: exact ∩/Jaccard + HLL
-    // inclusion-exclusion envelope-gated in-plan
-    "q207_vocab_overlap"   -> ((s, d) => TextOps.vocabOverlapSketch(s, d)),
-    // semantic source drift: pairwise centroid L2/cos matrix
-    "q208_source_drift_emb" -> ((s, d) => SimilarityOps.sourceEmbeddingDrift(s, d)),
-    // arrival-process health: exact inter-event gap percentiles
-    "q209_event_gaps"      -> ((s, d) => RelationalExt.eventGapPercentiles(s, d)),
-    // incremental k-means: mergeable (cl, n, Σx) state folded per batch
-    "q210_kmeans_refresh"  -> ((s, d) => SimilarityOps.kmeansRefreshRows(s, d)),
-    // eval sampler: per-length-stratum hash quota — the subset's
-    // length distribution matches the corpus by construction
-    "q211_matched_sample"  -> ((s, d) => CurationOps.matchedEvalSample(s, d)),
-    // dedup ROI: cluster-size histogram + bytes saved under
-    // keep-the-minimum survivorship
-    "q212_dedup_roi"       -> ((s, d) => DedupOps.dedupRoi(s, d)),
-    // lang-ID confidence: sorted top-2 evidence counts + margin flag
-    "q213_lang_margin"     -> ((s, d) => TextOps.langIdMargin(s, d)),
-    // per-cluster source-mix entropy: self-dup vs syndication verdict
-    "q214_cluster_sources" -> ((s, d) => DedupOps.clusterSourceEntropy(s, d)),
-    // signal-redundancy audit: per-source Pearson matrix of the
-    // cheap quality signals (ordered-fold sums, q190 convention)
-    "q216_signal_corr"     -> ((s, d) => TextOps.signalCorrelation(s, d)),
-    // first-view → first-purchase latency percentiles, exact micros
-    "q215_conversion_latency" -> ((s, d) => RelationalExt.conversionLatency(s, d)),
-    // Poisson-bootstrap CI for per-source mean quality: one pass,
-    // B hash-derived replicate weights as extra aggregate columns
-    "q217_quality_bootstrap" -> ((s, d) => TextOps.qualityBootstrap(s, d)),
-    // simplified silhouette vs the k trained centroids: one
-    // broadcast-model corpus pass + k-sized rollup
-    "q218_silhouette"      -> ((s, d) => SimilarityOps.kmeansSilhouette(s, d)),
-    // per-source exact vocab NDV + TTR, HLL sketch envelope-gated
-    "q175_vocab_richness"  -> ((s, d) => TextOps.vocabRichnessSketch(s, d)),
-    // Heaps-law vocabulary growth curve via first-occurrence agg +
-    // two-phase distributed prefix sums
-    "q176_vocab_growth"    -> ((s, d) => TextOps.vocabGrowth(s, d)),
-    // Zipf slope per source: closed-form LS over top-100 ranks,
-    // sums folded in rank order
-    "q177_zipf_slope"      -> ((s, d) => TextOps.zipfSlope(s, d)),
-    // BPE decode(encode(w)) == w proven in-plan per dictionary word
-    "q178_bpe_round_trip"  -> ((s, d) => TextOps.bpeRoundTrip(s, d)),
-    // padding waste: arrival-order vs length-sorted batching, global
-    // ordinals via the two-phase distributed prefix sum
-    "q179_padding_waste"   -> ((s, d) => TextOps.paddingWaste(s, d)),
-    // append-only IVF index refresh == full rebuild under a frozen
-    // codebook, proven in-plan per served row
-    "q180_ivf_incremental" -> ((s, d) => SimilarityOps.ivfIncrementalAppend(s, d)),
-    // per-node triangle counts on the near-dup graph: clique vs
-    // hub-and-spoke discrimination the CC labels can't make
-    "q171_dup_triangles"   -> ((s, d) => DedupOps.triangleCounts(s, d)),
-    // local clustering coefficient: q171's triangle credits normalized
-    // by the wedge count — clique-vs-hub comparable across degrees
-    "q198_clustering_coef" -> ((s, d) => DedupOps.clusteringCoefficients(s, d)),
-    "q26_neardup_minhash"  -> ((s, d) => DedupOps.nearDupMinHashMd5(s, d)),
-    "q27_neardup_simhash"  -> ((s, d) => DedupOps.nearDupSimHash(s, d)),
-    "q28_neardup_embedding"-> ((s, d) => DedupOps.nearDupEmbedding(s, d)),
-    "q29_sim_topk"         -> ((s, d) => SimilarityOps.bruteForceTopK(s, d)),
-    // query-ensemble retrieval fused by reciprocal rank fusion
-    "q155_multiquery_rrf"  -> ((s, d) => SimilarityOps.multiQueryRRF(s, d)),
-    // int8-candidate + exact-cosine re-rank (PQ-style two-stage ANN)
-    "q156_quantized_rerank" -> ((s, d) => SimilarityOps.quantizedRerank(s, d)),
-    // MMR diversity re-rank: greedy redundancy-penalized selection
-    // over the top-50 candidates, unrolled in-plan
-    "q168_mmr_rerank"      -> ((s, d) => SimilarityOps.mmrRerank(s, d)),
-    // real Lloyd k-means training: broadcast centroid model, one
-    // (cl, pos) partial-sum shuffle per round
-    "q169_kmeans_lloyd"    -> ((s, d) => SimilarityOps.kmeansLloyd(s, d)),
-    // IVF with the LEARNED codebook: train -> index -> probe, the
-    // whole chain hash-replayable (q46's proper form)
-    "q184_ivf_learned"     -> ((s, d) => SimilarityOps.ivfLearnedTopK(s, d)),
-    // windowed conversion funnel: each step within 1h of the previous
-    "q183_funnel_windowed" -> ((s, d) => RelationalExt.funnelWindowed(s, d)),
-    // daily p50/p95 per event_type, exact PERCENTILE_DISC selection
-    "q185_daily_percentiles" -> ((s, d) => RelationalExt.dailyValuePercentiles(s, d)),
-    // last-touch attribution: purchases to the most recent preceding
-    // click, 1h-window flag
-    "q186_attribution"     -> ((s, d) => RelationalExt.lastTouchAttribution(s, d)),
-    // DAU / trailing-7-day WAU / stickiness via the x7 day expansion
-    "q187_dau_wau"         -> ((s, d) => RelationalExt.dauWau(s, d)),
-    // right-to-be-forgotten audit: anti-join retention cross-checked
-    // by an independent in-plan predicate
-    "q188_deletion_audit"  -> ((s, d) => RelationalExt.deletionAudit(s, d)),
-    // equi-depth histogram: exact rank-selected boundaries + counts
-    "q189_equidepth_hist"  -> ((s, d) => RelationalExt.equiDepthHistogram(s, d)),
-    // REGR_SLOPE/intercept/r2 per source with order-fixed folds
-    "q190_group_regression" -> ((s, d) => RelationalExt.groupRegression(s, d)),
-    // shuffle-skew audit: Gini of the key distribution + top keys
-    "q191_skew_audit"      -> ((s, d) => RelationalExt.skewAudit(s, d)),
-    // per-rule kill + unique-kill counts over the q144 Gopher gates
-    "q193_gopher_ablation" -> ((s, d) => TextOps.gopherAblation(s, d)),
-    // contamination triage by source: q88's verdicts rolled up
-    "q194_decontam_by_source" -> ((s, d) => CurationOps.decontaminationBySource(s, d)),
-    // q195–q197: the flagship O5–O13 hydro dataflow under the DuckDB
-    // hash gate (struct_pack/list twins) — reads the repo-committed
-    // WaterML fixture parquet by absolute path on BOTH engines (see
-    // graft.pipeline.HydroFixture); the sf `dir` is ignored
-    // gate shape (round 18): the driver's compare cannot sort nested
-    // struct/array cells, so each stage goes through its scalar
-    // projection (featuresFlat/mergedFlat/collectionCanonical) — the
-    // operators themselves still emit the GeoJSON nested shapes
-    "q195_hydro_features"  -> ((s, _) =>
-      graft.pipeline.HydroPipeline.featuresFlat(
-        graft.pipeline.HydroPipeline.toFeatures(
-          s.read.parquet(graft.pipeline.HydroFixture.FixtureFile)))),
-    "q196_hydro_merged"    -> ((s, _) =>
-      graft.pipeline.HydroPipeline.mergedFlat(
-        graft.pipeline.HydroPipeline.mergeSites(
-          graft.pipeline.HydroPipeline.toFeatures(
-            s.read.parquet(graft.pipeline.HydroFixture.FixtureFile))))),
-    "q197_hydro_collection" -> ((s, _) =>
-      graft.pipeline.HydroPipeline.collectionCanonical(
-        graft.pipeline.HydroPipeline.toFeatureCollection(
-          graft.pipeline.HydroPipeline.mergeSites(
-            graft.pipeline.HydroPipeline.toFeatures(
-              s.read.parquet(graft.pipeline.HydroFixture.FixtureFile)))))),
-    // join-cardinality profile: exact output size from count tables
-    "q192_join_cardinality" -> ((s, d) => RelationalExt.joinCardinalityProfile(s, d)),
-    "q30_sim_ann_lsh"      -> ((s, d) => SimilarityOps.annTopK(s, d)),
-    // margin-guided multi-probe LSH: t+1 buckets instead of the full
-    // Hamming-1 ball, probe set derived in-plan
-    "q181_multiprobe_lsh"  -> ((s, d) => SimilarityOps.multiProbeTopK(s, d)),
-    // IDF-weighted containment: shared RARE content, not boilerplate
-    "q182_neardup_weighted" -> ((s, d) => DedupOps.nearDupWeighted(s, d)),
-    "q40_neardup_emb_lsh"  -> ((s, d) => DedupOps.nearDupEmbeddingLSH(s, d)),
-    "q31_media_meta"       -> ((s, d) => MultimodalOps.mediaMeta(s, d)),
-    "q32_multimodal_features" -> ((s, d) => MultimodalOps.mediaFeatures(s, d)),
-    "q33_sessionize"       -> ((s, d) => graft.streaming.EventStream.sessionizeBatch(s, d)),
-    "q34_asof_join"        -> ((s, d) => AsofJoin.eventsToLatestOrder(s, d)),
-    // left as-of with a staleness tolerance (pandas merge_asof form)
-    "q154_asof_tolerance"  -> ((s, d) => AsofJoin.eventsToRecentOrderTolerant(s, d)),
-    "q41_interval_join"    -> ((s, d) => AsofJoin.eventPairsWithin(s, d)),
-    "q42_quantiles"        -> ((s, d) => Relational.quantiles(s, d)),
-    "q43_pivot"            -> ((s, d) => Relational.pivotEvents(s, d)),
-    "q44_word_counts"      -> ((s, d) => Relational.wordCounts(s, d)),
-    "q45_except_all"       -> ((s, d) => Relational.exceptAll(s, d)),
-    // MLVariants.nearDupMinHashML is deliberately NOT registered: the
-    // mllib approxSimilarityJoin form is ~5x slower than q26's
-    // hand-rolled banded LSH for identical results (cross-validated in
-    // SimilarityDedupSpec); it exists as the mllib integration path.
-    // gated envelope form: exact top-10 rows + in-plan ANN-recall
-    // flag (see MLVariants.ivfTopKGated); the raw KMeans-IVF result
-    // is seed/probe-dependent and so not SQL-replayable by itself
-    "q46_sim_ivf"          -> ((s, d) => MLVariants.ivfTopKGated(s, d)),
-    "q47_stats_agg"        -> ((s, d) => RelationalExt.statsAgg(s, d)),
-    "q48_grouping_sets"    -> ((s, d) => RelationalExt.groupingSetsAgg(s, d)),
-    "q49_window_nav"       -> ((s, d) => RelationalExt.windowNav(s, d)),
-    "q50_ntile"            -> ((s, d) => RelationalExt.ntileStats(s, d)),
-    "q51_regexp_funcs"     -> ((s, d) => RelationalExt.regexpFuncs(s, d)),
-    "q52_intersect_all"    -> ((s, d) => RelationalExt.intersectAllKeys(s, d)),
-    "q53_count_distinct"   -> ((s, d) => RelationalExt.countDistinctAgg(s, d)),
-    "q54_approx_distinct"  -> ((s, d) => RelationalExt.approxDistinct(s, d)),
-    "q55_agg_filter"       -> ((s, d) => RelationalExt.aggFilterClause(s, d)),
-    "q56_histogram"        -> ((s, d) => RelationalExt.histogram(s, d)),
-    "q57_sample_hash"      -> ((s, d) => RelationalExt.sampleHash(s, d)),
-    "q58_sliding_window"   -> ((s, d) => RelationalExt.slidingWindow(s, d)),
-    "q59_tfidf"            -> ((s, d) => TextOps.tfidfTop(s, d)),
-    "q60_bigrams"          -> ((s, d) => TextOps.bigramCounts(s, d)),
-    "q61_dedup_clusters"   -> ((s, d) => DedupOps.dedupClusters(s, d)),
-    "q62_centroids"        -> ((s, d) => SimilarityOps.labelCentroids(s, d)),
-    "q63_array_funcs"      -> ((s, d) => RelationalExt.arrayFuncs(s, d)),
-    "q64_map_funcs"        -> ((s, d) => RelationalExt.mapFuncs(s, d)),
-    "q65_explode_outer"    -> ((s, d) => RelationalExt.explodeOuter(s, d)),
-    "q66_union_by_name"    -> ((s, d) => RelationalExt.unionByNameMixed(s, d)),
-    "q67_date_arith"       -> ((s, d) => RelationalExt.dateArith(s, d)),
-    "q68_salted_join"      -> ((s, d) => RelationalExt.saltedJoinAgg(s, d)),
-    "q69_lateral_topn"     -> ((s, d) => RelationalExt.lateralTopN(s, d)),
-    "q70_left_outer"       -> ((s, d) => RelationalExt.leftOuterJoin(s, d)),
-    "q71_full_outer"       -> ((s, d) => RelationalExt.fullOuterJoin(s, d)),
-    "q72_cross_join"       -> ((s, d) => RelationalExt.crossJoinDims(s, d)),
-    "q73_in_list"          -> ((s, d) => RelationalExt.inListFilter(s, d)),
-    "q74_range_frame"      -> ((s, d) => RelationalExt.rangeFrame(s, d)),
-    "q75_minhash_md5"      -> ((s, d) => DedupOps.nearDupMinHashMd5(s, d)),
-    "q76_asof_forward"     -> ((s, d) => AsofJoin.ordersToNextEvent(s, d)),
-    "q77_dedup_survivors"  -> ((s, d) => TextOps.dedupSurvivors(s, d)),
-    "q78_corpus_filter"    -> ((s, d) => TextOps.corpusFilter(s, d)),
-    "q79_null_semantics"   -> ((s, d) => RelationalExt.nullSemantics(s, d)),
-    "q80_repetition"       -> ((s, d) => TextOps.repetitionStats(s, d)),
-    "q81_quantize_int8"    -> ((s, d) => SimilarityOps.quantizeInt8(s, d)),
-    "q82_stratified_sample"-> ((s, d) => RelationalExt.stratifiedSample(s, d)),
-    "q85_session_window"   -> ((s, d) => graft.streaming.EventStream.sessionizeNative(s, d)),
-    "q86_unpivot"          -> ((s, d) => Relational.unpivotMeasures(s, d)),
-    "q87_ivf_label"        -> ((s, d) => SimilarityOps.ivfLabelTopK(s, d)),
-    "q83_shard_packing"    -> ((s, d) => TextOps.shardPacking(s, d)),
-    "q84_unigram_logprob"  -> ((s, d) => TextOps.unigramLogProb(s, d)),
-    "q88_decontam"         -> ((s, d) => CurationOps.decontamination(s, d)),
-    "q89_dup_spans"        -> ((s, d) => CurationOps.duplicateSpans(s, d)),
-    // nShards pinned: the oracle SQL hardcodes % 16, and shard
-    // assignment must not drift with the session's core count
-    "q90_train_order"      -> ((s, d) => CurationOps.trainingOrder(s, d, nShards = 16)),
-    "q91_knn_join"         -> ((s, d) => SimilarityOps.knnJoin(s, d)),
-    "q92_incremental_dedup"-> ((s, d) => CurationOps.incrementalDedup(s, d)),
-    "q93_sketch_merge"     -> ((s, d) => RelationalExt.sketchMerge(s, d)),
-    "q94_mixture_sample"   -> ((s, d) => CurationOps.mixtureSample(s, d)),
-    // the production admission path: the same verdicts as q92, but
-    // probing a bucketed fingerprint index (built here per run — the
-    // write is part of what this query certifies)
-    "q95_bucketed_admission" -> ((s, d) => {
-      CurationOps.writeFingerprintIndex(s, d, "graft_fp_index", buckets = 8)
-      CurationOps.bucketedAdmission(s, d, "graft_fp_index")
-    }),
-    "q96_max_spans"        -> ((s, d) => CurationOps.maximalSpans(s, d)),
-    // q61's pipeline with the large-star/small-star merge: identical
-    // labels by contract (both = component min), so the deep-graph
-    // path sits under the same hash gate as the min-label one
-    "q97_clusters_star"    -> ((s, d) => DedupOps.dedupClustersStar(s, d)),
-    // media near-dup through the decode kernel: quantized-histogram
-    // signature, banded exact-match candidates, L1 verify — all
-    // integer observables, so the oracle recomputes from raw bytes
-    "q98_neardup_media"    -> ((s, d) => MultimodalOps.nearDupMedia(s, d)),
-    // the span family's dedup ACTION: documents rebuilt with every
-    // maximal duplicate span removed (Lee et al. remove-all semantics)
-    "q99_span_trim"        -> ((s, d) => CurationOps.trimSpans(s, d)),
-    // q42's scale twin: bounded-memory mergeable quantile sketch,
-    // gated on exact quantiles + rank-error-envelope flags (q54 shape)
-    "q100_approx_quantiles"-> ((s, d) => RelationalExt.approxQuantiles(s, d)),
-    // the persisted-index IVF probe: same verdicts as q87 (its oracle
-    // SQL verbatim), but reading a clabel-bucketed index with bucket
-    // pruning — the write is part of what this query certifies
-    "q101_ivf_bucketed"    -> ((s, d) => {
-      SimilarityOps.writeIvfIndex(s, d, "graft_ivf_index", buckets = 8)
-      SimilarityOps.ivfBucketedTopK(s, d, "graft_ivf_index")
-    }),
-    // media admission: arriving payloads vs the standing corpus's
-    // signatures — the multimodal analog of q92, batch bands broadcast
-    "q102_media_admission" -> ((s, d) => MultimodalOps.mediaAdmission(s, d)),
-    // partition-pruned layout: documents re-persisted partitioned by
-    // source, read back through a partition filter — the write AND the
-    // pruned scan are both what this query certifies (PlanSpec asserts
-    // the PartitionFilters; the oracle only sees the numbers)
-    "q103_partition_pruned" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val path = s.conf.get("spark.sql.warehouse.dir")
-        .stripSuffix("/") + "/graft_docs_by_source"
-      graft.sources.Formats.writePartitioned(
-        Tables.documents(s, d), path, Seq("source"))
-      s.read.parquet(path)
-        .filter(col("source") === "src7")
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(length(col("text"))).cast("bigint").as("total_chars"))
-    }),
-    // the dedup-actually-deduplicated gate: q99's trimmed corpus fed
-    // back through the q96 detector — residual cross-document spans
-    // plus the trim totals, as one oracle-hashed summary row
-    "q104_trim_round_trip" -> ((s, d) => CurationOps.trimRoundTrip(s, d)),
-    // q103's layout under the routine incremental operation: one
-    // source partition re-landed (filtered to doc_id % 40 = 3 — half
-    // of src3, whose ids are ≡ 3 mod 20; an even/odd filter would
-    // empty the partition and dynamic overwrite would write nothing)
-    // via DYNAMIC partition overwrite — the aggregate over the whole
-    // layout proves the re-land replaced exactly src3 and left every
-    // sibling byte-intact (a static overwrite would empty them)
-    // the corpus-scale kNN join: both sides LSH-bucketed, multi-probe,
-    // per-bucket exact scoring — q91's semantics when the query set
-    // itself is too big to broadcast
-    "q106_knn_bucketed"    -> ((s, d) => SimilarityOps.knnJoinBucketed(s, d)),
-    // heavy-hitter words: bounded-memory Misra-Gries sketch gated on
-    // the exact top-k (the q100 sketch-twin pattern) — presence and
-    // rank-error-envelope guarantees as hashed TRUE flags
-    "q108_heavy_hitters"   -> ((s, d) => TextOps.heavyHitterWords(s, d)),
-    // C4-style pattern scrub: in-place PII redaction + banned-phrase
-    // doc flags, all codegen'd narrow maps on the scan
-    "q109_scrub"           -> ((s, d) => CurationOps.scrub(s, d)),
-    // near-dup admission: the arriving batch probed against the
-    // corpus MinHash band index (batch bands broadcast — the index
-    // never repartitions), exact-Jaccard verify, per-doc verdicts
-    "q110_neardup_admission" -> ((s, d) => DedupOps.nearDupAdmissionMd5(s, d)),
-    // snapshot diff: CDC between two corpus versions by content
-    // fingerprint — only 32-char md5s ever shuffle, and bucketed
-    // snapshots diff with zero exchanges (spec-asserted)
-    "q111_snapshot_diff"   -> ((s, d) => CurationOps.corpusDiff(s, d)),
-    // q92's verdicts through an explicit runtime-filter gate: a bloom
-    // of the batch keys (built distributed, shipped as a scalar
-    // subquery) prunes the index SCAN before the join — semantically
-    // invisible (no false negatives), so the oracle is q92's verbatim
-    "q112_bloom_admission" -> ((s, d) => CurationOps.bloomGatedAdmission(s, d)),
-    // token-budget selection: best-quality docs until the budget is
-    // spent, via the two-phase distributed prefix sum (no global
-    // single-partition window)
-    "q113_budget_select"   -> ((s, d) => CurationOps.budgetSelect(s, d)),
-    // embedding-batch admission: arriving vectors probed against the
-    // persisted IVF index of the standing corpus (index written here —
-    // the build is part of what this query certifies)
-    "q107_embedding_admission" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      SimilarityOps.writeIvfIndexOf(
-        Tables.embeddings(s, d).filter(pmod(col("vec_id"), lit(5)) =!= 4),
-        "graft_ivf_adm", buckets = 8)
-      SimilarityOps.embeddingAdmission(s, d, "graft_ivf_adm")
-    }),
-    "q105_dynamic_overwrite" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val path = s.conf.get("spark.sql.warehouse.dir")
-        .stripSuffix("/") + "/graft_docs_dyn"
-      val docs = Tables.documents(s, d)
-      graft.sources.Formats.writePartitioned(docs, path, Seq("source"))
-      graft.sources.Formats.overwritePartitions(
-        docs.filter(col("source") === "src3" && pmod(col("doc_id"), lit(40)) === 3),
-        path, Seq("source"))
-      s.read.parquet(path)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(length(col("text"))).cast("bigint").as("total_chars"))
-    }),
-    // partition-scoped MERGE: a keyed change batch (delete / replace /
-    // insert, including into a brand-new partition) applied to q103's
-    // layout by rewriting ONLY the touched partitions — dynamic
-    // partition pruning on the read (spec-asserted), dynamic overwrite
-    // on the write; the whole-layout aggregate proves delete/replace/
-    // insert semantics AND sibling survival in one oracle row set
-    "q114_merge_partitioned" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val path = s.conf.get("spark.sql.warehouse.dir")
-        .stripSuffix("/") + "/graft_docs_merge"
-      val docs = Tables.documents(s, d)
-      graft.sources.Formats.writePartitioned(docs, path, Seq("source"))
-      val base = docs.filter(col("source").isin("src2", "src5"))
-      val m = pmod(col("doc_id"), lit(23))
-      val changes = base.filter(m === 4).withColumn("op", lit("delete"))
-        .unionByName(base.filter(m === 6)
-          .withColumn("text", concat(col("text"), lit(" merged-edit")))
-          .withColumn("op", lit("upsert")))
-        .unionByName(base.filter(m === 9)
-          .withColumn("doc_id", col("doc_id") + 2000000L)
-          .withColumn("source", lit("src_new"))
-          .withColumn("op", lit("upsert")))
-      graft.sources.Formats.mergeIntoPartitioned(s, path, changes, "doc_id", "source")
-      s.read.parquet(path)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("doc_id")).cast("bigint").as("sum_ids"),
-          sum(length(col("text"))).cast("bigint").as("total_chars"))
-    }),
-    // per-source percentile quality gate: two-pass threshold compute +
-    // broadcast-join filter — no per-source corpus sort (cf. the
-    // percent_rank window it replaces)
-    "q115_percentile_gate" -> ((s, d) => CurationOps.percentileGate(s, d)),
-    // inverted index: token → ordered doc:tf postings for the
-    // bounded-df band; df/total_tf from the full aggregation
-    "q116_inverted_index"  -> ((s, d) => TextOps.invertedIndex(s, d)),
-    // ordered funnel: users completing view → click → purchase in
-    // strict time order — chained min-over-filter stages, no sort
-    "q117_funnel"          -> ((s, d) => RelationalExt.funnel(s, d)),
-    // weekly cohort retention triangle: distinct activity collapse →
-    // cohort via window min → triangle count (no join, no distinct)
-    "q118_cohort_retention" -> ((s, d) => RelationalExt.cohortRetention(s, d)),
-    // PageRank over the near-dup pair graph: 5 power iterations, one
-    // edge join + one dst aggregation per round, lineage cut per round
-    "q119_pagerank_dups"   -> ((s, d) => DedupOps.pageRankDupGraph(s, d)),
-    // weighted sampling without replacement (Efraimidis-Spirakis
-    // A-Res): hash-derived u, key u^(1/quality), partial top-k
-    "q120_weighted_sample" -> ((s, d) => CurationOps.weightedSample(s, d)),
-    // incremental rollup: mergeable (count,sum) state bootstrapped
-    // from history, refreshed by the batch's partials — must equal
-    // the from-scratch aggregation (the oracle recomputes everything)
-    "q121_incremental_rollup" -> ((s, d) => RelationalExt.incrementalRollup(s, d)),
-    // Deequ-style constraint audit: fused per-table conditional sums
-    // + one anti-join referential check, unpivoted in the plan
-    "q122_quality_audit"   -> ((s, d) => RelationalExt.qualityAudit(s, d)),
-    // ANALYZE-style column stats: one pass, stack-unpivoted
-    "q123_column_stats"    -> ((s, d) => RelationalExt.columnStats(s, d)),
-    // per-source PSI drift vs the corpus length distribution
-    "q157_source_drift"    -> ((s, d) => RelationalExt.sourceDrift(s, d)),
-    // DSIR importance selection toward a target source's distribution
-    "q158_dsir_select"     -> ((s, d) => TextOps.dsirSelect(s, d)),
-    // BPE merge-table induction (Sennrich 2016): deterministic
-    // most-frequent-pair merges, oracle replays the full loop
-    "q159_bpe_merges"      -> ((s, d) => TextOps.bpeMerges(s, d)),
-    // tokenize with the learned merges: exact per-doc BPE token counts
-    "q160_bpe_tokens"      -> ((s, d) => TextOps.bpeTokenCounts(s, d)),
-    // CCNet-style bigram-LM fluency: interpolated model trained on
-    // src0, per-doc avg-NLL, head/middle/tail banding
-    "q161_bigram_fluency"  -> ((s, d) => TextOps.bigramFluency(s, d)),
-    // SemDeDup: within-cluster cosine dup groups, keep the member
-    // least similar to the centroid
-    "q162_semdedup"        -> ((s, d) => SimilarityOps.semDedup(s, d)),
-    // JL random projection 64->16 dims, md5-derived +-1 matrix,
-    // zero-exchange narrow map
-    "q163_random_projection" -> ((s, d) => SimilarityOps.randomProjection(s, d)),
-    // q123's sketch twin: HLL NDV per column gated on the exact value
-    // via an in-plan envelope flag (the q100/q54 pattern)
-    "q124_column_stats_sketch" -> ((s, d) => RelationalExt.columnStatsSketch(s, d)),
-    // decontamination vs TWO eval suites in one corpus pass: the
-    // suite-tagged gram dim broadcasts once, per-suite hits pivot as
-    // conditional counts (another suite = a column, not a scan)
-    "q125_multi_decontam"  -> ((s, d) => CurationOps.multiDecontamination(s, d)),
-    // survivorship: per dedup cluster keep the best-quality member
-    // (exact packed-integer key — no float tie-break at the boundary)
-    "q126_cluster_survivors" -> ((s, d) => DedupOps.clusterSurvivors(s, d)),
-    // the composed curation pipeline (gate -> decontaminate -> budget
-    // select) as ONE lazy plan, hash-gated end to end
-    "q127_curation_pipeline" -> ((s, d) => CurationOps.curationPipeline(s, d)),
-    // training-shard export: q83's packing written as JSONL shard
-    // directories, manifest aggregated from the files READ BACK —
-    // the gate certifies what is on disk
-    "q128_shard_export"    -> ((s, d) => TextOps.shardExport(s, d)),
-    // per-source winsorization: p05/p95 band clip + outlier flags,
-    // the q115 two-pass shape with integer-exact clipped values
-    "q129_winsorize"       -> ((s, d) => CurationOps.winsorize(s, d)),
-    // BM25 top-k retrieval: tf pruned to query terms at the scan,
-    // df/avgdl/N broadcast, partial top-k — the retrieval flagship
-    "q130_bm25_topk"       -> ((s, d) => TextOps.bm25TopK(s, d)),
-    // positional phrase search: two postings lists self-joined on
-    // (doc, pos+1) — an index probe, not a corpus pass
-    "q131_phrase_search"   -> ((s, d) => TextOps.phraseSearch(s, d)),
-    // per-source top-3 by quality via the bounded-buffer Aggregator:
-    // O(groups x k) state instead of the window's per-group sort
-    "q132_grouped_topk"    -> ((s, d) => TextOps.groupedTopK(s, d)),
-    // first-order Markov transition counts over per-user event
-    // sequences (event_id tie-break makes lead deterministic)
-    "q133_event_transitions" -> ((s, d) => RelationalExt.eventTransitions(s, d)),
-    // windowed co-occurrence PMI: pair stream O(words x window), pair
-    // total from doc lengths, vocab-sized broadcasts, partial top-k
-    "q134_pmi_pairs"       -> ((s, d) => TextOps.pmiPairs(s, d)),
-    // contrastive pair mining: verified near-dup positives + bucketed
-    // deterministic negatives (no global window), anti-joined clean
-    "q135_contrastive_pairs" -> ((s, d) => DedupOps.contrastivePairs(s, d)),
-    // hard negatives: bucket-colliding pairs that FAIL verification —
-    // the near misses a contrastive boundary actually learns from
-    "q136_hard_negatives"  -> ((s, d) => DedupOps.hardNegatives(s, d)),
-    // split-leakage audit: near-dup pairs crossing a hash split —
-    // each row is an eval-inflating leak
-    "q137_split_leakage"   -> ((s, d) => CurationOps.splitLeakage(s, d)),
-    // leakage-free split assignment keyed on the dedup-cluster rep
-    "q153_cluster_split"   -> ((s, d) => CurationOps.clusterAwareSplit(s, d)),
-    // stop-key bucket cap ENGAGED: near-dup with buckets > 3 members
-    // excluded wholesale — the O(bucket^2) guard, oracle-mirrored
-    "q138_neardup_capped"  -> ((s, d) => DedupOps.nearDupNgramCapped(s, d)),
-    // hard negatives bounded to the top-2 hardest per anchor doc —
-    // the per-doc output cap a 100 TB contrastive run needs
-    "q139_hard_neg_capped" -> ((s, d) => DedupOps.hardNegativesCapped(s, d)),
-    // overlapping word-window passage chunking: one narrow map per
-    // doc, zero shuffles — the RAG splitter
-    "q140_chunk_passages"  -> ((s, d) => TextOps.chunkPassages(s, d, window = 40, stride = 30)),
-    // BM25 at passage grain over the chunked corpus — end-to-end
-    // RAG retrieval (chunk -> index -> score -> top-k)
-    "q141_passage_bm25"    -> ((s, d) =>
-      TextOps.bm25PassageTopK(s, d, window = 40, stride = 30)),
-    // Z-order (Morton) keys on (customer, order day) — the layout
-    // clustering primitive; exact integer quantize + bit interleave
-    "q142_zorder_keys"     -> ((s, d) => RelationalExt.zOrderKeysOrders(s, d)),
-    // incremental clustering: the pair stream folded in three batches
-    // through star-CC state updates — must equal one-shot q61
-    "q143_incremental_clusters" -> ((s, d) => DedupOps.dedupClustersIncremental(s, d)),
-    // Gopher-style rule gate: 7 boolean quality rules per document,
-    // every ratio an exact integer cross-multiplication
-    "q144_gopher_rules"    -> ((s, d) => TextOps.gopherRules(s, d)),
-    // LOCF imputation: error events' missing values filled from the
-    // user's most recent non-missing observation
-    "q145_locf_impute"     -> ((s, d) => RelationalExt.locfImpute(s, d)),
-    // token-exact sequence packing via the grouped two-phase prefix
-    // sum — a straddling doc is split with exact offsets
-    "q146_sequence_pack"   -> ((s, d) => TextOps.sequencePack(s, d)),
-    // fastText-style hashed linear classifier: md5-bucketed words,
-    // integer weights as a plan literal, exact BIGINT dot product,
-    // one narrow codegen pass
-    "q147_linear_quality"  -> ((s, d) => TextOps.linearQuality(s, d)),
-    // per-doc admission decision log: five shared-definition gates,
-    // failure count, first failing gate, verdict
-    "q148_gate_log"        -> ((s, d) => CurationOps.gateLog(s, d)),
-    // vocabulary-shape quality signals: exact counts + one-division TTR
-    "q149_lexical_diversity" -> ((s, d) => TextOps.lexicalDiversity(s, d)),
-    // L2 normalization exploded to (vec_id, dim) rows for the oracle
-    "q150_embed_normalize" -> ((s, d) => SimilarityOps.embeddingUnitRows(s, d)),
-    // edit-distance near-dup: prefix blocking + banded-DP Levenshtein
-    "q151_neardup_edit"    -> ((s, d) => DedupOps.nearDupEdit(s, d)),
-    // q151 with the stop-prefix block cap engaged (the 100 TB form)
-    "q152_neardup_edit_capped" -> ((s, d) => DedupOps.nearDupEditCapped(s, d)),
-    "q36_math_funcs"       -> ((s, d) => Relational.mathFuncs(s, d)),
-    "q37_string_funcs"     -> ((s, d) => Relational.stringFuncs(s, d)),
-    "q38_cube"             -> ((s, d) => Relational.cubeAgg(s, d)),
-    "q39_sql_subquery"     -> ((s, d) => Relational.sqlSubquery(s, d)),
-    "q35_weighted_mean"    -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.Encoders
-      val wm = udaf(graft.functions.WeightedMean,
-        Encoders.tuple(Encoders.scalaDouble, Encoders.scalaDouble))
-      Tables.lineitem(s, d).groupBy(col("l_returnflag"))
-        .agg(round(wm(col("l_extendedprice"), col("l_quantity")), 2).as("w_avg_price"))
-    }),
-  )
+  /** Every registered query, family by family. */
+  val specs: Seq[QuerySpec] = distinctNames(
+    RelationalQueries.specs ++ RelationalExtQueries.specs ++ TextQueries.specs ++
+      DedupQueries.specs ++ SimilarityQueries.specs ++ CurationQueries.specs ++
+      MultimodalQueries.specs ++ AsofJoinQueries.specs ++
+      graft.streaming.EventStreamQueries.specs ++ graft.pipeline.HydroQueries.specs ++
+      graft.sources.FormatsQueries.specs)
 
-  /** Exact brute-force cosine top-10 CTE shared by q29 (which IS the
-    * brute force) and q46's gated envelope (whose checkable values are
-    * the same exact rows — the ANN leg only feeds the TRUE flag). */
-  /** q168 oracle: the MMR greedy loop replayed as program-generated
-    * unrolled CTE stages (the q159 pattern) — stage r picks the
-    * argmax of `0.7·rel − (1−0.7)·max sim-to-selected` over the
-    * not-yet-selected candidates. The (1−λ) coefficient is written as
-    * the SUBTRACTION `1.0 − 0.7` on both engines (Spark computes
-    * `lit(1.0 - lam)` = 0.30000000000000004 — a bare 0.3 literal is a
-    * DIFFERENT double), and bare literals are cast to DOUBLE (DuckDB
-    * parses 0.7 as DECIMAL, the q155 lesson). rel and sims rounded at
-    * 4; each decision on the raw identical-IEEE mmr expression with
-    * vec_id ties. */
-  private lazy val mmrOracleSql: String = {
-    def cos(a: String, b: String): String =
-      s"""round(list_sum(list_transform(range(1, len($a) + 1),
-         |      i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE))) /
-         |    (sqrt(list_sum(list_transform(range(1, len($a) + 1),
-         |      i -> CAST($a[i] AS DOUBLE) * CAST($a[i] AS DOUBLE)))) *
-         |     sqrt(list_sum(list_transform(range(1, len($b) + 1),
-         |      i -> CAST($b[i] AS DOUBLE) * CAST($b[i] AS DOUBLE))))), 4)""".stripMargin
-    val stages = (2 to 10).map { r =>
-      s"""sel$r AS MATERIALIZED (SELECT * FROM sel${r - 1} UNION ALL
-         |  (SELECT c.vec_id, c.rel,
-         |     0.7::DOUBLE * c.rel - (1.0::DOUBLE - 0.7::DOUBLE) * m.msim AS mmr,
-         |     CAST($r AS BIGINT) AS rank
-         |   FROM cand c
-         |   JOIN (SELECT a, max(sim) AS msim FROM sims
-         |         WHERE b IN (SELECT vec_id FROM sel${r - 1}) GROUP BY a) m
-         |     ON m.a = c.vec_id
-         |   WHERE c.vec_id NOT IN (SELECT vec_id FROM sel${r - 1})
-         |   ORDER BY mmr DESC, c.vec_id LIMIT 1))""".stripMargin
-    }.mkString(",\n")
-    s"""WITH q AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0),
-       |cand AS MATERIALIZED (
-       |  SELECT e.vec_id, e.embedding,
-       |    ${cos("e.embedding", "q.q_emb")} AS rel
-       |  FROM embeddings e, q WHERE e.vec_id <> 0
-       |  ORDER BY rel DESC, e.vec_id LIMIT 50),
-       |sims AS MATERIALIZED (
-       |  SELECT a.vec_id AS a, b.vec_id AS b,
-       |    ${cos("a.embedding", "b.embedding")} AS sim
-       |  FROM cand a, cand b WHERE a.vec_id <> b.vec_id),
-       |sel1 AS MATERIALIZED (SELECT vec_id, rel, rel AS mmr, CAST(1 AS BIGINT) AS rank
-       |         FROM cand ORDER BY rel DESC, vec_id LIMIT 1),
-       |$stages
-       |SELECT rank, vec_id, rel, round(mmr, 6) AS mmr
-       |FROM sel10 ORDER BY rank""".stripMargin
+  /** `specs` unchanged, or an IllegalArgumentException naming every
+    * query name declared more than once. */
+  private[graft] def distinctNames(specs: Seq[QuerySpec]): Seq[QuerySpec] = {
+    val dups = specs.groupBy(_.name).collect { case (n, ss) if ss.size > 1 => n }
+    require(dups.isEmpty, s"duplicate query names: ${dups.toSeq.sorted.mkString(", ")}")
+    specs
   }
 
-  /** q169 oracle: Lloyd's loop replayed as unrolled MATERIALIZED CTE
-    * rounds — c0 seeds from the first k vectors, each round is a
-    * CROSS JOIN distance stage (list_sum fold, the q87/q162 parity),
-    * a row_number() argmin with (d2, cl) ties, and an avg-per-(cl,pos)
-    * centroid rebuild; the final select re-assigns against the last
-    * centroids. Means are exact (float32 inputs summed in double —
-    * the q87/q162 argument), so every round is hash-exact. */
-  private def kmeansDistSql: String =
-    s"""list_sum(list_transform(range(1, len(e.emb) + 1),
-       |      i -> (e.emb[i] - c.cent[i]) * (e.emb[i] - c.cent[i])))""".stripMargin
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    specs.map(q => q.name -> q.run).toMap
 
-  /** Shared Lloyd stage chain (q169/q184/q162): `WITH e, flat, c0 …
-    * c{iters−1}, df, fin` where `fin` holds the final (vec_id,
-    * cluster, raw d2) assignment against the trained centroids.
-    * [[kmeansStagesBody]] returns the CTE list WITHOUT the leading
-    * `WITH` so callers needing `WITH RECURSIVE` (q162's CC) can
-    * prepend their own keyword; `kExpr` is a SQL expression so k can
-    * be DATA-DEPENDENT (q162's corpus-proportional k = ⌈n/target⌉ —
-    * the oracle computes the same k from the same table the Spark
-    * side counts). */
-  private def kmeansStagesBody(kExpr: String, iters: Int): String = {
-    val rounds = (1 until iters).map { r =>
-      s"""d$r AS MATERIALIZED (
-         |  SELECT e.vec_id, c.cl, $kmeansDistSql AS d2
-         |  FROM e CROSS JOIN c${r - 1} c),
-         |a$r AS MATERIALIZED (
-         |  SELECT vec_id, cl FROM (
-         |    SELECT vec_id, cl,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY d2, cl) AS rk
-         |    FROM d$r) WHERE rk = 1),
-         |c$r AS MATERIALIZED (
-         |  SELECT cl, list(m ORDER BY pos) AS cent FROM (
-         |    SELECT a.cl, f.pos, avg(f.v) AS m
-         |    FROM a$r a JOIN flat f ON f.vec_id = a.vec_id
-         |    GROUP BY a.cl, f.pos) GROUP BY cl)""".stripMargin
-    }.mkString(",\n")
-    s"""e AS MATERIALIZED (
-       |  SELECT vec_id, CAST(label AS INTEGER) AS label,
-       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-       |  FROM embeddings),
-       |flat AS MATERIALIZED (
-       |  SELECT vec_id, unnest(range(1, len(emb) + 1)) AS pos, unnest(emb) AS v
-       |  FROM e),
-       |c0 AS MATERIALIZED (SELECT vec_id AS cl, emb AS cent FROM e WHERE vec_id < ($kExpr)),
-       |$rounds,
-       |df AS MATERIALIZED (
-       |  SELECT e.vec_id, c.cl, $kmeansDistSql AS d2
-       |  FROM e CROSS JOIN c${iters - 1} c),
-       |fin AS MATERIALIZED (
-       |  SELECT vec_id, cl AS cluster, d2 FROM (
-       |    SELECT vec_id, cl, d2,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY d2, cl) AS rk
-       |    FROM df) WHERE rk = 1)""".stripMargin
-  }
-
-  private def kmeansStagesSql(k: Int, iters: Int): String =
-    "WITH " + kmeansStagesBody(k.toString, iters)
-
-  /** q210 oracle: the incremental k-means refresh replayed as
-    * unrolled CTE stages — bootstrap Lloyd rounds on the first third,
-    * that third's sufficient statistics (cl, n, per-dim Σx), then two
-    * refresh stages each assigning a batch against the CURRENT state
-    * centroids (Σx/n) and ADDING its statistics into the state; the
-    * final centroid is one division per dim under the floor-form
-    * rounding. Mirrors SimilarityOps.kmeansRefresh stage for stage
-    * (batch-order state addition, left-join + coalesce for clusters a
-    * batch never touched); emitted in kmeansRefreshRows' exploded
-    * (cluster, n_members, dim, c_v) shape — the driver compare can't
-    * sort an array<double> cell. */
-  private lazy val kmeansRefreshOracleSql: String = {
-    def dist(eTbl: String, cTbl: String) =
-      s"""list_sum(list_transform(range(1, len(e.emb) + 1),
-         |      i -> (e.emb[i] - c.cent[i]) * (e.emb[i] - c.cent[i])))""".stripMargin
-    // one assignment stage: argmin of eTbl's vectors against cTbl
-    def assign(tag: String, eTbl: String, cTbl: String) =
-      s"""${tag}d AS MATERIALIZED (
-         |  SELECT e.vec_id, c.cl, ${dist(eTbl, cTbl)} AS d2
-         |  FROM $eTbl e CROSS JOIN $cTbl c),
-         |${tag}a AS MATERIALIZED (
-         |  SELECT vec_id, cl FROM (
-         |    SELECT vec_id, cl,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY d2, cl) AS rk
-         |    FROM ${tag}d) WHERE rk = 1)""".stripMargin
-    // per-cluster sufficient statistics of an assignment
-    def st(tag: String, aTbl: String, flatTbl: String) =
-      s"""${tag}n AS (SELECT cl, count(*) AS n FROM $aTbl GROUP BY 1),
-         |${tag}s AS (
-         |  SELECT a.cl, f.pos, sum(f.v) AS s
-         |  FROM $aTbl a JOIN $flatTbl f USING (vec_id) GROUP BY 1, 2),
-         |$tag AS MATERIALIZED (
-         |  SELECT n.cl, n.n, (SELECT list(s ORDER BY pos) FROM ${tag}s s2
-         |                     WHERE s2.cl = n.cl) AS sums
-         |  FROM ${tag}n n)""".stripMargin
-    // state + batch statistics -> new state (clusters untouched by the
-    // batch pass through; a batch can never mint a new cluster)
-    def fold(outTbl: String, stTbl: String, batchTbl: String) =
-      s"""$outTbl AS MATERIALIZED (
-         |  SELECT st.cl, st.n + coalesce(b.n, 0) AS n,
-         |    list_transform(range(1, len(st.sums) + 1),
-         |      i -> st.sums[i] + coalesce(b.sums[i], 0.0)) AS sums
-         |  FROM $stTbl st LEFT JOIN $batchTbl b ON b.cl = st.cl)""".stripMargin
-    def cent(outTbl: String, stTbl: String) =
-      s"""$outTbl AS MATERIALIZED (
-         |  SELECT cl, list_transform(sums, s -> s / n) AS cent FROM $stTbl)""".stripMargin
-    val bootRounds = (1 to 2).map { r =>
-      s"""${assign(s"br$r", "e0", s"bc${r - 1}")},
-         |bc$r AS MATERIALIZED (
-         |  SELECT cl, list(m ORDER BY pos) AS cent FROM (
-         |    SELECT a.cl, f.pos, avg(f.v) AS m
-         |    FROM br${r}a a JOIN flat0 f USING (vec_id)
-         |    GROUP BY a.cl, f.pos) t GROUP BY cl)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH e AS MATERIALIZED (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-       |  FROM embeddings),
-       |nn AS (SELECT (max(vec_id) + 1) // 3 AS third, max(vec_id) + 1 AS total FROM e),
-       |e0 AS MATERIALIZED (SELECT e.vec_id, e.emb FROM e, nn WHERE vec_id < third),
-       |e1 AS MATERIALIZED (SELECT e.vec_id, e.emb FROM e, nn
-       |  WHERE vec_id >= third AND vec_id < 2 * third),
-       |e2 AS MATERIALIZED (SELECT e.vec_id, e.emb FROM e, nn
-       |  WHERE vec_id >= 2 * third AND vec_id < total),
-       |flat0 AS MATERIALIZED (
-       |  SELECT vec_id, unnest(range(1, len(emb) + 1)) AS pos, unnest(emb) AS v FROM e0),
-       |flat1 AS MATERIALIZED (
-       |  SELECT vec_id, unnest(range(1, len(emb) + 1)) AS pos, unnest(emb) AS v FROM e1),
-       |flat2 AS MATERIALIZED (
-       |  SELECT vec_id, unnest(range(1, len(emb) + 1)) AS pos, unnest(emb) AS v FROM e2),
-       |bc0 AS MATERIALIZED (SELECT vec_id AS cl, emb AS cent FROM e0 WHERE vec_id < 8),
-       |$bootRounds,
-       |${assign("f0", "e0", "bc2")},
-       |${st("st0", "f0a", "flat0")},
-       |${cent("cent1", "st0")},
-       |${assign("f1", "e1", "cent1")},
-       |${st("stb1", "f1a", "flat1")},
-       |${fold("state1", "st0", "stb1")},
-       |${cent("cent2", "state1")},
-       |${assign("f2", "e2", "cent2")},
-       |${st("stb2", "f2a", "flat2")},
-       |${fold("state2", "state1", "stb2")}
-       |SELECT cl AS cluster, n AS n_members,
-       |  CAST(unnest(range(0, len(sums))) AS BIGINT) AS dim,
-       |  unnest(list_transform(sums, s -> floor(s / n * 1000000 + 0.5) / 1000000)) AS c_v
-       |FROM state2 ORDER BY cluster""".stripMargin
-  }
-
-  /** q224 oracle: the whole PQ pipeline replayed as unrolled CTEs —
-    * per-subspace slices, each subspace's Lloyd chain (first-k seeds,
-    * one avg update at iters=2, the (d2, cl)-rank assignment that
-    * mirrors the engine's strict-< fold), the query's m×k LUT, the
-    * fixed left-to-right ADC sum, the (adc, vec_id) shortlist and the
-    * exact-d2 rerank. m=8, k=8 (sub=8) over the 64-dim embeddings. */
-  private lazy val pqRerankOracleSql: String = {
-    val m = 8; val k = 8; val sub = 8; val shortlist = 50; val topK = 10
-    def d2(v: String, c: String) =
-      s"list_sum(list_transform(range(1, len($v) + 1), i -> ($v[i] - $c[i]) * ($v[i] - $c[i])))"
-    val perSub = (0 until m).map { s =>
-      val lo = s * sub + 1; val hi = s * sub + sub
-      s"""sub$s AS MATERIALIZED (SELECT vec_id, list_slice(emb, $lo, $hi) AS v FROM e),
-         |flat$s AS MATERIALIZED (
-         |  SELECT vec_id, unnest(range(1, len(v) + 1)) AS pos, unnest(v) AS val FROM sub$s),
-         |c${s}_0 AS MATERIALIZED (SELECT vec_id AS cl, v AS cent FROM sub$s WHERE vec_id < $k),
-         |a${s}_1 AS MATERIALIZED (
-         |  SELECT vec_id, cl FROM (
-         |    SELECT x.vec_id, c.cl,
-         |      row_number() OVER (PARTITION BY x.vec_id
-         |        ORDER BY ${d2("x.v", "c.cent")}, c.cl) AS rk
-         |    FROM sub$s x CROSS JOIN c${s}_0 c) WHERE rk = 1),
-         |c${s}_1 AS MATERIALIZED (
-         |  SELECT cl, list(mv ORDER BY pos) AS cent FROM (
-         |    SELECT a.cl, f.pos, avg(f.val) AS mv
-         |    FROM a${s}_1 a JOIN flat$s f USING (vec_id) GROUP BY a.cl, f.pos) t
-         |  GROUP BY cl),
-         |af$s AS MATERIALIZED (
-         |  SELECT vec_id, cl FROM (
-         |    SELECT x.vec_id, c.cl,
-         |      row_number() OVER (PARTITION BY x.vec_id
-         |        ORDER BY ${d2("x.v", "c.cent")}, c.cl) AS rk
-         |    FROM sub$s x CROSS JOIN c${s}_1 c) WHERE rk = 1),
-         |lut$s AS MATERIALIZED (
-         |  SELECT c.cl, ${d2("q.v", "c.cent")} AS qd2
-         |  FROM c${s}_1 c CROSS JOIN (SELECT v FROM sub$s WHERE vec_id = 0) q)""".stripMargin
-    }.mkString(",\n")
-    val codeJoin = (1 until m).map(s => s"JOIN af$s ON af$s.vec_id = af0.vec_id").mkString(" ")
-    val codeCols = (0 until m).map(s => s"af$s.cl AS code$s").mkString(", ")
-    val lutJoin = (0 until m).map(s => s"JOIN lut$s l$s ON l$s.cl = c.code$s").mkString(" ")
-    val adcSum = (0 until m).map(s => s"l$s.qd2").mkString(" + ")
-    val codeOut = (0 until m).map(s => s"code$s").mkString(", ")
-    s"""WITH e AS MATERIALIZED (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-       |  FROM embeddings),
-       |$perSub,
-       |codes AS (SELECT af0.vec_id, $codeCols FROM af0 $codeJoin),
-       |adc AS (
-       |  SELECT c.vec_id, $codeOut, $adcSum AS adc
-       |  FROM codes c $lutJoin WHERE c.vec_id <> 0),
-       |short AS (SELECT * FROM adc ORDER BY adc, vec_id LIMIT $shortlist),
-       |qfull AS (SELECT emb AS qe FROM e WHERE vec_id = 0),
-       |ex AS (
-       |  SELECT s.vec_id, $codeOut, s.adc, ${d2("x.emb", "q.qe")} AS exact
-       |  FROM short s JOIN e x ON x.vec_id = s.vec_id CROSS JOIN qfull q)
-       |SELECT vec_id, $codeOut, round(adc, 6) AS approx_d2, round(exact, 6) AS d2
-       |FROM ex ORDER BY exact, vec_id LIMIT $topK""".stripMargin
-  }
-
-  /** q237 oracle: journey truncation + transition counts, then the
-    * absorbing-chain value iteration UNROLLED — 80 rounds for the
-    * base chain and per removed channel (contraction ≈ 0.8/round), each round one tiny
-    * (state)-grouped CTE whose terms fold in ASCENDING TARGET order
-    * (list_sum over list(… ORDER BY t) ↔ the engine's foldLeft), so
-    * every double matches the engine's driver-side iteration
-    * bit-for-bit. */
-  private lazy val removalEffectOracleSql: String = {
-    val rounds = 80
-    // Static at SQL-generation time because each channel needs its own
-    // unrolled 80-round chain; the engine instead DERIVES channels from
-    // the observed journey targets. The per-row EXISTS guard below
-    // reconciles the two: a listed channel that never occurs as a
-    // target self-removes from the oracle (matching the engine's
-    // omission), and an UNLISTED channel that does occur makes the
-    // row-count gate fail loudly — the signal to extend this list.
-    val channels = Seq("click", "error", "signup", "view")
-    def roundCte(tag: String, r: Int, removed: Option[String]): String = {
-      val removedCase = removed.map(c => s"WHEN tp.t = '$c' THEN 0.0\n         ").getOrElse("")
-      s"""v$tag$r AS MATERIALIZED (
-         |  SELECT tp.s, list_sum(list(
-         |    CASE ${removedCase}WHEN tp.t = 'purchase' THEN tp.p * 1.0
-         |         WHEN tp.t = 'DROP' THEN 0.0
-         |         ELSE tp.p * coalesce(v.v, 0.0) END ORDER BY tp.t)) AS v
-         |  FROM tp LEFT JOIN v$tag${r - 1} v ON v.s = tp.t
-         |  GROUP BY tp.s)""".stripMargin
-    }
-    def chain(tag: String, removed: Option[String]): String =
-      (s"""v${tag}0 AS MATERIALIZED (SELECT s, 0.0 AS v FROM tot)""" +:
-        (1 to rounds).map(r => roundCte(tag, r, removed))).mkString(",\n")
-    val chains = (chain("b", None) +:
-      channels.map(c => chain(c, Some(c)))).mkString(",\n")
-    val rows = channels.map { c =>
-      s"""SELECT '$c' AS channel,
-         |  ${TextOps.roundAtSql(s"(SELECT v FROM vb$rounds WHERE s = 'START')", 6)} AS base_conv,
-         |  ${TextOps.roundAtSql(s"(SELECT v FROM v$c$rounds WHERE s = 'START')", 6)} AS removed_conv,
-         |  ${TextOps.roundAtSql(
-              s"CASE WHEN (SELECT v FROM vb$rounds WHERE s = 'START') > 0 THEN " +
-              s"((SELECT v FROM vb$rounds WHERE s = 'START') - (SELECT v FROM v$c$rounds WHERE s = 'START')) / " +
-              s"(SELECT v FROM vb$rounds WHERE s = 'START') ELSE 0.0 END", 6)} AS removal_effect
-         |WHERE EXISTS (SELECT 1 FROM tp WHERE tp.t = '$c')""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    s"""WITH ev AS (
-       |  SELECT user_id, event_type,
-       |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-       |  FROM events),
-       |fp AS (SELECT user_id, min(rn) AS fp FROM ev
-       |       WHERE event_type = 'purchase' GROUP BY 1),
-       |kept AS (
-       |  SELECT e.user_id, e.event_type, e.rn, fp.fp
-       |  FROM ev e LEFT JOIN fp ON fp.user_id = e.user_id
-       |  WHERE fp.fp IS NULL OR e.rn <= fp.fp),
-       |wp AS (
-       |  SELECT user_id, event_type, fp,
-       |    lag(event_type) OVER (PARTITION BY user_id ORDER BY rn) AS prev,
-       |    row_number() OVER (PARTITION BY user_id ORDER BY rn) AS krn,
-       |    row_number() OVER (PARTITION BY user_id ORDER BY rn DESC) AS krd
-       |  FROM kept),
-       |tr0 AS (
-       |  SELECT prev AS s, event_type AS t FROM wp WHERE prev IS NOT NULL
-       |  UNION ALL SELECT 'START', event_type FROM wp WHERE krn = 1
-       |  UNION ALL SELECT event_type, 'DROP' FROM wp WHERE krd = 1 AND fp IS NULL),
-       |tr AS MATERIALIZED (SELECT s, t, count(*) AS n FROM tr0 GROUP BY 1, 2),
-       |tot AS MATERIALIZED (SELECT s, CAST(sum(n) AS BIGINT) AS nt FROM tr GROUP BY 1),
-       |tp AS MATERIALIZED (
-       |  SELECT tr.s, tr.t, CAST(tr.n AS DOUBLE) / CAST(tot.nt AS DOUBLE) AS p
-       |  FROM tr JOIN tot USING (s)),
-       |$chains
-       |$rows
-       |ORDER BY channel""".stripMargin
-  }
-
-  /** One q236 ablation leg: the q88 chain at gram size k, rolled up
-    * to a single summary row. Embedded per k as nested derived
-    * tables. */
-  private def decontamSummaryAt(k: Int): String =
-    s"""WITH w AS (
-       |  SELECT doc_id,
-       |    regexp_split_to_array(${graft.functions.TextNorm.sqlNorm("text")}, ' ') AS words
-       |  FROM documents),
-       |g AS (
-       |  SELECT doc_id,
-       |    unnest(list_transform(range(0, greatest(len(words) - ${k - 1}, 0)),
-       |      i -> array_to_string(list_slice(words, i + 1, i + $k), ' '))) AS gram
-       |  FROM w),
-       |ev AS (SELECT DISTINCT gram FROM g WHERE doc_id % 10 = 7),
-       |hits AS (
-       |  SELECT t.doc_id, count(*) AS n_grams, count(ev.gram) AS n_hits
-       |  FROM (SELECT doc_id, gram FROM g WHERE doc_id % 10 <> 7) t
-       |  LEFT JOIN ev ON t.gram = ev.gram
-       |  GROUP BY t.doc_id),
-       |pd AS (
-       |  SELECT d.doc_id, coalesce(h.n_grams, 0) AS n_grams,
-       |    coalesce(h.n_hits, 0) AS n_hits
-       |  FROM documents d LEFT JOIN hits h ON h.doc_id = d.doc_id
-       |  WHERE d.doc_id % 10 <> 7)
-       |SELECT CAST($k AS BIGINT) AS gram_n, count(*) AS n_docs,
-       |  CAST(sum(CASE WHEN n_hits > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_flagged,
-       |  CAST(sum(n_grams) AS BIGINT) AS total_grams,
-       |  CAST(sum(n_hits) AS BIGINT) AS total_hits,
-       |  ${TextOps.roundAtSql(
-            "CAST(sum(n_hits) AS DOUBLE) / CAST(greatest(sum(n_grams), 1) AS DOUBLE)", 6)} AS hit_rate
-       |FROM pd""".stripMargin
-
-  private lazy val decontamAblationOracleSql: String =
-    s"""WITH k5 AS MATERIALIZED (SELECT * FROM (${decontamSummaryAt(5)}) t),
-       |k8 AS MATERIALIZED (SELECT * FROM (${decontamSummaryAt(8)}) t),
-       |k13 AS MATERIALIZED (SELECT * FROM (${decontamSummaryAt(13)}) t)
-       |SELECT * FROM k5 UNION ALL SELECT * FROM k8 UNION ALL SELECT * FROM k13
-       |ORDER BY gram_n""".stripMargin
-
-  /** q234 oracle: the full IVF-PQ pipeline as unrolled CTEs — the
-    * shared coarse Lloyd chain (k=8, iters=2), residual construction
-    * against the trained coarse centroids, EIGHT per-subspace Lloyd
-    * chains over residual slices, per-cell query residuals, the
-    * probe-filtered ADC scoring (fixed left-to-right 8-term add), the
-    * (adc, vec_id) shortlist and the exact rerank. */
-  private lazy val ivfPqOracleSql: String = {
-    val m = 8; val kpq = 8; val sub = 8; val nprobe = 2
-    val shortlist = 30; val topK = 10
-    def d2(v: String, c: String) =
-      s"list_sum(list_transform(range(1, len($v) + 1), i -> ($v[i] - $c[i]) * ($v[i] - $c[i])))"
-    val perSub = (0 until m).map { s =>
-      val lo = s * sub + 1; val hi = s * sub + sub
-      s"""rsub$s AS MATERIALIZED (SELECT vec_id, list_slice(r, $lo, $hi) AS v FROM res),
-         |rflat$s AS MATERIALIZED (
-         |  SELECT vec_id, unnest(range(1, len(v) + 1)) AS pos, unnest(v) AS val FROM rsub$s),
-         |pc${s}_0 AS MATERIALIZED (SELECT vec_id AS cl, v AS cent FROM rsub$s WHERE vec_id < $kpq),
-         |pa${s}_1 AS MATERIALIZED (
-         |  SELECT vec_id, cl FROM (
-         |    SELECT x.vec_id, c.cl,
-         |      row_number() OVER (PARTITION BY x.vec_id
-         |        ORDER BY ${d2("x.v", "c.cent")}, c.cl) AS rk
-         |    FROM rsub$s x CROSS JOIN pc${s}_0 c) WHERE rk = 1),
-         |pc${s}_1 AS MATERIALIZED (
-         |  SELECT cl, list(mv ORDER BY pos) AS cent FROM (
-         |    SELECT a.cl, f.pos, avg(f.val) AS mv
-         |    FROM pa${s}_1 a JOIN rflat$s f USING (vec_id) GROUP BY a.cl, f.pos) t
-         |  GROUP BY cl),
-         |pf$s AS MATERIALIZED (
-         |  SELECT vec_id, cl FROM (
-         |    SELECT x.vec_id, c.cl,
-         |      row_number() OVER (PARTITION BY x.vec_id
-         |        ORDER BY ${d2("x.v", "c.cent")}, c.cl) AS rk
-         |    FROM rsub$s x CROSS JOIN pc${s}_1 c) WHERE rk = 1)""".stripMargin
-    }.mkString(",\n")
-    val codeJoin = (1 until m).map(s => s"JOIN pf$s ON pf$s.vec_id = pf0.vec_id").mkString(" ")
-    val codeCols = (0 until m).map(s => s"pf$s.cl AS code$s").mkString(", ")
-    val pcJoin = (0 until m).map(s => s"JOIN pc${s}_1 pq$s ON pq$s.cl = cd.code$s").mkString(" ")
-    val adcSum = (0 until m).map { s =>
-      val lo = s * sub + 1; val hi = s * sub + sub
-      s"list_sum(list_transform(range(1, ${sub + 1}), i -> " +
-        s"(qr.qr[$lo + i - 1] - pq$s.cent[i]) * (qr.qr[$lo + i - 1] - pq$s.cent[i])))"
-    }.mkString(" + ")
-    val codeOut = (0 until m).map(s => s"code$s").mkString(", ")
-    s"""${kmeansStagesSql(8, 2)},
-       |res AS MATERIALIZED (
-       |  SELECT f.vec_id, f.cluster,
-       |    list_transform(range(1, len(e.emb) + 1), i -> e.emb[i] - c.cent[i]) AS r
-       |  FROM fin f JOIN e USING (vec_id) JOIN c1 c ON c.cl = f.cluster),
-       |$perSub,
-       |qfull AS (SELECT emb AS qe FROM e WHERE vec_id = 0),
-       |probe AS (
-       |  SELECT cl FROM (
-       |    SELECT c.cl,
-       |      row_number() OVER (ORDER BY ${d2("q.qe", "c.cent")}, c.cl) AS rk
-       |    FROM c1 c CROSS JOIN qfull q) WHERE rk <= $nprobe),
-       |qr AS (
-       |  SELECT c.cl,
-       |    list_transform(range(1, len(q.qe) + 1), i -> q.qe[i] - c.cent[i]) AS qr
-       |  FROM c1 c CROSS JOIN qfull q),
-       |codes AS (
-       |  SELECT pf0.vec_id, f.cluster, $codeCols
-       |  FROM pf0 $codeJoin JOIN fin f ON f.vec_id = pf0.vec_id),
-       |adc AS (
-       |  SELECT cd.vec_id, cd.cluster, $codeOut, $adcSum AS adc
-       |  FROM codes cd JOIN qr ON qr.cl = cd.cluster $pcJoin
-       |  WHERE cd.cluster IN (SELECT cl FROM probe) AND cd.vec_id <> 0),
-       |short AS (SELECT * FROM adc ORDER BY adc, vec_id LIMIT $shortlist),
-       |ex AS (
-       |  SELECT s.vec_id, s.cluster, $codeOut, s.adc, ${d2("x.emb", "q.qe")} AS exact
-       |  FROM short s JOIN e x ON x.vec_id = s.vec_id CROSS JOIN qfull q)
-       |SELECT vec_id, cluster, $codeOut,
-       |  round(adc, 6) AS approx_d2, round(exact, 6) AS d2
-       |FROM ex ORDER BY exact, vec_id LIMIT $topK""".stripMargin
-  }
-
-  /** q162 oracle (factored so q238's agreement query can embed the
-    * identical chain as a derived table). */
-  private lazy val semDedupOracleSql: String =
-      s"""WITH RECURSIVE ${kmeansStagesBody(
-            "SELECT greatest(2, CAST(ceil(CAST(count(*) AS DOUBLE) / 64) AS BIGINT)) FROM embeddings", 3)},
-        |cent AS (SELECT cl AS clabel, cent FROM c2),
-        |asg AS (
-        |  SELECT f.vec_id, f.cluster AS clabel, e.emb
-        |  FROM fin f JOIN e ON e.vec_id = f.vec_id),
-        |sc AS (
-        |  SELECT a.vec_id, a.clabel, a.emb,
-        |    round(
-        |      list_sum(list_transform(range(1, len(a.emb) + 1), i -> a.emb[i] * c.cent[i])) /
-        |      (sqrt(list_sum(list_transform(range(1, len(a.emb) + 1), i -> a.emb[i] * a.emb[i]))) *
-        |       sqrt(list_sum(list_transform(range(1, len(c.cent) + 1), i -> c.cent[i] * c.cent[i])))), 4) AS cos_c
-        |  FROM asg a JOIN cent c ON c.clabel = a.clabel),
-        |dup AS (
-        |  SELECT a.vec_id AS doc_a, b.vec_id AS doc_b
-        |  FROM asg a JOIN asg b ON a.clabel = b.clabel AND a.vec_id < b.vec_id
-        |  WHERE round(
-        |      list_sum(list_transform(range(1, len(a.emb) + 1), i -> a.emb[i] * b.emb[i])) /
-        |      (sqrt(list_sum(list_transform(range(1, len(a.emb) + 1), i -> a.emb[i] * a.emb[i]))) *
-        |       sqrt(list_sum(list_transform(range(1, len(b.emb) + 1), i -> b.emb[i] * b.emb[i])))), 4) >= 0.35),
-        |edges AS (SELECT doc_a AS a, doc_b AS b FROM dup
-        |          UNION SELECT doc_b, doc_a FROM dup),
-        |reach AS (SELECT a, b FROM edges
-        |          UNION SELECT r.a, e2.b FROM reach r JOIN edges e2 ON r.b = e2.a),
-        |lbl AS (SELECT a AS vec_id, least(a, min(b)) AS grp FROM reach GROUP BY a),
-        |g AS (
-        |  SELECT s.vec_id, s.clabel, coalesce(l.grp, s.vec_id) AS grp, s.cos_c
-        |  FROM sc s LEFT JOIN lbl l ON l.vec_id = s.vec_id)
-        |SELECT vec_id, clabel, grp, cos_c,
-        |  (row_number() OVER (PARTITION BY grp ORDER BY cos_c, vec_id)) = 1 AS kept
-        |FROM g ORDER BY vec_id""".stripMargin
-
-  private lazy val kmeansOracleSql: String =
-    s"""${kmeansStagesSql(8, 3)}
-       |SELECT vec_id, cluster, round(d2, 6) AS d2 FROM fin ORDER BY vec_id""".stripMargin
-
-  /** q218 oracle: the Lloyd chain's `df` already holds EVERY
-    * (vec, centroid) distance, so the simplified silhouette is one
-    * min over the non-assigned clusters joined back to `fin`, the
-    * shared a/b/s IEEE tree under the floor-form integer scaling,
-    * and a k-sized rollup. */
-  private lazy val kmeansSilhouetteOracleSql: String =
-    s"""${kmeansStagesSql(8, 3)},
-       |oth AS (
-       |  SELECT d.vec_id, min(d.d2) AS bd2
-       |  FROM df d JOIN fin f ON d.vec_id = f.vec_id AND d.cl <> f.cluster
-       |  GROUP BY d.vec_id),
-       |sil AS (
-       |  SELECT f.cluster,
-       |    CAST(floor((CASE WHEN greatest(sqrt(f.d2), sqrt(o.bd2)) = 0.0 THEN 0.0
-       |      ELSE (sqrt(o.bd2) - sqrt(f.d2)) / greatest(sqrt(f.d2), sqrt(o.bd2)) END)
-       |      * 1000000.0 + 0.5) AS BIGINT) AS si
-       |  FROM fin f JOIN oth o ON o.vec_id = f.vec_id)
-       |SELECT cluster, count(*) AS n_members,
-       |  ${TextOps.roundAtSql(
-            "CAST(sum(si) AS DOUBLE) / (CAST(count(*) AS DOUBLE) * 1000000.0)", 6)} AS mean_silhouette
-       |FROM sil GROUP BY cluster ORDER BY cluster""".stripMargin
-
-  /** q202 oracle: the Lloyd chain + q59's TF-IDF at cluster
-    * granularity (tf over member docs via the doc_id = vec_id bridge,
-    * df = clusters containing the term, ln((K+1)/(df+1)) + 1). */
-  private lazy val clusterTopicsOracleSql: String =
-    s"""${kmeansStagesSql(8, 3)},
-       |wc AS (
-       |  SELECT doc_id, word FROM (
-       |    SELECT doc_id,
-       |      unnest(regexp_split_to_array(${graft.functions.TextNorm.sqlNorm("text")}, ' ')) AS word
-       |    FROM documents) t WHERE word <> ''),
-       |asg AS (SELECT vec_id AS doc_id, cluster FROM fin),
-       |cw AS (
-       |  SELECT a.cluster, w.word, count(*) AS tf
-       |  FROM wc w JOIN asg a USING (doc_id) GROUP BY 1, 2),
-       |dfx AS (SELECT word, count(*) AS df FROM cw GROUP BY 1),
-       |nc AS (SELECT count(DISTINCT cluster) AS ncl FROM asg),
-       |scored AS (
-       |  SELECT cw.cluster, cw.word, cw.tf,
-       |    cw.tf * (ln((nc.ncl + 1.0) / (dfx.df + 1.0)) + 1.0) AS score_raw
-       |  FROM cw JOIN dfx USING (word) CROSS JOIN nc),
-       |ranked AS (
-       |  SELECT cluster, word, tf, score_raw,
-       |    CAST(row_number() OVER (PARTITION BY cluster
-       |      ORDER BY score_raw DESC, word) AS BIGINT) AS rnk
-       |  FROM scored)
-       |SELECT cluster, rnk, word, tf,
-       |  ${graft.ops.TextOps.roundAtSql("score_raw", 6)} AS score
-       |FROM ranked WHERE rnk <= 5
-       |ORDER BY cluster, rnk""".stripMargin
-
-  /** q184 oracle: the Lloyd chain + the query's nprobe nearest learned
-    * centroids + exact cosine top-k within the probed lists. */
-  private lazy val ivfLearnedOracleSql: String =
-    s"""${kmeansStagesSql(8, 3)},
-       |probes AS (
-       |  SELECT cl FROM (
-       |    SELECT c.cl, row_number() OVER (ORDER BY $kmeansDistSql, c.cl) AS rk
-       |    FROM (SELECT * FROM e WHERE vec_id = 0) e CROSS JOIN c2 c) t
-       |  WHERE rk <= 2),
-       |q AS (SELECT emb AS q_emb FROM e WHERE vec_id = 0),
-       |cand AS (
-       |  SELECT f.vec_id, e.label, e.emb, q.q_emb
-       |  FROM fin f JOIN e ON e.vec_id = f.vec_id, q
-       |  WHERE f.vec_id <> 0 AND f.cluster IN (SELECT cl FROM probes)),
-       |s AS (
-       |  SELECT vec_id, label,
-       |    round(
-       |      list_sum(list_transform(range(1, len(emb) + 1), i -> emb[i] * q_emb[i])) /
-       |      (sqrt(list_sum(list_transform(range(1, len(emb) + 1), i -> emb[i] * emb[i]))) *
-       |       sqrt(list_sum(list_transform(range(1, len(q_emb) + 1), i -> q_emb[i] * q_emb[i])))), 4) AS cos
-       |  FROM cand)
-       |SELECT vec_id, label, cos FROM s ORDER BY cos DESC, vec_id LIMIT 10""".stripMargin
-
-  /** q195–q197 shared CTEs: the hydro fixture read + the toFeatures
-    * projection (feat) and the per-site merge (merged), built with
-    * struct_pack/list in EXACTLY the Spark struct field order —
-    * nested values are compared as rendered dicts, so field order is
-    * part of the contract. */
-  private lazy val hydroFeaturesCte: String =
-    s"""WITH t AS (SELECT * FROM read_parquet('${graft.pipeline.HydroFixture.FixtureFile}')),
-       |tv AS (SELECT t.*, t."values"[1]."value"[1] AS v0 FROM t),
-       |feat AS (
-       |  SELECT 'Feature' AS type,
-       |    struct_pack(type := 'Point',
-       |      coordinates := [t.sourceInfo.geoLocation.geogLocation.longitude,
-       |                      t.sourceInfo.geoLocation.geogLocation.latitude]) AS geometry,
-       |    struct_pack(
-       |      record := 'usgs-water',
-       |      id := t.name,
-       |      site := coalesce(t.sourceInfo.siteName, 'undefined'),
-       |      srs := coalesce(t.sourceInfo.geoLocation.geogLocation.srs, 'undefined'),
-       |      siteCode := t.sourceInfo.siteCode[1]."value",
-       |      variables := [CASE WHEN t.v0 IS NOT NULL THEN struct_pack(
-       |          variableCode := coalesce(t.variable.variableCode[1]."value", 'undefined'),
-       |          variableUnit := coalesce(t.variable.unit.unitAbbreviation, 'undefined'),
-       |          noDataValue := coalesce(CAST(t.variable.noDataValue AS VARCHAR), 'undefined'),
-       |          "value" := t.v0."value",
-       |          "timeStamp" := t.v0.dateTime)
-       |        ELSE struct_pack(variableCode := NULL::VARCHAR, variableUnit := NULL::VARCHAR,
-       |          noDataValue := NULL::VARCHAR, "value" := NULL::VARCHAR,
-       |          "timeStamp" := NULL::VARCHAR)
-       |        END]) AS properties
-       |  FROM tv t)""".stripMargin
-
-  private lazy val hydroMergedCte: String =
-    """fv AS (
-      |  SELECT properties.siteCode AS siteCode, geometry,
-      |    properties.record AS record, properties.site AS site,
-      |    properties.srs AS srs,
-      |    properties.variables[1] AS var0,
-      |    properties.variables[1].variableCode AS vc,
-      |    properties.id || chr(1) ||
-      |      coalesce(properties.variables[1]."value", '') || chr(1) ||
-      |      coalesce(properties.variables[1].timeStamp, '') AS okey
-      |  FROM feat
-      |  WHERE properties.variables[1].variableCode IN ('00060', '00065')),
-      |merged AS (
-      |  SELECT siteCode,
-      |    min_by(geometry, okey) AS geometry,
-      |    struct_pack(
-      |      record := min_by(record, okey),
-      |      site := min_by(site, okey),
-      |      srs := min_by(srs, okey),
-      |      siteCode := siteCode,
-      |      streamFlow := min_by(var0, okey) FILTER (WHERE vc = '00060'),
-      |      gageHeight := min_by(var0, okey) FILTER (WHERE vc = '00065')) AS properties
-      |  FROM fv GROUP BY siteCode)""".stripMargin
-
-  private lazy val bruteTopKOracleCte: String =
-    """WITH q AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0),
-      |s AS (
-      |  SELECT e.vec_id, CAST(e.label AS INTEGER) AS label,
-      |    round(
-      |      list_sum(list_transform(range(1, len(e.embedding) + 1),
-      |        i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.q_emb[i] AS DOUBLE))) /
-      |      (sqrt(list_sum(list_transform(range(1, len(e.embedding) + 1),
-      |        i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)))) *
-      |       sqrt(list_sum(list_transform(range(1, len(q.q_emb) + 1),
-      |        i -> CAST(q.q_emb[i] AS DOUBLE) * CAST(q.q_emb[i] AS DOUBLE))))), 4) AS cos
-      |  FROM embeddings e, q WHERE e.vec_id <> 0)""".stripMargin
-
-  /** Full md5-LSH replay shared by q75 and q26, which both run
-    * nearDupMinHashMd5. Program-generated SQL mirroring it: one md5
-    * per shingle, double-hashing h_i = (h1 + i*h2) mod p over two
-    * 60-bit big-endian hex windows of the digest (chars 17-31 and
-    * 1-15; DuckDB parses '0x...' straight to BIGINT, the exact twin
-    * of Spark's conv(substr(hex),16,10)), 8 three-row band buckets. */
-  /** q216 oracle: the q190 ordered-fold device generalized — per
-    * source, every Σx/Σx²/Σxy is a doc_id-ordered list_sum; each of
-    * the 10 signal pairs emits one long-form row with a guarded
-    * Pearson r. Program-generated from the same signal list as the
-    * Spark side. */
-  private lazy val signalCorrelationOracleSql: String = {
-    val sigs = Seq("x1" -> "chars", "x2" -> "tokens", "x3" -> "punct_ratio",
-      "x4" -> "stop_ratio", "x5" -> "quality")
-    val pairIdx = for { i <- sigs.indices; j <- sigs.indices if i < j } yield (i, j)
-    val sums = (sigs.flatMap { case (c, _) => Seq(
-        s"list_sum(list($c ORDER BY doc_id)) AS s_$c",
-        s"list_sum(list($c * $c ORDER BY doc_id)) AS s_${c}_$c")
-      } ++ pairIdx.map { case (i, j) =>
-        s"list_sum(list(${sigs(i)._1} * ${sigs(j)._1} ORDER BY doc_id)) " +
-          s"AS s_${sigs(i)._1}_${sigs(j)._1}"
-      }).mkString(",\n    ")
-    val pairSelects = pairIdx.map { case (i, j) =>
-      val (a, an) = sigs(i)
-      val (b, bn) = sigs(j)
-      val num = s"(n * s_${a}_$b - s_$a * s_$b)"
-      val den = s"(sqrt(n * s_${a}_$a - s_$a * s_$a) * " +
-        s"sqrt(n * s_${b}_$b - s_$b * s_$b))"
-      s"SELECT source, '$an' AS sig_a, '$bn' AS sig_b, " +
-        s"${TextOps.roundAtSql(s"CASE WHEN $den = 0.0 THEN 0.0 ELSE $num / $den END", 6)} AS r FROM s"
-    }.mkString("\n  UNION ALL ")
-    s"""WITH q AS (SELECT doc_id, source,
-       |  nc AS x1, n_tokens AS x2, punct / nc AS x3, stops / n_tokens AS x4,
-       |  ${TextOps.roundAtSql(
-            "least(nc / 500.0, 1.0) * 0.5 + " +
-              "least(stops / n_tokens * 5.0, 1.0) * 0.3 + " +
-              "(1.0 - least(punct / nc * 10.0, 1.0)) * 0.2", 6)} AS x5
-       |FROM (SELECT doc_id, source,
-       |  CAST(length(text) AS DOUBLE) AS nc,
-       |  CAST(len(regexp_split_to_array(text, '\\s+')) AS DOUBLE) AS n_tokens,
-       |  CAST(len(regexp_extract_all(text, '${TextOps.PunctPattern}')) AS DOUBLE) AS punct,
-       |  CAST(len(regexp_extract_all(lower(text), '${TextOps.EnStops}')) AS DOUBLE) AS stops
-       | FROM documents) t),
-       |s AS (
-       |  SELECT source, CAST(count(*) AS DOUBLE) AS n,
-       |    $sums
-       |  FROM q GROUP BY source)
-       |$pairSelects
-       |ORDER BY source, sig_a, sig_b""".stripMargin
-  }
-
-  /** q217 oracle: the Poisson bootstrap replayed column-for-column —
-    * the same md5 double-hash draws (h1 + b·h2 mod p, the q26/q75
-    * device), the same Poisson(1) threshold counts (thresholds
-    * interpolated from the SAME Scala Seq, so both engines compare
-    * identical IEEE doubles), exact-long weighted sums, and the
-    * sorted replicate-mean list reduced in sorted order (list_sort +
-    * list_sum ↔ array_sort + fold). */
-  private lazy val qualityBootstrapOracleSql: String = {
-    val reps = 64
-    val loIdx = math.ceil(0.025 * reps).toInt.max(1)
-    val hiIdx = math.ceil(0.975 * reps).toInt
-    def wExpr(b: Int): String = {
-      val u = s"(CAST((h1 + $b * h2) % 2147483647 AS DOUBLE) / 2147483647.0)"
-      TextOps.PoissonCdf.map(t => s"(CASE WHEN $u >= $t THEN 1 ELSE 0 END)")
-        .mkString("(", " + ", ")")
-    }
-    val wDefs = (1 to reps).map(b => s"${wExpr(b)} AS w$b").mkString(",\n    ")
-    val sums = (1 to reps).flatMap(b =>
-      Seq(s"sum(w$b) AS sw$b", s"sum(w$b * qint) AS swq$b")).mkString(",\n    ")
-    val meanList = (1 to reps).map(b =>
-      s"CASE WHEN sw$b = 0 THEN 0.0 ELSE CAST(swq$b AS DOUBLE) / " +
-        s"(CAST(sw$b AS DOUBLE) * 1000000.0) END").mkString(",\n      ")
-    s"""WITH d AS (
-       |  SELECT source,
-       |    CAST(floor((least(nc / 500.0, 1.0) * 0.5 +
-       |      least(stops / n_tokens * 5.0, 1.0) * 0.3 +
-       |      (1.0 - least(punct / nc * 10.0, 1.0)) * 0.2) * 1000000.0 + 0.5) AS BIGINT) AS qint,
-       |    CAST(concat('0x', substr(mhex, 17, 15)) AS BIGINT) % 2147483647 AS h1,
-       |    CAST(concat('0x', substr(mhex, 1, 15)) AS BIGINT) % 2147483647 AS h2
-       |  FROM (SELECT source,
-       |      CAST(length(text) AS DOUBLE) AS nc,
-       |      CAST(len(regexp_split_to_array(text, '\\s+')) AS DOUBLE) AS n_tokens,
-       |      CAST(len(regexp_extract_all(text, '${TextOps.PunctPattern}')) AS DOUBLE) AS punct,
-       |      CAST(len(regexp_extract_all(lower(text), '${TextOps.EnStops}')) AS DOUBLE) AS stops,
-       |      md5('pb_' || CAST(doc_id AS VARCHAR)) AS mhex
-       |    FROM documents) t),
-       |w AS (SELECT source, qint,
-       |    $wDefs
-       |  FROM d),
-       |s AS (SELECT source, count(*) AS n, sum(qint) AS sq,
-       |    $sums
-       |  FROM w GROUP BY source),
-       |m AS (SELECT source, n, sq,
-       |    list_sort([$meanList]) AS ms
-       |  FROM s)
-       |SELECT source, n AS n_docs,
-       |  ${TextOps.roundAtSql("CAST(sq AS DOUBLE) / (CAST(n AS DOUBLE) * 1000000.0)", 6)} AS mean_q,
-       |  ${TextOps.roundAtSql(s"ms[$loIdx]", 6)} AS boot_lo,
-       |  ${TextOps.roundAtSql(s"ms[$hiIdx]", 6)} AS boot_hi,
-       |  ${TextOps.roundAtSql(
-             s"sqrt(greatest(0.0, (list_sum(list_transform(ms, x -> x * x)) - " +
-               s"list_sum(ms) * list_sum(ms) / $reps.0) / ${reps - 1}.0))", 6)} AS boot_se
-       |FROM m ORDER BY source""".stripMargin
-  }
-
-  /** q61's recursive-CC oracle chain (shingle pairs → symmetric edges
-    * → transitive closure → min-member labels in `clus`), factored so
-    * q212's ROI rollup can extend the identical chain. Callers
-    * prepend `WITH RECURSIVE`. */
-  private lazy val dedupClustersCteBody: String =
-    """docs AS (
-      |  SELECT doc_id,
-      |    list_distinct(list_transform(
-      |      range(0, greatest(len(words) - 3, 0) + 1),
-      |      i -> array_to_string(list_slice(words, i + 1, i + 3), ' '))) AS sh
-      |  FROM (SELECT doc_id,
-      |          regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS words
-      |        FROM documents) w),
-      |keyed AS (
-      |  SELECT doc_id, sh,
-      |    list_aggregate(list_transform(sh, s -> md5(s)), 'min') AS minsh
-      |  FROM docs),
-      |cand AS (
-      |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-      |    round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-      |          len(list_distinct(list_concat(a.sh, b.sh))), 4) AS jaccard
-      |  FROM keyed a JOIN keyed b ON a.minsh = b.minsh AND a.doc_id < b.doc_id),
-      |dup AS (SELECT doc_a, doc_b FROM cand WHERE jaccard >= 0.5),
-      |edges AS (SELECT doc_a AS a, doc_b AS b FROM dup
-      |          UNION SELECT doc_b, doc_a FROM dup),
-      |reach AS (SELECT a, b FROM edges
-      |          UNION SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-      |clus AS (
-      |  SELECT a AS doc_id, least(a, min(b)) AS cluster
-      |  FROM reach GROUP BY a)""".stripMargin
-
-  /** q25's oracle, factored so q203's agreement matrix can embed the
-    * identical chain as a derived table. */
-  private lazy val ngramPairsOracleSql: String =
-    """WITH docs AS (
-      |  SELECT doc_id,
-      |    list_distinct(list_transform(
-      |      range(0, greatest(len(words) - 3, 0) + 1),
-      |      i -> array_to_string(list_slice(words, i + 1, i + 3), ' '))) AS sh
-      |  FROM (SELECT doc_id,
-      |          regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS words
-      |        FROM documents) w),
-      |keyed AS (
-      |  SELECT doc_id, sh,
-      |    list_aggregate(list_transform(sh, s -> md5(s)), 'min') AS minsh
-      |  FROM docs),
-      |pairs AS (
-      |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-      |    round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-      |          len(list_distinct(list_concat(a.sh, b.sh))), 4) AS jaccard
-      |  FROM keyed a JOIN keyed b ON a.minsh = b.minsh AND a.doc_id < b.doc_id)
-      |SELECT doc_a, doc_b, jaccard FROM pairs WHERE jaccard >= 0.5""".stripMargin
-
-  /** q219 oracle: the canonical shingle-set CTE, global (df, shingle)
-    * ordering, INTEGER prefix bound p = n − (3n+4)//5 + 1 and length
-    * filter 5·min ≥ 3·max (τ = 3/5 as a rational on both engines —
-    * no decimal-vs-double ceil divergence), then the EXACT integer
-    * keep inter·5 ≥ union·3 (jaccard rounded at 4 for display only —
-    * a rounded keep would void the recall guarantee in the
-    * [τ−5e-5, τ) window). Mirrors DedupOps.prefixJoinNearDup. */
-  private lazy val prefixJoinOracleSql: String =
-    """WITH docs AS (
-      |  SELECT doc_id,
-      |    list_distinct(list_transform(
-      |      range(0, greatest(len(words) - 3, 0) + 1),
-      |      i -> array_to_string(list_slice(words, i + 1, i + 3), ' '))) AS sh
-      |  FROM (SELECT doc_id,
-      |          regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS words
-      |        FROM documents) w),
-      |ds AS (SELECT doc_id, unnest(sh) AS s FROM docs),
-      |sz AS (SELECT doc_id, len(sh) AS n FROM docs),
-      |dfq AS (SELECT s, count(*) AS df FROM ds GROUP BY 1),
-      |pre AS (
-      |  SELECT ds.doc_id, ds.s, sz.n,
-      |    row_number() OVER (PARTITION BY ds.doc_id ORDER BY dfq.df, ds.s) AS rn
-      |  FROM ds JOIN dfq USING (s) JOIN sz USING (doc_id)),
-      |pref AS (SELECT doc_id, s, n FROM pre WHERE rn <= n - ((3 * n + 4) // 5) + 1),
-      |cand AS (
-      |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      |  FROM pref a JOIN pref b ON a.s = b.s AND a.doc_id < b.doc_id
-      |    AND least(a.n, b.n) * 5 >= greatest(a.n, b.n) * 3),
-      |verified AS (
-      |  SELECT c.doc_a, c.doc_b,
-      |    len(list_intersect(A.sh, B.sh)) AS inter,
-      |    len(A.sh) + len(B.sh) - len(list_intersect(A.sh, B.sh)) AS un
-      |  FROM cand c JOIN docs A ON A.doc_id = c.doc_a
-      |              JOIN docs B ON B.doc_id = c.doc_b)
-      |SELECT doc_a, doc_b, round(CAST(inter AS DOUBLE) / un, 4) AS jaccard
-      |FROM verified WHERE inter * 5 >= un * 3""".stripMargin
-
-  /** q220 oracle: q25's pair chain as a derived table, symmetric
-    * edges, then the h-index iteration UNROLLED to the same fixed 6
-    * rounds the engine runs — fixed rounds make the hash gate
-    * independent of any convergence test (both engines emit the
-    * round-6 values, which CorenessSpec separately pins as the
-    * fixpoint). h over the asc-sorted neighbor list la (1-based i):
-    * h = Σ[la[i] ≥ len(la) − i + 1] — pure integers. */
-  private lazy val corenessOracleSql: String = {
-    val roundCtes = (1 to 6).map { r =>
-      s"""c$r AS (
-         |  SELECT u, CAST(list_sum(list_transform(la,
-         |      (x, i) -> CASE WHEN x >= len(la) - i + 1 THEN 1 ELSE 0 END)) AS BIGINT) AS c
-         |  FROM (SELECT e.u AS u, list(p.c ORDER BY p.c) AS la
-         |        FROM edges e JOIN c${r - 1} p ON p.u = e.v GROUP BY e.u) t)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH pr AS MATERIALIZED (SELECT doc_a, doc_b FROM ($ngramPairsOracleSql) t),
-       |edges AS (SELECT doc_a AS u, doc_b AS v FROM pr
-       |          UNION ALL SELECT doc_b, doc_a FROM pr),
-       |c0 AS (SELECT u, count(*) AS c FROM edges GROUP BY u),
-       |$roundCtes
-       |SELECT c0.u AS doc_id, c0.c AS degree, c6.c AS coreness
-       |FROM c0 JOIN c6 ON c6.u = c0.u ORDER BY doc_id""".stripMargin
-  }
-
-  /** q27's oracle, factored for the same q203 reuse. */
-  private lazy val simHashPairsOracleSql: String =
-    """WITH toks AS (
-      |  SELECT doc_id,
-      |    unnest(regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ')) AS tok
-      |  FROM documents),
-      |th AS (
-      |  SELECT doc_id, ('0x' || substr(md5(tok), 17, 15))::BIGINT AS h
-      |  FROM toks),
-      |bits AS (
-      |  SELECT doc_id, i, sum(CASE WHEN (h >> i) & 1 = 1 THEN 1 ELSE -1 END) AS b
-      |  FROM th CROSS JOIN (SELECT unnest(range(60)) AS i)
-      |  GROUP BY doc_id, i),
-      |sh AS (
-      |  SELECT doc_id,
-      |    bit_or(CASE WHEN b > 0 THEN CAST(1 AS BIGINT) << CAST(i AS INTEGER) ELSE 0 END) AS simhash
-      |  FROM bits GROUP BY doc_id)
-      |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-      |  CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-      |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-      |WHERE bit_count(xor(a.simhash, b.simhash)) <= 3""".stripMargin
-
-  /** q203 oracle: the three near-dup chains embedded verbatim as
-    * derived tables (nested WITH — each keeps its own CTE namespace),
-    * pair-set sizes/intersections as exact longs, agreement = Jaccard
-    * over PAIR SETS with a 0-denominator guard. */
-  private lazy val methodAgreementOracleSql: String =
-    s"""WITH ng AS MATERIALIZED (SELECT doc_a, doc_b FROM ($ngramPairsOracleSql) t),
-       |mh AS MATERIALIZED (SELECT doc_a, doc_b FROM ($minHashMd5OracleSql) t),
-       |sh2 AS MATERIALIZED (SELECT doc_a, doc_b FROM ($simHashPairsOracleSql) t),
-       |a AS (
-       |  SELECT 'minhash' AS method, doc_a, doc_b FROM mh
-       |  UNION ALL SELECT 'ngram', doc_a, doc_b FROM ng
-       |  UNION ALL SELECT 'simhash', doc_a, doc_b FROM sh2),
-       |counts AS (SELECT method, count(*) AS n FROM a GROUP BY 1),
-       |prs AS (
-       |  SELECT c1.method AS method_a, c1.n AS n_a, c2.method AS method_b, c2.n AS n_b
-       |  FROM counts c1 JOIN counts c2 ON c1.method < c2.method),
-       |ib AS (
-       |  SELECT x.method AS method_a, y.method AS method_b, count(*) AS n_both
-       |  FROM a x JOIN a y
-       |    ON x.doc_a = y.doc_a AND x.doc_b = y.doc_b AND x.method < y.method
-       |  GROUP BY 1, 2)
-       |SELECT p.method_a, p.method_b, p.n_a, p.n_b,
-       |  coalesce(i.n_both, 0) AS n_both,
-       |  ${graft.ops.TextOps.roundAtSql(
-            "CASE WHEN p.n_a + p.n_b - coalesce(i.n_both, 0) = 0 THEN 0.0 " +
-              "ELSE CAST(coalesce(i.n_both, 0) AS DOUBLE) / " +
-              "CAST(p.n_a + p.n_b - coalesce(i.n_both, 0) AS DOUBLE) END", 6)} AS agreement
-       |FROM prs p LEFT JOIN ib i USING (method_a, method_b)
-       |ORDER BY p.method_a, p.method_b""".stripMargin
-
-  private lazy val minHashMd5OracleSql: String = {
-    val P = "2147483647"
-    val h1 = s"(('0x' || substr(md5(s), 17, 15))::BIGINT % $P)"
-    val h2 = s"(('0x' || substr(md5(s), 1, 15))::BIGINT % $P)"
-    val sigCols = (0 until 24).map(i =>
-      s"list_aggregate(list_transform(sh, s -> " +
-        s"($h1 + $i * $h2) % $P), 'min') AS m$i")
-      .mkString(",\n    ")
-    val bandSelects = (0 until 8).map(bd =>
-      s"SELECT doc_id, sh, $bd AS band, " +
-        s"concat(m${3 * bd}, ',', m${3 * bd + 1}, ',', m${3 * bd + 2}) AS bucket FROM sig")
-      .mkString("\n  UNION ALL ")
-    s"""WITH docs AS (
-      |  SELECT doc_id,
-      |    list_distinct(list_transform(
-      |      range(0, greatest(len(words) - 3, 0) + 1),
-      |      i -> array_to_string(list_slice(words, i + 1, i + 3), ' '))) AS sh
-      |  FROM (SELECT doc_id,
-      |          regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS words
-      |        FROM documents) w),
-      |sig AS (
-      |  SELECT doc_id, sh,
-      |    $sigCols
-      |  FROM docs),
-      |banded AS (
-      |  $bandSelects),
-      |pairs AS (
-      |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-      |    round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-      |          len(list_distinct(list_concat(a.sh, b.sh))), 4) AS jaccard
-      |  FROM banded a JOIN banded b
-      |    ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id)
-      |SELECT doc_a, doc_b, jaccard FROM pairs WHERE jaccard >= 0.5""".stripMargin
-  }
-
-  /** Program-generated DuckDB replay of TextOps.bpeLearnState: the
-    * merge-learning loop UNROLLED into one CTE chain per round
-    * (pair counts → deterministic argmax → greedy left-to-right merge
-    * application). The greedy scan is relational here where Spark
-    * folds sequentially: match positions form gaps-and-islands runs
-    * (two matches can only be adjacent when left = right), and a
-    * left-to-right scan takes even offsets within each run — so
-    * `(j - island_start) % 2 = 0` IS the sequential semantics. All
-    * values are exact longs and binary-ordered ASCII strings; nothing
-    * floats, so both q159 (merge table) and q160 (token counts) are
-    * hash-exact. Every CTE is AS MATERIALIZED: each stage is
-    * referenced several times downstream, and DuckDB's default CTE
-    * inlining would re-evaluate the chain once per reference —
-    * exponentially many scans over 16 rounds (observed as an
-    * open-files blowup). Returns the WITH chain ending at stage
-    * `s<merges>` (the final dictionary segmentation). */
-  private def bpeStagesSql(merges: Int): String = {
-    val s0 =
-      s"""s0 AS MATERIALIZED (
-        |  SELECT word, cnt,
-        |    list_append(list_transform(range(1, length(word) + 1),
-        |      j -> substr(word, j, 1)), '</w>') AS syms
-        |  FROM (SELECT word, count(*) AS cnt FROM (
-        |    SELECT unnest(regexp_split_to_array(${graft.functions.TextNorm.sqlNorm("text")}, ' ')) AS word
-        |    FROM documents) w WHERE word <> '' GROUP BY word) f)""".stripMargin
-    val rounds = (1 to merges).map { i =>
-      val prev = s"s${i - 1}"
-      s"""p$i AS MATERIALIZED (
-        |  SELECT syms[j] AS l, syms[j + 1] AS r, sum(cnt) AS pc FROM (
-        |    SELECT cnt, syms, unnest(range(1, len(syms))) AS j
-        |    FROM $prev WHERE len(syms) >= 2) t
-        |  GROUP BY 1, 2),
-        |b$i AS MATERIALIZED (SELECT l, r, pc FROM p$i ORDER BY pc DESC, l ASC, r ASC LIMIT 1),
-        |m$i AS MATERIALIZED (
-        |  SELECT word, cnt, syms, j,
-        |    (j < len(syms) AND syms[j] = (SELECT l FROM b$i)
-        |      AND syms[j + 1] = (SELECT r FROM b$i)) AS mt
-        |  FROM (SELECT word, cnt, syms, unnest(range(1, len(syms) + 1)) AS j
-        |        FROM $prev) t),
-        |tk$i AS MATERIALIZED (
-        |  SELECT word, j FROM (
-        |    SELECT word, j, min(j) OVER (PARTITION BY word, grp) AS g0 FROM (
-        |      SELECT word, j, j - row_number() OVER (PARTITION BY word ORDER BY j) AS grp
-        |      FROM m$i WHERE mt) g) h
-        |  WHERE (j - g0) % 2 = 0),
-        |s$i AS MATERIALIZED (
-        |  SELECT word, cnt,
-        |    list(CASE WHEN tk IS NOT NULL THEN syms[j] || syms[j + 1]
-        |              ELSE syms[j] END ORDER BY j) AS syms
-        |  FROM (
-        |    SELECT m.word, m.cnt, m.syms, m.j, t.j AS tk, tp.j AS consumed
-        |    FROM m$i m
-        |    LEFT JOIN tk$i t ON t.word = m.word AND t.j = m.j
-        |    LEFT JOIN tk$i tp ON tp.word = m.word AND tp.j = m.j - 1) u
-        |  WHERE consumed IS NULL
-        |  GROUP BY word, cnt)""".stripMargin
-    }
-    (s0 +: rounds).mkString("WITH ", ",\n", "")
-  }
-
-  private val BpeMergeRounds = 16
-
-  private lazy val bpeMergesOracleSql: String = {
-    val ranks = (1 to BpeMergeRounds).map { i =>
-      s"SELECT $i AS merge_rank, l AS left_sym, r AS right_sym, CAST(pc AS BIGINT) AS pair_count FROM b$i"
-    }.mkString("\n  UNION ALL ")
-    s"""${bpeStagesSql(BpeMergeRounds)}
-      |  $ranks
-      |ORDER BY merge_rank""".stripMargin
-  }
-
-  private lazy val bpeTokensOracleSql: String =
-    s"""${bpeStagesSql(BpeMergeRounds)},
-      |wr AS (SELECT doc_id, word FROM (
-      |  SELECT doc_id,
-      |    unnest(regexp_split_to_array(${graft.functions.TextNorm.sqlNorm("text")}, ' ')) AS word
-      |  FROM documents) t WHERE word <> '')
-      |SELECT w.doc_id, CAST(count(*) AS BIGINT) AS n_words,
-      |  CAST(sum(len(s.syms)) AS BIGINT) AS n_tokens
-      |FROM wr w JOIN s$BpeMergeRounds s ON s.word = w.word
-      |GROUP BY w.doc_id ORDER BY w.doc_id""".stripMargin
-
-  /** q170 oracle: the q159 stage chain + word rows with a source
-    * lookup; exact long counts, ratio rounded at 4. */
-  /** The q170 fertility oracle at a given merge budget — factored so
-    * q235's ablation can embed two budgets as nested derived tables
-    * (each keeps its own CTE namespace, the q203 device). */
-  private def bpeFertilityOracleAt(merges: Int): String =
-    s"""${bpeStagesSql(merges)},
-      |wr AS (SELECT doc_id, word FROM (
-      |  SELECT doc_id,
-      |    unnest(regexp_split_to_array(${graft.functions.TextNorm.sqlNorm("text")}, ' ')) AS word
-      |  FROM documents) t WHERE word <> '')
-      |SELECT d.source, CAST(count(*) AS BIGINT) AS n_words,
-      |  CAST(sum(len(s.syms)) AS BIGINT) AS n_tokens,
-      |  round(CAST(sum(len(s.syms)) AS DOUBLE) / count(*), 4) AS fertility
-      |FROM wr w
-      |JOIN documents d ON d.doc_id = w.doc_id
-      |JOIN s$merges s ON s.word = w.word
-      |GROUP BY d.source ORDER BY d.source""".stripMargin
-
-  private lazy val bpeFertilityOracleSql: String =
-    bpeFertilityOracleAt(BpeMergeRounds)
-
-  /** q235 oracle: the fertility chain replayed at BOTH merge budgets
-    * as nested derived tables, tagged and unioned. */
-  private lazy val bpeAblationOracleSql: String =
-    s"""WITH f8 AS MATERIALIZED (SELECT * FROM (${bpeFertilityOracleAt(8)}) t),
-       |f16 AS MATERIALIZED (SELECT * FROM (${bpeFertilityOracleAt(16)}) t)
-       |SELECT CAST(8 AS BIGINT) AS merges, source, n_words, n_tokens, fertility FROM f8
-       |UNION ALL
-       |SELECT CAST(16 AS BIGINT), source, n_words, n_tokens, fertility FROM f16
-       |ORDER BY merges, source""".stripMargin
-
-  /** q178 oracle: the q159 stage chain; the round-trip flag is
-    * asserted literally TRUE next to the exact token counts. */
-  private lazy val bpeRoundTripOracleSql: String =
-    s"""${bpeStagesSql(BpeMergeRounds)}
-      |SELECT word, cnt, CAST(len(syms) AS BIGINT) AS n_tokens,
-      |  TRUE AS round_trip_ok
-      |FROM s$BpeMergeRounds ORDER BY word""".stripMargin
-
-  /** q242 oracle: the q28 label-blocked cosine pair CTE, symmetric
-    * degree counts, core gate at minPts=3, recursive closure over the
-    * core-core edges (the q61 reach pattern), isolated cores
-    * self-labeled, borders attached to the min core-neighbor cluster.
-    * Cosine rounds at 4 BEFORE the ≥ ε compare on both engines. The
-    * `adm` CTE mirrors the engine's stop-block cap (labels with more
-    * than 1000 members contribute NO pairs — the q138 wholesale-
-    * exclusion semantics; member counts are deterministic, so the
-    * oracle re-derives the same exclusions). */
-  private lazy val densityClustersOracleSql: String =
-    s"""WITH RECURSIVE adm AS (
-      |  SELECT label FROM embeddings GROUP BY label
-      |  HAVING count(*) <= ${SimilarityOps.DensityMaxLabel}),
-      |p AS (
-      |  SELECT a.vec_id AS va, b.vec_id AS vb,
-      |    round(
-      |      list_sum(list_transform(range(1, len(a.embedding) + 1),
-      |        i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))) /
-      |      (sqrt(list_sum(list_transform(range(1, len(a.embedding) + 1),
-      |        i -> CAST(a.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE)))) *
-      |       sqrt(list_sum(list_transform(range(1, len(b.embedding) + 1),
-      |        i -> CAST(b.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))))
-      |      , 4) AS cos
-      |  FROM embeddings a JOIN embeddings b
-      |    ON a.label = b.label AND a.vec_id < b.vec_id
-      |  JOIN adm ON adm.label = a.label),
-      |e2 AS (SELECT va, vb FROM p WHERE cos >= 0.20),
-      |sym AS (SELECT va AS v, vb AS nb FROM e2 UNION ALL SELECT vb, va FROM e2),
-      |deg AS (SELECT v, count(*) AS degree FROM sym GROUP BY 1),
-      |core AS (SELECT v FROM deg WHERE degree >= 3),
-      |ce AS (SELECT va AS a, vb AS b FROM e2
-      |       WHERE va IN (SELECT v FROM core) AND vb IN (SELECT v FROM core)),
-      |edges AS (SELECT a, b FROM ce UNION SELECT b, a FROM ce),
-      |reach AS (SELECT a, b FROM edges
-      |          UNION SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-      |clus0 AS (SELECT a AS id, least(a, min(b)) AS cluster FROM reach GROUP BY a),
-      |clus AS (SELECT core.v AS id, coalesce(clus0.cluster, core.v) AS cluster
-      |         FROM core LEFT JOIN clus0 ON clus0.id = core.v),
-      |border AS (
-      |  SELECT s.v, min(c.cluster) AS cluster
-      |  FROM sym s JOIN clus c ON c.id = s.nb
-      |  WHERE s.v NOT IN (SELECT v FROM core)
-      |  GROUP BY 1),
-      |lab AS (SELECT id AS vec_id, cluster, 'core' AS role FROM clus
-      |        UNION ALL SELECT v AS vec_id, cluster, 'border' AS role FROM border)
-      |SELECT e.vec_id, CAST(e.label AS INTEGER) AS label,
-      |  CAST(coalesce(d.degree, 0) AS BIGINT) AS n_neighbors,
-      |  coalesce(l.role, 'noise') AS role,
-      |  CAST(coalesce(l.cluster, -1) AS BIGINT) AS cluster
-      |FROM embeddings e
-      |LEFT JOIN deg d ON d.v = e.vec_id
-      |LEFT JOIN lab l ON l.vec_id = e.vec_id
-      |ORDER BY e.vec_id""".stripMargin
-
-  /** q243 oracle: the OPH pipeline replayed exactly — one md5 60-bit
-    * hash per distinct shingle (minima are duplicate-invariant, so
-    * the distinct list stands in for the engine's positional rows),
-    * 16 conditional bin minima, rotation densification as a 16-term
-    * coalesce chain per signature slot, 4 band buckets of 4 slots,
-    * bucket-collision candidates, exact string-set Jaccard verify. */
-  private lazy val ophOracleSql: String = {
-    val bins = 16; val bands = 4; val rpb = bins / bands
-    val binMins = (0 until bins).map(i =>
-      s"min(CASE WHEN h % $bins = $i THEN h END) AS m$i").mkString(",\n      ")
-    def dens(i: Int): String =
-      "coalesce(" + (0 until bins).map(j => s"m${(i + j) % bins}").mkString(", ") + ")"
-    val bandRows = (0 until bands).map { bd =>
-      val cols = (0 until rpb).map(r =>
-        s"CAST(${dens(bd * rpb + r)} AS VARCHAR)").mkString(" || ',' || ")
-      s"SELECT doc_id, $bd AS band, $cols AS bucket FROM bm"
-    }.mkString("\n  UNION ALL ")
-    s"""WITH docs AS (
-      |  SELECT doc_id,
-      |    list_distinct(list_transform(
-      |      range(0, greatest(len(words) - 3, 0) + 1),
-      |      i -> array_to_string(list_slice(words, i + 1, i + 3), ' '))) AS sh
-      |  FROM (SELECT doc_id,
-      |          regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS words
-      |        FROM documents) w),
-      |hs AS (
-      |  SELECT doc_id,
-      |    ('0x' || substr(md5(s), 17, 15))::BIGINT % 2147483647 AS h
-      |  FROM (SELECT doc_id, unnest(sh) AS s FROM docs) t),
-      |bm AS (
-      |  SELECT doc_id,
-      |      $binMins
-      |  FROM hs GROUP BY 1),
-      |br AS (
-      |  $bandRows),
-      |cand AS (
-      |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      |  FROM br a JOIN br b
-      |    ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id),
-      |j AS (
-      |  SELECT doc_a, doc_b,
-      |    round(CAST(len(list_intersect(x.sh, y.sh)) AS DOUBLE) /
-      |          len(list_distinct(list_concat(x.sh, y.sh))), 4) AS jaccard
-      |  FROM cand JOIN docs x ON x.doc_id = cand.doc_a
-      |            JOIN docs y ON y.doc_id = cand.doc_b)
-      |SELECT doc_a, doc_b, jaccard FROM j WHERE jaccard >= 0.5""".stripMargin
-  }
-
-  /** q244 oracle: the q161 model-table chain one order up — trigram /
-    * rolled-up-bigram / unigram counts from the training slice, the
-    * stupid-backoff CASE tree mirrored literal-for-literal, per-doc
-    * terms folded in (w1, w2, w3) order, backoff counts as exact
-    * integer CASE sums. */
-  private lazy val trigramBackoffOracleSql: String =
-    s"""WITH ws AS (
-      |  SELECT doc_id,
-      |    list_filter(regexp_split_to_array(${graft.functions.TextNorm.sqlNorm("text")}, ' '),
-      |                x -> x <> '') AS w
-      |  FROM documents),
-      |tg AS (
-      |  SELECT doc_id,
-      |    unnest(list_transform(range(0, greatest(len(w) - 2, 0)), i -> w[i + 1])) AS w1,
-      |    unnest(list_transform(range(0, greatest(len(w) - 2, 0)), i -> w[i + 2])) AS w2,
-      |    unnest(list_transform(range(0, greatest(len(w) - 2, 0)), i -> w[i + 3])) AS w3
-      |  FROM ws WHERE len(w) >= 3),
-      |train AS (SELECT doc_id FROM documents WHERE source = 'src0'),
-      |t3 AS (SELECT w1, w2, w3, count(*) AS c3 FROM tg JOIN train USING (doc_id) GROUP BY 1, 2, 3),
-      |c3x AS (SELECT w1, w2, sum(c3) AS cc3 FROM t3 GROUP BY 1, 2),
-      |t2 AS (SELECT w2, w3, sum(c3) AS c2 FROM t3 GROUP BY 1, 2),
-      |c2x AS (SELECT w2, sum(c2) AS cc2 FROM t2 GROUP BY 1),
-      |cu AS (SELECT word AS w3, count(*) AS c1 FROM (
-      |         SELECT unnest(w) AS word FROM ws JOIN train USING (doc_id)) t
-      |       GROUP BY 1),
-      |sc AS (SELECT CAST(sum(c1) AS BIGINT) AS n_uni, count(*) AS v FROM cu),
-      |db AS (SELECT doc_id, w1, w2, w3, count(*) AS n FROM tg GROUP BY 1, 2, 3, 4),
-      |terms AS (
-      |  SELECT db.doc_id, db.n,
-      |    db.n * CAST(floor(ln(
-      |      CASE WHEN t3.c3 IS NOT NULL THEN CAST(t3.c3 AS DOUBLE) / c3x.cc3
-      |           WHEN t2.c2 IS NOT NULL
-      |             THEN ${TextOps.TrigramAlpha} * (CAST(t2.c2 AS DOUBLE) / c2x.cc2)
-      |           ELSE ${TextOps.TrigramAlpha2} * (CAST(coalesce(cu.c1, 0) + 1 AS DOUBLE) /
-      |               (sc.n_uni + sc.v)) END) * 1000000000000.0 + 0.5) AS BIGINT) AS tl,
-      |    CASE WHEN t3.c3 IS NOT NULL THEN 0 ELSE db.n END AS nb
-      |  FROM db
-      |  LEFT JOIN t3 ON t3.w1 = db.w1 AND t3.w2 = db.w2 AND t3.w3 = db.w3
-      |  LEFT JOIN c3x ON c3x.w1 = db.w1 AND c3x.w2 = db.w2
-      |  LEFT JOIN t2 ON t2.w2 = db.w2 AND t2.w3 = db.w3
-      |  LEFT JOIN c2x ON c2x.w2 = db.w2
-      |  LEFT JOIN cu ON cu.w3 = db.w3, sc),
-      |scored AS (
-      |  SELECT doc_id, CAST(sum(n) AS BIGINT) AS n_trigrams,
-      |    CAST(sum(nb) AS BIGINT) AS n_backoff,
-      |    (-(CAST(sum(tl) AS DOUBLE) / 1000000000000.0)) /
-      |      CAST(sum(n) AS DOUBLE) AS nll_raw
-      |  FROM terms GROUP BY doc_id)
-      |SELECT d.doc_id,
-      |  CAST(coalesce(s.n_trigrams, 0) AS BIGINT) AS n_trigrams,
-      |  CAST(coalesce(s.n_backoff, 0) AS BIGINT) AS n_backoff,
-      |  ${TextOps.roundAtSql("s.nll_raw", 6)} AS nll,
-      |  ${TextOps.roundAtSql("CAST(s.n_backoff AS DOUBLE) / s.n_trigrams", 6)} AS backoff_rate
-      |FROM documents d LEFT JOIN scored s ON s.doc_id = d.doc_id
-      |ORDER BY d.doc_id""".stripMargin
-
-  /** q251 oracle: the whole power-iteration chain replayed — 1e-6
-    * coordinate quantization, the exact integer scatter matrix
-    * M = n·Σqqᵀ − (Σq)(Σq)ᵀ, `iters` (= 100) unrolled MATERIALIZED
-    * matvec rounds (ascending-j folds, norm, 1e-12 re-quantization —
-    * the engine's driver-side loop literal-for-literal), final
-    * Rayleigh quotient over the trace. */
-  private lazy val pcaPowerOracleSql: String = {
-    val dim = 64; val iters = 100
-    def matvec(wn: String, prev: String): String =
-      s"""$wn AS MATERIALIZED (
-         |  SELECT m.i, list_sum(list(CAST(m.m AS DOUBLE) * v.v ORDER BY m.j)) AS w
-         |  FROM m JOIN $prev v ON v.i = m.j GROUP BY m.i)""".stripMargin
-    def round(r: Int): String = {
-      val prev = if (r == 1) "v0" else s"v${r - 1}"
-      s"""${matvec(s"w$r", prev)},
-         |n$r AS MATERIALIZED (SELECT sqrt(list_sum(list(w * w ORDER BY i))) AS nm FROM w$r),
-         |v$r AS MATERIALIZED (
-         |  SELECT w.i, CASE WHEN nm = 0 THEN p.v
-         |    ELSE floor(w.w / nm * 1000000000000.0 + 0.5) / 1000000000000.0 END AS v
-         |  FROM w$r w JOIN $prev p ON p.i = w.i, n$r)""".stripMargin
-    }
-    s"""WITH dims AS (SELECT CAST(unnest(range(0, $dim)) AS BIGINT) AS i),
-      |e AS (
-      |  SELECT list_transform(embedding,
-      |    x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)) AS q
-      |  FROM embeddings),
-      |nn0 AS (SELECT count(*) AS n FROM e),
-      |flat AS (SELECT d.i, e.q[d.i + 1] AS qi, e.q AS q FROM e, dims d),
-      |s1 AS (SELECT i, CAST(sum(qi) AS BIGINT) AS sq FROM flat GROUP BY 1),
-      |cells AS (
-      |  SELECT f.i, d2.i AS j, CAST(sum(f.qi * f.q[d2.i + 1]) AS BIGINT) AS sqq
-      |  FROM flat f, dims d2 GROUP BY 1, 2),
-      |m AS MATERIALIZED (
-      |  SELECT c.i, c.j, nn0.n * c.sqq - sa.sq * sb.sq AS m
-      |  FROM cells c JOIN s1 sa ON sa.i = c.i JOIN s1 sb ON sb.i = c.j, nn0),
-      |tr AS (SELECT CAST(sum(m) AS BIGINT) AS tr FROM m WHERE i = j),
-      |v0 AS MATERIALIZED (SELECT i, 0.125 AS v FROM dims),
-      |${(1 to iters).map(round).mkString(",\n")},
-      |${matvec("wf", s"v$iters")},
-      |lam AS (
-      |  SELECT list_sum(list(v.v * w.w ORDER BY v.i)) AS l
-      |  FROM v$iters v JOIN wf w ON w.i = v.i)
-      |SELECT d.i AS dim,
-      |  floor(CAST(sa.sq AS DOUBLE) / (CAST(nn0.n AS DOUBLE) * 1000000.0) * 1000000.0 + 0.5) / 1000000.0 AS mu,
-      |  v.v AS pc1,
-      |  floor((lam.l / CAST(tr.tr AS DOUBLE)) * 1000000.0 + 0.5) / 1000000.0 AS explained
-      |FROM dims d JOIN s1 sa ON sa.i = d.i JOIN v$iters v ON v.i = d.i, nn0, lam, tr
-      |ORDER BY dim""".stripMargin
-  }
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  /** q252 oracle: both BM25 rounds replayed with the per-doc sorted
-    * fold (scores bit-identical doubles → identical feedback set and
-    * final ranking), the feedback-vocab TF-IDF expansion, and the
-    * weighted re-score. DOUBLE casts on the weight literals AND on
-    * every bare decimal that multiplies a non-DOUBLE operand (DuckDB
-    * parses bare decimals as DECIMAL — the q155 lesson): `tf.tf *
-    * ${"$"}{k1 + 1}` with BIGINT tf would evaluate in exact DECIMAL,
-    * not the engine's IEEE double (2.2 decimal ≠ 2.2 double at the
-    * last ulp), so the raw-score feedback cut could pick a different
-    * feedback set on near-tied corpora. */
-  private lazy val rocchioPrfOracleSql: String = {
-    val (k1, b) = (1.2, 0.75)
-    def scoreCtes(termsCte: String, out: String): String =
-      s"""${out}_tf AS (
-         |  SELECT wr.doc_id, wr.word, t.wt, count(*) AS tf
-         |  FROM wr JOIN $termsCte t USING (word) GROUP BY 1, 2, 3),
-         |${out}_df AS (SELECT word, count(DISTINCT doc_id) AS df FROM ${out}_tf GROUP BY 1),
-         |$out AS (
-         |  SELECT tf.doc_id,
-         |    list_sum(list(
-         |      tf.wt * ln((nn.n_docs - df.df + 0.5) / (df.df + 0.5) + 1.0) *
-         |      ((CAST(tf.tf AS DOUBLE) * CAST(${k1 + 1} AS DOUBLE)) /
-         |       (tf.tf + CAST($k1 AS DOUBLE) * (${1.0 - b} + CAST($b AS DOUBLE) * dl.dl / ad.avgdl)))
-         |      ORDER BY tf.word)) AS score
-         |  FROM ${out}_tf tf JOIN ${out}_df df USING (word)
-         |       JOIN dl USING (doc_id), nn, ad
-         |  GROUP BY 1)""".stripMargin
-    s"""WITH ws AS (
-      |  SELECT doc_id,
-      |    list_filter(regexp_split_to_array(${graft.functions.TextNorm.sqlNorm("text")}, ' '),
-      |                x -> x <> '') AS w
-      |  FROM documents),
-      |wr AS (SELECT doc_id, unnest(w) AS word FROM ws),
-      |dl AS (SELECT doc_id, count(*) AS dl FROM wr GROUP BY 1),
-      |nn AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs FROM documents),
-      |ad AS (SELECT avg(dl) AS avgdl FROM dl),
-      |t0 AS (SELECT word, CAST(wt AS DOUBLE) AS wt
-      |       FROM (VALUES ('data', 1.0), ('analysis', 1.0), ('model', 1.0)) v(word, wt)),
-      |${scoreCtes("t0", "s0")},
-      |fb AS (SELECT doc_id FROM s0 ORDER BY score DESC, doc_id LIMIT 5),
-      |fbtf AS (
-      |  SELECT word, CAST(count(*) AS BIGINT) AS stf
-      |  FROM wr JOIN fb USING (doc_id)
-      |  WHERE word NOT IN ('data', 'analysis', 'model') GROUP BY 1),
-      |cdf AS (
-      |  SELECT word, count(DISTINCT doc_id) AS df FROM wr
-      |  WHERE word IN (SELECT word FROM fbtf) GROUP BY 1),
-      |exp0 AS (
-      |  SELECT fbtf.word, CAST(fbtf.stf AS DOUBLE) * ln(nn.n_docs / cdf.df) AS esc
-      |  FROM fbtf JOIN cdf USING (word), nn),
-      |exp1 AS (SELECT word, CAST(0.5 AS DOUBLE) AS wt
-      |         FROM exp0 ORDER BY esc DESC, word LIMIT 3),
-      |t1 AS (SELECT * FROM t0 UNION ALL SELECT * FROM exp1),
-      |${scoreCtes("t1", "s1")}
-      |SELECT doc_id, ${TextOps.roundAtSql("score", 6)} AS bm25_prf
-      |FROM s1 ORDER BY score DESC, doc_id LIMIT 10""".stripMargin
-  }
-
-  /** q256 oracle: q133's pair CTE, row totals, then the 50 power
-    * rounds unrolled as MATERIALIZED CTEs — per-target ascending-s
-    * folds over the observed cells (zero cells add exactly +0.0 in
-    * the engine, so skipping them is value-identical) with the q251
-    * 1e-12 per-round re-quantization; uniform quantized start.
-    *
-    * Closed-chain contract, mirrored: the engine require()-crashes on
-    * an ABSORBING target (an event type appearing only as a
-    * transition target — mass would leak out of the restricted
-    * chain), so the `chk` CTE makes DuckDB error() on exactly the
-    * same inputs instead of silently iterating a leaky chain. The
-    * pinned corpus is outgoing-closed (spec-asserted), so the guard
-    * costs one anti-join and fires on neither engine here. */
-  private lazy val stationaryOracleSql: String = {
-    val iters = 50
-    def round(r: Int): String = {
-      val prev = if (r == 1) "p0" else s"p${r - 1}"
-      s"""it$r AS MATERIALIZED (
-         |  SELECT m.j AS i,
-         |    list_sum(list(v.v * (CAST(m.c AS DOUBLE) / m.rt) ORDER BY m.s)) AS w
-         |  FROM m JOIN $prev v ON v.i = m.s GROUP BY m.j),
-         |p$r AS MATERIALIZED (
-         |  SELECT i, floor(w * 1000000000000.0 + 0.5) / 1000000000000.0 AS v
-         |  FROM it$r)""".stripMargin
-    }
-    s"""WITH pr AS (
-      |  SELECT event_type AS s,
-      |    lead(event_type) OVER (PARTITION BY user_id
-      |      ORDER BY CAST(ts AS TIMESTAMP), event_id) AS t
-      |  FROM events),
-      |tc AS (SELECT s, t, count(*) AS c FROM pr WHERE t IS NOT NULL GROUP BY 1, 2),
-      |rt AS (SELECT s, CAST(sum(c) AS BIGINT) AS rt FROM tc GROUP BY 1),
-      |chk AS (SELECT CASE WHEN count(*) > 0
-      |          THEN error('absorbing target state - chain not closed')
-      |          ELSE 1 END AS ok
-      |        FROM tc WHERE t NOT IN (SELECT s FROM rt)),
-      |m AS MATERIALIZED (SELECT tc.s, tc.t AS j, tc.c, rt.rt FROM tc JOIN rt USING (s)),
-      |kk AS (SELECT count(*) AS k FROM rt),
-      |p0 AS MATERIALIZED (
-      |  SELECT s AS i,
-      |    floor(CAST(1.0 AS DOUBLE) / k * 1000000000000.0 + 0.5) / 1000000000000.0 AS v
-      |  FROM rt, kk),
-      |${(1 to iters).map(round).mkString(",\n")}
-      |SELECT r.s AS event_type, r.rt AS n_out, p.v AS pi
-      |FROM rt r JOIN p$iters p ON p.i = r.s, chk
-      |WHERE chk.ok = 1
-      |ORDER BY event_type""".stripMargin
-  }
-
-  def oracleSql: Map[String, String] = Map(
-    "q251_pca_power" -> pcaPowerOracleSql,
-    "q252_rocchio_prf" -> rocchioPrfOracleSql,
-    "q256_stationary" -> stationaryOracleSql,
-    // q255: 1e-3-quantized per-(user, type, period) sums, dense grid,
-    // exact long sufficient stats, one mirrored double tree per cell
-    "q255_cuped" ->
-      s"""WITH ev AS (
-        |  SELECT user_id, event_type,
-        |    date_trunc('day', CAST(ts AS TIMESTAMP)) AS day,
-        |    CAST(floor(value * 1000.0 + 0.5) AS BIGINT) AS v
-        |  FROM events),
-        |bounds AS (SELECT min(day) AS mnd, max(day) AS mxd FROM ev),
-        |cells AS (
-        |  SELECT user_id, event_type,
-        |    CAST(sum(CASE WHEN datediff('day', mnd, day) * 2 <
-        |                       datediff('day', mnd, mxd)
-        |             THEN v ELSE 0 END) AS BIGINT) AS x,
-        |    CAST(sum(CASE WHEN datediff('day', mnd, day) * 2 <
-        |                       datediff('day', mnd, mxd)
-        |             THEN 0 ELSE v END) AS BIGINT) AS y
-        |  FROM ev, bounds GROUP BY 1, 2),
-        |grid AS (
-        |  SELECT t.event_type, coalesce(c.x, 0) AS x, coalesce(c.y, 0) AS y
-        |  FROM (SELECT DISTINCT user_id FROM ev) u
-        |  CROSS JOIN (SELECT DISTINCT event_type FROM ev) t
-        |  LEFT JOIN cells c ON c.user_id = u.user_id AND c.event_type = t.event_type),
-        |g AS (
-        |  SELECT event_type, count(*) AS n,
-        |    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-        |    CAST(sum(x * x) AS BIGINT) AS sxx,
-        |    CAST(sum(x * y) AS BIGINT) AS sxy,
-        |    CAST(sum(y * y) AS BIGINT) AS syy
-        |  FROM grid GROUP BY 1),
-        |d AS (
-        |  SELECT event_type, n, sx, sy,
-        |    CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) AS vx,
-        |    CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) AS vy,
-        |    CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) AS cv
-        |  FROM g)
-        |SELECT event_type, n AS n_users,
-        |  ${TextOps.roundAtSql("CAST(sy AS DOUBLE) / (CAST(n AS DOUBLE) * 1000.0)", 6)} AS mean_post,
-        |  ${TextOps.roundAtSql("CASE WHEN vx = 0.0 THEN 0.0 ELSE cv / vx END", 6)} AS theta,
-        |  ${TextOps.roundAtSql(
-             "CASE WHEN vx = 0.0 OR vy = 0.0 THEN 0.0 ELSE (cv * cv) / (vx * vy) END", 6)} AS var_reduction
-        |FROM d ORDER BY event_type""".stripMargin,
-    // q253: q137's split rule, train model CTEs, dense test-word ×
-    // source grid, exact 1e12-long log-prob sums, (score desc, cand)
-    // argmax, confusion rollup
-    "q253_nb_confusion" ->
-      s"""WITH sp AS (
-        |  SELECT doc_id, source, text,
-        |    CASE WHEN substr(md5('split_' || CAST(doc_id AS VARCHAR)), 1, 1)
-        |              IN ('0', '1', '2') THEN 'test' ELSE 'train' END AS split
-        |  FROM documents),
-        |trw AS (
-        |  SELECT doc_id,
-        |    unnest(list_filter(regexp_split_to_array(${graft.functions.TextNorm.sqlNorm("text")}, ' '),
-        |                       x -> x <> '')) AS word
-        |  FROM sp WHERE split = 'train'),
-        |tw AS (
-        |  SELECT s.source, t.word, count(*) AS c
-        |  FROM trw t JOIN sp s USING (doc_id) GROUP BY 1, 2),
-        |st AS (SELECT source, CAST(sum(c) AS BIGINT) AS nt FROM tw GROUP BY 1),
-        |vsz AS (SELECT count(DISTINCT word) AS v FROM tw),
-        |pr AS (SELECT source, count(*) AS nd FROM sp WHERE split = 'train' GROUP BY 1),
-        |ntr AS (SELECT count(*) AS ntr FROM sp WHERE split = 'train'),
-        |srcdim AS (
-        |  SELECT st.source AS cand,
-        |    CAST(floor(ln(CAST(pr.nd AS DOUBLE) / ntr.ntr) * 1000000000000.0 + 0.5) AS BIGINT) AS pterm,
-        |    st.nt + vsz.v AS den
-        |  FROM st JOIN pr USING (source), vsz, ntr),
-        |tew AS (
-        |  SELECT doc_id,
-        |    unnest(list_filter(regexp_split_to_array(${graft.functions.TextNorm.sqlNorm("text")}, ' '),
-        |                       x -> x <> '')) AS word
-        |  FROM sp WHERE split = 'test'),
-        |dw AS (SELECT doc_id, word, count(*) AS n FROM tew GROUP BY 1, 2),
-        |scored AS (
-        |  SELECT dw.doc_id, sd.cand,
-        |    CAST(max(sd.pterm) + sum(dw.n *
-        |      CAST(floor(ln(CAST(coalesce(tw.c, 0) + 1 AS DOUBLE) / sd.den)
-        |        * 1000000000000.0 + 0.5) AS BIGINT)) AS BIGINT) AS score
-        |  FROM dw CROSS JOIN srcdim sd
-        |  LEFT JOIN tw ON tw.source = sd.cand AND tw.word = dw.word
-        |  GROUP BY 1, 2),
-        |pred AS (
-        |  SELECT doc_id, cand AS pred FROM (
-        |    SELECT doc_id, cand,
-        |      row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, cand) AS rn
-        |    FROM scored) t WHERE rn = 1),
-        |cells AS (
-        |  SELECT s.source, p.pred, count(*) AS n
-        |  FROM sp s JOIN pred p USING (doc_id)
-        |  WHERE s.split = 'test' GROUP BY 1, 2),
-        |rt AS (SELECT source, CAST(sum(n) AS BIGINT) AS nr FROM cells GROUP BY 1)
-        |SELECT c.source, c.pred, c.n,
-        |  ${TextOps.roundAtSql("CAST(c.n AS DOUBLE) / rt.nr", 6)} AS share
-        |FROM cells c JOIN rt USING (source)
-        |ORDER BY c.source, c.pred""".stripMargin,
-    // q254: time-to-first-purchase lifetimes + never-purchased
-    // censoring, reverse-cumulative risk sets, 1e12-long ln factors
-    // prefix-summed, one mirrored exp
-    "q254_survival_curve" ->
-      s"""WITH ev AS (
-        |  SELECT user_id, event_type,
-        |    date_trunc('day', CAST(ts AS TIMESTAMP)) AS day FROM events),
-        |f AS (SELECT user_id, min(day) AS fd FROM ev GROUP BY 1),
-        |p AS (SELECT user_id, min(day) AS pd FROM ev
-        |      WHERE event_type = 'purchase' GROUP BY 1),
-        |mx AS (SELECT max(day) AS mxd FROM ev),
-        |u AS (
-        |  SELECT CAST(CASE WHEN p.pd IS NOT NULL THEN datediff('day', f.fd, p.pd)
-        |              ELSE datediff('day', f.fd, mx.mxd) END AS BIGINT) AS t,
-        |    p.pd IS NULL AS cens
-        |  FROM f LEFT JOIN p USING (user_id), mx),
-        |byt AS (
-        |  SELECT t,
-        |    CAST(sum(CASE WHEN cens THEN 0 ELSE 1 END) AS BIGINT) AS d,
-        |    CAST(sum(CASE WHEN cens THEN 1 ELSE 0 END) AS BIGINT) AS c
-        |  FROM u GROUP BY 1),
-        |wr AS (
-        |  SELECT *, CAST(sum(d + c) OVER (ORDER BY t DESC
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS n_risk
-        |  FROM byt),
-        |wt AS (
-        |  SELECT *,
-        |    CAST(max(CASE WHEN d = n_risk THEN 1 ELSE 0 END)
-        |      OVER (ORDER BY t ASC ROWS UNBOUNDED PRECEDING) AS BIGINT) AS dead,
-        |    CAST(sum(CASE WHEN d = n_risk THEN 0 WHEN d = 0 THEN 0
-        |      ELSE CAST(floor(ln(CAST(n_risk - d AS DOUBLE) / n_risk)
-        |        * 1000000000000.0 + 0.5) AS BIGINT) END)
-        |      OVER (ORDER BY t ASC ROWS UNBOUNDED PRECEDING) AS BIGINT) AS lt
-        |  FROM wr)
-        |SELECT t, n_risk, d AS n_converted, c AS n_censored,
-        |  CASE WHEN dead = 1 THEN 0.0
-        |       ELSE ${TextOps.roundAtSql("exp(CAST(lt AS DOUBLE) / 1000000000000.0)", 6)}
-        |  END AS survival
-        |FROM wt ORDER BY t""".stripMargin,
-    "q242_density_clusters" -> densityClustersOracleSql,
-    "q243_neardup_oph" -> ophOracleSql,
-    "q244_trigram_backoff" -> trigramBackoffOracleSql,
-    // q249: positional 3-gram hash lists (q61's shingle construction
-    // WITH positions), window minima over 4-hash slides (short docs:
-    // one all-of-doc window), distinct fingerprints, pair counts
-    "q249_winnow_overlap" ->
-      """WITH wsr AS (
-        |  SELECT doc_id,
-        |    regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS wd
-        |  FROM documents),
-        |hs AS (
-        |  SELECT doc_id,
-        |    list_transform(range(0, greatest(len(wd) - 3, 0) + 1),
-        |      i -> ('0x' || substr(md5(array_to_string(list_slice(wd, i + 1, i + 3), ' ')), 17, 15))::BIGINT) AS hl
-        |  FROM wsr),
-        |fp AS (
-        |  SELECT DISTINCT doc_id, fp FROM (
-        |    SELECT doc_id,
-        |      unnest(list_transform(range(least(4, len(hl)), len(hl) + 1),
-        |        i -> list_aggregate(list_slice(hl, greatest(i - 3, 1), i), 'min'))) AS fp
-        |    FROM hs) t),
-        |pd AS (SELECT doc_id, count(*) AS nfp FROM fp GROUP BY 1),
-        |pr AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_shared
-        |  FROM fp a JOIN fp b ON a.fp = b.fp AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT doc_a, doc_b, n_shared, pa.nfp AS fp_a, pb.nfp AS fp_b,
-        |  round(CAST(n_shared AS DOUBLE) / least(pa.nfp, pb.nfp), 4) AS overlap
-        |FROM pr JOIN pd pa ON pa.doc_id = pr.doc_a
-        |        JOIN pd pb ON pb.doc_id = pr.doc_b
-        |WHERE n_shared >= 2 ORDER BY doc_a, doc_b""".stripMargin,
-    // q250: (type, dow, hour) exact cells + per-type totals; Sunday=0
-    // on both engines (Spark dayofweek−1 ↔ DuckDB dayofweek)
-    "q250_seasonality" ->
-      s"""WITH c AS (
-        |  SELECT event_type,
-        |    CAST(dayofweek(CAST(ts AS TIMESTAMP)) AS BIGINT) AS dow,
-        |    CAST(hour(CAST(ts AS TIMESTAMP)) AS BIGINT) AS hod,
-        |    count(*) AS n
-        |  FROM events GROUP BY 1, 2, 3),
-        |t AS (SELECT event_type, CAST(sum(n) AS BIGINT) AS nt FROM c GROUP BY 1)
-        |SELECT c.event_type, c.dow, c.hod, c.n,
-        |  ${TextOps.roundAtSql("CAST(c.n AS DOUBLE) / t.nt", 6)} AS share,
-        |  ${TextOps.roundAtSql("CAST(c.n AS DOUBLE) * 168.0 / t.nt", 4)} AS lift
-        |FROM c JOIN t USING (event_type)
-        |ORDER BY c.event_type, c.dow, c.hod""".stripMargin,
-    // q245: the q33 session CTE + per-session ordered type lists,
-    // triple-unnest adjacency, session reach via a per-session rollup
-    "q245_session_paths" ->
-      """WITH ev AS (
-        |  SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type FROM events),
-        |flagged AS (
-        |  SELECT *, CASE WHEN ts > lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |                        + INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS new_s
-        |  FROM ev),
-        |numbered AS (
-        |  SELECT *, CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq
-        |  FROM flagged),
-        |seq AS (
-        |  SELECT user_id, session_seq, list(event_type ORDER BY ts, event_id) AS et
-        |  FROM numbered GROUP BY 1, 2),
-        |tri AS (
-        |  SELECT user_id, session_seq,
-        |    unnest(list_transform(range(0, greatest(len(et) - 2, 0)), i -> et[i + 1])) AS t1,
-        |    unnest(list_transform(range(0, greatest(len(et) - 2, 0)), i -> et[i + 2])) AS t2,
-        |    unnest(list_transform(range(0, greatest(len(et) - 2, 0)), i -> et[i + 3])) AS t3
-        |  FROM seq WHERE len(et) >= 3),
-        |pc AS (
-        |  SELECT t1, t2, t3, user_id, session_seq, count(*) AS c
-        |  FROM tri GROUP BY 1, 2, 3, 4, 5)
-        |SELECT t1, t2, t3, CAST(sum(c) AS BIGINT) AS n, count(*) AS n_sessions
-        |FROM pc GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-    // q246: distinct (user, day) → per-user day counts → histogram,
-    // CCDF as a reverse running sum over the day-bounded histogram
-    "q246_active_days" ->
-      s"""WITH ud AS (
-        |  SELECT DISTINCT user_id, date_trunc('day', CAST(ts AS TIMESTAMP)) AS day
-        |  FROM events),
-        |pu AS (SELECT user_id, count(*) AS active_days FROM ud GROUP BY 1),
-        |h AS (SELECT active_days, count(*) AS n_users FROM pu GROUP BY 1),
-        |t AS (SELECT CAST(sum(n_users) AS BIGINT) AS nu FROM h),
-        |c AS (
-        |  SELECT active_days, n_users,
-        |    CAST(sum(n_users) OVER (ORDER BY active_days DESC
-        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS n_at_least
-        |  FROM h)
-        |SELECT c.active_days, c.n_users,
-        |  ${TextOps.roundAtSql("CAST(c.n_users AS DOUBLE) / t.nu", 6)} AS share,
-        |  c.n_at_least,
-        |  ${TextOps.roundAtSql("CAST(c.n_at_least AS DOUBLE) / t.nu", 6)} AS ccdf
-        |FROM c, t ORDER BY active_days""".stripMargin,
-    // q247: the q61 pair chain → symmetric edges → exact integer
-    // sufficient statistics → one guarded Pearson expression
-    "q247_assortativity" ->
-      s"""WITH docs AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(
-        |      range(0, greatest(len(words) - 3, 0) + 1),
-        |      i -> array_to_string(list_slice(words, i + 1, i + 3), ' '))) AS sh
-        |  FROM (SELECT doc_id,
-        |          regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS words
-        |        FROM documents) w),
-        |keyed AS (
-        |  SELECT doc_id, sh,
-        |    list_aggregate(list_transform(sh, s -> md5(s)), 'min') AS minsh
-        |  FROM docs),
-        |cand AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-        |          len(list_distinct(list_concat(a.sh, b.sh))), 4) AS jaccard
-        |  FROM keyed a JOIN keyed b ON a.minsh = b.minsh AND a.doc_id < b.doc_id),
-        |dup AS (SELECT doc_a, doc_b FROM cand WHERE jaccard >= 0.5),
-        |edges AS (SELECT doc_a AS u, doc_b AS v FROM dup
-        |          UNION ALL SELECT doc_b, doc_a FROM dup),
-        |deg AS (SELECT u, count(*) AS d FROM edges GROUP BY 1),
-        |dd AS (
-        |  SELECT e.u, e.v, du.d AS du, dv.d AS dv
-        |  FROM edges e JOIN deg du ON du.u = e.u JOIN deg dv ON dv.u = e.v),
-        |g AS (
-        |  SELECT count(*) AS n, count(DISTINCT u) AS n_nodes,
-        |    CAST(sum(du) AS BIGINT) AS sx,
-        |    CAST(sum(du * du) AS BIGINT) AS sxx,
-        |    CAST(sum(du * dv) AS BIGINT) AS sxy
-        |  FROM dd)
-        |SELECT CAST(n // 2 AS BIGINT) AS n_edges, n_nodes,
-        |  ${TextOps.roundAtSql(
-             "CASE WHEN n * sxx - sx * sx = 0 THEN 0.0 " +
-             "ELSE CAST(n * sxy - sx * sx AS DOUBLE) / CAST(n * sxx - sx * sx AS DOUBLE) END", 6)} AS assortativity
-        |FROM g""".stripMargin,
-    // q248: (source, word) exact counts → freq-of-freqs → Good-Turing
-    // p0 and bias-corrected Chao1, both single guarded divisions
-    "q248_unseen_vocab" ->
-      s"""WITH ws AS (
-        |  SELECT doc_id,
-        |    list_filter(regexp_split_to_array(${graft.functions.TextNorm.sqlNorm("text")}, ' '),
-        |                x -> x <> '') AS w
-        |  FROM documents),
-        |wr AS (SELECT doc_id, unnest(w) AS word FROM ws),
-        |wc AS (
-        |  SELECT d.source, wr.word, count(*) AS c
-        |  FROM wr JOIN documents d USING (doc_id) GROUP BY 1, 2),
-        |g AS (
-        |  SELECT source, CAST(sum(c) AS BIGINT) AS n_tokens, count(*) AS vocab,
-        |    CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-        |    CAST(sum(CASE WHEN c = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n2
-        |  FROM wc GROUP BY 1)
-        |SELECT source, n_tokens, vocab, n1, n2,
-        |  ${TextOps.roundAtSql("CAST(n1 AS DOUBLE) / n_tokens", 6)} AS unseen_mass,
-        |  ${TextOps.roundAtSql(
-             "CAST(vocab AS DOUBLE) + CAST(n1 AS DOUBLE) * CAST(n1 - 1 AS DOUBLE) / CAST(2 * (n2 + 1) AS DOUBLE)", 4)} AS chao1
-        |FROM g ORDER BY source""".stripMargin,
-    "q159_bpe_merges" -> bpeMergesOracleSql,
-    "q160_bpe_tokens" -> bpeTokensOracleSql,
-    "q170_bpe_fertility" -> bpeFertilityOracleSql,
-    "q235_bpe_ablation" -> bpeAblationOracleSql,
-    "q236_decontam_ablation" -> decontamAblationOracleSql,
-    "q237_removal_effect" -> removalEffectOracleSql,
-    // q238: both pair chains embedded verbatim as derived tables,
-    // lexical side restricted to embedded endpoints
-    "q238_sem_lex_agreement" ->
-      s"""WITH sem AS MATERIALIZED (SELECT vec_id, grp FROM ($semDedupOracleSql) t),
-         |sp AS MATERIALIZED (
-         |  SELECT a.vec_id AS doc_a, b.vec_id AS doc_b
-         |  FROM sem a JOIN sem b ON a.grp = b.grp AND a.vec_id < b.vec_id),
-         |lex0 AS MATERIALIZED (SELECT doc_a, doc_b FROM ($ngramPairsOracleSql) t),
-         |ids AS (SELECT vec_id FROM embeddings),
-         |lp AS MATERIALIZED (
-         |  SELECT l.doc_a, l.doc_b FROM lex0 l
-         |  JOIN ids i1 ON i1.vec_id = l.doc_a
-         |  JOIN ids i2 ON i2.vec_id = l.doc_b),
-         |bt AS (SELECT sp.doc_a, sp.doc_b FROM sp
-         |       JOIN lp ON lp.doc_a = sp.doc_a AND lp.doc_b = sp.doc_b),
-         |c AS (SELECT (SELECT count(*) FROM sp) AS n_semantic,
-         |             (SELECT count(*) FROM lp) AS n_lexical,
-         |             (SELECT count(*) FROM bt) AS n_both)
-         |SELECT n_semantic, n_lexical, n_both,
-         |  n_semantic - n_both AS sem_only, n_lexical - n_both AS lex_only,
-         |  ${TextOps.roundAtSql(
-              "CASE WHEN n_semantic + n_lexical - n_both = 0 THEN 0.0 " +
-              "ELSE CAST(n_both AS DOUBLE) / CAST(n_semantic + n_lexical - n_both AS DOUBLE) END", 6)} AS agreement
-         |FROM c""".stripMargin,
-    "q178_bpe_round_trip" -> bpeRoundTripOracleSql,
-    // q179: row_number ordinals over both batching orders; floor()
-    // for the batch id on both engines (Spark's long cast truncates,
-    // DuckDB's rounds — floor is the shared semantics)
-    "q179_padding_waste" ->
-      s"""WITH l AS (
-        |  SELECT doc_id,
-        |    CAST(len(regexp_split_to_array(${graft.functions.TextNorm.sqlNorm("text")}, ' ')) AS BIGINT) AS len
-        |  FROM documents),
-        |a AS (
-        |  SELECT 'by_arrival' AS strategy,
-        |    CAST(floor((row_number() OVER (ORDER BY doc_id) - 1) / 32.0) AS BIGINT) AS batch_id,
-        |    len FROM l),
-        |b AS (
-        |  SELECT 'by_length' AS strategy,
-        |    CAST(floor((row_number() OVER (ORDER BY len DESC, doc_id) - 1) / 32.0) AS BIGINT) AS batch_id,
-        |    len FROM l),
-        |u AS (SELECT * FROM a UNION ALL SELECT * FROM b)
-        |SELECT strategy, batch_id, count(*) AS n_docs,
-        |  max(len) AS max_len, CAST(sum(len) AS BIGINT) AS sum_len,
-        |  CAST(count(*) * max(len) - sum(len) AS BIGINT) AS waste
-        |FROM u GROUP BY strategy, batch_id
-        |ORDER BY strategy, batch_id""".stripMargin,
-    // q180: q101's probe semantics with the codebook frozen on the
-    // STANDING slice (vec_id % 10 <> 7), candidates from ALL vectors
-    // (the appended index holds them), match flags asserted TRUE
-    "q180_ivf_incremental" ->
-      """WITH e AS (
-        |  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-        |  FROM embeddings),
-        |flat AS (
-        |  SELECT label AS clabel,
-        |    unnest(range(0, len(emb))) AS pos,
-        |    unnest(emb) AS v
-        |  FROM e WHERE vec_id % 10 <> 7),
-        |cm AS (SELECT clabel, pos, avg(v) AS m FROM flat GROUP BY 1, 2),
-        |cent AS (SELECT clabel, list(m ORDER BY pos) AS cent FROM cm GROUP BY 1),
-        |ad AS (
-        |  SELECT e.vec_id, e.label, e.emb, c.clabel,
-        |    list_sum(list_transform(range(1, len(e.emb) + 1),
-        |      i -> (e.emb[i] - c.cent[i]) * (e.emb[i] - c.cent[i]))) AS d2
-        |  FROM e CROSS JOIN cent c),
-        |rk AS (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d2, clabel) AS rk FROM ad),
-        |probes AS (SELECT clabel FROM rk WHERE vec_id = 0 AND rk <= 2),
-        |q AS (SELECT emb AS q_emb FROM e WHERE vec_id = 0),
-        |cand AS (
-        |  SELECT r.vec_id, CAST(r.label AS INTEGER) AS label, r.emb, q.q_emb
-        |  FROM rk r, q
-        |  WHERE r.rk = 1 AND r.vec_id <> 0
-        |    AND r.clabel IN (SELECT clabel FROM probes)),
-        |s AS (
-        |  SELECT vec_id, label,
-        |    round(
-        |      list_sum(list_transform(range(1, len(emb) + 1), i -> emb[i] * q_emb[i])) /
-        |      (sqrt(list_sum(list_transform(range(1, len(emb) + 1), i -> emb[i] * emb[i]))) *
-        |       sqrt(list_sum(list_transform(range(1, len(q_emb) + 1), i -> q_emb[i] * q_emb[i])))), 4) AS cos
-        |  FROM cand),
-        |topk AS (SELECT vec_id, label, cos FROM s ORDER BY cos DESC, vec_id LIMIT 10)
-        |SELECT CAST(row_number() OVER (ORDER BY cos DESC, vec_id) AS BIGINT) AS rank,
-        |  vec_id, label, cos, TRUE AS match_rebuild
-        |FROM topk ORDER BY rank""".stripMargin,
-    // q171: q25's pair CTEs + the a<b<c wedge join closed by the
-    // third edge, three corner credits per triangle
-    "q171_dup_triangles" ->
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(
-        |      range(0, greatest(len(words) - 3, 0) + 1),
-        |      i -> array_to_string(list_slice(words, i + 1, i + 3), ' '))) AS sh
-        |  FROM (SELECT doc_id,
-        |          regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS words
-        |        FROM documents) w),
-        |keyed AS (
-        |  SELECT doc_id, sh,
-        |    list_aggregate(list_transform(sh, s -> md5(s)), 'min') AS minsh
-        |  FROM docs),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-        |          len(list_distinct(list_concat(a.sh, b.sh))), 4) AS jaccard
-        |  FROM keyed a JOIN keyed b ON a.minsh = b.minsh AND a.doc_id < b.doc_id),
-        |e AS (SELECT doc_a, doc_b FROM pairs WHERE jaccard >= 0.5),
-        |tri AS (
-        |  SELECT e1.doc_a AS a, e1.doc_b AS b, e2.doc_b AS c
-        |  FROM e e1
-        |  JOIN e e2 ON e2.doc_a = e1.doc_b
-        |  JOIN e e3 ON e3.doc_a = e1.doc_a AND e3.doc_b = e2.doc_b),
-        |corners AS (SELECT unnest([a, b, c]) AS doc_id FROM tri)
-        |SELECT doc_id, count(*) AS n_triangles
-        |FROM corners GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // q198: the q171 chain + a degree CTE; the coefficient is one
-    // division of exact-long casts under the shared roundAt formula
-    "q198_clustering_coef" ->
-      s"""WITH docs AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(
-        |      range(0, greatest(len(words) - 3, 0) + 1),
-        |      i -> array_to_string(list_slice(words, i + 1, i + 3), ' '))) AS sh
-        |  FROM (SELECT doc_id,
-        |          regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS words
-        |        FROM documents) w),
-        |keyed AS (
-        |  SELECT doc_id, sh,
-        |    list_aggregate(list_transform(sh, s -> md5(s)), 'min') AS minsh
-        |  FROM docs),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-        |          len(list_distinct(list_concat(a.sh, b.sh))), 4) AS jaccard
-        |  FROM keyed a JOIN keyed b ON a.minsh = b.minsh AND a.doc_id < b.doc_id),
-        |e AS (SELECT doc_a, doc_b FROM pairs WHERE jaccard >= 0.5),
-        |tri AS (
-        |  SELECT e1.doc_a AS a, e1.doc_b AS b, e2.doc_b AS c
-        |  FROM e e1
-        |  JOIN e e2 ON e2.doc_a = e1.doc_b
-        |  JOIN e e3 ON e3.doc_a = e1.doc_a AND e3.doc_b = e2.doc_b),
-        |corners AS (SELECT unnest([a, b, c]) AS doc_id FROM tri),
-        |tric AS (SELECT doc_id, count(*) AS n_triangles FROM corners GROUP BY doc_id),
-        |deg AS (
-        |  SELECT doc_id, count(*) AS degree
-        |  FROM (SELECT unnest([doc_a, doc_b]) AS doc_id FROM e)
-        |  GROUP BY doc_id)
-        |SELECT d.doc_id, d.degree,
-        |  coalesce(t.n_triangles, 0) AS n_triangles,
-        |  CASE WHEN d.degree >= 2
-        |    THEN ${TextOps.roundAtSql(
-                 "CAST(2 * coalesce(t.n_triangles, 0) AS DOUBLE) / " +
-                   "CAST(d.degree * (d.degree - 1) AS DOUBLE)", 6)}
-        |    ELSE 0.0 END AS clust_coef
-        |FROM deg d LEFT JOIN tric t USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-    // q161: full model replay — exact counts, one ln per distinct
-    // (doc, bigram) mirrored literal-for-literal, floor-scaled to a
-    // 1e12 BIGINT so the per-doc total is an exact-integer sum (the
-    // q244/q182 device — order-free, no fold order to pin), band on
-    // the RAW avg-NLL
-    "q161_bigram_fluency" ->
-      s"""WITH ws AS (
-        |  SELECT doc_id,
-        |    list_filter(regexp_split_to_array(${graft.functions.TextNorm.sqlNorm("text")}, ' '),
-        |                x -> x <> '') AS w
-        |  FROM documents),
-        |bg AS (
-        |  SELECT doc_id,
-        |    unnest(list_transform(range(0, greatest(len(w) - 1, 0)), i -> w[i + 1])) AS w1,
-        |    unnest(list_transform(range(0, greatest(len(w) - 1, 0)), i -> w[i + 2])) AS w2
-        |  FROM ws WHERE len(w) >= 2),
-        |train AS (SELECT doc_id FROM documents WHERE source = 'src0'),
-        |cu AS (SELECT word AS w2, count(*) AS cu FROM (
-        |         SELECT unnest(w) AS word FROM ws JOIN train USING (doc_id)) t
-        |       GROUP BY 1),
-        |sc AS (SELECT CAST(sum(cu) AS BIGINT) AS n_uni, count(*) AS v FROM cu),
-        |tb AS (SELECT w1, w2, count(*) AS cb FROM bg JOIN train USING (doc_id) GROUP BY 1, 2),
-        |cx AS (SELECT w1, sum(cb) AS cctx FROM tb GROUP BY 1),
-        |db AS (SELECT doc_id, w1, w2, count(*) AS n FROM bg GROUP BY 1, 2, 3),
-        |terms AS (
-        |  SELECT db.doc_id, db.n,
-        |    db.n * CAST(floor(ln(
-        |      ${TextOps.BigramLambda} * (CASE WHEN cx.cctx IS NOT NULL
-        |          THEN CAST(coalesce(tb.cb, 0) AS DOUBLE) / cx.cctx ELSE 0.0 END) +
-        |      ${TextOps.BigramFloor} * (CAST(coalesce(cu.cu, 0) + 1 AS DOUBLE) /
-        |          (sc.n_uni + sc.v))) * 1000000000000.0 + 0.5) AS BIGINT) AS tl
-        |  FROM db
-        |  LEFT JOIN tb ON tb.w1 = db.w1 AND tb.w2 = db.w2
-        |  LEFT JOIN cx ON cx.w1 = db.w1
-        |  LEFT JOIN cu ON cu.w2 = db.w2, sc),
-        |scored AS (
-        |  SELECT doc_id, CAST(sum(n) AS BIGINT) AS n_bigrams,
-        |    (-(CAST(sum(tl) AS DOUBLE) / 1000000000000.0)) /
-        |      CAST(sum(n) AS DOUBLE) AS nll_raw
-        |  FROM terms GROUP BY doc_id)
-        |SELECT d.doc_id, CAST(coalesce(s.n_bigrams, 0) AS BIGINT) AS n_bigrams,
-        |  ${TextOps.roundAtSql("s.nll_raw", 6)} AS nll,
-        |  CASE WHEN s.n_bigrams IS NULL THEN 'short'
-        |       WHEN s.nll_raw < ${TextOps.BigramHeadMax} THEN 'head'
-        |       WHEN s.nll_raw < ${TextOps.BigramMiddleMax} THEN 'middle'
-        |       ELSE 'tail' END AS band
-        |FROM documents d LEFT JOIN scored s ON s.doc_id = d.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-    // q163: the ±1 matrix rebuilt from md5('rp<j>_<i>') — identical
-    // on both engines, so projections are hash-exact (q30's proven
-    // sign/fold parity); 0.25 is 1/sqrt(16) exactly
-    "q163_random_projection" ->
-      """WITH e AS (
-        |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-        |  FROM embeddings)
-        |SELECT vec_id, CAST(j AS INTEGER) AS rdim,
-        |  floor(list_sum(list_transform(range(1, len(emb) + 1),
-        |    i -> emb[i] * (CASE WHEN substr(md5('rp' || j || '_' || (i - 1)), 1, 1) < '8'
-        |                        THEN 1.0 ELSE -1.0 END))) * 0.25 * 1000000 + 0.5) / 1000000 AS y
-        |FROM e, (SELECT unnest(range(0, 16)) AS j) r
-        |ORDER BY vec_id, rdim""".stripMargin,
-    // q162: the q169 Lloyd chain with DATA-DEPENDENT corpus-
-    // proportional k = max(2, ⌈n/64⌉) (computed by the SQL itself
-    // from the same table the Spark side counts) + within-cluster
-    // pair cosines + q61's recursive min-label CC + the
-    // keep-the-atypical window; both cosines rounded at 4 and every
-    // DECISION compares the rounded value (q40 convention)
-    "q162_semdedup" -> semDedupOracleSql,
-    // q26: the md5 MinHash LSH (q75's operator), replayed end to end
-    "q26_neardup_minhash" -> minHashMd5OracleSql,
-    // q46: exact top-10 values + literal TRUE recall envelope (the
-    // ANN side cannot be SQL-replayed; its recall feeds the flag)
-    "q46_sim_ivf" ->
-      s"""$bruteTopKOracleCte,
-        |r AS (SELECT vec_id, label, cos FROM s
-        |      ORDER BY cos DESC, vec_id LIMIT 10)
-        |SELECT vec_id, label, cos, TRUE AS ivf_recall_ok FROM r""".stripMargin,
-    "q01_agg_pricing" ->
-      """SELECT l_returnflag, l_linestatus,
-        | round(sum(l_quantity), 2) AS sum_qty,
-        | round(sum(l_extendedprice), 2) AS sum_base_price,
-        | round(sum(l_extendedprice * (1 - l_discount)), 4) AS sum_disc_price,
-        | round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 6) AS sum_charge,
-        | round(avg(l_quantity), 2) AS avg_qty,
-        | round(avg(l_extendedprice), 2) AS avg_price,
-        | round(avg(l_discount), 4) AS avg_disc,
-        | count(*) AS count_order
-        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        |GROUP BY l_returnflag, l_linestatus""".stripMargin,
-    "q02_filter_project" ->
-      """SELECT l_orderkey, l_partkey, l_extendedprice * l_discount AS revenue
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin,
-    "q03_agg_revenue" ->
-      """SELECT round(sum(l_extendedprice * l_discount), 4) AS total_revenue
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin,
-    "q04_join_topk" ->
-      """SELECT l_orderkey,
-        | round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue,
-        | o_orderdate, o_orderpriority
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON o_orderkey = l_orderkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1997-03-15'
-        |  AND l_shipdate > TIMESTAMP '1997-03-15'
-        |GROUP BY l_orderkey, o_orderdate, o_orderpriority
-        |ORDER BY revenue DESC, l_orderkey
-        |LIMIT 10""".stripMargin,
-    "q05_join_multiway" ->
-      """SELECT n_name,
-        | round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON o_orderkey = l_orderkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01'
-        |GROUP BY n_name""".stripMargin,
-    "q06_window_rank" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice, rnk FROM (
-        | SELECT o_custkey, o_orderkey, o_totalprice,
-        |  row_number() OVER (PARTITION BY o_custkey
-        |                     ORDER BY o_totalprice DESC, o_orderkey) AS rnk
-        | FROM orders) t
-        |WHERE rnk <= 3""".stripMargin,
-    "q07_window_running" ->
-      """SELECT l_suppkey, l_orderkey, l_linenumber, l_shipdate,
-        | round(sum(l_extendedprice) OVER (
-        |   PARTITION BY l_suppkey
-        |   ORDER BY l_shipdate, l_orderkey, l_linenumber
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) AS running_rev
-        |FROM lineitem WHERE l_suppkey < 10""".stripMargin,
-    "q08_semi_join" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders
-        |              WHERE o_custkey = c_custkey AND o_orderstatus = 'O')""".stripMargin,
-    "q09_anti_join" ->
-      """SELECT c_custkey, c_name, c_acctbal FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders
-        |                  WHERE o_custkey = c_custkey AND o_totalprice > 350000)""".stripMargin,
-    "q10_distinct" ->
-      "SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem",
-    "q11_setops" ->
-      """SELECT o_custkey AS custkey FROM orders WHERE o_totalprice > 400000
-        |UNION
-        |SELECT c_custkey AS custkey FROM customer WHERE c_acctbal > 9000
-        |EXCEPT
-        |SELECT s_suppkey AS custkey FROM supplier""".stripMargin,
-    "q12_rollup" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n,
-        | round(sum(l_quantity), 2) AS qty
-        |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)""".stripMargin,
-    "q13_conditional_merge" ->
-      """SELECT user_id,
-        | round(max(CASE WHEN event_type = 'click' THEN value END), 4) AS click_max,
-        | round(max(CASE WHEN event_type = 'view' THEN value END), 4) AS view_max,
-        | round(max(CASE WHEN event_type = 'purchase' THEN value END), 4) AS purchase_max,
-        | count(*) AS n_events
-        |FROM events GROUP BY user_id""".stripMargin,
-    "q14_scalar_funcs" ->
-      """SELECT p_partkey, upper(p_brand) AS brand_u, length(p_name) AS name_len,
-        | substr(p_type, 1, 4) AS type4,
-        | round(p_retailprice * 1.1, 2) AS bumped,
-        | abs(p_size - 25) AS size_dist,
-        | concat_ws('#', p_brand, p_type) AS brand_type
-        |FROM part""".stripMargin,
-    "q15_date_funcs" ->
-      """SELECT o_orderkey,
-        | year(o_orderdate) AS yr, month(o_orderdate) AS mo,
-        | dayofmonth(o_orderdate) AS dom,
-        | date_trunc('quarter', o_orderdate) AS qtr_start
-        |FROM orders""".stripMargin,
-    "q16_events_hourly" ->
-      """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_start, event_type,
-        | count(*) AS n, round(sum(value), 2) AS total
-        |FROM events GROUP BY 1, 2""".stripMargin,
-    "q17_json_extract" ->
-      """SELECT event_id, CAST(json_extract_string(props, '$.k') AS INTEGER) AS k
-        |FROM events
-        |WHERE CAST(json_extract_string(props, '$.k') AS INTEGER) > 50""".stripMargin,
-    "q18_feature_json" ->
-      """SELECT s_suppkey,
-        | to_json(struct_pack(type := 'Feature',
-        |   properties := struct_pack(name := s_name, nation := n_name))) AS feature
-        |FROM supplier JOIN nation ON s_nationkey = n_nationkey""".stripMargin,
-    "q19_collect_sorted" ->
-      """SELECT n_name,
-        | string_agg(s_name, '|' ORDER BY s_name) AS suppliers,
-        | count(*) AS n_supp
-        |FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        |GROUP BY n_name""".stripMargin,
-    "q20_text_tokens" ->
-      s"""SELECT doc_id,
-        | length(text) AS n_chars_calc,
-        | len(regexp_split_to_array(text, '\\s+')) AS ws_tokens,
-        | len(regexp_extract_all(text, '${TextOps.BpeTokenPattern}')) AS bpe_tokens,
-        | ${TextOps.roundAtSql(
-             "CAST(length(regexp_replace(text, '\\s', '', 'g')) AS DOUBLE) / " +
-             s"len(regexp_extract_all(text, '${TextOps.BpeTokenPattern}'))", 4)} AS avg_token_len
-        |FROM documents""".stripMargin,
-    "q21_text_quality" ->
-      s"""SELECT doc_id,
-        | ${TextOps.roundAtSql("punct / n_chars", 6)} AS punct_ratio,
-        | ${TextOps.roundAtSql("stops / n_tokens", 6)} AS stopword_ratio,
-        | ${TextOps.roundAtSql(
-             "least(n_chars / 500.0, 1.0) * 0.5 + " +
-             "least(stops / n_tokens * 5.0, 1.0) * 0.3 + " +
-             "(1.0 - least(punct / n_chars * 10.0, 1.0)) * 0.2", 6)} AS quality
-        |FROM (SELECT doc_id,
-        |  CAST(length(text) AS DOUBLE) AS n_chars,
-        |  CAST(len(regexp_split_to_array(text, '\\s+')) AS DOUBLE) AS n_tokens,
-        |  CAST(len(regexp_extract_all(text, '${TextOps.PunctPattern}')) AS DOUBLE) AS punct,
-        |  CAST(len(regexp_extract_all(lower(text), '${TextOps.EnStops}')) AS DOUBLE) AS stops
-        | FROM documents) t""".stripMargin,
-    "q22_lang_id" ->
-      s"""SELECT doc_id, lang,
-        | CASE WHEN zh > 0 THEN 'zh'
-        |      WHEN de > en AND de > es AND de > fr THEN 'de'
-        |      WHEN es > en AND es > fr THEN 'es'
-        |      WHEN fr > en THEN 'fr'
-        |      ELSE 'en' END AS lang_pred
-        |FROM (SELECT doc_id, lang,
-        |  len(regexp_extract_all(text, '${TextOps.CjkPattern}')) AS zh,
-        |  len(regexp_extract_all(lower(text), '${TextOps.EnStops}')) AS en,
-        |  len(regexp_extract_all(lower(text), '${TextOps.EsStops}')) AS es,
-        |  len(regexp_extract_all(lower(text), '${TextOps.DeStops}')) AS de,
-        |  len(regexp_extract_all(lower(text), '${TextOps.FrStops}')) AS fr
-        | FROM documents) t""".stripMargin,
-    // q241: the q22 evidence counts, q213's margin banded with sort
-    // prefixes, correctness = string equality vs the truth column
-    "q241_langid_calibration" ->
-      s"""WITH ev AS (
-         |  SELECT doc_id, lang,
-         |    CASE WHEN zh > 0 THEN 'zh'
-         |         WHEN de > en AND de > es AND de > fr THEN 'de'
-         |         WHEN es > en AND es > fr THEN 'es'
-         |         WHEN fr > en THEN 'fr'
-         |         ELSE 'en' END AS lang_pred,
-         |    [zh, en, es, de, fr] AS cnts
-         |  FROM (SELECT doc_id, lang,
-         |    len(regexp_extract_all(text, '${TextOps.CjkPattern}')) AS zh,
-         |    len(regexp_extract_all(lower(text), '${TextOps.EnStops}')) AS en,
-         |    len(regexp_extract_all(lower(text), '${TextOps.EsStops}')) AS es,
-         |    len(regexp_extract_all(lower(text), '${TextOps.DeStops}')) AS de,
-         |    len(regexp_extract_all(lower(text), '${TextOps.FrStops}')) AS fr
-         |   FROM documents) t),
-         |m AS (
-         |  SELECT lang, lang_pred,
-         |    list_reverse(list_sort(cnts))[1] - list_reverse(list_sort(cnts))[2] AS margin
-         |  FROM ev),
-         |b AS (
-         |  SELECT CASE WHEN margin < 3 THEN '0_ambiguous'
-         |              WHEN margin < 6 THEN '1_low'
-         |              WHEN margin < 11 THEN '2_mid'
-         |              ELSE '3_high' END AS band,
-         |    CASE WHEN lang_pred = lang THEN 1 ELSE 0 END AS ok
-         |  FROM m)
-         |SELECT band, count(*) AS n_docs, CAST(sum(ok) AS BIGINT) AS n_correct,
-         |  ${TextOps.roundAtSql(
-              "CAST(sum(ok) AS DOUBLE) / CAST(count(*) AS DOUBLE)", 6)} AS accuracy
-         |FROM b GROUP BY band ORDER BY band""".stripMargin,
-    "q23_fingerprint" ->
-      """SELECT doc_id,
-        | md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS fp
-        |FROM documents""".stripMargin,
-    "q24_dedup_exact" ->
-      """SELECT md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS fp,
-        | min(doc_id) AS keeper, count(*) AS n_dups
-        |FROM documents GROUP BY 1""".stripMargin,
-    "q25_neardup_ngram" -> ngramPairsOracleSql,
-    "q219_prefix_join" -> prefixJoinOracleSql,
-    "q220_coreness" -> corenessOracleSql,
-    "q224_pq_rerank" -> pqRerankOracleSql,
-    "q234_ivf_pq" -> ivfPqOracleSql,
-    // q232: the q25 chain WITHOUT its threshold filter, swept by a
-    // 4-row tau literal; means from exact 1e4-scaled longs
-    "q232_threshold_sweep" ->
-      s"""WITH docs AS (
-         |  SELECT doc_id,
-         |    list_distinct(list_transform(
-         |      range(0, greatest(len(words) - 3, 0) + 1),
-         |      i -> array_to_string(list_slice(words, i + 1, i + 3), ' '))) AS sh
-         |  FROM (SELECT doc_id,
-         |          regexp_split_to_array(${graft.functions.TextNorm.sqlNorm("text")}, ' ') AS words
-         |        FROM documents) w),
-         |keyed AS (
-         |  SELECT doc_id, sh,
-         |    list_aggregate(list_transform(sh, s -> md5(s)), 'min') AS minsh
-         |  FROM docs),
-         |pairs AS (
-         |  SELECT round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-         |         len(list_distinct(list_concat(a.sh, b.sh))), 4) AS jaccard
-         |  FROM keyed a JOIN keyed b ON a.minsh = b.minsh AND a.doc_id < b.doc_id),
-         |tau AS (SELECT CAST(unnest([0.005, 0.01, 0.1, 0.5]) AS DOUBLE) AS tau),
-         |f AS (
-         |  SELECT t.tau, CAST(floor(p.jaccard * 10000 + 0.5) AS BIGINT) AS j4
-         |  FROM pairs p CROSS JOIN tau t WHERE p.jaccard >= t.tau)
-         |SELECT tau, count(*) AS n_pairs,
-         |  ${TextOps.roundAtSql(
-               "CAST(sum(j4) AS DOUBLE) / (CAST(count(*) AS DOUBLE) * 10000.0)", 6)} AS mean_jaccard
-         |FROM f GROUP BY tau ORDER BY tau""".stripMargin,
-    // q233: lag window in (ts, event_id) order, exact transition
-    // counts, -(p·ln p) floor-scaled to 1e12 BIGINTs
-    "q233_user_entropy" ->
-      s"""WITH t AS (
-         |  SELECT user_id, event_type,
-         |    lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-         |  FROM events),
-         |c AS (
-         |  SELECT user_id, prev, event_type, count(*) AS n
-         |  FROM t WHERE prev IS NOT NULL GROUP BY 1, 2, 3),
-         |w AS (SELECT *, sum(n) OVER (PARTITION BY user_id) AS nt FROM c),
-         |s AS (
-         |  SELECT user_id, CAST(max(nt) AS BIGINT) AS n_trans,
-         |    count(*) AS n_patterns,
-         |    sum(CAST(floor(-((CAST(n AS DOUBLE) / CAST(nt AS DOUBLE)) *
-         |      ln(CAST(n AS DOUBLE) / CAST(nt AS DOUBLE))) * 1000000000000.0 + 0.5)
-         |      AS BIGINT)) AS sc
-         |  FROM w GROUP BY 1)
-         |SELECT user_id, n_trans, n_patterns,
-         |  ${TextOps.roundAtSql("CAST(sc AS DOUBLE) / 1000000000000.0", 6)} AS entropy
-         |FROM s ORDER BY user_id""".stripMargin,
-    // q240: the q33 session chain + rank-1 entry + any-purchase flag
-    "q240_entry_conversion" ->
-      s"""WITH ev AS (
-         |  SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type FROM events),
-         |flagged AS (
-         |  SELECT *, CASE WHEN ts > lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-         |                        + INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS new_s
-         |  FROM ev),
-         |numbered AS (
-         |  SELECT *, CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-         |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq
-         |  FROM flagged),
-         |ranked AS (
-         |  SELECT *, row_number() OVER (PARTITION BY user_id, session_seq
-         |    ORDER BY ts, event_id) AS srn
-         |  FROM numbered),
-         |per_session AS (
-         |  SELECT user_id, session_seq,
-         |    max(CASE WHEN srn = 1 THEN event_type END) AS entry,
-         |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS converted
-         |  FROM ranked GROUP BY 1, 2)
-         |SELECT entry, count(*) AS n_sessions,
-         |  CAST(sum(converted) AS BIGINT) AS n_converted,
-         |  ${TextOps.roundAtSql(
-              "CAST(sum(converted) AS DOUBLE) / CAST(count(*) AS DOUBLE)", 6)} AS conv_rate
-         |FROM per_session GROUP BY entry ORDER BY entry""".stripMargin,
-    // q239: integer trim bounds over the (value, event_id) rank,
-    // both means from 1e6-quantized exact-long sums
-    "q239_trimmed_mean" ->
-      s"""WITH r AS (
-         |  SELECT event_type, value,
-         |    row_number() OVER (PARTITION BY event_type ORDER BY value, event_id) AS rn,
-         |    count(*) OVER (PARTITION BY event_type) AS n,
-         |    CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS v6
-         |  FROM events),
-         |g AS (
-         |  SELECT event_type, CAST(max(n) AS BIGINT) AS n,
-         |    CAST(sum(v6) AS BIGINT) AS s_all,
-         |    CAST(sum(CASE WHEN rn > (n * 10) // 100 AND rn <= n - (n * 10) // 100
-         |      THEN v6 ELSE 0 END) AS BIGINT) AS s_trim,
-         |    CAST(sum(CASE WHEN rn > (n * 10) // 100 AND rn <= n - (n * 10) // 100
-         |      THEN 1 ELSE 0 END) AS BIGINT) AS n_trim
-         |  FROM r GROUP BY 1)
-         |SELECT event_type, n, n_trim,
-         |  ${TextOps.roundAtSql(
-              "CAST(s_all AS DOUBLE) / (CAST(n AS DOUBLE) * 1000000.0)", 6)} AS mean_all,
-         |  ${TextOps.roundAtSql(
-              "CAST(s_trim AS DOUBLE) / (CAST(greatest(n_trim, 1) AS DOUBLE) * 1000000.0)", 6)} AS mean_trimmed
-         |FROM g ORDER BY event_type""".stripMargin,
-    // q230: margins as cell-table rollups crossed back to a DENSE
-    // grid (zero cells carry chi2 mass E); expected and contribution
-    // each one fixed IEEE tree over exact longs
-    "q230_lang_source_chi2" ->
-      s"""WITH raw AS (
-         |  SELECT lang, source, count(*) AS obs FROM documents GROUP BY 1, 2),
-         |rt AS (SELECT lang, sum(obs) AS rt FROM raw GROUP BY 1),
-         |ct AS (SELECT source, sum(obs) AS ct FROM raw GROUP BY 1),
-         |tot AS (SELECT sum(obs) AS nn FROM raw),
-         |cells AS (
-         |  SELECT rt.lang, ct.source, coalesce(raw.obs, 0) AS obs
-         |  FROM rt CROSS JOIN ct
-         |  LEFT JOIN raw ON raw.lang = rt.lang AND raw.source = ct.source)
-         |SELECT c.lang, c.source, c.obs,
-         |  ${TextOps.roundAtSql(
-               "(CAST(rt.rt AS DOUBLE) * CAST(ct.ct AS DOUBLE)) / CAST(tot.nn AS DOUBLE)", 6)} AS expected,
-         |  ${TextOps.roundAtSql(
-               "(CAST(c.obs AS DOUBLE) - (CAST(rt.rt AS DOUBLE) * CAST(ct.ct AS DOUBLE)) / CAST(tot.nn AS DOUBLE)) * " +
-               "(CAST(c.obs AS DOUBLE) - (CAST(rt.rt AS DOUBLE) * CAST(ct.ct AS DOUBLE)) / CAST(tot.nn AS DOUBLE)) / " +
-               "((CAST(rt.rt AS DOUBLE) * CAST(ct.ct AS DOUBLE)) / CAST(tot.nn AS DOUBLE))", 6)} AS cell_chi2
-         |FROM cells c JOIN rt ON rt.lang = c.lang
-         |             JOIN ct ON ct.source = c.source
-         |CROSS JOIN tot ORDER BY c.lang, c.source""".stripMargin,
-    // q231: five exact-long sufficient statistics, one guarded final
-    // division; sums of BIGINTs cast back from HUGEINT
-    "q231_rate_trend" ->
-      s"""WITH d AS (
-         |  SELECT event_type, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-         |    count(*) AS y
-         |  FROM events GROUP BY 1, 2),
-         |r AS (
-         |  SELECT event_type, y,
-         |    CAST(row_number() OVER (PARTITION BY event_type ORDER BY day) AS BIGINT) AS x
-         |  FROM d),
-         |g AS (
-         |  SELECT event_type, count(*) AS n_days,
-         |    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-         |    CAST(sum(x * y) AS BIGINT) AS sxy, CAST(sum(x * x) AS BIGINT) AS sxx
-         |  FROM r GROUP BY 1)
-         |SELECT event_type, n_days, sy AS n_events,
-         |  ${TextOps.roundAtSql(
-               "CASE WHEN n_days * sxx - sx * sx = 0 THEN 0.0 " +
-               "ELSE CAST(n_days * sxy - sx * sy AS DOUBLE) / CAST(n_days * sxx - sx * sx AS DOUBLE) END", 6)} AS slope,
-         |  (CASE WHEN n_days * sxx - sx * sx = 0 THEN 0.0
-         |        ELSE CAST(n_days * sxy - sx * sy AS DOUBLE) / CAST(n_days * sxx - sx * sx AS DOUBLE) END) > 0.0 AS growing
-         |FROM g ORDER BY event_type""".stripMargin,
-    // q228: the canonical shingle-set CTE unnested, min-owner per
-    // shingle, seen-before rollup — all exact longs
-    "q228_novelty_curve" ->
-      s"""WITH docs AS (
-         |  SELECT doc_id,
-         |    list_distinct(list_transform(
-         |      range(0, greatest(len(words) - 3, 0) + 1),
-         |      i -> array_to_string(list_slice(words, i + 1, i + 3), ' '))) AS sh
-         |  FROM (SELECT doc_id,
-         |          regexp_split_to_array(${graft.functions.TextNorm.sqlNorm("text")}, ' ') AS words
-         |        FROM documents) w),
-         |ds AS (SELECT doc_id, unnest(sh) AS s FROM docs),
-         |own AS (SELECT s, min(doc_id) AS owner FROM ds GROUP BY 1),
-         |pd AS (
-         |  SELECT ds.doc_id, count(*) AS n_shingles,
-         |    sum(CASE WHEN own.owner < ds.doc_id THEN 1 ELSE 0 END) AS n_seen
-         |  FROM ds JOIN own USING (s) GROUP BY 1)
-         |SELECT doc_id, n_shingles, CAST(n_seen AS BIGINT) AS n_seen,
-         |  ${TextOps.roundAtSql(
-               "1.0 - CAST(n_seen AS DOUBLE) / CAST(n_shingles AS DOUBLE)", 4)} AS novelty
-         |FROM pd ORDER BY doc_id""".stripMargin,
-    // q229: distinct (user, type) baskets; pair counts from a basket
-    // self-join; lift one fixed IEEE tree
-    "q229_event_lift" ->
-      s"""WITH ut AS (SELECT DISTINCT user_id, event_type FROM events),
-         |tc AS (SELECT event_type, count(*) AS n FROM ut GROUP BY 1),
-         |nn AS (SELECT count(DISTINCT user_id) AS nu FROM ut),
-         |pc AS (
-         |  SELECT a.event_type AS type_a, b.event_type AS type_b, count(*) AS n_ab
-         |  FROM ut a JOIN ut b ON a.user_id = b.user_id
-         |    AND a.event_type < b.event_type
-         |  GROUP BY 1, 2)
-         |SELECT type_a, type_b, ta.n AS n_a, tb.n AS n_b, pc.n_ab,
-         |  ${TextOps.roundAtSql(
-               "(CAST(pc.n_ab AS DOUBLE) * nn.nu) / " +
-               "(CAST(ta.n AS DOUBLE) * CAST(tb.n AS DOUBLE))", 4)} AS lift
-         |FROM pc JOIN tc ta ON ta.event_type = pc.type_a
-         |        JOIN tc tb ON tb.event_type = pc.type_b
-         |CROSS JOIN nn ORDER BY type_a, type_b""".stripMargin,
-    // q225: dense S×V grid with add-1 smoothing, per-word term
-    // floor-scaled to a 1e12 fixed-point BIGINT so the per-pair sum
-    // is order-independent (the q218 device); single mirrored ln
-    "q225_source_kl" ->
-      s"""WITH ww AS (
-         |  SELECT source, word FROM (
-         |    SELECT source,
-         |      unnest(regexp_split_to_array(${graft.functions.TextNorm.sqlNorm("text")}, ' ')) AS word
-         |    FROM documents) t WHERE word <> ''),
-         |c AS (SELECT source, word, count(*) AS n FROM ww GROUP BY 1, 2),
-         |t AS (SELECT source, sum(n) AS nt FROM c GROUP BY 1),
-         |vocab AS (SELECT DISTINCT word FROM c),
-         |v AS (SELECT count(*) AS vs FROM vocab),
-         |grid AS (
-         |  SELECT t.source, vocab.word, coalesce(c.n, 0) AS n, t.nt
-         |  FROM t CROSS JOIN vocab
-         |  LEFT JOIN c ON c.source = t.source AND c.word = vocab.word),
-         |p AS (
-         |  SELECT a.source AS src_a, b.source AS src_b,
-         |    CAST(a.n + 1 AS DOUBLE) / CAST(a.nt + v.vs AS DOUBLE) AS pa,
-         |    CAST(b.n + 1 AS DOUBLE) / CAST(b.nt + v.vs AS DOUBLE) AS pb
-         |  FROM grid a JOIN grid b ON a.word = b.word AND a.source <> b.source
-         |  CROSS JOIN v),
-         |s AS (
-         |  SELECT src_a, src_b, count(*) AS n_vocab,
-         |    sum(CAST(floor(pa * ln(pa / pb) * 1000000000000.0 + 0.5) AS BIGINT)) AS sc
-         |  FROM p GROUP BY 1, 2)
-         |SELECT src_a, src_b, n_vocab,
-         |  ${TextOps.roundAtSql("CAST(sc AS DOUBLE) / 1000000000000.0", 6)} AS kl
-         |FROM s ORDER BY src_a, src_b""".stripMargin,
-    // q226: Hamilton apportionment in pure integer div/mod; seat and
-    // membership windows deterministically ordered
-    "q226_quota_sample" ->
-      """WITH c AS (SELECT source, count(*) AS n FROM documents GROUP BY 1),
-        |tot AS (SELECT sum(n) AS nn FROM c),
-        |qd AS (
-        |  SELECT source, n, (100 * n) // nn AS base, (100 * n) % nn AS rem
-        |  FROM c CROSS JOIN tot),
-        |lf AS (SELECT 100 - sum(base) AS extra FROM qd),
-        |quota AS (
-        |  SELECT source, least(base + CASE WHEN
-        |      row_number() OVER (ORDER BY rem DESC, source) <= lf.extra
-        |    THEN 1 ELSE 0 END, n) AS quota
-        |  FROM qd CROSS JOIN lf),
-        |m AS (
-        |  SELECT source, doc_id,
-        |    CAST(row_number() OVER (PARTITION BY source
-        |      ORDER BY md5('qs_' || CAST(doc_id AS VARCHAR)), doc_id) AS BIGINT) AS rn
-        |  FROM documents)
-        |SELECT m.source, m.doc_id, m.rn AS pick_rank, CAST(q.quota AS BIGINT) AS quota
-        |FROM m JOIN quota q ON q.source = m.source
-        |WHERE m.rn <= q.quota ORDER BY m.source, m.rn""".stripMargin,
-    // q227: exact power-of-two decay weights summed as BIGINTs;
-    // date_diff arg order mirrors Spark's datediff(end, start)
-    "q227_recency_score" ->
-      s"""WITH ev AS (
-         |  SELECT user_id, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day
-         |  FROM events),
-         |mx AS (SELECT max(day) AS mxd FROM ev),
-         |w AS (
-         |  SELECT user_id, day,
-         |    CASE WHEN date_diff('day', day, mx.mxd) <= 40
-         |      THEN CAST(pow(2.0, 40 - date_diff('day', day, mx.mxd)) AS BIGINT)
-         |      ELSE 0 END AS w
-         |  FROM ev CROSS JOIN mx)
-         |SELECT user_id, count(*) AS n_events, max(day) AS last_day,
-         |  ${TextOps.roundAtSql("CAST(sum(w) AS DOUBLE) / pow(2.0, 40)", 6)} AS score
-         |FROM w GROUP BY user_id ORDER BY user_id""".stripMargin,
-    // q164: q25's shingle + min-md5-blocking CTEs verbatim, verified
-    // on containment |A∩B|/min(|A|,|B|) instead of Jaccard; both
-    // metrics rounded at 4, keep decision on rounded containment
-    "q164_neardup_containment" ->
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(
-        |      range(0, greatest(len(words) - 3, 0) + 1),
-        |      i -> array_to_string(list_slice(words, i + 1, i + 3), ' '))) AS sh
-        |  FROM (SELECT doc_id,
-        |          regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS words
-        |        FROM documents) w),
-        |keyed AS (
-        |  SELECT doc_id, sh,
-        |    list_aggregate(list_transform(sh, s -> md5(s)), 'min') AS minsh
-        |  FROM docs),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-        |          least(len(a.sh), len(b.sh)), 4) AS containment,
-        |    round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-        |          len(list_distinct(list_concat(a.sh, b.sh))), 4) AS jaccard
-        |  FROM keyed a JOIN keyed b ON a.minsh = b.minsh AND a.doc_id < b.doc_id)
-        |SELECT doc_a, doc_b, containment, jaccard
-        |FROM pairs WHERE containment >= 0.8""".stripMargin,
-    // q165: the q25 pair CTEs + two source lookups + the unordered
-    // source-pair rollup; avg rounded at 4 on both engines
-    "q165_cross_source_dups" ->
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(
-        |      range(0, greatest(len(words) - 3, 0) + 1),
-        |      i -> array_to_string(list_slice(words, i + 1, i + 3), ' '))) AS sh
-        |  FROM (SELECT doc_id,
-        |          regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS words
-        |        FROM documents) w),
-        |keyed AS (
-        |  SELECT doc_id, sh,
-        |    list_aggregate(list_transform(sh, s -> md5(s)), 'min') AS minsh
-        |  FROM docs),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-        |          len(list_distinct(list_concat(a.sh, b.sh))), 4) AS jaccard
-        |  FROM keyed a JOIN keyed b ON a.minsh = b.minsh AND a.doc_id < b.doc_id),
-        |hits AS (SELECT * FROM pairs WHERE jaccard >= 0.5)
-        |SELECT least(da.source, db.source) AS src_lo,
-        |  greatest(da.source, db.source) AS src_hi,
-        |  count(*) AS n_pairs, round(avg(h.jaccard), 4) AS avg_jaccard
-        |FROM hits h
-        |JOIN documents da ON da.doc_id = h.doc_a
-        |JOIN documents db ON db.doc_id = h.doc_b
-        |GROUP BY 1, 2 ORDER BY src_lo, src_hi""".stripMargin,
-    // q166: distinct (doc, gram) rows -> gram document frequency ->
-    // per-doc common fraction; roster left join keeps all-unique docs
-    "q166_boilerplate_grams" ->
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(
-        |      range(0, greatest(len(words) - 3, 0) + 1),
-        |      i -> array_to_string(list_slice(words, i + 1, i + 3), ' '))) AS sh
-        |  FROM (SELECT doc_id,
-        |          regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS words
-        |        FROM documents) w),
-        |dg AS (SELECT doc_id, unnest(sh) AS s FROM docs),
-        |gdf AS (SELECT s, count(*) AS df FROM dg GROUP BY s),
-        |per AS (
-        |  SELECT dg.doc_id, count(*) AS n_shingles,
-        |    sum(CASE WHEN gdf.df >= 2 THEN 1 ELSE 0 END) AS n_common
-        |  FROM dg JOIN gdf ON gdf.s = dg.s GROUP BY dg.doc_id)
-        |SELECT d.doc_id,
-        |  CAST(coalesce(per.n_shingles, 0) AS BIGINT) AS n_shingles,
-        |  CAST(coalesce(per.n_common, 0) AS BIGINT) AS n_common,
-        |  round(CAST(coalesce(per.n_common, 0) AS DOUBLE) /
-        |        greatest(coalesce(per.n_shingles, 0), 1), 4) AS common_frac
-        |FROM documents d LEFT JOIN per ON per.doc_id = d.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-    // q167: corpus word frequencies -> top-20 vocab cut on the
-    // deterministic (count desc, word asc) tie -> per-doc OOV rate
-    "q167_vocab_coverage" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |    unnest(regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ')) AS word
-        |  FROM documents),
-        |wf AS (SELECT word, count(*) AS c FROM w WHERE word <> '' GROUP BY word),
-        |vocab AS (SELECT word FROM wf ORDER BY c DESC, word LIMIT 20),
-        |per AS (
-        |  SELECT w.doc_id, count(*) AS n_words,
-        |    sum(CASE WHEN v.word IS NULL THEN 1 ELSE 0 END) AS n_oov
-        |  FROM w LEFT JOIN vocab v ON v.word = w.word
-        |  WHERE w.word <> '' GROUP BY w.doc_id)
-        |SELECT d.doc_id,
-        |  CAST(coalesce(per.n_words, 0) AS BIGINT) AS n_words,
-        |  CAST(coalesce(per.n_oov, 0) AS BIGINT) AS n_oov,
-        |  round(CAST(coalesce(per.n_oov, 0) AS DOUBLE) /
-        |        greatest(coalesce(per.n_words, 0), 1), 4) AS oov_rate
-        |FROM documents d LEFT JOIN per ON per.doc_id = d.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-    // q172: (doc, word) exact counts -> per-term (n/N)·ln(n/N) ->
-    // negated left-fold sum in word order (≡ Spark's subtraction
-    // chain — IEEE negation is exact, the q161 convention). The final
-    // rounding is roundAtSql ↔ Spark's roundAt (one shared formula,
-    // q149 convention) — which also normalizes the −0.0 a
-    // single-distinct-word doc's negated zero-sum would otherwise
-    // emit (floor(−0.0·1e6 + 0.5)/1e6 = +0.0 on both engines).
-    "q172_token_entropy" ->
-      s"""WITH w AS (
-        |  SELECT doc_id,
-        |    unnest(regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ')) AS word
-        |  FROM documents),
-        |t AS (SELECT doc_id, word, count(*) AS n
-        |      FROM w WHERE word <> '' GROUP BY doc_id, word),
-        |tot AS (SELECT doc_id, sum(n) AS nt, count(*) AS nd FROM t GROUP BY doc_id),
-        |terms AS (
-        |  SELECT t.doc_id, t.word,
-        |    (CAST(t.n AS DOUBLE) / tot.nt) * ln(CAST(t.n AS DOUBLE) / tot.nt) AS term
-        |  FROM t JOIN tot ON tot.doc_id = t.doc_id),
-        |per AS (
-        |  SELECT tm.doc_id, -(list_sum(list(tm.term ORDER BY tm.word))) AS h_raw
-        |  FROM terms tm GROUP BY tm.doc_id)
-        |SELECT d.doc_id,
-        |  CAST(coalesce(tot.nt, 0) AS BIGINT) AS n_words,
-        |  CAST(coalesce(tot.nd, 0) AS BIGINT) AS n_distinct,
-        |  ${TextOps.roundAtSql("coalesce(per.h_raw, 0.0)", 6)} AS entropy
-        |FROM documents d
-        |LEFT JOIN tot ON tot.doc_id = d.doc_id
-        |LEFT JOIN per ON per.doc_id = d.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-    // q173: the q21 quality CTE + percent_rank within source over the
-    // deterministic (quality, doc_id) order
-    "q173_quality_quantile_norm" ->
-      s"""WITH q AS (SELECT doc_id, source,
-        | ${TextOps.roundAtSql(
-             "least(n_chars / 500.0, 1.0) * 0.5 + " +
-             "least(stops / n_tokens * 5.0, 1.0) * 0.3 + " +
-             "(1.0 - least(punct / n_chars * 10.0, 1.0)) * 0.2", 6)} AS quality
-        |FROM (SELECT doc_id, source,
-        |  CAST(length(text) AS DOUBLE) AS n_chars,
-        |  CAST(len(regexp_split_to_array(text, '\\s+')) AS DOUBLE) AS n_tokens,
-        |  CAST(len(regexp_extract_all(text, '${TextOps.PunctPattern}')) AS DOUBLE) AS punct,
-        |  CAST(len(regexp_extract_all(lower(text), '${TextOps.EnStops}')) AS DOUBLE) AS stops
-        | FROM documents) t)
-        |SELECT doc_id, source, quality,
-        |  ${TextOps.roundAtSql(
-             "percent_rank() OVER (PARTITION BY source ORDER BY quality, doc_id)", 6)} AS q_rank
-        |FROM q ORDER BY doc_id""".stripMargin,
-    // q174: exact hourly counts -> per-type mean and textbook
-    // variance from exact Σx/Σx² (no engine stddev function — their
-    // conventions differ) -> z with the sd=0 guard
-    "q174_event_rate_anomaly" ->
-      """WITH h AS (
-        |  SELECT event_type, CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour,
-        |    count(*) AS n_events
-        |  FROM events GROUP BY 1, 2),
-        |s AS (
-        |  SELECT event_type,
-        |    CAST(sum(n_events) AS DOUBLE) / count(*) AS mu,
-        |    CASE WHEN count(*) <= 1 THEN 0.0
-        |         ELSE sqrt((CAST(sum(n_events * n_events) AS DOUBLE) -
-        |          CAST(sum(n_events) AS DOUBLE) * CAST(sum(n_events) AS DOUBLE) / count(*)) /
-        |         (count(*) - 1)) END AS sd
-        |  FROM h GROUP BY event_type)
-        |SELECT h.event_type, h.hour, h.n_events,
-        |  round(CASE WHEN s.sd = 0.0 THEN 0.0
-        |             ELSE (CAST(h.n_events AS DOUBLE) - s.mu) / s.sd END, 6) AS z,
-        |  CASE WHEN s.sd = 0.0 THEN FALSE
-        |       ELSE abs((CAST(h.n_events AS DOUBLE) - s.mu) / s.sd) >= 2.0 END AS is_anomaly
-        |FROM h JOIN s ON s.event_type = h.event_type
-        |ORDER BY h.event_type, h.hour""".stripMargin,
-    // q222: first-seen reduction + running total; window sum cast to
-    // BIGINT (DuckDB window sums return HUGEINT)
-    "q222_user_acquisition" ->
-      """WITH f AS (
-        |  SELECT user_id, CAST(date_trunc('day', min(ts)) AS TIMESTAMP) AS day
-        |  FROM events GROUP BY 1),
-        |d AS (SELECT day, count(*) AS n_new FROM f GROUP BY 1)
-        |SELECT day, n_new,
-        |  CAST(sum(n_new) OVER (ORDER BY day
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_users
-        |FROM d ORDER BY day""".stripMargin,
-    // q223: S_j = C_j − j·Σx/n from exact integer cumulatives — one
-    // fixed IEEE tree per row; deterministic argmax (|S| desc, hour)
-    "q223_cusum_changepoint" ->
-      """WITH h AS (
-        |  SELECT event_type, CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour,
-        |    count(*) AS n_events
-        |  FROM events GROUP BY 1, 2),
-        |c AS (
-        |  SELECT event_type, hour, n_events,
-        |    CAST(sum(n_events) OVER (PARTITION BY event_type ORDER BY hour
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum,
-        |    CAST(row_number() OVER (PARTITION BY event_type ORDER BY hour) AS BIGINT) AS j,
-        |    CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS nb,
-        |    CAST(sum(n_events) OVER (PARTITION BY event_type) AS BIGINT) AS sx
-        |  FROM h),
-        |s AS (
-        |  SELECT *, CAST(cum AS DOUBLE) -
-        |    CAST(j AS DOUBLE) * CAST(sx AS DOUBLE) / CAST(nb AS DOUBLE) AS cusum
-        |  FROM c),
-        |r AS (
-        |  SELECT *, row_number() OVER (PARTITION BY event_type
-        |    ORDER BY abs(cusum) DESC, hour) AS rn
-        |  FROM s)
-        |SELECT event_type, hour AS cp_hour, nb AS n_hours, j AS cp_rank,
-        |  round(abs(cusum), 6) AS max_abs_cusum, (cusum > 0.0) AS level_dropped
-        |FROM r WHERE rn = 1 ORDER BY event_type""".stripMargin,
-    // q221: hour-sorted parallel lists, EWMA as the identical
-    // left fold on both engines (list_reduce ↔ aggregate over the
-    // prefix slice, 1-based i), spike flag on raw doubles
-    "q221_ewma_rates" ->
-      """WITH h AS (
-        |  SELECT event_type, CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour,
-        |    count(*) AS n_events
-        |  FROM events GROUP BY 1, 2),
-        |g AS (
-        |  SELECT event_type,
-        |    list(hour ORDER BY hour) AS hrs,
-        |    list(n_events ORDER BY hour) AS cnts,
-        |    list(CAST(n_events AS DOUBLE) ORDER BY hour) AS vals
-        |  FROM h GROUP BY event_type),
-        |e AS (
-        |  SELECT event_type,
-        |    unnest(hrs) AS hour,
-        |    unnest(cnts) AS n_events,
-        |    unnest(list_transform(vals, (x, i) ->
-        |      round(list_reduce(list_slice(vals, 1, i), (a, b) -> (a + b) / 2.0), 6))) AS ewma,
-        |    unnest(list_transform(vals, (x, i) ->
-        |      CASE WHEN i = 1 THEN 0.0
-        |           ELSE list_reduce(list_slice(vals, 1, i - 1), (a, b) -> (a + b) / 2.0) END)) AS prev
-        |  FROM g)
-        |SELECT event_type, hour, n_events, ewma,
-        |  (prev > 0.0 AND CAST(n_events AS DOUBLE) >= prev * 2.0) AS is_spike
-        |FROM e ORDER BY event_type, hour""".stripMargin,
-    // q199: both medians via the q185 rank-⌈n/2⌉ discrete selection —
-    // every med/MAD/deviation an exact long, z one fixed IEEE tree,
-    // flag on the raw value, MAD=0 guarded to z=0
-    "q199_robust_anomaly" ->
-      s"""WITH h AS (
-        |  SELECT event_type, CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour,
-        |    count(*) AS n_events
-        |  FROM events GROUP BY 1, 2),
-        |r AS (
-        |  SELECT h.*,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY n_events, hour) AS rn,
-        |    count(*) OVER (PARTITION BY event_type) AS nb
-        |  FROM h),
-        |m AS (
-        |  SELECT event_type,
-        |    max(CASE WHEN rn = CAST(ceil(CAST(nb AS DOUBLE) * 0.5) AS BIGINT) THEN n_events END) AS med
-        |  FROM r GROUP BY event_type),
-        |d AS (
-        |  SELECT h.event_type, h.hour, h.n_events, m.med,
-        |    abs(h.n_events - m.med) AS dev
-        |  FROM h JOIN m USING (event_type)),
-        |r2 AS (
-        |  SELECT d.*,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY dev, hour) AS rn,
-        |    count(*) OVER (PARTITION BY event_type) AS nb
-        |  FROM d),
-        |md AS (
-        |  SELECT event_type,
-        |    max(CASE WHEN rn = CAST(ceil(CAST(nb AS DOUBLE) * 0.5) AS BIGINT) THEN dev END) AS mad
-        |  FROM r2 GROUP BY event_type)
-        |SELECT d.event_type, d.hour, d.n_events, d.med, md.mad,
-        |  ${TextOps.roundAtSql(
-             "CASE WHEN md.mad = 0 THEN 0.0 ELSE " +
-               "0.6745 * CAST(d.n_events - d.med AS DOUBLE) / CAST(md.mad AS DOUBLE) END", 6)} AS robust_z,
-        |  CASE WHEN md.mad = 0 THEN FALSE
-        |       ELSE abs(0.6745 * CAST(d.n_events - d.med AS DOUBLE) / CAST(md.mad AS DOUBLE)) >= 3.5
-        |       END AS is_anomaly
-        |FROM d JOIN md USING (event_type)
-        |ORDER BY d.event_type, d.hour""".stripMargin,
-    // q200: the q21 quality CTE keyed per (source, rounded q) — exact
-    // long ECDF numerators, one two-divide IEEE tree per gap, max is
-    // order-free
-    "q200_ks_distance" ->
-      s"""WITH t AS (
-        |  SELECT source,
-        |    CAST(length(text) AS DOUBLE) AS n_chars,
-        |    CAST(len(regexp_split_to_array(text, '\\s+')) AS DOUBLE) AS n_tokens,
-        |    CAST(len(regexp_extract_all(text, '${TextOps.PunctPattern}')) AS DOUBLE) AS punct,
-        |    CAST(len(regexp_extract_all(lower(text), '${TextOps.EnStops}')) AS DOUBLE) AS stops
-        |  FROM documents),
-        |qd AS (
-        |  SELECT source,
-        |    ${TextOps.roundAtSql(
-             "least(n_chars / 500.0, 1.0) * 0.5 + " +
-             "least(stops / n_tokens * 5.0, 1.0) * 0.3 + " +
-             "(1.0 - least(punct / n_chars * 10.0, 1.0)) * 0.2", 6)} AS q
-        |  FROM t),
-        |pv AS (SELECT source, q, count(*) AS c FROM qd GROUP BY 1, 2),
-        |-- count(*), not sum(c): DuckDB sum(BIGINT) is DECIMAL and
-        |-- would dtype-mismatch Spark's long
-        |n AS (SELECT source, count(*) AS n FROM qd GROUP BY 1),
-        |prs AS (
-        |  SELECT a.source AS src_a, a.n AS n_a, b.source AS src_b, b.n AS n_b
-        |  FROM n a JOIN n b ON a.source < b.source),
-        |contrib AS (
-        |  SELECT p.src_a, p.src_b, p.n_a, p.n_b, v.q,
-        |    sum(CASE WHEN v.source = p.src_a THEN v.c ELSE 0 END) AS ca,
-        |    sum(CASE WHEN v.source = p.src_b THEN v.c ELSE 0 END) AS cb
-        |  FROM prs p JOIN pv v ON v.source = p.src_a OR v.source = p.src_b
-        |  GROUP BY 1, 2, 3, 4, 5),
-        |cum AS (
-        |  SELECT src_a, src_b, n_a, n_b, q,
-        |    sum(ca) OVER (PARTITION BY src_a, src_b ORDER BY q) AS cuma,
-        |    sum(cb) OVER (PARTITION BY src_a, src_b ORDER BY q) AS cumb
-        |  FROM contrib)
-        |SELECT src_a, src_b, n_a, n_b,
-        |  ${TextOps.roundAtSql(
-             "max(abs(CAST(cuma AS DOUBLE) / CAST(n_a AS DOUBLE) - " +
-               "CAST(cumb AS DOUBLE) / CAST(n_b AS DOUBLE)))", 6)} AS ks
-        |FROM cum GROUP BY src_a, src_b, n_a, n_b
-        |ORDER BY src_a, src_b""".stripMargin,
-    // q175: exact vocab counts + TTR; in_envelope is an IN-PLAN gate
-    // the oracle asserts TRUE (the q124 exact-gated-sketch pattern)
-    "q175_vocab_richness" ->
-      s"""WITH w AS (
-        |  SELECT doc_id,
-        |    unnest(regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ')) AS word
-        |  FROM documents)
-        |SELECT d.source,
-        |  count(*) AS n_words,
-        |  count(DISTINCT w.word) AS vocab_ndv,
-        |  ${TextOps.roundAtSql("CAST(count(DISTINCT w.word) AS DOUBLE) / count(*)", 6)} AS ttr,
-        |  TRUE AS in_envelope
-        |FROM w JOIN documents d ON d.doc_id = w.doc_id
-        |WHERE w.word <> ''
-        |GROUP BY d.source ORDER BY d.source""".stripMargin,
-    // q209: integer-microsecond gaps (unix_micros ↔ epoch_us), q185
-    // discrete rank selection — every output an exact long
-    "q209_event_gaps" ->
-      """WITH g AS (
-        |  SELECT event_type, event_id,
-        |    epoch_us(ts) - epoch_us(lag(ts, 1) OVER (
-        |      PARTITION BY event_type ORDER BY ts, event_id)) AS gap_us
-        |  FROM events),
-        |f AS (SELECT * FROM g WHERE gap_us IS NOT NULL),
-        |r AS (
-        |  SELECT f.*,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY gap_us, event_id) AS rn,
-        |    count(*) OVER (PARTITION BY event_type) AS n
-        |  FROM f)
-        |SELECT event_type, max(n) AS n_gaps,
-        |  max(CASE WHEN rn = CAST(ceil(CAST(n AS DOUBLE) * 0.5) AS BIGINT) THEN gap_us END) AS p50_us,
-        |  max(CASE WHEN rn = CAST(ceil(CAST(n AS DOUBLE) * 0.95) AS BIGINT) THEN gap_us END) AS p95_us,
-        |  max(gap_us) AS max_us
-        |FROM r GROUP BY event_type ORDER BY event_type""".stripMargin,
-    // q208: per-source exact double centroids, index-order L2/cos
-    // folds, one sqrt/divide tree each under roundAt
-    "q208_source_drift_emb" ->
-      s"""WITH e AS (
-        |  SELECT d.source,
-        |    list_transform(em.embedding, x -> CAST(x AS DOUBLE)) AS emb
-        |  FROM embeddings em JOIN documents d ON d.doc_id = em.vec_id),
-        |flat AS (
-        |  SELECT source, unnest(range(1, len(emb) + 1)) AS pos, unnest(emb) AS v
-        |  FROM e),
-        |c AS (
-        |  SELECT source, list(m ORDER BY pos) AS cent
-        |  FROM (SELECT source, pos, avg(v) AS m FROM flat GROUP BY 1, 2) t
-        |  GROUP BY source),
-        |prs AS (
-        |  SELECT a.source AS src_a, a.cent AS ca, b.source AS src_b, b.cent AS cb
-        |  FROM c a JOIN c b ON a.source < b.source)
-        |SELECT src_a, src_b,
-        |  ${TextOps.roundAtSql(
-             "sqrt(list_sum(list_transform(range(1, len(ca) + 1), " +
-               "i -> (ca[i] - cb[i]) * (ca[i] - cb[i]))))", 6)} AS l2,
-        |  ${TextOps.roundAtSql(
-             "list_sum(list_transform(range(1, len(ca) + 1), i -> ca[i] * cb[i])) / " +
-               "(sqrt(list_sum(list_transform(range(1, len(ca) + 1), i -> ca[i] * ca[i]))) * " +
-               "sqrt(list_sum(list_transform(range(1, len(cb) + 1), i -> cb[i] * cb[i]))))", 6)} AS cos
-        |FROM prs ORDER BY src_a, src_b""".stripMargin,
-    // q207: exact distinct (source, word) arithmetic; the sketch leg
-    // is envelope-gated in-plan (TRUE here — the q175 pattern)
-    "q207_vocab_overlap" ->
-      s"""WITH sv AS (
-        |  SELECT DISTINCT d.source, w.word
-        |  FROM (SELECT doc_id,
-        |          unnest(regexp_split_to_array(${graft.functions.TextNorm.sqlNorm("text")}, ' ')) AS word
-        |        FROM documents) w
-        |  JOIN documents d ON d.doc_id = w.doc_id
-        |  WHERE w.word <> ''),
-        |ps AS (SELECT source, count(*) AS v FROM sv GROUP BY 1),
-        |prs AS (
-        |  SELECT a.source AS src_a, a.v AS v_a, b.source AS src_b, b.v AS v_b
-        |  FROM ps a JOIN ps b ON a.source < b.source),
-        |bt AS (
-        |  SELECT x.source AS src_a, y.source AS src_b, count(*) AS v_both
-        |  FROM sv x JOIN sv y ON x.word = y.word AND x.source < y.source
-        |  GROUP BY 1, 2)
-        |SELECT p.src_a, p.src_b, p.v_a, p.v_b,
-        |  coalesce(bt.v_both, 0) AS v_both,
-        |  ${TextOps.roundAtSql(
-             "CAST(coalesce(bt.v_both, 0) AS DOUBLE) / " +
-               "CAST(p.v_a + p.v_b - coalesce(bt.v_both, 0) AS DOUBLE)", 6)} AS vocab_jacc,
-        |  TRUE AS in_envelope
-        |FROM prs p LEFT JOIN bt USING (src_a, src_b)
-        |ORDER BY p.src_a, p.src_b""".stripMargin,
-    // q176: first-occurrence credit per word + window prefix sums
-    // (exact longs; Spark side uses the distributed two-phase form)
-    "q176_vocab_growth" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |    unnest(regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ')) AS word
-        |  FROM documents),
-        |wf AS (SELECT doc_id, word FROM w WHERE word <> ''),
-        |pd AS (SELECT doc_id, count(*) AS n_tokens FROM wf GROUP BY doc_id),
-        |fo AS (SELECT min(doc_id) AS doc_id FROM wf GROUP BY word),
-        |nn AS (SELECT doc_id, count(*) AS n_new FROM fo GROUP BY doc_id)
-        |SELECT pd.doc_id, pd.n_tokens,
-        |  coalesce(nn.n_new, 0) AS n_new,
-        |  CAST(sum(pd.n_tokens) OVER (ORDER BY pd.doc_id) AS BIGINT) AS cum_tokens,
-        |  CAST(sum(coalesce(nn.n_new, 0)) OVER (ORDER BY pd.doc_id) AS BIGINT) AS cum_vocab
-        |FROM pd LEFT JOIN nn ON nn.doc_id = pd.doc_id
-        |ORDER BY pd.doc_id""".stripMargin,
-    // q177: deterministic (count desc, word) ranks, mirrored ln
-    // pairs, four regression sums folded in rank order, one fixed
-    // IEEE slope expression
-    "q177_zipf_slope" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |    unnest(regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ')) AS word
-        |  FROM documents),
-        |c AS (
-        |  SELECT d.source, w.word, count(*) AS cnt
-        |  FROM w JOIN documents d ON d.doc_id = w.doc_id
-        |  WHERE w.word <> '' GROUP BY d.source, w.word),
-        |r AS (
-        |  SELECT source, rank, ln(CAST(rank AS DOUBLE)) AS x, ln(CAST(cnt AS DOUBLE)) AS y
-        |  FROM (SELECT source, cnt, word,
-        |          row_number() OVER (PARTITION BY source ORDER BY cnt DESC, word) AS rank
-        |        FROM c) t WHERE rank <= 100),
-        |s AS (
-        |  SELECT source, CAST(count(*) AS DOUBLE) AS n,
-        |    list_sum(list(x ORDER BY rank)) AS sx,
-        |    list_sum(list(y ORDER BY rank)) AS sy,
-        |    list_sum(list(x * y ORDER BY rank)) AS sxy,
-        |    list_sum(list(x * x ORDER BY rank)) AS sxx
-        |  FROM r GROUP BY source)
-        |SELECT source, CAST(n AS BIGINT) AS n_terms,
-        |  round((n * sxy - sx * sy) / (n * sxx - sx * sx), 6) AS zipf_slope
-        |FROM s ORDER BY source""".stripMargin,
-    // q185: rank-and-select at ceil(p·n) — discrete selection of an
-    // observed value, no interpolation arithmetic to disagree on
-    "q185_daily_percentiles" ->
-      """WITH b AS (
-        |  SELECT event_id, event_type, CAST(date_trunc('day', ts) AS DATE) AS day, value
-        |  FROM events),
-        |r AS (
-        |  SELECT event_type, day, value,
-        |    row_number() OVER (PARTITION BY event_type, day ORDER BY value, event_id) AS rn,
-        |    count(*) OVER (PARTITION BY event_type, day) AS n
-        |  FROM b)
-        |SELECT event_type, day, CAST(max(n) AS BIGINT) AS n_events,
-        |  max(CASE WHEN rn = CAST(ceil(CAST(n AS DOUBLE) * 0.5) AS BIGINT) THEN value END) AS p50,
-        |  max(CASE WHEN rn = CAST(ceil(CAST(n AS DOUBLE) * 0.95) AS BIGINT) THEN value END) AS p95
-        |FROM r GROUP BY event_type, day
-        |ORDER BY event_type, day""".stripMargin,
-    // q186: LOCF carry of the last click ts over (ts, event_id) order,
-    // purchases filtered afterwards, 1h attribution flag
-    "q186_attribution" ->
-      """WITH w AS (
-        |  SELECT event_id, user_id, event_type, ts,
-        |    last(CASE WHEN event_type = 'click' THEN ts END IGNORE NULLS) OVER (
-        |      PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS t_click
-        |  FROM events)
-        |SELECT event_id, user_id, ts, t_click,
-        |  (t_click IS NOT NULL AND t_click >= ts - INTERVAL 1 HOUR) AS attributed
-        |FROM w WHERE event_type = 'purchase'
-        |ORDER BY event_id""".stripMargin,
-    // q187: distinct (user, day) expanded to its 7 covered days for
-    // the trailing distinct count; window days without an anchor day
-    // in the data are excluded (semi join)
-    "q187_dau_wau" ->
-      """WITH active AS (
-        |  SELECT DISTINCT user_id, CAST(date_trunc('day', ts) AS DATE) AS day
-        |  FROM events),
-        |dau AS (SELECT day, count(DISTINCT user_id) AS dau FROM active GROUP BY day),
-        |cover AS (
-        |  SELECT a.user_id, CAST(a.day + INTERVAL (j) DAY AS DATE) AS day
-        |  FROM active a, (SELECT unnest(range(7)) AS j) r),
-        |wau AS (
-        |  SELECT c.day, count(DISTINCT c.user_id) AS wau FROM cover c
-        |  WHERE c.day IN (SELECT day FROM active) GROUP BY c.day)
-        |SELECT w.day, coalesce(d.dau, 0) AS dau, w.wau,
-        |  round(CAST(coalesce(d.dau, 0) AS DOUBLE) / w.wau, 4) AS stickiness
-        |FROM wau w LEFT JOIN dau d ON d.day = w.day
-        |ORDER BY w.day""".stripMargin,
-    // q188: roster as a list, retention via NOT IN, the clean flag
-    // re-derived from the modulo predicate — both engines assert TRUE
-    "q188_deletion_audit" ->
-      """WITH ev AS (
-        |  SELECT event_id, user_id, CAST(date_trunc('day', ts) AS DATE) AS day
-        |  FROM events),
-        |roster AS (SELECT DISTINCT user_id FROM ev WHERE user_id % 50 = 0),
-        |del AS (
-        |  SELECT day, count(*) AS n_delete FROM ev
-        |  WHERE user_id IN (SELECT user_id FROM roster) GROUP BY day),
-        |ret AS (
-        |  SELECT day, count(*) AS n_retain,
-        |    sum(CASE WHEN user_id % 50 = 0 THEN 1 ELSE 0 END) AS n_leaked
-        |  FROM ev WHERE user_id NOT IN (SELECT user_id FROM roster) GROUP BY day)
-        |SELECT r.day, coalesce(d.n_delete, 0) AS n_delete, r.n_retain,
-        |  (r.n_leaked = 0) AS clean
-        |FROM ret r LEFT JOIN del d ON d.day = r.day
-        |ORDER BY r.day""".stripMargin,
-    // q189: boundaries at the exact observed rank-⌈i·n/k⌉ values;
-    // bucket = first boundary ≥ v (list_position on the flag list —
-    // a different mechanism than Spark's fold computing the same int)
-    "q189_equidepth_hist" -> {
-      val ranks = (1 to 8).map(i =>
-        s"rn = CAST(ceil((n * CAST($i AS DOUBLE)) / 8) AS BIGINT)").mkString(" OR ")
-      s"""WITH o AS (SELECT o_totalprice AS v FROM orders),
-        |n AS (SELECT count(*) AS n FROM o),
-        |r AS (SELECT v, row_number() OVER (ORDER BY v) AS rn FROM o),
-        |b AS (SELECT rn, max(v) AS bound FROM r, n
-        |      WHERE $ranks GROUP BY rn),
-        |bl AS (SELECT list(bound ORDER BY rn) AS bounds FROM b),
-        |a AS (
-        |  SELECT CAST(coalesce(
-        |    list_position(list_transform(bl.bounds, bd -> o.v <= bd), true) - 1,
-        |    7) AS INTEGER) AS bucket
-        |  FROM o, bl)
-        |SELECT bucket, count(*) AS n_rows FROM a
-        |GROUP BY bucket ORDER BY bucket""".stripMargin
-    },
-    // q190: the q21 quality CTE; all five regression sums fold in
-    // doc_id order; slope/intercept/r2 as fixed IEEE trees
-    "q190_group_regression" ->
-      s"""WITH q AS (SELECT doc_id, source,
-        |  CAST(n_chars AS DOUBLE) AS x,
-        | ${TextOps.roundAtSql(
-             "least(nc / 500.0, 1.0) * 0.5 + " +
-             "least(stops / n_tokens * 5.0, 1.0) * 0.3 + " +
-             "(1.0 - least(punct / nc * 10.0, 1.0)) * 0.2", 6)} AS y
-        |FROM (SELECT doc_id, source, n_chars,
-        |  CAST(length(text) AS DOUBLE) AS nc,
-        |  CAST(len(regexp_split_to_array(text, '\\s+')) AS DOUBLE) AS n_tokens,
-        |  CAST(len(regexp_extract_all(text, '${TextOps.PunctPattern}')) AS DOUBLE) AS punct,
-        |  CAST(len(regexp_extract_all(lower(text), '${TextOps.EnStops}')) AS DOUBLE) AS stops
-        | FROM documents) t),
-        |s AS (
-        |  SELECT source, CAST(count(*) AS DOUBLE) AS n,
-        |    list_sum(list(x ORDER BY doc_id)) AS sx,
-        |    list_sum(list(y ORDER BY doc_id)) AS sy,
-        |    list_sum(list(x * y ORDER BY doc_id)) AS sxy,
-        |    list_sum(list(x * x ORDER BY doc_id)) AS sxx,
-        |    list_sum(list(y * y ORDER BY doc_id)) AS syy
-        |  FROM q GROUP BY source)
-        |SELECT source, CAST(n AS BIGINT) AS n_docs,
-        |  ${TextOps.roundAtSql("(n * sxy - sx * sy) / (n * sxx - sx * sx)", 6)} AS slope,
-        |  ${TextOps.roundAtSql(
-             "(sy - ((n * sxy - sx * sy) / (n * sxx - sx * sx)) * sx) / n", 6)} AS intercept,
-        |  ${TextOps.roundAtSql(
-             "((n * sxy - sx * sy) * (n * sxy - sx * sy)) / " +
-             "((n * sxx - sx * sx) * (n * syy - sy * sy))", 6)} AS r2
-        |FROM s ORDER BY source""".stripMargin,
-    // q191: exact-long rank×count Gini + top-5 heavy keys
-    "q191_skew_audit" ->
-      s"""WITH c AS (SELECT user_id, count(*) AS cnt FROM events GROUP BY user_id),
-        |r AS (SELECT user_id, cnt,
-        |        row_number() OVER (ORDER BY cnt, user_id) AS rk FROM c),
-        |s AS (SELECT count(*) AS n_keys, CAST(sum(cnt) AS BIGINT) AS n_rows,
-        |        max(cnt) AS max_mult, CAST(sum(rk * cnt) AS BIGINT) AS s_rank FROM r),
-        |t AS (SELECT user_id, cnt,
-        |        row_number() OVER (ORDER BY cnt DESC, user_id) AS rank FROM c)
-        |SELECT t.rank, t.user_id, t.cnt,
-        |  ${TextOps.roundAtSql("CAST(t.cnt AS DOUBLE) / s.n_rows", 6)} AS share,
-        |  s.n_keys, s.n_rows, s.max_mult,
-        |  ${TextOps.roundAtSql(
-             "2.0 * CAST(s.s_rank AS DOUBLE) / (s.n_keys * s.n_rows) - " +
-             "CAST(s.n_keys + 1 AS DOUBLE) / s.n_keys", 6)} AS gini
-        |FROM t, s WHERE t.rank <= 5 ORDER BY t.rank""".stripMargin,
-    // q192: per-key count tables joined — exact join output size
-    "q192_join_cardinality" ->
-      """WITH oc AS (SELECT o_custkey AS k, count(*) AS c FROM orders GROUP BY 1),
-        |cc AS (SELECT c_custkey AS k, count(*) AS c FROM customer GROUP BY 1),
-        |lo AS (SELECT l_orderkey AS k, count(*) AS c FROM lineitem GROUP BY 1),
-        |oo AS (SELECT o_orderkey AS k, count(*) AS c FROM orders GROUP BY 1),
-        |e1 AS (
-        |  SELECT 'orders.custkey=customer.custkey' AS edge,
-        |    (SELECT CAST(sum(c) AS BIGINT) FROM oc) AS rows_left,
-        |    (SELECT count(*) FROM oc) AS ndv_left,
-        |    (SELECT max(c) FROM oc) AS max_mult_left,
-        |    (SELECT CAST(sum(c) AS BIGINT) FROM cc) AS rows_right,
-        |    (SELECT count(*) FROM cc) AS ndv_right,
-        |    (SELECT max(c) FROM cc) AS max_mult_right,
-        |    (SELECT count(*) FROM oc JOIN cc USING (k)) AS n_matched_keys,
-        |    (SELECT CAST(coalesce(sum(oc.c * cc.c), 0) AS BIGINT)
-        |     FROM oc JOIN cc USING (k)) AS join_rows),
-        |e2 AS (
-        |  SELECT 'lineitem.orderkey=orders.orderkey' AS edge,
-        |    (SELECT CAST(sum(c) AS BIGINT) FROM lo), (SELECT count(*) FROM lo),
-        |    (SELECT max(c) FROM lo),
-        |    (SELECT CAST(sum(c) AS BIGINT) FROM oo), (SELECT count(*) FROM oo),
-        |    (SELECT max(c) FROM oo),
-        |    (SELECT count(*) FROM lo JOIN oo USING (k)),
-        |    (SELECT CAST(coalesce(sum(lo.c * oo.c), 0) AS BIGINT)
-        |     FROM lo JOIN oo USING (k)))
-        |SELECT * FROM e1 UNION ALL SELECT * FROM e2 ORDER BY edge""".stripMargin,
-    // q193: the q144 base-measure CTE; per rule a UNION ALL branch
-    // with fail / unique-fail conditional sums (program-generated so
-    // rule text can never drift from q144's)
-    "q193_gopher_ablation" -> {
-      val flags = Seq(
-        "f_alpha_words" -> "(alpha_words * 5 >= n_words * 4)",
-        "f_bullet_lines" -> "(bullet_lines * 10 <= n_lines * 9)",
-        "f_ellipsis_lines" -> "(ell_lines * 10 <= n_lines * 3)",
-        "f_mean_word_len" -> "(nonspace >= n_words * 3 AND nonspace <= n_words * 10)",
-        "f_stopwords" -> "(stops >= 2)",
-        "f_symbol_ratio" -> "(sym * 10 <= n_words)",
-        "f_word_count" -> "(n_words >= 50 AND n_words <= 100000)")
-      val keep = flags.map(_._2).mkString(" AND ")
-      val rows = flags.map { case (n, e) =>
-        val others = flags.filter(_._1 != n).map(_._2).mkString(" AND ")
-        s"""SELECT '$n' AS rule,
-           |  CAST(sum(CASE WHEN NOT $e THEN 1 ELSE 0 END) AS BIGINT) AS n_fail,
-           |  CAST(sum(CASE WHEN NOT $e AND $others THEN 1 ELSE 0 END) AS BIGINT) AS n_unique_fail,
-           |  count(*) AS n_docs,
-           |  CAST(sum(CASE WHEN $keep THEN 1 ELSE 0 END) AS BIGINT) AS n_keep
-           |FROM t""".stripMargin
-      }.mkString("\nUNION ALL\n")
-      s"""WITH t AS (SELECT doc_id,
-        |  len(regexp_split_to_array(text, '\\s+')) AS n_words,
-        |  len(string_split(text, chr(10))) AS n_lines,
-        |  length(regexp_replace(text, '\\s', '', 'g')) AS nonspace,
-        |  len(regexp_extract_all(text, '${TextOps.AlphaWordPattern}')) AS alpha_words,
-        |  len(regexp_extract_all(text, '${TextOps.SymbolPattern}')) AS sym,
-        |  len(regexp_extract_all(text, '${TextOps.BulletLinePattern}')) AS bullet_lines,
-        |  len(regexp_extract_all(text, '${TextOps.EllipsisLinePattern}')) AS ell_lines,
-        |  len(regexp_extract_all(lower(text), '${TextOps.EnStops}')) AS stops
-        | FROM documents)
-        |$rows
-        |ORDER BY rule""".stripMargin
-    },
-    // q27: full cross-engine SimHash. The 60-bit token hash is one
-    // big-endian hex window of md5 parsed to BIGINT (same
-    // construction as q75's base hashes) — 60 bits keeps the value
-    // and every 1<<i pack inside positive BIGINT range, so the sign
-    // packing is a single bit_or (DuckDB raises on BIGINT 1<<63, the
-    // reason for not using all 64 bits). Banding is omitted on
-    // purpose: by pigeonhole the 4×15-bit banding finds EXACTLY the
-    // pairs at Hamming ≤ 3, so the all-pairs form is semantically
-    // identical and trivial at oracle scale.
-    "q27_neardup_simhash" -> simHashPairsOracleSql,
-    "q28_neardup_embedding" ->
-      """WITH p AS (
-        |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.label AS label,
-        |    list_sum(list_transform(range(1, len(a.embedding) + 1),
-        |      i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))) AS dot,
-        |    sqrt(list_sum(list_transform(range(1, len(a.embedding) + 1),
-        |      i -> CAST(a.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE)))) *
-        |    sqrt(list_sum(list_transform(range(1, len(b.embedding) + 1),
-        |      i -> CAST(b.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))) AS denom
-        |  FROM embeddings a JOIN embeddings b
-        |    ON a.label = b.label AND a.vec_id < b.vec_id)
-        |SELECT vec_a, vec_b, CAST(label AS INTEGER) AS label,
-        |  round(dot / denom, 4) AS cos
-        |FROM p WHERE round(dot / denom, 4) >= 0.35""".stripMargin,
-    "q29_sim_topk" ->
-      s"""$bruteTopKOracleCte
-        |SELECT vec_id, label, cos FROM s ORDER BY cos DESC, vec_id LIMIT 10""".stripMargin,
-    "q168_mmr_rerank" -> mmrOracleSql,
-    "q169_kmeans_lloyd" -> kmeansOracleSql,
-    "q202_cluster_topics" -> clusterTopicsOracleSql,
-    "q203_method_agreement" -> methodAgreementOracleSql,
-    "q210_kmeans_refresh" -> kmeansRefreshOracleSql,
-    "q216_signal_corr" -> signalCorrelationOracleSql,
-    "q217_quality_bootstrap" -> qualityBootstrapOracleSql,
-    "q218_silhouette" -> kmeansSilhouetteOracleSql,
-    "q184_ivf_learned" -> ivfLearnedOracleSql,
-    // q183: q117's stage CTEs with the 1-hour conversion window on
-    // each step; stack mirrored as UNION ALL, rates round(n/prev, 4)
-    "q183_funnel_windowed" ->
-      """WITH v AS (
-        |  SELECT user_id, min(ts) AS t_view FROM events
-        |  WHERE event_type = 'view' GROUP BY 1),
-        |c AS (
-        |  SELECT e.user_id, min(e.ts) AS t_click FROM events e
-        |  JOIN v USING (user_id)
-        |  WHERE e.event_type = 'click' AND e.ts > v.t_view
-        |    AND e.ts <= v.t_view + INTERVAL 1 HOUR GROUP BY 1),
-        |p AS (
-        |  SELECT e.user_id, min(e.ts) AS t_purchase FROM events e
-        |  JOIN c USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND e.ts > c.t_click
-        |    AND e.ts <= c.t_click + INTERVAL 1 HOUR GROUP BY 1),
-        |n AS (SELECT (SELECT count(*) FROM v) AS nv,
-        |             (SELECT count(*) FROM c) AS nc,
-        |             (SELECT count(*) FROM p) AS np)
-        |SELECT '1_view' AS stage, nv AS n_users, CAST(1.0 AS DOUBLE) AS conv_from_prev FROM n
-        |UNION ALL
-        |SELECT '2_click', nc, round(CAST(nc AS DOUBLE) / nv, 4) FROM n
-        |UNION ALL
-        |SELECT '3_purchase', np, round(CAST(np AS DOUBLE) / nc, 4) FROM n
-        |ORDER BY stage""".stripMargin,
-    // q155: three q29-style exact legs (query vectors 0/1/2, top-100
-    // each, cos rounded at 4 with vec_id tie-break), pivoted to rank
-    // columns and fused left-to-right as 1/(60+rank) with absent legs
-    // contributing zero — the fixed IEEE operation order both engines
-    // share; final order on the UNROUNDED fused score, vec_id tiebreak
-    "q155_multiquery_rrf" ->
-      """WITH cand AS (SELECT vec_id, embedding FROM embeddings
-        |              WHERE vec_id NOT IN (0, 1, 2)),
-        |leg0 AS (SELECT vec_id, rnk FROM (
-        |  SELECT c.vec_id, row_number() OVER (ORDER BY cos DESC, c.vec_id) AS rnk FROM (
-        |    SELECT c2.vec_id,
-        |      round(list_sum(list_transform(range(1, len(c2.embedding) + 1),
-        |          i -> CAST(c2.embedding[i] AS DOUBLE) * CAST(q.embedding[i] AS DOUBLE))) /
-        |        (sqrt(list_sum(list_transform(range(1, len(c2.embedding) + 1),
-        |          i -> CAST(c2.embedding[i] AS DOUBLE) * CAST(c2.embedding[i] AS DOUBLE)))) *
-        |         sqrt(list_sum(list_transform(range(1, len(q.embedding) + 1),
-        |          i -> CAST(q.embedding[i] AS DOUBLE) * CAST(q.embedding[i] AS DOUBLE))))), 4) AS cos
-        |    FROM cand c2, (SELECT embedding FROM embeddings WHERE vec_id = 0) q) c) r
-        |  WHERE rnk <= 100),
-        |leg1 AS (SELECT vec_id, rnk FROM (
-        |  SELECT c.vec_id, row_number() OVER (ORDER BY cos DESC, c.vec_id) AS rnk FROM (
-        |    SELECT c2.vec_id,
-        |      round(list_sum(list_transform(range(1, len(c2.embedding) + 1),
-        |          i -> CAST(c2.embedding[i] AS DOUBLE) * CAST(q.embedding[i] AS DOUBLE))) /
-        |        (sqrt(list_sum(list_transform(range(1, len(c2.embedding) + 1),
-        |          i -> CAST(c2.embedding[i] AS DOUBLE) * CAST(c2.embedding[i] AS DOUBLE)))) *
-        |         sqrt(list_sum(list_transform(range(1, len(q.embedding) + 1),
-        |          i -> CAST(q.embedding[i] AS DOUBLE) * CAST(q.embedding[i] AS DOUBLE))))), 4) AS cos
-        |    FROM cand c2, (SELECT embedding FROM embeddings WHERE vec_id = 1) q) c) r
-        |  WHERE rnk <= 100),
-        |leg2 AS (SELECT vec_id, rnk FROM (
-        |  SELECT c.vec_id, row_number() OVER (ORDER BY cos DESC, c.vec_id) AS rnk FROM (
-        |    SELECT c2.vec_id,
-        |      round(list_sum(list_transform(range(1, len(c2.embedding) + 1),
-        |          i -> CAST(c2.embedding[i] AS DOUBLE) * CAST(q.embedding[i] AS DOUBLE))) /
-        |        (sqrt(list_sum(list_transform(range(1, len(c2.embedding) + 1),
-        |          i -> CAST(c2.embedding[i] AS DOUBLE) * CAST(c2.embedding[i] AS DOUBLE)))) *
-        |         sqrt(list_sum(list_transform(range(1, len(q.embedding) + 1),
-        |          i -> CAST(q.embedding[i] AS DOUBLE) * CAST(q.embedding[i] AS DOUBLE))))), 4) AS cos
-        |    FROM cand c2, (SELECT embedding FROM embeddings WHERE vec_id = 2) q) c) r
-        |  WHERE rnk <= 100),
-        |u AS (SELECT vec_id, 0 AS leg, rnk FROM leg0
-        |      UNION ALL SELECT vec_id, 1, rnk FROM leg1
-        |      UNION ALL SELECT vec_id, 2, rnk FROM leg2),
-        |pv AS (SELECT vec_id,
-        |         min(CASE WHEN leg = 0 THEN rnk END) AS rank_q0,
-        |         min(CASE WHEN leg = 1 THEN rnk END) AS rank_q1,
-        |         min(CASE WHEN leg = 2 THEN rnk END) AS rank_q2
-        |       FROM u GROUP BY vec_id),
-        |scored AS (SELECT vec_id, rank_q0, rank_q1, rank_q2,
-        |  ((CASE WHEN rank_q0 IS NOT NULL THEN CAST(1.0 AS DOUBLE) / (CAST(60.0 AS DOUBLE) + rank_q0) ELSE CAST(0.0 AS DOUBLE) END)
-        |   + (CASE WHEN rank_q1 IS NOT NULL THEN CAST(1.0 AS DOUBLE) / (CAST(60.0 AS DOUBLE) + rank_q1) ELSE CAST(0.0 AS DOUBLE) END))
-        |   + (CASE WHEN rank_q2 IS NOT NULL THEN CAST(1.0 AS DOUBLE) / (CAST(60.0 AS DOUBLE) + rank_q2) ELSE CAST(0.0 AS DOUBLE) END) AS rrf_raw
-        |  FROM pv)
-        |SELECT vec_id, rank_q0, rank_q1, rank_q2,
-        |  floor(rrf_raw * 1000000 + 0.5) / 1000000 AS rrf
-        |FROM scored ORDER BY rrf_raw DESC, vec_id LIMIT 20""".stripMargin,
-    // q156: unit-normalize + symmetric int8 quantize (q150's
-    // squared-norm fold + shared floor-form rounding), an exact-BIGINT
-    // int dot picks 100 candidates, the q29 cosine re-ranks them — the
-    // whole two-stage ANN mechanism under the hash gate
-    "q156_quantized_rerank" ->
-      """WITH coded AS (
-        |  SELECT vec_id, embedding,
-        |    CASE WHEN sqrt(list_sum(list_transform(embedding,
-        |           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) > 0 THEN
-        |      list_transform(embedding, x -> CAST(floor(
-        |        CAST(x AS DOUBLE) /
-        |        sqrt(list_sum(list_transform(embedding,
-        |          y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)))) * 127.0 + 0.5) AS BIGINT))
-        |    ELSE list_transform(embedding, x -> CAST(0 AS BIGINT)) END AS qv
-        |  FROM embeddings),
-        |q AS (SELECT qv AS q_qv, embedding AS q_emb FROM coded WHERE vec_id = 0),
-        |cand AS (
-        |  SELECT c.vec_id, c.embedding,
-        |    CAST(list_sum(list_transform(range(1, len(c.qv) + 1),
-        |      i -> c.qv[i] * q.q_qv[i])) AS BIGINT) AS int_dot
-        |  FROM coded c, q WHERE c.vec_id <> 0
-        |  ORDER BY int_dot DESC, c.vec_id LIMIT 100),
-        |rr AS (
-        |  SELECT cand.vec_id, cand.int_dot,
-        |    round(list_sum(list_transform(range(1, len(cand.embedding) + 1),
-        |        i -> CAST(cand.embedding[i] AS DOUBLE) * CAST(q.q_emb[i] AS DOUBLE))) /
-        |      (sqrt(list_sum(list_transform(range(1, len(cand.embedding) + 1),
-        |        i -> CAST(cand.embedding[i] AS DOUBLE) * CAST(cand.embedding[i] AS DOUBLE)))) *
-        |       sqrt(list_sum(list_transform(range(1, len(q.q_emb) + 1),
-        |        i -> CAST(q.q_emb[i] AS DOUBLE) * CAST(q.q_emb[i] AS DOUBLE))))), 4) AS cos
-        |  FROM cand, q)
-        |SELECT vec_id, int_dot, cos FROM rr ORDER BY cos DESC, vec_id LIMIT 10""".stripMargin,
-    "q31_media_meta" ->
-      """SELECT doc_id,
-        | CASE WHEN doc_id % 3 = 0 THEN 'png'
-        |      WHEN doc_id % 3 = 1 THEN 'jpeg' ELSE 'wav' END AS format,
-        | CAST(320 + (doc_id % 4) * 160 AS INTEGER) AS width,
-        | CAST(240 + (doc_id % 4) * 120 AS INTEGER) AS height,
-        | CAST((320 + (doc_id % 4) * 160) / 2 AS INTEGER) AS target_width,
-        | CAST((240 + (doc_id % 4) * 120) / 2 AS INTEGER) AS target_height,
-        | octet_length(encode(text)) AS n_bytes,
-        | len(range(0, (doc_id % 120) + 1,
-        |   CAST(greatest(1, ceil(((doc_id % 120) + 1) / 8.0)) AS BIGINT))) AS frames_sampled
-        |FROM documents""".stripMargin,
-    // q32: the stub decoder is a 16-bin byte histogram, so its
-    // integer-exact observables are recomputable from the raw bytes:
-    // hist_sum is 1.0 for any non-empty payload, and bin6_count is the
-    // number of bytes with high nibble 6 — counted here by walking the
-    // hex encoding two chars per byte (DuckDB has no BLOB slicing).
-    "q32_multimodal_features" ->
-      """WITH b AS (
-        |  SELECT doc_id, hex(encode(text)) AS hx,
-        |         octet_length(encode(text)) AS n
-        |  FROM documents)
-        |SELECT doc_id,
-        | CAST(CASE WHEN n = 0 THEN 0.0 ELSE 1.0 END AS DOUBLE) AS hist_sum,
-        | CAST(len(list_filter(range(n),
-        |   i -> substr(hx, CAST(i*2+1 AS INTEGER), 1) = '6')) AS BIGINT) AS bin6_count
-        |FROM b""".stripMargin,
-    "q33_sessionize" ->
-      """WITH ev AS (
-        |  SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, value FROM events),
-        |flagged AS (
-        |  SELECT *, CASE WHEN ts > lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |                        + INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS new_s
-        |  FROM ev),
-        |numbered AS (
-        |  SELECT *, CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq
-        |  FROM flagged)
-        |SELECT user_id, session_seq,
-        | min(ts) AS session_start, max(ts) AS session_end,
-        | count(*) AS n_events, round(sum(value), 4) AS total_value
-        |FROM numbered GROUP BY user_id, session_seq""".stripMargin,
-    "q34_asof_join" ->
-      """WITH o AS (SELECT o_custkey, o_orderdate, max(o_orderkey) AS o_orderkey
-        |           FROM orders GROUP BY 1, 2),
-        |     e AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts FROM events)
-        |SELECT e.event_id, e.user_id, e.ts, o.o_orderkey, o.o_orderdate
-        |FROM e ASOF JOIN o ON e.user_id = o.o_custkey AND e.ts >= o.o_orderdate""".stripMargin,
-    // q154: q34's ASOF made LEFT + a staleness bound on the match —
-    // stale/absent matches null out with matched = false
-    "q154_asof_tolerance" ->
-      """WITH o AS (SELECT o_custkey, o_orderdate, max(o_orderkey) AS o_orderkey
-        |           FROM orders GROUP BY 1, 2),
-        |     e AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts FROM events)
-        |SELECT e.event_id, e.user_id, e.ts,
-        | CASE WHEN o.o_orderdate + INTERVAL 8400 DAYS >= e.ts
-        |      THEN o.o_orderkey END AS o_orderkey,
-        | CASE WHEN o.o_orderdate + INTERVAL 8400 DAYS >= e.ts
-        |      THEN o.o_orderdate END AS o_orderdate,
-        | coalesce(o.o_orderdate + INTERVAL 8400 DAYS >= e.ts, FALSE) AS matched
-        |FROM e ASOF LEFT JOIN o
-        |  ON e.user_id = o.o_custkey AND e.ts >= o.o_orderdate""".stripMargin,
-    "q76_asof_forward" ->
-      """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, max(event_id) AS event_id
-        |           FROM (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id FROM events) GROUP BY 1, 2),
-        |     o AS (SELECT o_orderkey, o_custkey, o_orderdate FROM orders)
-        |SELECT o.o_orderkey, o.o_custkey, o.o_orderdate, e.event_id, e.ts
-        |FROM o ASOF JOIN e ON o.o_custkey = e.user_id AND o.o_orderdate <= e.ts""".stripMargin,
-    "q41_interval_join" ->
-      """WITH e AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts FROM events)
-        |SELECT a.event_id AS a_id, b.event_id AS b_id, a.user_id
-        |FROM e a JOIN e b
-        |  ON a.user_id = b.user_id
-        | AND b.ts >= a.ts AND b.ts < a.ts + INTERVAL 4 HOUR
-        | AND a.event_id <> b.event_id""".stripMargin,
-    "q35_weighted_mean" ->
-      """SELECT l_returnflag,
-        | round(sum(l_extendedprice * l_quantity) / sum(l_quantity), 2) AS w_avg_price
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    "q42_quantiles" ->
-      """SELECT l_returnflag,
-        | round(quantile_cont(l_extendedprice, 0.25), 4) AS p25,
-        | round(quantile_cont(l_extendedprice, 0.5), 4) AS p50,
-        | round(quantile_cont(l_extendedprice, 0.75), 4) AS p75
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    "q43_pivot" ->
-      """SELECT user_id,
-        | round(sum(CASE WHEN event_type = 'click' THEN value END), 2) AS click,
-        | round(sum(CASE WHEN event_type = 'view' THEN value END), 2) AS view,
-        | round(sum(CASE WHEN event_type = 'purchase' THEN value END), 2) AS purchase,
-        | round(sum(CASE WHEN event_type = 'signup' THEN value END), 2) AS signup,
-        | round(sum(CASE WHEN event_type = 'error' THEN value END), 2) AS error
-        |FROM events GROUP BY user_id""".stripMargin,
-    "q44_word_counts" ->
-      """SELECT word, count(*) AS n
-        |FROM (SELECT unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS word
-        |      FROM documents) t
-        |WHERE word <> '' GROUP BY word""".stripMargin,
-    "q45_except_all" ->
-      """SELECT o_custkey AS custkey FROM orders
-        |EXCEPT ALL
-        |SELECT c_custkey AS custkey FROM customer WHERE c_acctbal > 5000""".stripMargin,
-    "q36_math_funcs" ->
-      """SELECT p_partkey,
-        | round(sqrt(p_retailprice), 6) AS sq,
-        | round(ln(p_retailprice), 6) AS ln_p,
-        | round(log10(p_retailprice), 6) AS l10,
-        | round(pow(p_size, 2.0), 1) AS sz2,
-        | round(exp(p_size / 100.0), 6) AS ex,
-        | p_size % 7 AS m7
-        |FROM part""".stripMargin,
-    "q37_string_funcs" ->
-      """SELECT c_custkey,
-        | lpad(c_name, 25, '*') AS padded,
-        | replace(c_name, 'Customer', 'Cust') AS repl,
-        | reverse(c_mktsegment) AS rev,
-        | substr(c_mktsegment, 1, 3) AS l3,
-        | strpos(c_name, '#') AS hashpos,
-        | split_part(c_name, '#', 2) AS cust_num,
-        | translate(c_mktsegment, 'AEIOU', 'aeiou') AS lowvowel
-        |FROM customer""".stripMargin,
-    "q38_cube" ->
-      """SELECT l_returnflag, l_linestatus,
-        | CAST(grouping(l_returnflag) AS BIGINT) AS g_flag,
-        | CAST(grouping(l_linestatus) AS BIGINT) AS g_status,
-        | count(*) AS n
-        |FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)""".stripMargin,
-    "q39_sql_subquery" ->
-      """SELECT c_custkey, c_nationkey, c_acctbal FROM customer c
-        |WHERE c_acctbal > (SELECT avg(c2.c_acctbal) FROM customer c2
-        |                   WHERE c2.c_nationkey = c.c_nationkey)""".stripMargin,
-    "q47_stats_agg" ->
-      """SELECT l_returnflag,
-        | round(stddev_samp(l_extendedprice), 4) AS sd_price,
-        | round(var_samp(l_quantity), 4) AS var_qty,
-        | round(corr(l_quantity, l_extendedprice), 6) AS corr_qty_price,
-        | round(covar_samp(l_quantity, l_extendedprice), 4) AS cov_qty_price,
-        | count(*) AS n
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    "q48_grouping_sets" ->
-      """SELECT l_returnflag, l_linestatus,
-        | CAST(grouping(l_returnflag) AS BIGINT) AS g_flag,
-        | CAST(grouping(l_linestatus) AS BIGINT) AS g_status,
-        | count(*) AS n,
-        | round(sum(l_extendedprice), 2) AS total_price
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())""".stripMargin,
-    "q49_window_nav" ->
-      """SELECT o_custkey, o_orderkey, o_orderdate,
-        | lag(o_totalprice, 1) OVER w AS prev_price,
-        | lead(o_totalprice, 1) OVER w AS next_price,
-        | first_value(o_orderdate) OVER w2 AS first_date,
-        | last_value(o_orderdate) OVER w2 AS last_date,
-        | nth_value(o_totalprice, 2) OVER w2 AS second_price
-        |FROM orders
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey),
-        | w2 AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)""".stripMargin,
-    "q50_ntile" ->
-      s"""SELECT l_suppkey, l_orderkey, l_linenumber,
-        | CAST(ntile(4) OVER w AS BIGINT) AS quartile,
-        | ${TextOps.roundAtSql("percent_rank() OVER w", 6)} AS pct_rank,
-        | ${TextOps.roundAtSql("cume_dist() OVER w", 6)} AS cum_dist
-        |FROM lineitem WHERE l_suppkey < 5
-        |WINDOW w AS (PARTITION BY l_suppkey
-        |             ORDER BY l_extendedprice, l_orderkey, l_linenumber)""".stripMargin,
-    "q51_regexp_funcs" ->
-      """SELECT c_custkey,
-        | regexp_extract(c_name, '([0-9]+)', 1) AS cust_digits,
-        | len(regexp_extract_all(c_name, '[0-9]')) AS n_digits,
-        | regexp_replace(c_name, '[0-9]', '#', 'g') AS masked,
-        | CAST(CASE WHEN regexp_matches(c_name, '00[0-4]$') THEN 1 ELSE 0 END AS BIGINT) AS ends_low
-        |FROM customer""".stripMargin,
-    "q52_intersect_all" ->
-      """SELECT o_custkey AS custkey FROM orders
-        |INTERSECT ALL
-        |SELECT c_custkey AS custkey FROM customer WHERE c_acctbal > 5000""".stripMargin,
-    "q53_count_distinct" ->
-      """SELECT l_returnflag,
-        | count(DISTINCT l_suppkey) AS n_supp,
-        | count(DISTINCT l_partkey) AS n_part,
-        | count(DISTINCT concat_ws('_', l_orderkey, l_linenumber)) AS n_lines,
-        | count(*) AS n_rows
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    // q54: DuckDB's HLL produces different estimates, so the raw
-    // sketch values can never hash-match — instead the Spark side
-    // emits exact counts plus in-plan |approx−exact| ≤ 5% flags, and
-    // the oracle asserts those flags are literally TRUE beside its own
-    // exact counts: a drifting sketch becomes a hash mismatch.
-    "q54_approx_distinct" ->
-      """SELECT l_returnflag,
-        | count(DISTINCT l_suppkey) AS n_supp,
-        | count(DISTINCT l_partkey) AS n_part,
-        | TRUE AS supp_within_5pct,
-        | TRUE AS part_within_5pct
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    "q55_agg_filter" ->
-      """SELECT l_returnflag,
-        | count(*) FILTER (WHERE l_discount > 0.05) AS n_discounted,
-        | count(*) FILTER (WHERE l_tax = 0) AS n_taxfree,
-        | round(sum(l_extendedprice) FILTER (WHERE l_quantity >= 25), 2) AS rev_bulk,
-        | count(*) AS n
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    "q56_histogram" ->
-      """SELECT CAST(floor(l_extendedprice / 10000) AS BIGINT) AS price_bin,
-        | count(*) AS n,
-        | round(min(l_extendedprice), 2) AS bin_min,
-        | round(max(l_extendedprice), 2) AS bin_max
-        |FROM lineitem GROUP BY 1""".stripMargin,
-    "q57_sample_hash" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |WHERE substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 1) IN ('0', '1')""".stripMargin,
-    "q58_sliding_window" ->
-      """WITH e AS (SELECT CAST(ts AS TIMESTAMP) AS ts, value FROM events),
-        |wins AS (
-        |  SELECT unnest([time_bucket(INTERVAL 30 MINUTE, ts),
-        |                 time_bucket(INTERVAL 30 MINUTE, ts) - INTERVAL 30 MINUTE]) AS win_start,
-        |         value
-        |  FROM e)
-        |SELECT win_start, count(*) AS n, round(sum(value), 2) AS total
-        |FROM wins GROUP BY win_start""".stripMargin,
-    "q59_tfidf" ->
-      s"""WITH words AS (
-        |  SELECT doc_id,
-        |    unnest(regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ')) AS word
-        |  FROM documents),
-        |wf AS (SELECT doc_id, word FROM words WHERE word <> ''),
-        |tf AS (SELECT doc_id, word, count(*) AS tf FROM wf GROUP BY 1, 2),
-        |df AS (SELECT word, count(DISTINCT doc_id) AS df FROM wf GROUP BY 1),
-        |nd AS (SELECT count(*) AS n FROM documents),
-        |scored AS (
-        |  SELECT tf.doc_id, tf.word, tf.tf,
-        |    tf.tf * (ln((nd.n + 1.0) / (df.df + 1.0)) + 1.0) AS score_raw
-        |  FROM tf JOIN df USING (word) CROSS JOIN nd),
-        |ranked AS (
-        |  SELECT doc_id, word, tf, score_raw,
-        |    CAST(row_number() OVER (PARTITION BY doc_id
-        |      ORDER BY score_raw DESC, word) AS BIGINT) AS rnk
-        |  FROM scored)
-        |SELECT doc_id, rnk, word, tf,
-        | ${TextOps.roundAtSql("score_raw", 6)} AS score
-        |FROM ranked WHERE rnk <= 5""".stripMargin,
-    "q60_bigrams" ->
-      """WITH ws AS (
-        |  SELECT regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS w
-        |  FROM documents),
-        |pairs AS (
-        |  SELECT unnest(list_transform(range(0, greatest(len(w) - 1, 0)),
-        |                i -> w[i + 1] || ' ' || w[i + 2])) AS bigram
-        |  FROM ws WHERE len(w) >= 2)
-        |SELECT bigram, count(*) AS n
-        |FROM pairs GROUP BY bigram HAVING count(*) >= 3""".stripMargin,
-    "q61_dedup_clusters" ->
-      s"""WITH RECURSIVE $dedupClustersCteBody
-        |SELECT doc_id, cluster FROM clus""".stripMargin,
-    // q212: the q61 CC chain + n_chars rollup; keeper = the doc whose
-    // id equals its (minimum-member) cluster label
-    "q212_dedup_roi" ->
-      s"""WITH RECURSIVE $dedupClustersCteBody,
-        |cd AS (
-        |  SELECT c.cluster, c.doc_id, d.n_chars
-        |  FROM clus c JOIN documents d USING (doc_id)),
-        |per AS (
-        |  SELECT cluster, count(*) AS sz,
-        |    CAST(sum(n_chars) AS BIGINT) AS chars,
-        |    max(CASE WHEN doc_id = cluster THEN n_chars END) AS kept
-        |  FROM cd GROUP BY cluster)
-        |SELECT sz AS cluster_size, count(*) AS n_clusters,
-        |  CAST(sum(sz) AS BIGINT) AS n_docs,
-        |  CAST(sum(chars) AS BIGINT) AS total_chars,
-        |  CAST(sum(chars - kept) AS BIGINT) AS saved_chars,
-        |  ${TextOps.roundAtSql(
-             "CAST(sum(chars - kept) AS DOUBLE) / CAST(sum(chars) AS DOUBLE)", 6)} AS saved_frac
-        |FROM per GROUP BY sz ORDER BY sz""".stripMargin,
-    // q215: first-view/first-purchase gates as min aggregations,
-    // integer-microsecond latency, q185 rank selection on ONE group
-    "q215_conversion_latency" ->
-      """WITH v AS (
-        |  SELECT user_id, min(ts) AS t_view
-        |  FROM events WHERE event_type = 'view' GROUP BY 1),
-        |p AS (
-        |  SELECT e.user_id, min(e.ts) AS t_purchase
-        |  FROM events e JOIN v ON v.user_id = e.user_id
-        |  WHERE e.event_type = 'purchase' AND e.ts > v.t_view GROUP BY 1),
-        |l AS (
-        |  SELECT v.user_id, epoch_us(p.t_purchase) - epoch_us(v.t_view) AS lat_us
-        |  FROM v JOIN p USING (user_id)),
-        |r AS (
-        |  SELECT l.*, row_number() OVER (ORDER BY lat_us, user_id) AS rn,
-        |    count(*) OVER () AS n
-        |  FROM l)
-        |SELECT max(n) AS n_conversions,
-        |  max(CASE WHEN rn = CAST(ceil(CAST(n AS DOUBLE) * 0.5) AS BIGINT) THEN lat_us END) AS p50_us,
-        |  max(CASE WHEN rn = CAST(ceil(CAST(n AS DOUBLE) * 0.95) AS BIGINT) THEN lat_us END) AS p95_us,
-        |  max(lat_us) AS max_us
-        |FROM r""".stripMargin,
-    // q213: q22's count columns sorted desc — margin on pure evidence
-    // mass, prediction keeps the precedence-tie rule verbatim
-    "q213_lang_margin" ->
-      s"""WITH c AS (
-        |  SELECT doc_id,
-        |    CASE WHEN zh > 0 THEN 'zh'
-        |         WHEN de > en AND de > es AND de > fr THEN 'de'
-        |         WHEN es > en AND es > fr THEN 'es'
-        |         WHEN fr > en THEN 'fr'
-        |         ELSE 'en' END AS lang_pred,
-        |    list_reverse(list_sort([zh, en, es, de, fr])) AS s
-        |  FROM (SELECT doc_id,
-        |    CAST(len(regexp_extract_all(text, '${TextOps.CjkPattern}')) AS BIGINT) AS zh,
-        |    CAST(len(regexp_extract_all(lower(text), '${TextOps.EnStops}')) AS BIGINT) AS en,
-        |    CAST(len(regexp_extract_all(lower(text), '${TextOps.EsStops}')) AS BIGINT) AS es,
-        |    CAST(len(regexp_extract_all(lower(text), '${TextOps.DeStops}')) AS BIGINT) AS de,
-        |    CAST(len(regexp_extract_all(lower(text), '${TextOps.FrStops}')) AS BIGINT) AS fr
-        |   FROM documents) t)
-        |SELECT doc_id, lang_pred, s[1] AS top_hits, s[2] AS second_hits,
-        |  s[1] - s[2] AS margin, s[1] - s[2] < 3 AS is_ambiguous
-        |FROM c ORDER BY doc_id""".stripMargin,
-    // q214: the q61 chain + per-(cluster, source) counts, q172's
-    // negated ordered-fold entropy, roundAt normalizing -0.0
-    "q214_cluster_sources" ->
-      s"""WITH RECURSIVE $dedupClustersCteBody,
-        |cs AS (
-        |  SELECT c.cluster, d.source, count(*) AS c
-        |  FROM clus c JOIN documents d USING (doc_id)
-        |  GROUP BY 1, 2),
-        |tot AS (
-        |  SELECT cluster, CAST(sum(c) AS BIGINT) AS sz, count(*) AS n_sources
-        |  FROM cs GROUP BY cluster),
-        |terms AS (
-        |  SELECT cs.cluster, cs.source,
-        |    (CAST(cs.c AS DOUBLE) / tot.sz) * ln(CAST(cs.c AS DOUBLE) / tot.sz) AS term
-        |  FROM cs JOIN tot USING (cluster)),
-        |per AS (
-        |  SELECT cluster, -(list_sum(list(term ORDER BY source))) AS h_raw
-        |  FROM terms GROUP BY cluster)
-        |SELECT t.cluster, t.sz, t.n_sources,
-        |  ${TextOps.roundAtSql("per.h_raw", 6)} AS src_entropy,
-        |  t.n_sources > 1 AS is_cross_source
-        |FROM tot t JOIN per USING (cluster)
-        |ORDER BY t.cluster""".stripMargin,
-    // q211: global equi-depth length bins (integer-division rank
-    // device), per-bin smallest-md5 quota — exact longs throughout
-    "q211_matched_sample" ->
-      """WITH r AS (
-        |  SELECT doc_id, n_chars,
-        |    row_number() OVER (ORDER BY n_chars, doc_id) AS rn,
-        |    count(*) OVER () AS n
-        |  FROM documents),
-        |b AS (SELECT doc_id, n_chars, ((rn - 1) * 8) // n + 1 AS bin FROM r),
-        |h AS (SELECT b.*,
-        |    ('0x' || substr(md5('ev_' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT AS hv
-        |  FROM b),
-        |k AS (
-        |  SELECT h.*,
-        |    row_number() OVER (PARTITION BY bin ORDER BY hv, doc_id) AS hrk,
-        |    count(*) OVER (PARTITION BY bin) AS bn
-        |  FROM h)
-        |SELECT bin, doc_id, n_chars FROM k
-        |WHERE hrk <= greatest(1, bn // 10)
-        |ORDER BY bin, doc_id""".stripMargin,
-    "q63_array_funcs" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |    regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS words
-        |  FROM documents)
-        |SELECT doc_id,
-        | len(list_distinct(words)) AS n_uniq,
-        | array_to_string(list_slice(list_sort(list_distinct(words)), 1, 5), ',') AS first5,
-        | CAST(CASE WHEN list_contains(words, 'the') THEN 1 ELSE 0 END AS BIGINT) AS has_the,
-        | list_aggregate(words, 'max') AS max_word
-        |FROM w""".stripMargin,
-    "q64_map_funcs" ->
-      """SELECT event_id,
-        | len(json_keys(props)) AS n_keys,
-        | array_to_string(list_sort(json_keys(props)), ',') AS keys_sorted,
-        | json_extract_string(props, '$.k') AS k_val
-        |FROM events""".stripMargin,
-    "q65_explode_outer" ->
-      """SELECT doc_id,
-        | unnest(CASE WHEN len(a) = 0 THEN [NULL] ELSE a END) AS num
-        |FROM (SELECT doc_id, regexp_extract_all(text, '[0-9]+') AS a
-        |      FROM documents) t""".stripMargin,
-    "q66_union_by_name" ->
-      """SELECT c_custkey AS key, c_acctbal AS bal, 'cust' AS src FROM customer
-        |UNION ALL BY NAME
-        |SELECT 'supp' AS src, s_suppkey AS key FROM supplier""".stripMargin,
-    "q67_date_arith" ->
-      """SELECT o_orderkey,
-        | CAST(o_orderdate AS DATE) + 30 AS due_date,
-        | last_day(CAST(o_orderdate AS DATE)) AS month_end,
-        | date_diff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE)) AS days_since,
-        | CAST(o_orderdate + INTERVAL 2 MONTH AS DATE) AS plus2m,
-        | CAST(weekofyear(CAST(o_orderdate AS DATE)) AS BIGINT) AS iso_week,
-        | CAST(quarter(o_orderdate) AS BIGINT) AS qtr
-        |FROM orders""".stripMargin,
-    "q68_salted_join" ->
-      """SELECT CAST(s_nationkey AS BIGINT) AS nationkey,
-        | round(sum(l_extendedprice), 2) AS revenue,
-        | count(*) AS n
-        |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |GROUP BY 1""".stripMargin,
-    "q69_lateral_topn" ->
-      """SELECT n_name, t.s_name, t.s_acctbal
-        |FROM nation n,
-        |LATERAL (SELECT s_name, s_acctbal FROM supplier s
-        |         WHERE s.s_nationkey = n.n_nationkey
-        |         ORDER BY s_acctbal DESC, s_name LIMIT 2) t""".stripMargin,
-    "q70_left_outer" ->
-      """SELECT c_custkey, c_mktsegment,
-        | count(o_orderkey) AS n_orders,
-        | round(coalesce(sum(o_totalprice), 0.0), 2) AS spend
-        |FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-        |GROUP BY c_custkey, c_mktsegment""".stripMargin,
-    "q71_full_outer" ->
-      """WITH o AS (SELECT o_custkey AS key, count(*) AS n_big_orders
-        |           FROM orders WHERE o_totalprice > 400000 GROUP BY 1),
-        |     c AS (SELECT c_custkey AS key, c_acctbal FROM customer
-        |           WHERE c_acctbal > 9000)
-        |SELECT coalesce(o.key, c.key) AS key,
-        | coalesce(o.n_big_orders, 0) AS n_big_orders,
-        | CAST(CASE WHEN c.c_acctbal IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS is_rich
-        |FROM o FULL OUTER JOIN c ON o.key = c.key""".stripMargin,
-    "q72_cross_join" ->
-      "SELECT n_name, r_name FROM nation CROSS JOIN region",
-    "q73_in_list" ->
-      """SELECT o_orderkey, o_orderpriority, o_orderstatus FROM orders
-        |WHERE o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |  AND o_orderstatus IN ('F', 'P')""".stripMargin,
-    "q74_range_frame" ->
-      """SELECT l_suppkey, l_orderkey, l_linenumber, day_num, l_extendedprice,
-        | round(sum(l_extendedprice) OVER (
-        |   PARTITION BY l_suppkey ORDER BY day_num
-        |   RANGE BETWEEN 7 PRECEDING AND CURRENT ROW), 2) AS rev_7d
-        |FROM (SELECT l_suppkey, l_orderkey, l_linenumber,
-        |        date_diff('day', DATE '1995-01-01', CAST(l_shipdate AS DATE)) AS day_num,
-        |        l_extendedprice
-        |      FROM lineitem WHERE l_suppkey < 5) t""".stripMargin,
-    // shared program-generated md5-LSH replay (also gates q26 — see
-    // minHashMd5OracleSql's scaladoc for its construction)
-    "q75_minhash_md5" -> minHashMd5OracleSql,
-    "q77_dedup_survivors" ->
-      """SELECT d.doc_id, d.lang, d.source, length(d.text) AS n_chars_calc
-        |FROM documents d
-        |JOIN (SELECT min(doc_id) AS doc_id FROM documents
-        |      GROUP BY md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')))) k
-        |  ON d.doc_id = k.doc_id""".stripMargin,
-    "q78_corpus_filter" ->
-      s"""WITH scored AS (
-        |  SELECT doc_id,
-        |    ${TextOps.roundAtSql(
-             "least(n_chars / 500.0, 1.0) * 0.5 + " +
-             "least(stops / n_tokens * 5.0, 1.0) * 0.3 + " +
-             "(1.0 - least(punct / n_chars * 10.0, 1.0)) * 0.2", 6)} AS quality,
-        |    CASE WHEN zh > 0 THEN 'zh'
-        |         WHEN de > en AND de > es AND de > fr THEN 'de'
-        |         WHEN es > en AND es > fr THEN 'es'
-        |         WHEN fr > en THEN 'fr'
-        |         ELSE 'en' END AS lang_pred
-        |  FROM (SELECT doc_id,
-        |    CAST(length(text) AS DOUBLE) AS n_chars,
-        |    CAST(len(regexp_split_to_array(text, '\\s+')) AS DOUBLE) AS n_tokens,
-        |    CAST(len(regexp_extract_all(text, '${TextOps.PunctPattern}')) AS DOUBLE) AS punct,
-        |    CAST(len(regexp_extract_all(lower(text), '${TextOps.EnStops}')) AS DOUBLE) AS stops,
-        |    len(regexp_extract_all(text, '${TextOps.CjkPattern}')) AS zh,
-        |    len(regexp_extract_all(lower(text), '${TextOps.EnStops}')) AS en,
-        |    len(regexp_extract_all(lower(text), '${TextOps.EsStops}')) AS es,
-        |    len(regexp_extract_all(lower(text), '${TextOps.DeStops}')) AS de,
-        |    len(regexp_extract_all(lower(text), '${TextOps.FrStops}')) AS fr
-        |   FROM documents) t),
-        |keepers AS (
-        |  SELECT min(doc_id) AS doc_id FROM documents
-        |  GROUP BY md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))))
-        |SELECT s.doc_id, s.quality, s.lang_pred
-        |FROM scored s JOIN keepers k ON s.doc_id = k.doc_id
-        |WHERE s.quality >= 0.5 AND s.lang_pred = 'en'""".stripMargin,
-    "q79_null_semantics" ->
-      """SELECT o_orderkey,
-        | nullif(o_orderstatus, 'O') AS status_non_open,
-        | coalesce(nullif(o_orderstatus, 'O'), 'OPEN') AS status_filled,
-        | CAST(CASE WHEN nullif(o_orderstatus, 'O') IS NOT DISTINCT FROM
-        |                 nullif(o_orderpriority, o_orderpriority)
-        |           THEN 1 ELSE 0 END AS BIGINT) AS is_open_nullsafe,
-        | CAST(CASE WHEN nullif(o_orderstatus, 'O') IS NULL THEN 1 ELSE 0 END AS BIGINT) AS null_flag
-        |FROM orders""".stripMargin,
-    "q62_centroids" ->
-      """WITH flat AS (
-        |  SELECT label,
-        |    unnest(range(0, len(embedding))) AS dim,
-        |    unnest(list_transform(embedding, x -> CAST(x AS DOUBLE))) AS v
-        |  FROM embeddings)
-        |SELECT CAST(label AS INTEGER) AS label, CAST(dim AS BIGINT) AS dim,
-        | round(avg(v), 6) AS mean, count(*) AS n
-        |FROM flat GROUP BY 1, 2""".stripMargin,
-    // q80: the `repetitive` flag compares the RAW ratio (one IEEE
-    // division, bit-identical cross-engine); top_frac is the
-    // floor-rounded display twin.
-    "q80_repetition" ->
-      s"""WITH ws AS (
-        |  SELECT doc_id,
-        |    list_filter(regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' '),
-        |                x -> x <> '') AS w
-        |  FROM documents),
-        |pairs AS (
-        |  SELECT doc_id,
-        |    unnest(list_transform(range(0, greatest(len(w) - 1, 0)),
-        |                          i -> w[i + 1] || ' ' || w[i + 2])) AS bigram
-        |  FROM ws WHERE len(w) >= 2),
-        |bg AS (SELECT doc_id, bigram, count(*) AS n FROM pairs GROUP BY 1, 2),
-        |agg AS (SELECT doc_id, CAST(sum(n) AS BIGINT) AS n_bigrams,
-        |               max(n) AS top_n
-        |        FROM bg GROUP BY 1)
-        |SELECT doc_id, n_bigrams, top_n,
-        | ${TextOps.roundAtSql("CAST(top_n AS DOUBLE) / n_bigrams", 6)} AS top_frac,
-        | CAST(top_n AS DOUBLE) / n_bigrams > 0.18 AS repetitive
-        |FROM agg""".stripMargin,
-    // q81: identical IEEE expression structure on both sides —
-    // floor((x-mn)/((mx-mn)/255.0) + 0.5) — so the integer
-    // observables hash-match exactly.
-    "q81_quantize_int8" ->
-      s"""WITH ex AS (
-        |  SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-        |st AS (SELECT vec_id, min(x) AS mn, max(x) AS mx FROM ex GROUP BY 1),
-        |qv AS (
-        |  SELECT e.vec_id, s.mn, s.mx,
-        |    CASE WHEN s.mx > s.mn
-        |         THEN CAST(floor((e.x - s.mn) / ((s.mx - s.mn) / 255.0) + 0.5) AS BIGINT)
-        |         ELSE 0 END AS q
-        |  FROM ex e JOIN st s USING (vec_id))
-        |SELECT vec_id, count(*) AS n_dims,
-        | CAST(sum(q) AS BIGINT) AS q_sum,
-        | min(q) AS q_min, max(q) AS q_max,
-        | ${TextOps.roundAtSql("(max(mx) - max(mn)) / 255.0", 9)} AS scale
-        |FROM qv GROUP BY vec_id""".stripMargin,
-    // q82: hash-deterministic stratified sampling — the oracle checks
-    // exact sample membership (seeded-random sampleBy never could).
-    "q82_stratified_sample" ->
-      """SELECT l_orderkey, l_linenumber, l_returnflag
-        |FROM lineitem
-        |WHERE ('0x' || substr(md5(concat_ws('_', l_orderkey, l_linenumber)), 1, 4))::BIGINT % 1000
-        |      < CASE l_returnflag WHEN 'A' THEN 200 WHEN 'N' THEN 50
-        |                          WHEN 'R' THEN 500 ELSE 0 END""".stripMargin,
-    // q83: shard boundaries are floor((cum-n)/4096) — 4096 is a power
-    // of two, so the double division is exact and the ids hash-match.
-    "q83_shard_packing" ->
-      """WITH t AS (
-        |  SELECT doc_id, source,
-        |    CAST(len(regexp_split_to_array(text, '\s+')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, source, n_tokens,
-        |    CAST(sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
-        |  FROM t)
-        |SELECT doc_id, source, n_tokens, cum_tokens,
-        | CAST(floor(CAST(cum_tokens - n_tokens AS DOUBLE) / 4096) AS BIGINT) AS shard_id
-        |FROM c""".stripMargin,
-    // q136: q25's candidate CTEs with the verify filter inverted
-    "q136_hard_negatives" ->
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(
-        |      range(0, greatest(len(words) - 3, 0) + 1),
-        |      i -> array_to_string(list_slice(words, i + 1, i + 3), ' '))) AS sh
-        |  FROM (SELECT doc_id,
-        |          regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS words
-        |        FROM documents) w),
-        |keyed AS (
-        |  SELECT doc_id, sh,
-        |    list_aggregate(list_transform(sh, s -> md5(s)), 'min') AS minsh
-        |  FROM docs),
-        |cand AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-        |          len(list_distinct(list_concat(a.sh, b.sh))), 4) AS jaccard
-        |  FROM keyed a JOIN keyed b ON a.minsh = b.minsh AND a.doc_id < b.doc_id)
-        |SELECT doc_a, doc_b, jaccard FROM cand
-        |WHERE jaccard > 0 AND jaccard < 0.5""".stripMargin,
-    // q137: q25's verified pairs + the md5 split, cross-boundary only
-    "q137_split_leakage" ->
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(
-        |      range(0, greatest(len(words) - 3, 0) + 1),
-        |      i -> array_to_string(list_slice(words, i + 1, i + 3), ' '))) AS sh
-        |  FROM (SELECT doc_id,
-        |          regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS words
-        |        FROM documents) w),
-        |keyed AS (
-        |  SELECT doc_id, sh,
-        |    list_aggregate(list_transform(sh, s -> md5(s)), 'min') AS minsh
-        |  FROM docs),
-        |cand AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-        |          len(list_distinct(list_concat(a.sh, b.sh))), 4) AS jaccard
-        |  FROM keyed a JOIN keyed b ON a.minsh = b.minsh AND a.doc_id < b.doc_id),
-        |p AS (SELECT doc_a, doc_b, jaccard FROM cand WHERE jaccard >= 0.5),
-        |sp AS (
-        |  SELECT doc_id,
-        |    CASE WHEN substr(md5('split_' || CAST(doc_id AS VARCHAR)), 1, 1)
-        |              IN ('0', '1', '2') THEN 'test' ELSE 'train' END AS split
-        |  FROM documents)
-        |SELECT p.doc_a, sa.split AS split_a, p.doc_b, sb.split AS split_b, p.jaccard
-        |FROM p JOIN sp sa ON p.doc_a = sa.doc_id
-        |JOIN sp sb ON p.doc_b = sb.doc_id
-        |WHERE sa.split <> sb.split""".stripMargin,
-    // q153: q61's recursive cluster CTEs + the q137 md5 split rule,
-    // but hashed on the cluster representative (cluster-min; docs in
-    // no pair represent themselves), so near-dups cannot straddle
-    "q153_cluster_split" ->
-      """WITH RECURSIVE docs AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(
-        |      range(0, greatest(len(words) - 3, 0) + 1),
-        |      i -> array_to_string(list_slice(words, i + 1, i + 3), ' '))) AS sh
-        |  FROM (SELECT doc_id,
-        |          regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS words
-        |        FROM documents) w),
-        |keyed AS (
-        |  SELECT doc_id, sh,
-        |    list_aggregate(list_transform(sh, s -> md5(s)), 'min') AS minsh
-        |  FROM docs),
-        |cand AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-        |          len(list_distinct(list_concat(a.sh, b.sh))), 4) AS jaccard
-        |  FROM keyed a JOIN keyed b ON a.minsh = b.minsh AND a.doc_id < b.doc_id),
-        |dup AS (SELECT doc_a, doc_b FROM cand WHERE jaccard >= 0.5),
-        |edges AS (SELECT doc_a AS a, doc_b AS b FROM dup
-        |          UNION SELECT doc_b, doc_a FROM dup),
-        |reach AS (SELECT a, b FROM edges
-        |          UNION SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-        |labels AS (SELECT a AS doc_id, least(a, min(b)) AS cluster
-        |           FROM reach GROUP BY a)
-        |SELECT d.doc_id,
-        | coalesce(l.cluster, d.doc_id) AS cluster_rep,
-        | CASE WHEN substr(md5('split_' ||
-        |            CAST(coalesce(l.cluster, d.doc_id) AS VARCHAR)), 1, 1)
-        |      IN ('0', '1', '2') THEN 'test' ELSE 'train' END AS split
-        |FROM documents d LEFT JOIN labels l ON d.doc_id = l.doc_id""".stripMargin,
-    // q138: q25's CTEs + the bucket-size cap — buckets with more than
-    // 3 members contribute NO pairs (min-md5 membership is fully
-    // deterministic, so the oracle re-derives the same exclusions)
-    "q138_neardup_capped" ->
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(
-        |      range(0, greatest(len(words) - 3, 0) + 1),
-        |      i -> array_to_string(list_slice(words, i + 1, i + 3), ' '))) AS sh
-        |  FROM (SELECT doc_id,
-        |          regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS words
-        |        FROM documents) w),
-        |keyed AS (
-        |  SELECT doc_id, sh,
-        |    list_aggregate(list_transform(sh, s -> md5(s)), 'min') AS minsh
-        |  FROM docs),
-        |bsz AS (SELECT minsh, count(*) AS n FROM keyed GROUP BY 1),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-        |          len(list_distinct(list_concat(a.sh, b.sh))), 4) AS jaccard
-        |  FROM keyed a JOIN keyed b ON a.minsh = b.minsh AND a.doc_id < b.doc_id
-        |  JOIN bsz ON a.minsh = bsz.minsh AND bsz.n <= 3)
-        |SELECT doc_a, doc_b, jaccard FROM pairs WHERE jaccard >= 0.5""".stripMargin,
-    // q139: q136's candidate CTEs + a per-anchor top-2 bound over
-    // (jaccard DESC, doc_b) — the rounded jaccard is the ordering
-    // value on both engines, so the rank is cross-engine-stable
-    "q139_hard_neg_capped" ->
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(
-        |      range(0, greatest(len(words) - 3, 0) + 1),
-        |      i -> array_to_string(list_slice(words, i + 1, i + 3), ' '))) AS sh
-        |  FROM (SELECT doc_id,
-        |          regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS words
-        |        FROM documents) w),
-        |keyed AS (
-        |  SELECT doc_id, sh,
-        |    list_aggregate(list_transform(sh, s -> md5(s)), 'min') AS minsh
-        |  FROM docs),
-        |cand AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-        |          len(list_distinct(list_concat(a.sh, b.sh))), 4) AS jaccard
-        |  FROM keyed a JOIN keyed b ON a.minsh = b.minsh AND a.doc_id < b.doc_id),
-        |neg AS (
-        |  SELECT doc_a, doc_b, jaccard,
-        |    row_number() OVER (PARTITION BY doc_a
-        |                       ORDER BY jaccard DESC, doc_b) AS neg_rank
-        |  FROM cand WHERE jaccard > 0 AND jaccard < 0.5)
-        |SELECT doc_a, doc_b, jaccard, neg_rank FROM neg
-        |WHERE neg_rank <= 2""".stripMargin,
-    // q140: the same split as q25's docs CTE; passage count is
-    // 1 + ceil((len - window)/stride) floored at 1; list_slice's
-    // inclusive end mirrors Spark slice's length argument
-    "q140_chunk_passages" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |    regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS w
-        |  FROM documents),
-        |p AS (
-        |  SELECT doc_id, w,
-        |    unnest(range(0,
-        |      CAST(greatest(ceil(CAST(len(w) - 40 AS DOUBLE) / 30), 0) AS BIGINT) + 1)) AS passage_id
-        |  FROM w)
-        |SELECT doc_id, CAST(passage_id AS BIGINT) AS passage_id,
-        |  array_to_string(list_slice(w, passage_id * 30 + 1, passage_id * 30 + 40), ' ') AS passage,
-        |  CAST(len(list_slice(w, passage_id * 30 + 1, passage_id * 30 + 40)) AS BIGINT) AS n_words
-        |FROM p""".stripMargin,
-    // q141: q140's passages re-tokenized, then q130's scoring plan at
-    // (doc_id, passage_id) grain
-    "q141_passage_bm25" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |    regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS w
-        |  FROM documents),
-        |p AS (
-        |  SELECT doc_id, CAST(passage_id AS BIGINT) AS passage_id,
-        |    array_to_string(list_slice(w, passage_id * 30 + 1, passage_id * 30 + 40), ' ') AS passage
-        |  FROM (SELECT doc_id, w,
-        |          unnest(range(0,
-        |            CAST(greatest(ceil(CAST(len(w) - 40 AS DOUBLE) / 30), 0) AS BIGINT) + 1)) AS passage_id
-        |        FROM w) t),
-        |words AS (
-        |  SELECT doc_id, passage_id,
-        |    unnest(regexp_split_to_array(passage, ' ')) AS word
-        |  FROM p),
-        |wz AS (SELECT doc_id, passage_id, word FROM words WHERE word <> ''),
-        |dl AS (SELECT doc_id, passage_id, count(*) AS dl FROM wz GROUP BY 1, 2),
-        |tf AS (SELECT doc_id, passage_id, word, count(*) AS tf FROM wz
-        |       WHERE word IN ('data', 'analysis', 'model') GROUP BY 1, 2, 3),
-        |df AS (SELECT word, count(*) AS df FROM tf GROUP BY 1),
-        |n AS (SELECT CAST(count(*) AS DOUBLE) AS n_passages FROM p),
-        |ad AS (SELECT avg(dl) AS avgdl FROM dl),
-        |scored AS (
-        |  SELECT t.doc_id, t.passage_id,
-        |    sum(ln((n.n_passages - d.df + 0.5) / (d.df + 0.5) + 1.0) *
-        |        (CAST(t.tf AS DOUBLE) * CAST((1.2 + 1) AS DOUBLE) /
-        |         (t.tf + CAST(1.2 AS DOUBLE) * (0.25 + CAST(0.75 AS DOUBLE) * l.dl / ad.avgdl)))) AS score_raw
-        |  FROM tf t JOIN df d USING (word)
-        |  JOIN dl l ON t.doc_id = l.doc_id AND t.passage_id = l.passage_id, n, ad
-        |  GROUP BY 1, 2)
-        |SELECT doc_id, passage_id,
-        |  floor(score_raw * 1000000 + 0.5) / 1000000 AS bm25
-        |FROM scored ORDER BY score_raw DESC, doc_id, passage_id LIMIT 20""".stripMargin,
-    // q142: identical quantize geometry (floor of the double ratio —
-    // see ZOrder.quantize's exactness argument) and the generated
-    // 16-term interleave on both engines
-    "q142_zorder_keys" ->
-      s"""WITH d AS (
-        |  SELECT o_orderkey, o_custkey,
-        |    CAST(CAST(o_orderdate AS DATE) - DATE '1992-01-01' AS BIGINT) AS o_days
-        |  FROM orders),
-        |m AS (SELECT max(o_custkey) AS mc, max(o_days) AS md FROM d),
-        |q AS (
-        |  SELECT o_orderkey, o_custkey, o_days,
-        |    CAST(floor(CAST(o_custkey * 65536 AS DOUBLE) / (mc + 1)) AS BIGINT) AS xq,
-        |    CAST(floor(CAST(o_days * 65536 AS DOUBLE) / (md + 1)) AS BIGINT) AS yq
-        |  FROM d, m)
-        |SELECT o_orderkey, o_custkey, o_days,
-        |  ${graft.functions.ZOrder.zValueSql("xq", "yq")} AS zkey
-        |FROM q""".stripMargin,
-    // q143: q61's one-shot oracle VERBATIM — the incremental fold
-    // must be indistinguishable from clustering everything at once
-    "q143_incremental_clusters" ->
-      """WITH RECURSIVE docs AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(
-        |      range(0, greatest(len(words) - 3, 0) + 1),
-        |      i -> array_to_string(list_slice(words, i + 1, i + 3), ' '))) AS sh
-        |  FROM (SELECT doc_id,
-        |          regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS words
-        |        FROM documents) w),
-        |keyed AS (
-        |  SELECT doc_id, sh,
-        |    list_aggregate(list_transform(sh, s -> md5(s)), 'min') AS minsh
-        |  FROM docs),
-        |cand AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-        |          len(list_distinct(list_concat(a.sh, b.sh))), 4) AS jaccard
-        |  FROM keyed a JOIN keyed b ON a.minsh = b.minsh AND a.doc_id < b.doc_id),
-        |dup AS (SELECT doc_a, doc_b FROM cand WHERE jaccard >= 0.5),
-        |edges AS (SELECT doc_a AS a, doc_b AS b FROM dup
-        |          UNION SELECT doc_b, doc_a FROM dup),
-        |reach AS (SELECT a, b FROM edges
-        |          UNION SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a)
-        |SELECT a AS doc_id, least(a, min(b)) AS cluster
-        |FROM reach GROUP BY a""".stripMargin,
-    // q144: identical integer cross-multiplied rule set — no ratio is
-    // ever materialized as a double, so the flags cannot flip
-    "q144_gopher_rules" ->
-      s"""SELECT doc_id, n_words,
-        | (n_words >= 50 AND n_words <= 100000) AS f_word_count,
-        | (nonspace >= n_words * 3 AND nonspace <= n_words * 10) AS f_mean_word_len,
-        | (sym * 10 <= n_words) AS f_symbol_ratio,
-        | (bullet_lines * 10 <= n_lines * 9) AS f_bullet_lines,
-        | (ell_lines * 10 <= n_lines * 3) AS f_ellipsis_lines,
-        | (alpha_words * 5 >= n_words * 4) AS f_alpha_words,
-        | (stops >= 2) AS f_stopwords,
-        | ((n_words >= 50 AND n_words <= 100000) AND
-        |  (nonspace >= n_words * 3 AND nonspace <= n_words * 10) AND
-        |  (sym * 10 <= n_words) AND (bullet_lines * 10 <= n_lines * 9) AND
-        |  (ell_lines * 10 <= n_lines * 3) AND (alpha_words * 5 >= n_words * 4) AND
-        |  (stops >= 2)) AS keep
-        |FROM (SELECT doc_id,
-        |  len(regexp_split_to_array(text, '\\s+')) AS n_words,
-        |  len(string_split(text, chr(10))) AS n_lines,
-        |  length(regexp_replace(text, '\\s', '', 'g')) AS nonspace,
-        |  len(regexp_extract_all(text, '${TextOps.AlphaWordPattern}')) AS alpha_words,
-        |  len(regexp_extract_all(text, '${TextOps.SymbolPattern}')) AS sym,
-        |  len(regexp_extract_all(text, '${TextOps.BulletLinePattern}')) AS bullet_lines,
-        |  len(regexp_extract_all(text, '${TextOps.EllipsisLinePattern}')) AS ell_lines,
-        |  len(regexp_extract_all(lower(text), '${TextOps.EnStops}')) AS stops
-        | FROM documents) t""".stripMargin,
-    // q145: same missing-value definition and (ts, event_id)-ordered
-    // IGNORE NULLS frame; the fill copies a double, no arithmetic
-    "q145_locf_impute" ->
-      """SELECT event_id, user_id,
-        | (CASE WHEN event_type = 'error' THEN NULL ELSE value END) IS NULL
-        |   AS was_missing,
-        | last_value(CASE WHEN event_type = 'error' THEN NULL ELSE value END
-        |   IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value_filled
-        |FROM events""".stripMargin,
-    // q146: identical integer geometry — prefix sum, floor division,
-    // clamped segment bounds; generate_series is inclusive like
-    // Spark's sequence()
-    "q146_sequence_pack" ->
-      """WITH t AS (
-        |  SELECT doc_id, source,
-        |    len(regexp_split_to_array(text, '\s+')) AS n_tokens,
-        |    sum(len(regexp_split_to_array(text, '\s+')))
-        |      OVER (PARTITION BY source ORDER BY doc_id
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_tokens
-        |  FROM documents),
-        |g AS (
-        |  -- window sum is HUGEINT in DuckDB; pin everything BIGINT
-        |  SELECT doc_id, source, n_tokens,
-        |    CAST(cum_tokens AS BIGINT) AS cum_tokens,
-        |    CAST(cum_tokens - n_tokens AS BIGINT) AS start_tok,
-        |    CAST((cum_tokens - n_tokens) // 256 AS BIGINT) AS first_seq,
-        |    CAST((cum_tokens - 1) // 256 AS BIGINT) AS last_seq
-        |  FROM t),
-        |e AS (
-        |  SELECT *, unnest(generate_series(first_seq, last_seq)) AS seq_id FROM g)
-        |SELECT source, seq_id, doc_id,
-        | greatest(start_tok, seq_id * 256) - seq_id * 256 AS begin_off,
-        | least(cum_tokens, (seq_id + 1) * 256) - seq_id * 256 AS end_off,
-        | least(cum_tokens, (seq_id + 1) * 256) -
-        |   greatest(start_tok, seq_id * 256) AS n_seg_tokens,
-        | last_seq > first_seq AS straddles
-        |FROM e""".stripMargin,
-    // q147: the oracle re-derives the md5 weight vector per word
-    // (w(b) = hex8(md5('w_'||b)) % 2001 - 1000) — the engine looks the
-    // same weights up in a plan-literal array; both sums are exact
-    // BIGINT so the gate has no float boundary
-    // q158: integer bucket counts (q147's md5 hex convention),
-    // smoothed log ratios, per-doc fold in bucket order (list ORDER BY
-    // b + sequential list_sum — the deterministic-sum pattern), final
-    // order on the UNROUNDED weight
-    "q158_dsir_select" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |    unnest(regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ')) AS word
-        |  FROM documents),
-        |wb AS (SELECT doc_id,
-        |         CAST(('0x' || substr(md5(word), 1, 8))::BIGINT % 256 AS INTEGER) AS b
-        |       FROM w WHERE word <> ''),
-        |tgt AS (SELECT doc_id FROM documents WHERE source = 'src0'),
-        |twb AS (SELECT wb.doc_id, wb.b FROM wb JOIN tgt ON wb.doc_id = tgt.doc_id),
-        |tc AS (SELECT b, count(*) AS t FROM twb GROUP BY b),
-        |cc AS (SELECT b, count(*) AS c FROM wb GROUP BY b),
-        |nt AS (SELECT count(*) AS n_t FROM twb),
-        |nc AS (SELECT count(*) AS n_c FROM wb),
-        |r AS (SELECT CAST(g.range AS INTEGER) AS b,
-        |        ln(CAST(coalesce(tc.t, 0) + 1 AS DOUBLE) / (nt.n_t + 256)) -
-        |        ln(CAST(coalesce(cc.c, 0) + 1 AS DOUBLE) / (nc.n_c + 256)) AS lnr
-        |      FROM range(0, 256) g
-        |      LEFT JOIN tc ON tc.b = g.range
-        |      LEFT JOIN cc ON cc.b = g.range, nt, nc),
-        |d AS (SELECT doc_id, b, count(*) AS n FROM wb GROUP BY 1, 2),
-        |s AS (SELECT d.doc_id,
-        |        list_sum(list(CAST(d.n AS DOUBLE) * r.lnr ORDER BY d.b)) AS logw_raw
-        |      FROM d JOIN r ON d.b = r.b GROUP BY d.doc_id)
-        |SELECT doc_id, floor(logw_raw * 1000000 + 0.5) / 1000000 AS logw
-        |FROM s ORDER BY logw_raw DESC, doc_id LIMIT 50""".stripMargin,
-    "q147_linear_quality" ->
-      """SELECT doc_id, n_words, score, score >= 0 AS pass
-        |FROM (SELECT doc_id,
-        |  len(regexp_split_to_array(text, '\s+')) AS n_words,
-        |  CAST(list_sum(list_transform(regexp_split_to_array(text, '\s+'),
-        |    w -> ((('0x' || substr(md5('w_' ||
-        |      CAST((('0x' || substr(md5(w), 1, 8))::BIGINT % 256) AS VARCHAR)),
-        |      1, 8))::BIGINT % 2001) - 1000))) AS BIGINT) AS score
-        | FROM documents) t""".stripMargin,
-    // q204: q147's margin CTE + the q21 quality label, deterministic
-    // (score, doc_id) global rank, integer-division deciles (// ↔ div)
-    "q204_quality_lift" ->
-      s"""WITH sc AS (
-        |  SELECT doc_id,
-        |    CAST(list_sum(list_transform(regexp_split_to_array(text, '\\s+'),
-        |      w -> ((('0x' || substr(md5('w_' ||
-        |        CAST((('0x' || substr(md5(w), 1, 8))::BIGINT % 256) AS VARCHAR)),
-        |        1, 8))::BIGINT % 2001) - 1000))) AS BIGINT) AS score
-        |  FROM documents),
-        |lb AS (
-        |  SELECT doc_id,
-        |    ${TextOps.roundAtSql(
-             "least(n_chars / 500.0, 1.0) * 0.5 + " +
-             "least(stops / n_tokens * 5.0, 1.0) * 0.3 + " +
-             "(1.0 - least(punct / n_chars * 10.0, 1.0)) * 0.2", 6)} >= 0.5 AS label
-        |  FROM (SELECT doc_id,
-        |    CAST(length(text) AS DOUBLE) AS n_chars,
-        |    CAST(len(regexp_split_to_array(text, '\\s+')) AS DOUBLE) AS n_tokens,
-        |    CAST(len(regexp_extract_all(text, '${TextOps.PunctPattern}')) AS DOUBLE) AS punct,
-        |    CAST(len(regexp_extract_all(lower(text), '${TextOps.EnStops}')) AS DOUBLE) AS stops
-        |   FROM documents) t),
-        |j AS (SELECT sc.doc_id, sc.score, lb.label FROM sc JOIN lb USING (doc_id)),
-        |r AS (
-        |  SELECT j.*, row_number() OVER (ORDER BY score, doc_id) AS rn,
-        |    count(*) OVER () AS n
-        |  FROM j),
-        |d AS (SELECT ((rn - 1) * 10) // n + 1 AS decile, score, label FROM r)
-        |SELECT decile, count(*) AS n_docs,
-        |  ${TextOps.roundAtSql(
-             "CAST(sum(score) AS DOUBLE) / CAST(count(*) AS DOUBLE)", 6)} AS mean_score,
-        |  ${TextOps.roundAtSql(
-             "CAST(sum(CASE WHEN label THEN 1 ELSE 0 END) AS DOUBLE) / " +
-               "CAST(count(*) AS DOUBLE)", 6)} AS pos_rate
-        |FROM d GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q205: exact per-dim centroid means, index-order distance fold,
-    // rank on the raw d2 with vec_id ties
-    "q205_embedding_outliers" ->
-      """WITH e AS (
-        |  SELECT vec_id, CAST(label AS INTEGER) AS label,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-        |  FROM embeddings),
-        |flat AS (
-        |  SELECT vec_id, unnest(range(1, len(emb) + 1)) AS pos, unnest(emb) AS v
-        |  FROM e),
-        |c AS (
-        |  SELECT list(m ORDER BY pos) AS cent
-        |  FROM (SELECT pos, avg(v) AS m FROM flat GROUP BY pos) t),
-        |d AS (
-        |  SELECT e.vec_id, e.label,
-        |    list_sum(list_transform(range(1, len(e.emb) + 1),
-        |      i -> (e.emb[i] - c.cent[i]) * (e.emb[i] - c.cent[i]))) AS d2
-        |  FROM e CROSS JOIN c)
-        |SELECT rank, vec_id, label, round(d2, 6) AS d2 FROM (
-        |  SELECT CAST(row_number() OVER (ORDER BY d2 DESC, vec_id) AS BIGINT) AS rank,
-        |    vec_id, label, d2
-        |  FROM d) t
-        |WHERE rank <= 20 ORDER BY rank""".stripMargin,
-    // q148: each gate is its certifying oracle's fragment verbatim —
-    // quality/lang from q78, the seven rules from q144, keepers from
-    // q77, the contamination hits from q88
-    "q148_gate_log" ->
-      s"""WITH t AS (
-        |  SELECT doc_id,
-        |    CAST(length(text) AS DOUBLE) AS n_chars,
-        |    CAST(len(regexp_split_to_array(text, '\\s+')) AS DOUBLE) AS n_tokens_d,
-        |    CAST(len(regexp_extract_all(text, '${TextOps.PunctPattern}')) AS DOUBLE) AS punct,
-        |    CAST(len(regexp_extract_all(lower(text), '${TextOps.EnStops}')) AS DOUBLE) AS stops_d,
-        |    len(regexp_extract_all(text, '${TextOps.CjkPattern}')) AS zh,
-        |    len(regexp_extract_all(lower(text), '${TextOps.EnStops}')) AS en,
-        |    len(regexp_extract_all(lower(text), '${TextOps.EsStops}')) AS es,
-        |    len(regexp_extract_all(lower(text), '${TextOps.DeStops}')) AS de,
-        |    len(regexp_extract_all(lower(text), '${TextOps.FrStops}')) AS fr,
-        |    len(regexp_split_to_array(text, '\\s+')) AS n_words,
-        |    len(string_split(text, chr(10))) AS n_lines,
-        |    length(regexp_replace(text, '\\s', '', 'g')) AS nonspace,
-        |    len(regexp_extract_all(text, '${TextOps.AlphaWordPattern}')) AS alpha_words,
-        |    len(regexp_extract_all(text, '${TextOps.SymbolPattern}')) AS sym,
-        |    len(regexp_extract_all(text, '${TextOps.BulletLinePattern}')) AS bullet_lines,
-        |    len(regexp_extract_all(text, '${TextOps.EllipsisLinePattern}')) AS ell_lines
-        |  FROM documents WHERE doc_id % 10 <> 7),
-        |scored AS (
-        |  SELECT doc_id,
-        |    (${TextOps.roundAtSql(
-             "least(n_chars / 500.0, 1.0) * 0.5 + " +
-             "least(stops_d / n_tokens_d * 5.0, 1.0) * 0.3 + " +
-             "(1.0 - least(punct / n_chars * 10.0, 1.0)) * 0.2", 6)} >= 0.5) AS f_quality,
-        |    ((CASE WHEN zh > 0 THEN 'zh'
-        |           WHEN de > en AND de > es AND de > fr THEN 'de'
-        |           WHEN es > en AND es > fr THEN 'es'
-        |           WHEN fr > en THEN 'fr'
-        |           ELSE 'en' END) = 'en') AS f_lang,
-        |    ((n_words >= 50 AND n_words <= 100000) AND
-        |     (nonspace >= n_words * 3 AND nonspace <= n_words * 10) AND
-        |     (sym * 10 <= n_words) AND (bullet_lines * 10 <= n_lines * 9) AND
-        |     (ell_lines * 10 <= n_lines * 3) AND (alpha_words * 5 >= n_words * 4) AND
-        |     (en >= 2)) AS f_gopher
-        |  FROM t),
-        |w AS (
-        |  SELECT doc_id,
-        |    regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS words
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id,
-        |    unnest(list_transform(range(0, greatest(len(words) - 7, 0)),
-        |      i -> array_to_string(list_slice(words, i + 1, i + 8), ' '))) AS gram
-        |  FROM w),
-        |ev AS (SELECT DISTINCT gram FROM g WHERE doc_id % 10 = 7),
-        |hits AS (
-        |  SELECT t2.doc_id, count(ev.gram) AS n_hits
-        |  FROM (SELECT doc_id, gram FROM g WHERE doc_id % 10 <> 7) t2
-        |  LEFT JOIN ev ON t2.gram = ev.gram
-        |  GROUP BY t2.doc_id),
-        |keepers AS (
-        |  SELECT min(doc_id) AS doc_id FROM documents
-        |  GROUP BY md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')))),
-        |flags AS (
-        |  SELECT s.doc_id, s.f_quality, s.f_lang,
-        |    (k.doc_id IS NOT NULL) AS f_unique, s.f_gopher,
-        |    (coalesce(h.n_hits, 0) = 0) AS f_clean
-        |  FROM scored s
-        |  LEFT JOIN keepers k ON s.doc_id = k.doc_id
-        |  LEFT JOIN hits h ON s.doc_id = h.doc_id)
-        |SELECT doc_id, f_quality, f_lang, f_unique, f_gopher, f_clean,
-        | CAST((CASE WHEN f_quality THEN 0 ELSE 1 END) +
-        |      (CASE WHEN f_lang THEN 0 ELSE 1 END) +
-        |      (CASE WHEN f_unique THEN 0 ELSE 1 END) +
-        |      (CASE WHEN f_gopher THEN 0 ELSE 1 END) +
-        |      (CASE WHEN f_clean THEN 0 ELSE 1 END) AS BIGINT) AS n_fail,
-        | CASE WHEN NOT f_quality THEN 'quality'
-        |      WHEN NOT f_lang THEN 'lang'
-        |      WHEN NOT f_unique THEN 'duplicate'
-        |      WHEN NOT f_gopher THEN 'gopher'
-        |      WHEN NOT f_clean THEN 'contaminated'
-        |      ELSE 'none' END AS first_fail,
-        | (f_quality AND f_lang AND f_unique AND f_gopher AND f_clean) AS admitted
-        |FROM flags""".stripMargin,
-    // q149: same normalization + empty-word filter as the engine's
-    // wordRows; the roster left join keeps zero-word docs (NULL ttr)
-    "q149_lexical_diversity" ->
-      s"""WITH w AS (
-        |  SELECT doc_id,
-        |    unnest(regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ')) AS word
-        |  FROM documents),
-        |pw AS (
-        |  SELECT doc_id, word, count(*) AS n FROM w
-        |  WHERE word <> '' GROUP BY doc_id, word),
-        |pd AS (
-        |  SELECT doc_id, CAST(sum(n) AS BIGINT) AS n_words,
-        |    count(*) AS n_distinct,
-        |    CAST(sum(CASE WHEN n = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_hapax,
-        |    max(n) AS top_count
-        |  FROM pw GROUP BY doc_id)
-        |SELECT d.doc_id,
-        | coalesce(pd.n_words, 0) AS n_words,
-        | coalesce(pd.n_distinct, 0) AS n_distinct,
-        | coalesce(pd.n_hapax, 0) AS n_hapax,
-        | coalesce(pd.top_count, 0) AS top_count,
-        | ${TextOps.roundAtSql(
-             "CAST(pd.n_distinct AS DOUBLE) / pd.n_words", 6)} AS ttr
-        |FROM documents d LEFT JOIN pd ON d.doc_id = pd.doc_id""".stripMargin,
-    // q150: identical operation order to the q29 cosine oracle — an
-    // index-order fold for the squared norm, one sqrt, one divide per
-    // element — so every double matches bit-for-bit before rounding
-    "q150_embed_normalize" ->
-      s"""WITH n AS (
-        |  SELECT vec_id, embedding,
-        |    sqrt(list_sum(list_transform(embedding,
-        |      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS norm
-        |  FROM embeddings),
-        |u AS (
-        |  SELECT vec_id, norm,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE) / norm) AS unit
-        |  FROM n WHERE norm <> 0),
-        |uu AS (
-        |  SELECT vec_id, norm, unit,
-        |    sqrt(list_sum(list_transform(unit, x -> x * x))) AS unit_norm
-        |  FROM u)
-        |SELECT vec_id,
-        | CAST(unnest(range(0, len(unit))) AS BIGINT) AS dim,
-        | ${TextOps.roundAtSql("unnest(list_transform(unit, x -> x))", 6)} AS unit_v,
-        | ${TextOps.roundAtSql("norm", 6)} AS norm,
-        | (${TextOps.roundAtSql("unit_norm", 4)} = 1.0) AS unit_ok
-        |FROM uu""".stripMargin,
-    // q151: the engine's threshold Levenshtein returns -1 above the
-    // cap and is filtered out; the oracle computes the plain distance
-    // and applies the same <= cap — identical pair sets
-    "q151_neardup_edit" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')) AS norm
-        |  FROM documents),
-        |b AS (SELECT doc_id, norm, substr(norm, 1, 16) AS blk FROM t)
-        |SELECT a.doc_id AS doc_a, c.doc_id AS doc_b,
-        | CAST(levenshtein(a.norm, c.norm) AS BIGINT) AS dist,
-        | (levenshtein(a.norm, c.norm) = 0) AS exact_dup
-        |FROM b a JOIN b c ON a.blk = c.blk AND a.doc_id < c.doc_id
-        |WHERE abs(length(a.norm) - length(c.norm)) <= 8
-        |  AND levenshtein(a.norm, c.norm) <= 8""".stripMargin,
-    // q152: q151's CTEs + the stop-prefix block cap — blocks with more
-    // than 2 members contribute NO pairs (prefix membership is a pure
-    // function of the normalized text, so the oracle re-derives the
-    // same exclusions)
-    "q152_neardup_edit_capped" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')) AS norm
-        |  FROM documents),
-        |b AS (SELECT doc_id, norm, substr(norm, 1, 16) AS blk FROM t),
-        |bsz AS (SELECT blk, count(*) AS n FROM b GROUP BY 1)
-        |SELECT a.doc_id AS doc_a, c.doc_id AS doc_b,
-        | CAST(levenshtein(a.norm, c.norm) AS BIGINT) AS dist,
-        | (levenshtein(a.norm, c.norm) = 0) AS exact_dup
-        |FROM b a JOIN b c ON a.blk = c.blk AND a.doc_id < c.doc_id
-        |JOIN bsz ON bsz.blk = a.blk AND bsz.n <= 2
-        |WHERE abs(length(a.norm) - length(c.norm)) <= 8
-        |  AND levenshtein(a.norm, c.norm) <= 8""".stripMargin,
-    // q135: q25's pair CTEs for positives; negatives re-derive the
-    // same bucketed odd-row/lead pairing
-    "q135_contrastive_pairs" ->
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(
-        |      range(0, greatest(len(words) - 3, 0) + 1),
-        |      i -> array_to_string(list_slice(words, i + 1, i + 3), ' '))) AS sh
-        |  FROM (SELECT doc_id,
-        |          regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS words
-        |        FROM documents) w),
-        |keyed AS (
-        |  SELECT doc_id, sh,
-        |    list_aggregate(list_transform(sh, s -> md5(s)), 'min') AS minsh
-        |  FROM docs),
-        |cand AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-        |          len(list_distinct(list_concat(a.sh, b.sh))), 4) AS jaccard
-        |  FROM keyed a JOIN keyed b ON a.minsh = b.minsh AND a.doc_id < b.doc_id),
-        |p AS (SELECT doc_a, doc_b FROM cand WHERE jaccard >= 0.5),
-        |hk AS (
-        |  SELECT doc_id,
-        |    substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) AS bkt,
-        |    md5(CAST(doc_id AS VARCHAR)) AS mk
-        |  FROM documents),
-        |rnk AS (
-        |  SELECT doc_id,
-        |    row_number() OVER (PARTITION BY bkt ORDER BY mk) AS rn,
-        |    lead(doc_id) OVER (PARTITION BY bkt ORDER BY mk) AS partner
-        |  FROM hk),
-        |neg AS (
-        |  SELECT least(doc_id, partner) AS doc_a,
-        |    greatest(doc_id, partner) AS doc_b
-        |  FROM rnk WHERE rn % 2 = 1 AND partner IS NOT NULL),
-        |negc AS (
-        |  SELECT n.doc_a, n.doc_b FROM neg n
-        |  LEFT JOIN p ON n.doc_a = p.doc_a AND n.doc_b = p.doc_b
-        |  WHERE p.doc_a IS NULL)
-        |SELECT doc_a, doc_b, 1 AS label FROM p
-        |UNION ALL SELECT doc_a, doc_b, 0 FROM negc""".stripMargin,
-    // q134: two lead-window subqueries UNION ALL = the same pair
-    // multiset as the engine's one-pass explode; PMI parenthesization
-    // mirrored operation-for-operation
-    "q134_pmi_pairs" ->
-      """WITH words AS (
-        |  SELECT doc_id,
-        |    unnest(regexp_split_to_array(
-        |      trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ')) AS word,
-        |    generate_subscripts(regexp_split_to_array(
-        |      trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' '), 1) - 1 AS pos
-        |  FROM documents),
-        |wz AS (SELECT doc_id, word, pos FROM words WHERE word <> ''),
-        |pair_raw AS (
-        |  SELECT least(word, w1) AS a, greatest(word, w1) AS b
-        |  FROM (SELECT word, lead(word, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS w1
-        |        FROM wz) t WHERE w1 IS NOT NULL
-        |  UNION ALL
-        |  SELECT least(word, w2), greatest(word, w2)
-        |  FROM (SELECT word, lead(word, 2) OVER (PARTITION BY doc_id ORDER BY pos) AS w2
-        |        FROM wz) t WHERE w2 IS NOT NULL),
-        |pc AS (SELECT a, b, count(*) AS pair_n FROM pair_raw
-        |       GROUP BY 1, 2 HAVING count(*) >= 5),
-        |wc AS (SELECT word, count(*) AS n FROM wz GROUP BY 1),
-        |tot AS (SELECT CAST(count(*) AS DOUBLE) AS nw FROM wz),
-        |np AS (SELECT CAST(sum(greatest(L - 1, 0) + greatest(L - 2, 0)) AS DOUBLE) AS np
-        |       FROM (SELECT count(*) AS L FROM wz GROUP BY doc_id) l),
-        |scored AS (
-        |  SELECT pc.a, pc.b, pc.pair_n,
-        |    ln((CAST(pc.pair_n AS DOUBLE) / np.np) /
-        |       ((ca.n / tot.nw) * (cb.n / tot.nw))) AS pmi_raw
-        |  FROM pc JOIN wc ca ON pc.a = ca.word
-        |  JOIN wc cb ON pc.b = cb.word, tot, np)
-        |SELECT a, b, pair_n, floor(pmi_raw * 1000000 + 0.5) / 1000000 AS pmi
-        |FROM scored ORDER BY pmi_raw DESC, a, b LIMIT 50""".stripMargin,
-    // q133: identical window + tie-break
-    "q133_event_transitions" ->
-      """WITH s AS (
-        |  SELECT user_id, event_type,
-        |    lead(event_type) OVER (PARTITION BY user_id
-        |                           ORDER BY ts, event_id) AS next_type
-        |  FROM events)
-        |SELECT event_type, next_type, count(*) AS n
-        |FROM s WHERE next_type IS NOT NULL
-        |GROUP BY 1, 2""".stripMargin,
-    // q132: the window form IS the oracle — row_number <= 3 with the
-    // same total order, formatted with identical integer micro-units
-    "q132_grouped_topk" ->
-      s"""WITH scored AS (
-        |  SELECT doc_id, source,
-        |    ${TextOps.roundAtSql(
-             "least(n_chars / 500.0, 1.0) * 0.5 + " +
-             "least(stops / n_tokens * 5.0, 1.0) * 0.3 + " +
-             "(1.0 - least(punct / n_chars * 10.0, 1.0)) * 0.2", 6)} AS quality
-        |  FROM (SELECT doc_id, source,
-        |    CAST(length(text) AS DOUBLE) AS n_chars,
-        |    CAST(len(regexp_split_to_array(text, '\\s+')) AS DOUBLE) AS n_tokens,
-        |    CAST(len(regexp_extract_all(text, '${TextOps.PunctPattern}')) AS DOUBLE) AS punct,
-        |    CAST(len(regexp_extract_all(lower(text), '${TextOps.EnStops}')) AS DOUBLE) AS stops
-        |   FROM documents) t),
-        |r AS (
-        |  SELECT source, doc_id,
-        |    CAST(round(quality * 1000000) AS BIGINT) AS qm,
-        |    row_number() OVER (PARTITION BY source
-        |                       ORDER BY quality DESC, doc_id) AS rn
-        |  FROM scored)
-        |SELECT source,
-        | string_agg(doc_id || ':' || qm, ',' ORDER BY rn) AS top_docs
-        |FROM r WHERE rn <= 3 GROUP BY source""".stripMargin,
-    // q131: the same adjacency join over the two postings; DuckDB's
-    // word stream re-derives 0-based positions via the unnest ordinal
-    "q131_phrase_search" ->
-      """WITH words AS (
-        |  SELECT doc_id,
-        |    unnest(regexp_split_to_array(
-        |      trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ')) AS word,
-        |    generate_subscripts(regexp_split_to_array(
-        |      trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' '), 1) - 1 AS pos
-        |  FROM documents),
-        |wz AS (SELECT doc_id, word, pos FROM words WHERE word <> '')
-        |SELECT a.doc_id, count(*) AS n_occurrences
-        |FROM (SELECT doc_id, pos FROM wz WHERE word = 'table') a
-        |JOIN (SELECT doc_id, pos - 1 AS pos FROM wz WHERE word = 'hash') b
-        |  ON a.doc_id = b.doc_id AND a.pos = b.pos
-        |GROUP BY a.doc_id""".stripMargin,
-    // q130: same formula with IDENTICAL parenthesization and literal
-    // arithmetic ((1.2 + 1), not 2.2 — the engines must round the
-    // same IEEE operations, not just the same math). The numerator
-    // casts to DOUBLE explicitly: bare-decimal × BIGINT evaluates in
-    // DuckDB DECIMAL (exact 2.2), not the engine's IEEE double 2.2 —
-    // one ulp apart, enough to flip a near-tied raw-score ORDER BY
-    // (the q252 lesson, same latent bug here).
-    "q130_bm25_topk" ->
-      """WITH words AS (
-        |  SELECT doc_id,
-        |    unnest(regexp_split_to_array(
-        |      trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ')) AS word
-        |  FROM documents),
-        |wz AS (SELECT doc_id, word FROM words WHERE word <> ''),
-        |dl AS (SELECT doc_id, count(*) AS dl FROM wz GROUP BY 1),
-        |tf AS (SELECT doc_id, word, count(*) AS tf FROM wz
-        |       WHERE word IN ('data', 'analysis', 'model') GROUP BY 1, 2),
-        |df AS (SELECT word, count(DISTINCT doc_id) AS df FROM tf GROUP BY 1),
-        |n AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs FROM documents),
-        |ad AS (SELECT avg(dl) AS avgdl FROM dl),
-        |scored AS (
-        |  SELECT t.doc_id,
-        |    sum(ln((n.n_docs - d.df + 0.5) / (d.df + 0.5) + 1.0) *
-        |        (CAST(t.tf AS DOUBLE) * CAST((1.2 + 1) AS DOUBLE) /
-        |         (t.tf + CAST(1.2 AS DOUBLE) * (1.0 - 0.75 + CAST(0.75 AS DOUBLE) * l.dl / ad.avgdl)))) AS score_raw
-        |  FROM tf t JOIN df d USING (word) JOIN dl l ON t.doc_id = l.doc_id, n, ad
-        |  GROUP BY t.doc_id)
-        |SELECT doc_id, floor(score_raw * 1000000 + 0.5) / 1000000 AS bm25
-        |FROM scored ORDER BY score_raw DESC, doc_id LIMIT 20""".stripMargin,
-    // q129: the same two-pass band (quantile_cont = Spark percentile),
-    // floor'd to integers so the clip is exact cross-engine
-    "q129_winsorize" ->
-      """WITH sized AS (
-        |  SELECT doc_id, source, CAST(length(text) AS BIGINT) AS n_chars
-        |  FROM documents),
-        |bands AS (
-        |  SELECT source,
-        |    CAST(floor(quantile_cont(n_chars, 0.05)) AS BIGINT) AS p_lo,
-        |    CAST(floor(quantile_cont(n_chars, 0.95)) AS BIGINT) AS p_hi
-        |  FROM sized GROUP BY source)
-        |SELECT s.doc_id, s.source, s.n_chars,
-        | greatest(b.p_lo, least(b.p_hi, s.n_chars)) AS n_chars_clipped,
-        | s.n_chars < b.p_lo OR s.n_chars > b.p_hi AS is_outlier
-        |FROM sized s JOIN bands b ON s.source = b.source""".stripMargin,
-    // q128: q83's packing CTEs aggregated per shard — the manifest
-    // the export's read-back must reproduce from disk
-    "q128_shard_export" ->
-      """WITH t AS (
-        |  SELECT doc_id, source,
-        |    CAST(len(regexp_split_to_array(text, '\s+')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, source, n_tokens,
-        |    CAST(sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
-        |  FROM t),
-        |p AS (
-        |  SELECT doc_id, source, n_tokens,
-        |    CAST(floor(CAST(cum_tokens - n_tokens AS DOUBLE) / 4096) AS BIGINT) AS shard_id
-        |  FROM c)
-        |SELECT source, shard_id, count(*) AS n_docs,
-        | CAST(sum(n_tokens) AS BIGINT) AS shard_tokens,
-        | CAST(sum(doc_id) AS BIGINT) AS sum_ids,
-        | min(doc_id) AS min_id, max(doc_id) AS max_id
-        |FROM p GROUP BY 1, 2""".stripMargin,
-    "q84_unigram_logprob" ->
-      s"""WITH words AS (
-        |  SELECT doc_id,
-        |    unnest(regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ')) AS word
-        |  FROM documents),
-        |wf AS (SELECT doc_id, word FROM words WHERE word <> ''),
-        |freq AS (SELECT word, count(*) AS wn FROM wf GROUP BY 1),
-        |tot AS (SELECT CAST(sum(wn) AS BIGINT) AS total FROM freq)
-        |SELECT doc_id, count(*) AS n_tokens,
-        | ${TextOps.roundAtSql("avg(ln(CAST(wn AS DOUBLE) / total))", 6)} AS avg_logprob
-        |FROM wf JOIN freq USING (word) CROSS JOIN tot
-        |GROUP BY doc_id""".stripMargin,
-    // q85: session_window's end bound is EXCLUSIVE (last event + gap),
-    // so an event landing exactly `gap` after its predecessor starts a
-    // NEW session — hence `>=` in the twin's new-session flag where
-    // q33's gaps-and-islands uses `>`, and session_evict = max(ts) + gap.
-    "q85_session_window" ->
-      """WITH ev AS (
-        |  SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, value FROM events),
-        |flagged AS (
-        |  SELECT *, CASE WHEN ts >= lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |                        + INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS new_s
-        |  FROM ev),
-        |numbered AS (
-        |  SELECT *, CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq
-        |  FROM flagged)
-        |SELECT user_id,
-        | min(ts) AS session_start,
-        | max(ts) + INTERVAL 30 MINUTE AS session_evict,
-        | count(*) AS n_events, round(sum(value), 4) AS total_value
-        |FROM numbered GROUP BY user_id, session_seq""".stripMargin,
-    // q30/q40: the Rademacher hyperplane family is md5-derived
-    // (SimilarityOps.planes), so the oracle recomputes the exact same
-    // ±1 matrix and buckets. ±1 weights make each product exact in
-    // IEEE — only summation order matters, and list_sum's sequential
-    // fold already mirrors Spark's aggregate() (proven by q28/q29).
-    "q30_sim_ann_lsh" -> {
-      def sign(p: Int) =
-        s"(CASE WHEN substr(md5('${p}_' || CAST(i - 1 AS VARCHAR)), 1, 1) < '8' THEN 1.0 ELSE -1.0 END)"
-      val bucket = (0 until 6).map { p =>
-        s"(CASE WHEN list_sum(list_transform(range(1, len(emb) + 1), i -> emb[i] * ${sign(p)})) > 0 THEN ${1 << p} ELSE 0 END)"
-      }.mkString("\n      + ")
-      s"""WITH e AS (
-        |  SELECT vec_id, CAST(label AS INTEGER) AS label,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-        |  FROM embeddings),
-        |b AS (SELECT vec_id, label, emb,
-        |      $bucket AS bucket FROM e),
-        |q AS (SELECT emb AS q_emb, bucket AS qb FROM b WHERE vec_id = 0),
-        |probes AS (
-        |  SELECT qb AS pb FROM q
-        |  UNION ALL
-        |  SELECT xor(qb, 1 << CAST(j AS INTEGER)) FROM q, (SELECT unnest(range(6)) AS j) r),
-        |cand AS (
-        |  SELECT b.vec_id, b.label, b.emb, q.q_emb FROM b, q
-        |  WHERE b.vec_id <> 0 AND b.bucket IN (SELECT pb FROM probes)),
-        |s AS (
-        |  SELECT vec_id, label,
-        |    round(
-        |      list_sum(list_transform(range(1, len(emb) + 1), i -> emb[i] * q_emb[i])) /
-        |      (sqrt(list_sum(list_transform(range(1, len(emb) + 1), i -> emb[i] * emb[i]))) *
-        |       sqrt(list_sum(list_transform(range(1, len(q_emb) + 1), i -> q_emb[i] * q_emb[i])))), 4) AS cos
-        |  FROM cand)
-        |SELECT vec_id, label, cos FROM s ORDER BY cos DESC, vec_id LIMIT 10""".stripMargin
-    },
-    // q181: q30's plane/bucket replay + query margins per plane,
-    // the t=2 lowest-(margin, p) flips, probes = own bucket + flips
-    "q181_multiprobe_lsh" -> {
-      def sign(p: Int) =
-        s"(CASE WHEN substr(md5('${p}_' || CAST(i - 1 AS VARCHAR)), 1, 1) < '8' THEN 1.0 ELSE -1.0 END)"
-      val bucket = (0 until 6).map { p =>
-        s"(CASE WHEN list_sum(list_transform(range(1, len(emb) + 1), i -> emb[i] * ${sign(p)})) > 0 THEN ${1 << p} ELSE 0 END)"
-      }.mkString("\n      + ")
-      val margins = (0 until 6).map { p =>
-        s"SELECT $p AS p, round(abs(list_sum(list_transform(range(1, len(q_emb) + 1), i -> q_emb[i] * ${sign(p)}))), 4) AS m FROM q"
-      }.mkString("\n  UNION ALL ")
-      s"""WITH e AS (
-        |  SELECT vec_id, CAST(label AS INTEGER) AS label,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-        |  FROM embeddings),
-        |b AS (SELECT vec_id, label, emb,
-        |      $bucket AS bucket FROM e),
-        |q AS (SELECT emb AS q_emb, bucket AS qb FROM b WHERE vec_id = 0),
-        |m AS (
-        |  $margins),
-        |flips AS (SELECT p FROM m ORDER BY m, p LIMIT 2),
-        |probes AS (
-        |  SELECT qb AS pb FROM q
-        |  UNION ALL
-        |  SELECT xor(qb, CAST(2 ** p AS INTEGER)) FROM q, flips),
-        |cand AS (
-        |  SELECT b.vec_id, b.label, b.emb, q.q_emb FROM b, q
-        |  WHERE b.vec_id <> 0 AND b.bucket IN (SELECT pb FROM probes)),
-        |s AS (
-        |  SELECT vec_id, label,
-        |    round(
-        |      list_sum(list_transform(range(1, len(emb) + 1), i -> emb[i] * q_emb[i])) /
-        |      (sqrt(list_sum(list_transform(range(1, len(emb) + 1), i -> emb[i] * emb[i]))) *
-        |       sqrt(list_sum(list_transform(range(1, len(q_emb) + 1), i -> q_emb[i] * q_emb[i])))), 4) AS cos
-        |  FROM cand)
-        |SELECT vec_id, label, cos FROM s ORDER BY cos DESC, vec_id LIMIT 10""".stripMargin
-    },
-    // q182: q25 blocking with md5-keyed grams, smoothed IDF dim, all
-    // three weighted sums folded in m order (0.0 for non-matching
-    // terms so both engines run the identical add sequence)
-    "q182_neardup_weighted" ->
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(
-        |      range(0, greatest(len(words) - 3, 0) + 1),
-        |      i -> array_to_string(list_slice(words, i + 1, i + 3), ' '))) AS sh
-        |  FROM (SELECT doc_id,
-        |          regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS words
-        |        FROM documents) w),
-        |dg AS (SELECT doc_id, md5(s) AS m FROM (SELECT doc_id, unnest(sh) AS s FROM docs) t),
-        |idf AS (
-        |  -- one mirrored ln per gram, rounded to a 1e-6 fixed-point
-        |  -- BIGINT: per-pair sums become exact integers, so no float
-        |  -- fold order needs pinning on either engine
-        |  SELECT m,
-        |    CAST(floor((ln(CAST((SELECT count(*) FROM documents) + 1 AS DOUBLE) / (count(*) + 1)) + 1.0)
-        |      * 1000000 + 0.5) AS BIGINT) AS idf_fp
-        |  FROM dg GROUP BY m),
-        |keyed AS (SELECT doc_id, min(m) AS minsh, list(m) AS sh FROM dg GROUP BY doc_id),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.sh AS sha, b.sh AS shb
-        |  FROM keyed a JOIN keyed b ON a.minsh = b.minsh AND a.doc_id < b.doc_id),
-        |ex AS (
-        |  SELECT doc_a, doc_b, unnest(list_distinct(list_concat(sha, shb))) AS m, sha, shb
-        |  FROM pairs),
-        |flg AS (
-        |  SELECT e.doc_a, e.doc_b, e.m,
-        |    list_contains(e.sha, e.m) AS in_a, list_contains(e.shb, e.m) AS in_b, i.idf_fp
-        |  FROM ex e JOIN idf i ON i.m = e.m),
-        |per AS (
-        |  SELECT doc_a, doc_b,
-        |    CAST(sum(CASE WHEN in_a AND in_b THEN idf_fp ELSE 0 END) AS BIGINT) AS wi,
-        |    CAST(sum(CASE WHEN in_a THEN idf_fp ELSE 0 END) AS BIGINT) AS wa,
-        |    CAST(sum(CASE WHEN in_b THEN idf_fp ELSE 0 END) AS BIGINT) AS wb
-        |  FROM flg GROUP BY doc_a, doc_b)
-        |SELECT doc_a, doc_b,
-        |  floor(CAST(wi AS DOUBLE) / least(wa, wb) * 10000 + 0.5) / 10000 AS w_containment
-        |FROM per
-        |WHERE floor(CAST(wi AS DOUBLE) / least(wa, wb) * 10000 + 0.5) / 10000 >= 0.6""".stripMargin,
-    "q40_neardup_emb_lsh" -> {
-      def sign(p: Int) =
-        s"(CASE WHEN substr(md5('${p}_' || CAST(i - 1 AS VARCHAR)), 1, 1) < '8' THEN 1.0 ELSE -1.0 END)"
-      val bucket = (0 until 6).map { p =>
-        s"(CASE WHEN list_sum(list_transform(range(1, len(emb) + 1), i -> emb[i] * ${sign(p)})) > 0 THEN ${1 << p} ELSE 0 END)"
-      }.mkString("\n      + ")
-      s"""WITH e AS (
-        |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-        |  FROM embeddings),
-        |b AS (SELECT vec_id, emb,
-        |      $bucket AS bucket FROM e),
-        |p AS (
-        |  SELECT a.vec_id AS vec_a, b2.vec_id AS vec_b,
-        |    round(
-        |      list_sum(list_transform(range(1, len(a.emb) + 1), i -> a.emb[i] * b2.emb[i])) /
-        |      (sqrt(list_sum(list_transform(range(1, len(a.emb) + 1), i -> a.emb[i] * a.emb[i]))) *
-        |       sqrt(list_sum(list_transform(range(1, len(b2.emb) + 1), i -> b2.emb[i] * b2.emb[i])))), 4) AS cos
-        |  FROM b a JOIN b b2 ON a.bucket = b2.bucket AND a.vec_id < b2.vec_id)
-        |SELECT vec_a, vec_b, cos FROM p WHERE cos >= 0.35""".stripMargin
-    },
-    "q86_unpivot" ->
-      """SELECT l_orderkey, l_linenumber, 'l_quantity' AS measure, l_quantity AS value
-        |FROM lineitem WHERE l_suppkey < 5
-        |UNION ALL
-        |SELECT l_orderkey, l_linenumber, 'l_extendedprice', l_extendedprice
-        |FROM lineitem WHERE l_suppkey < 5
-        |UNION ALL
-        |SELECT l_orderkey, l_linenumber, 'l_discount', l_discount
-        |FROM lineitem WHERE l_suppkey < 5
-        |UNION ALL
-        |SELECT l_orderkey, l_linenumber, 'l_tax', l_tax
-        |FROM lineitem WHERE l_suppkey < 5""".stripMargin,
-    // q88/q89 share the full-k-gram build: range(0, greatest(len-7,0))
-    // emits exactly the len-7 full 8-grams of a >=8-word doc and
-    // nothing for shorter docs — the twin of the Spark side's
-    // lead-window build filtered on the (k-1)-ahead word.
-    "q88_decontam" ->
-      s"""WITH w AS (
-        |  SELECT doc_id,
-        |    regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS words
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id,
-        |    unnest(list_transform(range(0, greatest(len(words) - 7, 0)),
-        |      i -> array_to_string(list_slice(words, i + 1, i + 8), ' '))) AS gram
-        |  FROM w),
-        |ev AS (SELECT DISTINCT gram FROM g WHERE doc_id % 10 = 7),
-        |hits AS (
-        |  SELECT t.doc_id, count(*) AS n_grams, count(ev.gram) AS n_hits
-        |  FROM (SELECT doc_id, gram FROM g WHERE doc_id % 10 <> 7) t
-        |  LEFT JOIN ev ON t.gram = ev.gram
-        |  GROUP BY t.doc_id)
-        |SELECT d.doc_id,
-        | coalesce(h.n_grams, 0) AS n_grams,
-        | coalesce(h.n_hits, 0) AS n_hits,
-        | ${TextOps.roundAtSql(
-             "CAST(coalesce(h.n_hits, 0) AS DOUBLE) / greatest(coalesce(h.n_grams, 0), 1)", 6)} AS contamination,
-        | coalesce(h.n_hits, 0) > 0 AS contaminated
-        |FROM (SELECT doc_id FROM documents WHERE doc_id % 10 <> 7) d
-        |LEFT JOIN hits h ON d.doc_id = h.doc_id""".stripMargin,
-    // q194: the q88 CTEs + a source rollup; rates rounded at 6
-    "q194_decontam_by_source" ->
-      s"""WITH w AS (
-        |  SELECT doc_id,
-        |    regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS words
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id,
-        |    unnest(list_transform(range(0, greatest(len(words) - 7, 0)),
-        |      i -> array_to_string(list_slice(words, i + 1, i + 8), ' '))) AS gram
-        |  FROM w),
-        |ev AS (SELECT DISTINCT gram FROM g WHERE doc_id % 10 = 7),
-        |hits AS (
-        |  SELECT t.doc_id, count(*) AS n_grams, count(ev.gram) AS n_hits
-        |  FROM (SELECT doc_id, gram FROM g WHERE doc_id % 10 <> 7) t
-        |  LEFT JOIN ev ON t.gram = ev.gram
-        |  GROUP BY t.doc_id),
-        |per AS (
-        |  SELECT d.doc_id, d.source,
-        |    coalesce(h.n_grams, 0) AS n_grams,
-        |    coalesce(h.n_hits, 0) AS n_hits,
-        |    coalesce(h.n_hits, 0) > 0 AS contaminated
-        |  FROM (SELECT doc_id, source FROM documents WHERE doc_id % 10 <> 7) d
-        |  LEFT JOIN hits h ON d.doc_id = h.doc_id)
-        |SELECT source, count(*) AS n_docs,
-        |  CAST(sum(CASE WHEN contaminated THEN 1 ELSE 0 END) AS BIGINT) AS n_contaminated,
-        |  ${TextOps.roundAtSql(
-             "CAST(sum(CASE WHEN contaminated THEN 1 ELSE 0 END) AS DOUBLE) / count(*)", 6)} AS doc_rate,
-        |  ${TextOps.roundAtSql(
-             "CAST(sum(n_hits) AS DOUBLE) / greatest(sum(n_grams), 1)", 6)} AS gram_rate
-        |FROM per GROUP BY source ORDER BY source""".stripMargin,
-    // q195: toFeatures replayed with struct_pack/list, then flattened
-    // to the gate's scalar shape (featuresFlat) — 'undefined'
-    // coalescing, the v0 guard and the [lon, lat] coordinates array
-    // are the O5–O7 semantics; lon/lat are untouched doubles on both
-    // engines so the bits come straight from the fixture parquet
-    "q195_hydro_features" ->
-      s"""$hydroFeaturesCte
-        |SELECT type, geometry.type AS geom_type,
-        |  geometry.coordinates[1] AS lon, geometry.coordinates[2] AS lat,
-        |  properties.record AS record, properties.id AS id,
-        |  properties.site AS site, properties.srs AS srs,
-        |  properties.siteCode AS siteCode,
-        |  properties.variables[1].variableCode AS var_code,
-        |  properties.variables[1].variableUnit AS var_unit,
-        |  properties.variables[1].noDataValue AS var_nodata,
-        |  properties.variables[1]."value" AS var_value,
-        |  properties.variables[1]."timeStamp" AS var_ts
-        |FROM feat""".stripMargin,
-    // q196: the O11 merge — min_by over the (id, value, timeStamp)
-    // ordering-key HEAD (the engine's xxhash64 metadata tail has no
-    // DuckDB twin; HydroFixture asserts the head is tie-free at
-    // generation time, making head-only ordering winner-equivalent),
-    // per-branch winners via FILTER, one group per siteCode, flattened
-    // to the gate's scalar shape (mergedFlat)
-    "q196_hydro_merged" ->
-      s"""$hydroFeaturesCte,
-        |$hydroMergedCte
-        |SELECT siteCode, geometry.type AS geom_type,
-        |  geometry.coordinates[1] AS lon, geometry.coordinates[2] AS lat,
-        |  properties.record AS record, properties.site AS site,
-        |  properties.srs AS srs,
-        |  properties.streamFlow.variableCode AS sf_code,
-        |  properties.streamFlow.variableUnit AS sf_unit,
-        |  properties.streamFlow.noDataValue AS sf_nodata,
-        |  properties.streamFlow."value" AS sf_value,
-        |  properties.streamFlow."timeStamp" AS sf_ts,
-        |  properties.gageHeight.variableCode AS gh_code,
-        |  properties.gageHeight.variableUnit AS gh_unit,
-        |  properties.gageHeight.noDataValue AS gh_nodata,
-        |  properties.gageHeight."value" AS gh_value,
-        |  properties.gageHeight."timeStamp" AS gh_ts
-        |FROM merged""".stripMargin,
-    // q197: the O13 collect-to-one, rendered as the gate's canonical
-    // pair (collectionCanonical): feature count + one SOH/STX/ETX-
-    // delimited string in siteCode order — coordinates as fixed-point
-    // micro-degrees through BIGINT so double→string rendering never
-    // enters the hash (the r17 hash-mismatch root cause)
-    "q197_hydro_collection" ->
-      s"""$hydroFeaturesCte,
-        |$hydroMergedCte,
-        |fs AS (
-        |  SELECT properties.siteCode AS sc,
-        |    concat_ws(chr(1), 'Feature', properties.siteCode,
-        |      geometry.type,
-        |      coalesce(CAST(CAST(floor(geometry.coordinates[1] * 1000000 + 0.5) AS BIGINT) AS VARCHAR), chr(2)),
-        |      coalesce(CAST(CAST(floor(geometry.coordinates[2] * 1000000 + 0.5) AS BIGINT) AS VARCHAR), chr(2)),
-        |      coalesce(properties.record, chr(2)),
-        |      coalesce(properties.site, chr(2)),
-        |      coalesce(properties.srs, chr(2)),
-        |      coalesce(properties.streamFlow.variableCode, chr(2)),
-        |      coalesce(properties.streamFlow.variableUnit, chr(2)),
-        |      coalesce(properties.streamFlow.noDataValue, chr(2)),
-        |      coalesce(properties.streamFlow."value", chr(2)),
-        |      coalesce(properties.streamFlow."timeStamp", chr(2)),
-        |      coalesce(properties.gageHeight.variableCode, chr(2)),
-        |      coalesce(properties.gageHeight.variableUnit, chr(2)),
-        |      coalesce(properties.gageHeight.noDataValue, chr(2)),
-        |      coalesce(properties.gageHeight."value", chr(2)),
-        |      coalesce(properties.gageHeight."timeStamp", chr(2))) AS fstr
-        |  FROM merged
-        |  WHERE geometry IS NOT NULL AND properties IS NOT NULL)
-        |SELECT CAST(count(*) AS BIGINT) AS n_features,
-        |  coalesce(string_agg(fstr, chr(3) ORDER BY sc), '') AS features
-        |FROM fs""".stripMargin,
-    "q89_dup_spans" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |    regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS words
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id,
-        |    unnest(list_transform(range(0, greatest(len(words) - 7, 0)),
-        |      i -> array_to_string(list_slice(words, i + 1, i + 8), ' '))) AS gram
-        |  FROM w)
-        |SELECT gram AS span,
-        | count(DISTINCT doc_id) AS n_docs,
-        | count(*) AS n_occ,
-        | min(doc_id) AS first_doc
-        |FROM g GROUP BY gram HAVING count(DISTINCT doc_id) >= 2""".stripMargin,
-    // q90: 4 hex digits < 2^16 keep the parsed value positive, so
-    // DuckDB's % equals Spark's pmod; lowercase-hex string ordering is
-    // plain ASCII on both engines.
-    "q90_train_order" ->
-      """WITH h AS (
-        |  SELECT doc_id,
-        |    md5('ord_' || CAST(doc_id AS VARCHAR)) AS hx
-        |  FROM documents)
-        |SELECT doc_id,
-        | ('0x' || substr(hx, 1, 4))::BIGINT % 16 AS shard,
-        | CAST(row_number() OVER (
-        |   PARTITION BY ('0x' || substr(hx, 1, 4))::BIGINT % 16
-        |   ORDER BY hx, doc_id) AS BIGINT) AS pos
-        |FROM h""".stripMargin,
-    "q91_knn_join" ->
-      """WITH e AS (
-        |  SELECT vec_id, CAST(label AS INTEGER) AS label,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-        |  FROM embeddings),
-        |q AS (SELECT vec_id AS q_id, emb AS q_emb FROM e WHERE vec_id < 20),
-        |s AS (
-        |  SELECT q.q_id, e.vec_id, e.label,
-        |    round(
-        |      list_sum(list_transform(range(1, len(e.emb) + 1), i -> e.emb[i] * q.q_emb[i])) /
-        |      (sqrt(list_sum(list_transform(range(1, len(e.emb) + 1), i -> e.emb[i] * e.emb[i]))) *
-        |       sqrt(list_sum(list_transform(range(1, len(q.q_emb) + 1), i -> q.q_emb[i] * q.q_emb[i])))), 4) AS cos
-        |  FROM e, q WHERE e.vec_id <> q.q_id),
-        |r AS (
-        |  SELECT *, CAST(row_number() OVER (
-        |    PARTITION BY q_id ORDER BY cos DESC, vec_id) AS BIGINT) AS rnk
-        |  FROM s)
-        |SELECT q_id, vec_id, label, cos, rnk FROM r WHERE rnk <= 3""".stripMargin,
-    // q206: the q91 ranking chain at k=10 + exact-long relevance,
-    // rank-ordered DCG fold (list(... ORDER BY rnk) ↔ sorted
-    // aggregate), guarded ideal-DCG fold, single-division metrics
-    "q206_retrieval_metrics" ->
-      s"""WITH e AS (
-        |  SELECT vec_id, CAST(label AS INTEGER) AS label,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-        |  FROM embeddings),
-        |q AS (SELECT vec_id AS q_id, label AS q_label, emb AS q_emb
-        |      FROM e WHERE vec_id < 20),
-        |s AS (
-        |  SELECT q.q_id, q.q_label, e.vec_id, e.label,
-        |    round(
-        |      list_sum(list_transform(range(1, len(e.emb) + 1), i -> e.emb[i] * q.q_emb[i])) /
-        |      (sqrt(list_sum(list_transform(range(1, len(e.emb) + 1), i -> e.emb[i] * e.emb[i]))) *
-        |       sqrt(list_sum(list_transform(range(1, len(q.q_emb) + 1), i -> q.q_emb[i] * q.q_emb[i])))), 4) AS cos
-        |  FROM e, q WHERE e.vec_id <> q.q_id),
-        |r AS (
-        |  SELECT *, CAST(row_number() OVER (
-        |    PARTITION BY q_id ORDER BY cos DESC, vec_id) AS BIGINT) AS rnk
-        |  FROM s),
-        |h AS (
-        |  SELECT q_id, q_label, rnk,
-        |    CASE WHEN label = q_label THEN 1 ELSE 0 END AS rel
-        |  FROM r WHERE rnk <= 10),
-        |lc AS (SELECT label AS lbl, count(*) AS n_lbl FROM e GROUP BY 1),
-        |pq AS (
-        |  SELECT q_id, q_label,
-        |    CAST(sum(rel) AS BIGINT) AS n_rel,
-        |    min(CASE WHEN rel = 1 THEN rnk END) AS first_rel,
-        |    list_sum(list(CAST(rel AS DOUBLE) * ln(2.0) / ln(CAST(rnk AS DOUBLE) + 1.0)
-        |      ORDER BY rnk)) AS dcg
-        |  FROM h GROUP BY 1, 2),
-        |w AS (
-        |  SELECT pq.*, least(lc.n_lbl - 1, 10) AS m
-        |  FROM pq JOIN lc ON lc.lbl = pq.q_label),
-        |i AS (
-        |  SELECT w.*,
-        |    CASE WHEN m >= 1 THEN
-        |      list_sum(list_transform(range(1, m + 1),
-        |        x -> ln(2.0) / ln(CAST(x AS DOUBLE) + 1.0)))
-        |    ELSE 0.0 END AS idcg
-        |  FROM w)
-        |SELECT q_id, q_label, n_rel,
-        |  ${TextOps.roundAtSql("CAST(n_rel AS DOUBLE) / 10.0", 6)} AS precision,
-        |  ${TextOps.roundAtSql(
-             "CASE WHEN first_rel IS NULL THEN 0.0 " +
-               "ELSE 1.0 / CAST(first_rel AS DOUBLE) END", 6)} AS mrr,
-        |  ${TextOps.roundAtSql(
-             "CASE WHEN idcg = 0.0 THEN 0.0 ELSE dcg / idcg END", 6)} AS ndcg
-        |FROM i ORDER BY q_id""".stripMargin,
-    "q92_incremental_dedup" ->
-      """WITH idx AS (
-        |  SELECT md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS fp,
-        |    min(doc_id) AS keeper
-        |  FROM documents WHERE doc_id % 5 <> 4 GROUP BY 1)
-        |SELECT d.doc_id,
-        | md5(trim(regexp_replace(lower(d.text), '[^a-z0-9]+', ' ', 'g'))) AS fp,
-        | idx.keeper IS NOT NULL AS is_dup,
-        | idx.keeper
-        |FROM documents d
-        |LEFT JOIN idx ON md5(trim(regexp_replace(lower(d.text), '[^a-z0-9]+', ' ', 'g'))) = idx.fp
-        |WHERE d.doc_id % 5 = 4""".stripMargin,
-    // q113: the selection recomputed with DuckDB's (single-threaded)
-    // global window — the distributed prefix sum must be row-identical
-    // to the naive ordered cumsum; quality is q21's shared formula
-    "q113_budget_select" ->
-      s"""WITH scored AS (
-        |  SELECT doc_id,
-        |    ${TextOps.roundAtSql(
-             "least(n_chars / 500.0, 1.0) * 0.5 + " +
-             "least(stops / n_tokens * 5.0, 1.0) * 0.3 + " +
-             "(1.0 - least(punct / n_chars * 10.0, 1.0)) * 0.2", 6)} AS quality,
-        |    CAST(n_tokens AS BIGINT) AS n_tokens
-        |  FROM (SELECT doc_id,
-        |    CAST(length(text) AS DOUBLE) AS n_chars,
-        |    CAST(len(regexp_split_to_array(text, '\\s+')) AS DOUBLE) AS n_tokens,
-        |    CAST(len(regexp_extract_all(text, '${TextOps.PunctPattern}')) AS DOUBLE) AS punct,
-        |    CAST(len(regexp_extract_all(lower(text), '${TextOps.EnStops}')) AS DOUBLE) AS stops
-        |   FROM documents) t),
-        |cum AS (
-        |  SELECT doc_id, quality, n_tokens,
-        |    CAST(sum(n_tokens) OVER (ORDER BY quality DESC, doc_id
-        |                             ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
-        |  FROM scored)
-        |SELECT doc_id, quality, n_tokens, cum_tokens
-        |FROM cum WHERE cum_tokens <= 20000""".stripMargin,
-    // q114: the merged layout state computed relationally — survivors
-    // of the delete/replace filter, plus the edits, plus the re-keyed
-    // inserts landing in a partition that didn't exist before the merge
-    "q114_merge_partitioned" ->
-      """WITH merged AS (
-        |  SELECT doc_id, text, source FROM documents
-        |  WHERE NOT (source IN ('src2','src5') AND doc_id % 23 IN (4, 6))
-        |  UNION ALL
-        |  SELECT doc_id, text || ' merged-edit', source FROM documents
-        |  WHERE source IN ('src2','src5') AND doc_id % 23 = 6
-        |  UNION ALL
-        |  SELECT doc_id + 2000000, text, 'src_new' FROM documents
-        |  WHERE source IN ('src2','src5') AND doc_id % 23 = 9)
-        |SELECT source, count(*) AS n_docs,
-        | CAST(sum(doc_id) AS BIGINT) AS sum_ids,
-        | CAST(sum(length(text)) AS BIGINT) AS total_chars
-        |FROM merged GROUP BY source""".stripMargin,
-    // q115: per-source p75 threshold via quantile_cont (the exact
-    // interpolated percentile Spark's `percentile` computes), then the
-    // gate; quality is q21's shared formula
-    "q115_percentile_gate" ->
-      s"""WITH scored AS (
-        |  SELECT doc_id, source,
-        |    ${TextOps.roundAtSql(
-             "least(n_chars / 500.0, 1.0) * 0.5 + " +
-             "least(stops / n_tokens * 5.0, 1.0) * 0.3 + " +
-             "(1.0 - least(punct / n_chars * 10.0, 1.0)) * 0.2", 6)} AS quality
-        |  FROM (SELECT doc_id, source,
-        |    CAST(length(text) AS DOUBLE) AS n_chars,
-        |    CAST(len(regexp_split_to_array(text, '\\s+')) AS DOUBLE) AS n_tokens,
-        |    CAST(len(regexp_extract_all(text, '${TextOps.PunctPattern}')) AS DOUBLE) AS punct,
-        |    CAST(len(regexp_extract_all(lower(text), '${TextOps.EnStops}')) AS DOUBLE) AS stops
-        |   FROM documents) t),
-        |th AS (
-        |  SELECT source, quantile_cont(quality, 0.75) AS threshold
-        |  FROM scored GROUP BY source)
-        |SELECT s.doc_id, s.source, s.quality, round(th.threshold, 6) AS threshold
-        |FROM scored s JOIN th USING (source)
-        |WHERE s.quality >= th.threshold""".stripMargin,
-    // q116: same word normalization as q44; postings ordered by doc_id
-    // (unique per group — total order), df band 2..5000 (the absolute
-    // upper cap bounds the postings buffer by construction; 5000
-    // admits the testdata's whole 31-word vocabulary so the gate
-    // compares 31 postings lists, not 1 — the round-14 low-row sweep)
-    "q116_inverted_index" ->
-      """WITH words AS (
-        |  SELECT doc_id,
-        |    unnest(regexp_split_to_array(
-        |      trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ')) AS word
-        |  FROM documents),
-        |tf AS (
-        |  SELECT word, doc_id, count(*) AS tf FROM words
-        |  WHERE word <> '' GROUP BY 1, 2),
-        |stats AS (
-        |  SELECT word, count(*) AS df, CAST(sum(tf) AS BIGINT) AS total_tf
-        |  FROM tf GROUP BY 1 HAVING count(*) BETWEEN 2 AND 5000)
-        |SELECT t.word, s.df, s.total_tf,
-        | string_agg(t.doc_id || ':' || t.tf, ',' ORDER BY t.doc_id) AS postings
-        |FROM tf t JOIN stats s USING (word)
-        |GROUP BY t.word, s.df, s.total_tf""".stripMargin,
-    // q117: the same chained min-over-filter stages; the scalar
-    // subqueries are the one-row stage counts
-    "q117_funnel" ->
-      """WITH v AS (
-        |  SELECT user_id, min(ts) AS t_view FROM events
-        |  WHERE event_type = 'view' GROUP BY 1),
-        |c AS (
-        |  SELECT e.user_id, min(e.ts) AS t_click FROM events e
-        |  JOIN v USING (user_id)
-        |  WHERE e.event_type = 'click' AND e.ts > v.t_view GROUP BY 1),
-        |p AS (
-        |  SELECT e.user_id, min(e.ts) AS t_purchase FROM events e
-        |  JOIN c USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND e.ts > c.t_click GROUP BY 1)
-        |SELECT (SELECT count(*) FROM v) AS n_view,
-        | (SELECT count(*) FROM c) AS n_click,
-        | (SELECT count(*) FROM p) AS n_purchase""".stripMargin,
-    // q118: same collapse → cohort-min → triangle count; week offsets
-    // are exact multiples of 7 days (both sides week-truncate first)
-    "q118_cohort_retention" ->
-      """WITH act AS (
-        |  SELECT DISTINCT user_id, CAST(date_trunc('week', ts) AS TIMESTAMP) AS week
-        |  FROM events),
-        |coh AS (
-        |  SELECT user_id, week, min(week) OVER (PARTITION BY user_id) AS cohort_week
-        |  FROM act)
-        |SELECT cohort_week,
-        | CAST(date_diff('day', cohort_week, week) // 7 AS BIGINT) AS week_offset,
-        | count(*) AS n_active
-        |FROM coh GROUP BY 1, 2""".stripMargin,
-    // q119: q25's pair CTEs verbatim (the same verified dup graph),
-    // then 5 unrolled power iterations — both engines run EXACTLY the
-    // same round count, so the float drift is sub-rounding
-    "q119_pagerank_dups" ->
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(
-        |      range(0, greatest(len(words) - 3, 0) + 1),
-        |      i -> array_to_string(list_slice(words, i + 1, i + 3), ' '))) AS sh
-        |  FROM (SELECT doc_id,
-        |          regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS words
-        |        FROM documents) w),
-        |keyed AS (
-        |  SELECT doc_id, sh,
-        |    list_aggregate(list_transform(sh, s -> md5(s)), 'min') AS minsh
-        |  FROM docs),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-        |          len(list_distinct(list_concat(a.sh, b.sh))), 4) AS jaccard
-        |  FROM keyed a JOIN keyed b ON a.minsh = b.minsh AND a.doc_id < b.doc_id),
-        |p AS (SELECT doc_a, doc_b FROM pairs WHERE jaccard >= 0.5),
-        |edges AS (
-        |  SELECT doc_a AS src, doc_b AS dst FROM p
-        |  UNION ALL SELECT doc_b AS src, doc_a AS dst FROM p),
-        |deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY 1),
-        |r0 AS (SELECT src AS id, 1.0 AS pr FROM deg),
-        |r1 AS (SELECT e.dst AS id, 0.15 + 0.85 * sum(r.pr / d.deg) AS pr
-        |       FROM edges e JOIN deg d ON e.src = d.src JOIN r0 r ON e.src = r.id GROUP BY 1),
-        |r2 AS (SELECT e.dst AS id, 0.15 + 0.85 * sum(r.pr / d.deg) AS pr
-        |       FROM edges e JOIN deg d ON e.src = d.src JOIN r1 r ON e.src = r.id GROUP BY 1),
-        |r3 AS (SELECT e.dst AS id, 0.15 + 0.85 * sum(r.pr / d.deg) AS pr
-        |       FROM edges e JOIN deg d ON e.src = d.src JOIN r2 r ON e.src = r.id GROUP BY 1),
-        |r4 AS (SELECT e.dst AS id, 0.15 + 0.85 * sum(r.pr / d.deg) AS pr
-        |       FROM edges e JOIN deg d ON e.src = d.src JOIN r3 r ON e.src = r.id GROUP BY 1),
-        |r5 AS (SELECT e.dst AS id, 0.15 + 0.85 * sum(r.pr / d.deg) AS pr
-        |       FROM edges e JOIN deg d ON e.src = d.src JOIN r4 r ON e.src = r.id GROUP BY 1)
-        |SELECT id AS doc_id, floor(pr * 1000000 + 0.5) / 1000000 AS pr
-        |FROM r5""".stripMargin,
-    // q120: same hash-derived u and A-Res key; the ORDER BY defines
-    // top-k membership only (the compare sorts rows itself)
-    "q120_weighted_sample" ->
-      s"""WITH scored AS (
-        |  SELECT doc_id, source,
-        |    ${TextOps.roundAtSql(
-             "least(n_chars / 500.0, 1.0) * 0.5 + " +
-             "least(stops / n_tokens * 5.0, 1.0) * 0.3 + " +
-             "(1.0 - least(punct / n_chars * 10.0, 1.0)) * 0.2", 6)} AS quality,
-        |    (('0x' || substr(md5('ws_' || CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT + 0.5) / 65536.0 AS u
-        |  FROM (SELECT doc_id, source,
-        |    CAST(length(text) AS DOUBLE) AS n_chars,
-        |    CAST(len(regexp_split_to_array(text, '\\s+')) AS DOUBLE) AS n_tokens,
-        |    CAST(len(regexp_extract_all(text, '${TextOps.PunctPattern}')) AS DOUBLE) AS punct,
-        |    CAST(len(regexp_extract_all(lower(text), '${TextOps.EnStops}')) AS DOUBLE) AS stops
-        |   FROM documents) t)
-        |SELECT doc_id, source, quality,
-        | floor(power(u, 1.0 / greatest(quality, 0.001)) * 1000000 + 0.5) / 1000000 AS samp_key
-        |FROM scored
-        |ORDER BY power(u, 1.0 / greatest(quality, 0.001)) DESC, doc_id
-        |LIMIT 200""".stripMargin,
-    // q121: the from-scratch aggregation over ALL events — the
-    // incremental state merge must be indistinguishable from it
-    "q121_incremental_rollup" ->
-      """SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS day,
-        | count(*) AS n, round(sum(value), 2) AS total,
-        | round(sum(value), 2) / count(*) AS avg_value
-        |FROM events GROUP BY 1, 2""".stripMargin,
-    // q122: the same six constraints as scalar aggregates
-    "q122_quality_audit" ->
-      """WITH li AS (
-        |  SELECT
-        |    sum(CASE WHEN l_quantity < 1 OR l_quantity > 60 THEN 1 ELSE 0 END) AS qty_range,
-        |    sum(CASE WHEN l_shipdate IS NULL THEN 1 ELSE 0 END) AS ship_null,
-        |    sum(CASE WHEN l_extendedprice <= 0 THEN 1 ELSE 0 END) AS price_pos
-        |  FROM lineitem),
-        |ord AS (
-        |  SELECT count(*) - count(DISTINCT o_orderkey) AS okey_dup,
-        |    sum(CASE WHEN o_totalprice <= 0 THEN 1 ELSE 0 END) AS tprice_pos
-        |  FROM orders),
-        |fk AS (
-        |  SELECT count(*) AS cust_fk FROM orders o
-        |  LEFT JOIN customer c ON o.o_custkey = c.c_custkey
-        |  WHERE c.c_custkey IS NULL)
-        |SELECT 'lineitem_quantity_in_1_60' AS check_name, CAST(qty_range AS BIGINT) AS n_violations FROM li
-        |UNION ALL SELECT 'lineitem_shipdate_not_null', CAST(ship_null AS BIGINT) FROM li
-        |UNION ALL SELECT 'lineitem_price_positive', CAST(price_pos AS BIGINT) FROM li
-        |UNION ALL SELECT 'orders_orderkey_unique', CAST(okey_dup AS BIGINT) FROM ord
-        |UNION ALL SELECT 'orders_totalprice_positive', CAST(tprice_pos AS BIGINT) FROM ord
-        |UNION ALL SELECT 'orders_custkey_references_customer', cust_fk FROM fk""".stripMargin,
-    // q125: same gram build as q88 with positions; n_grams counts
-    // DISTINCT positions (a gram in both suites joins twice)
-    "q125_multi_decontam" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |    regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS words
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id, i AS pos,
-        |    array_to_string(list_slice(words, i + 1, i + 8), ' ') AS gram
-        |  FROM w, unnest(range(0, greatest(len(words) - 7, 0))) AS t(i)),
-        |ev AS (
-        |  SELECT DISTINCT gram, 'a' AS suite FROM g WHERE doc_id % 10 = 7
-        |  UNION SELECT DISTINCT gram, 'b' FROM g WHERE doc_id % 10 = 3),
-        |hits AS (
-        |  SELECT t.doc_id, count(DISTINCT t.pos) AS n_grams,
-        |    CAST(sum(CASE WHEN ev.suite = 'a' THEN 1 ELSE 0 END) AS BIGINT) AS hits_a,
-        |    CAST(sum(CASE WHEN ev.suite = 'b' THEN 1 ELSE 0 END) AS BIGINT) AS hits_b
-        |  FROM (SELECT doc_id, pos, gram FROM g WHERE doc_id % 10 NOT IN (7, 3)) t
-        |  LEFT JOIN ev ON t.gram = ev.gram
-        |  GROUP BY t.doc_id)
-        |SELECT d.doc_id,
-        | coalesce(h.n_grams, 0) AS n_grams,
-        | coalesce(h.hits_a, 0) AS hits_a,
-        | coalesce(h.hits_b, 0) AS hits_b,
-        | coalesce(h.hits_a, 0) + coalesce(h.hits_b, 0) > 0 AS contaminated
-        |FROM (SELECT doc_id FROM documents WHERE doc_id % 10 NOT IN (7, 3)) d
-        |LEFT JOIN hits h ON d.doc_id = h.doc_id""".stripMargin,
-    // q126: q61's cluster CTEs + the same packed-integer arg_max
-    "q126_cluster_survivors" ->
-      s"""WITH RECURSIVE docs AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(
-        |      range(0, greatest(len(words) - 3, 0) + 1),
-        |      i -> array_to_string(list_slice(words, i + 1, i + 3), ' '))) AS sh
-        |  FROM (SELECT doc_id,
-        |          regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS words
-        |        FROM documents) w),
-        |keyed AS (
-        |  SELECT doc_id, sh,
-        |    list_aggregate(list_transform(sh, s -> md5(s)), 'min') AS minsh
-        |  FROM docs),
-        |cand AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-        |          len(list_distinct(list_concat(a.sh, b.sh))), 4) AS jaccard
-        |  FROM keyed a JOIN keyed b ON a.minsh = b.minsh AND a.doc_id < b.doc_id),
-        |dup AS (SELECT doc_a, doc_b FROM cand WHERE jaccard >= 0.5),
-        |edges AS (SELECT doc_a AS a, doc_b AS b FROM dup
-        |          UNION SELECT doc_b, doc_a FROM dup),
-        |reach AS (SELECT a, b FROM edges
-        |          UNION SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-        |clusters AS (
-        |  SELECT a AS doc_id, least(a, min(b)) AS cluster
-        |  FROM reach GROUP BY a),
-        |scored AS (
-        |  SELECT doc_id,
-        |    ${TextOps.roundAtSql(
-             "least(n_chars / 500.0, 1.0) * 0.5 + " +
-             "least(stops / n_tokens * 5.0, 1.0) * 0.3 + " +
-             "(1.0 - least(punct / n_chars * 10.0, 1.0)) * 0.2", 6)} AS quality
-        |  FROM (SELECT doc_id,
-        |    CAST(length(text) AS DOUBLE) AS n_chars,
-        |    CAST(len(regexp_split_to_array(text, '\\s+')) AS DOUBLE) AS n_tokens,
-        |    CAST(len(regexp_extract_all(text, '${TextOps.PunctPattern}')) AS DOUBLE) AS punct,
-        |    CAST(len(regexp_extract_all(lower(text), '${TextOps.EnStops}')) AS DOUBLE) AS stops
-        |   FROM documents) t)
-        |SELECT c.cluster, count(*) AS n_members,
-        | arg_max(c.doc_id,
-        |   CAST(round(s.quality * 1000000) AS BIGINT) * 1000000000 - c.doc_id) AS survivor_id,
-        | max(s.quality) AS survivor_quality
-        |FROM clusters c JOIN scored s ON c.doc_id = s.doc_id
-        |GROUP BY c.cluster""".stripMargin,
-    // q127: q78's gate CTEs + q88's contamination CTEs + q113's
-    // cumsum, composed — each piece verbatim from its own oracle
-    "q127_curation_pipeline" ->
-      s"""WITH scored AS (
-        |  SELECT doc_id,
-        |    ${TextOps.roundAtSql(
-             "least(n_chars / 500.0, 1.0) * 0.5 + " +
-             "least(stops / n_tokens * 5.0, 1.0) * 0.3 + " +
-             "(1.0 - least(punct / n_chars * 10.0, 1.0)) * 0.2", 6)} AS quality,
-        |    CASE WHEN zh > 0 THEN 'zh'
-        |         WHEN de > en AND de > es AND de > fr THEN 'de'
-        |         WHEN es > en AND es > fr THEN 'es'
-        |         WHEN fr > en THEN 'fr'
-        |         ELSE 'en' END AS lang_pred,
-        |    CAST(n_tokens AS BIGINT) AS n_tokens
-        |  FROM (SELECT doc_id,
-        |    CAST(length(text) AS DOUBLE) AS n_chars,
-        |    CAST(len(regexp_split_to_array(text, '\\s+')) AS DOUBLE) AS n_tokens,
-        |    CAST(len(regexp_extract_all(text, '${TextOps.PunctPattern}')) AS DOUBLE) AS punct,
-        |    CAST(len(regexp_extract_all(lower(text), '${TextOps.EnStops}')) AS DOUBLE) AS stops,
-        |    len(regexp_extract_all(text, '${TextOps.CjkPattern}')) AS zh,
-        |    len(regexp_extract_all(lower(text), '${TextOps.EnStops}')) AS en,
-        |    len(regexp_extract_all(lower(text), '${TextOps.EsStops}')) AS es,
-        |    len(regexp_extract_all(lower(text), '${TextOps.DeStops}')) AS de,
-        |    len(regexp_extract_all(lower(text), '${TextOps.FrStops}')) AS fr
-        |   FROM documents) t),
-        |keepers AS (
-        |  SELECT min(doc_id) AS doc_id FROM documents
-        |  GROUP BY md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')))),
-        |w AS (
-        |  SELECT doc_id,
-        |    regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS words
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id,
-        |    unnest(list_transform(range(0, greatest(len(words) - 7, 0)),
-        |      i -> array_to_string(list_slice(words, i + 1, i + 8), ' '))) AS gram
-        |  FROM w),
-        |ev AS (SELECT DISTINCT gram FROM g WHERE doc_id % 10 = 7),
-        |hits AS (
-        |  SELECT t.doc_id, count(ev.gram) AS n_hits
-        |  FROM (SELECT doc_id, gram FROM g WHERE doc_id % 10 <> 7) t
-        |  LEFT JOIN ev ON t.gram = ev.gram
-        |  GROUP BY t.doc_id),
-        |clean AS (
-        |  SELECT d.doc_id
-        |  FROM (SELECT doc_id FROM documents WHERE doc_id % 10 <> 7) d
-        |  LEFT JOIN hits h ON d.doc_id = h.doc_id
-        |  WHERE coalesce(h.n_hits, 0) = 0),
-        |base AS (
-        |  SELECT s.doc_id, s.quality, s.lang_pred, s.n_tokens
-        |  FROM scored s
-        |  JOIN keepers k ON s.doc_id = k.doc_id
-        |  JOIN clean c ON s.doc_id = c.doc_id
-        |  WHERE s.quality >= 0.5 AND s.lang_pred = 'en'),
-        |cum AS (
-        |  SELECT doc_id, quality, lang_pred, n_tokens,
-        |    CAST(sum(n_tokens) OVER (ORDER BY quality DESC, doc_id
-        |                             ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
-        |  FROM base)
-        |SELECT doc_id, quality, lang_pred, n_tokens, cum_tokens
-        |FROM cum WHERE cum_tokens <= 10000""".stripMargin,
-    // q124: exact NDV + literal TRUE — the sketch side never reaches
-    // the oracle, only its envelope verdict does
-    "q124_column_stats_sketch" ->
-      """SELECT 'l_quantity' AS column_name,
-        | count(DISTINCT l_quantity) AS ndv, TRUE AS in_envelope FROM lineitem
-        |UNION ALL SELECT 'l_extendedprice',
-        | count(DISTINCT l_extendedprice), TRUE FROM lineitem
-        |UNION ALL SELECT 'l_discount',
-        | count(DISTINCT l_discount), TRUE FROM lineitem""".stripMargin,
-    // q123: the same one-pass stats, unpivoted by UNION ALL
-    // q157: integer-exact equal-width bins, Laplace-smoothed
-    // proportions, fixed left-to-right PSI chain (see sourceDrift)
-    "q157_source_drift" ->
-      """WITH g AS (SELECT min(n_chars) AS mn, max(n_chars) AS mx FROM documents),
-        |b AS (SELECT source,
-        |        ((n_chars - g.mn) * 10) // (g.mx - g.mn + 1) AS bin
-        |      FROM documents, g),
-        |s AS (SELECT source,
-        |        count(*) FILTER (bin = 0) AS c0,
-        |        count(*) FILTER (bin = 1) AS c1,
-        |        count(*) FILTER (bin = 2) AS c2,
-        |        count(*) FILTER (bin = 3) AS c3,
-        |        count(*) FILTER (bin = 4) AS c4,
-        |        count(*) FILTER (bin = 5) AS c5,
-        |        count(*) FILTER (bin = 6) AS c6,
-        |        count(*) FILTER (bin = 7) AS c7,
-        |        count(*) FILTER (bin = 8) AS c8,
-        |        count(*) FILTER (bin = 9) AS c9,
-        |        count(*) AS n_src
-        |      FROM b GROUP BY source),
-        |e AS (SELECT
-        |       count(*) FILTER (bin = 0) AS e0,
-        |       count(*) FILTER (bin = 1) AS e1,
-        |       count(*) FILTER (bin = 2) AS e2,
-        |       count(*) FILTER (bin = 3) AS e3,
-        |       count(*) FILTER (bin = 4) AS e4,
-        |       count(*) FILTER (bin = 5) AS e5,
-        |       count(*) FILTER (bin = 6) AS e6,
-        |       count(*) FILTER (bin = 7) AS e7,
-        |       count(*) FILTER (bin = 8) AS e8,
-        |       count(*) FILTER (bin = 9) AS e9,
-        |       count(*) AS n_tot
-        |      FROM b)
-        |SELECT source, n_src AS n_docs,
-        | floor((((CAST(c0 + 1 AS DOUBLE) / (n_src + 10)) - (CAST(e0 + 1 AS DOUBLE) / (n_tot + 10))) * ln((CAST(c0 + 1 AS DOUBLE) / (n_src + 10)) / (CAST(e0 + 1 AS DOUBLE) / (n_tot + 10)))
-        | + ((CAST(c1 + 1 AS DOUBLE) / (n_src + 10)) - (CAST(e1 + 1 AS DOUBLE) / (n_tot + 10))) * ln((CAST(c1 + 1 AS DOUBLE) / (n_src + 10)) / (CAST(e1 + 1 AS DOUBLE) / (n_tot + 10)))
-        | + ((CAST(c2 + 1 AS DOUBLE) / (n_src + 10)) - (CAST(e2 + 1 AS DOUBLE) / (n_tot + 10))) * ln((CAST(c2 + 1 AS DOUBLE) / (n_src + 10)) / (CAST(e2 + 1 AS DOUBLE) / (n_tot + 10)))
-        | + ((CAST(c3 + 1 AS DOUBLE) / (n_src + 10)) - (CAST(e3 + 1 AS DOUBLE) / (n_tot + 10))) * ln((CAST(c3 + 1 AS DOUBLE) / (n_src + 10)) / (CAST(e3 + 1 AS DOUBLE) / (n_tot + 10)))
-        | + ((CAST(c4 + 1 AS DOUBLE) / (n_src + 10)) - (CAST(e4 + 1 AS DOUBLE) / (n_tot + 10))) * ln((CAST(c4 + 1 AS DOUBLE) / (n_src + 10)) / (CAST(e4 + 1 AS DOUBLE) / (n_tot + 10)))
-        | + ((CAST(c5 + 1 AS DOUBLE) / (n_src + 10)) - (CAST(e5 + 1 AS DOUBLE) / (n_tot + 10))) * ln((CAST(c5 + 1 AS DOUBLE) / (n_src + 10)) / (CAST(e5 + 1 AS DOUBLE) / (n_tot + 10)))
-        | + ((CAST(c6 + 1 AS DOUBLE) / (n_src + 10)) - (CAST(e6 + 1 AS DOUBLE) / (n_tot + 10))) * ln((CAST(c6 + 1 AS DOUBLE) / (n_src + 10)) / (CAST(e6 + 1 AS DOUBLE) / (n_tot + 10)))
-        | + ((CAST(c7 + 1 AS DOUBLE) / (n_src + 10)) - (CAST(e7 + 1 AS DOUBLE) / (n_tot + 10))) * ln((CAST(c7 + 1 AS DOUBLE) / (n_src + 10)) / (CAST(e7 + 1 AS DOUBLE) / (n_tot + 10)))
-        | + ((CAST(c8 + 1 AS DOUBLE) / (n_src + 10)) - (CAST(e8 + 1 AS DOUBLE) / (n_tot + 10))) * ln((CAST(c8 + 1 AS DOUBLE) / (n_src + 10)) / (CAST(e8 + 1 AS DOUBLE) / (n_tot + 10)))
-        | + ((CAST(c9 + 1 AS DOUBLE) / (n_src + 10)) - (CAST(e9 + 1 AS DOUBLE) / (n_tot + 10))) * ln((CAST(c9 + 1 AS DOUBLE) / (n_src + 10)) / (CAST(e9 + 1 AS DOUBLE) / (n_tot + 10)))) * 1000000 + 0.5) / 1000000 AS psi
-        |FROM s, e""".stripMargin,
-    "q123_column_stats" ->
-      """WITH w AS (
-        |  SELECT count(*) AS n_rows,
-        |    sum(CASE WHEN l_quantity IS NULL THEN 1 ELSE 0 END) AS qty_nulls,
-        |    count(DISTINCT l_quantity) AS qty_ndv,
-        |    CAST(min(l_quantity) AS DOUBLE) AS qty_min,
-        |    CAST(max(l_quantity) AS DOUBLE) AS qty_max,
-        |    sum(CASE WHEN l_extendedprice IS NULL THEN 1 ELSE 0 END) AS price_nulls,
-        |    count(DISTINCT l_extendedprice) AS price_ndv,
-        |    CAST(min(l_extendedprice) AS DOUBLE) AS price_min,
-        |    CAST(max(l_extendedprice) AS DOUBLE) AS price_max,
-        |    sum(CASE WHEN l_discount IS NULL THEN 1 ELSE 0 END) AS disc_nulls,
-        |    count(DISTINCT l_discount) AS disc_ndv,
-        |    CAST(min(l_discount) AS DOUBLE) AS disc_min,
-        |    CAST(max(l_discount) AS DOUBLE) AS disc_max
-        |  FROM lineitem)
-        |SELECT n_rows, 'l_quantity' AS column_name, CAST(qty_nulls AS BIGINT) AS n_nulls,
-        | qty_ndv AS ndv, qty_min AS min_d, qty_max AS max_d FROM w
-        |UNION ALL SELECT n_rows, 'l_extendedprice', CAST(price_nulls AS BIGINT),
-        | price_ndv, price_min, price_max FROM w
-        |UNION ALL SELECT n_rows, 'l_discount', CAST(disc_nulls AS BIGINT),
-        | disc_ndv, disc_min, disc_max FROM w""".stripMargin,
-    // q112: identical SQL to q92 — the bloom gate on the index scan
-    // is physically visible (spec counts the surviving rows) but
-    // semantically invisible (bloom filters have no false negatives)
-    "q112_bloom_admission" ->
-      """WITH idx AS (
-        |  SELECT md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS fp,
-        |    min(doc_id) AS keeper
-        |  FROM documents WHERE doc_id % 5 <> 4 GROUP BY 1)
-        |SELECT d.doc_id,
-        | md5(trim(regexp_replace(lower(d.text), '[^a-z0-9]+', ' ', 'g'))) AS fp,
-        | idx.keeper IS NOT NULL AS is_dup,
-        | idx.keeper
-        |FROM documents d
-        |LEFT JOIN idx ON md5(trim(regexp_replace(lower(d.text), '[^a-z0-9]+', ' ', 'g'))) = idx.fp
-        |WHERE d.doc_id % 5 = 4""".stripMargin,
-    // q95: identical SQL to q92 — the bucketed probe must produce the
-    // same verdicts as the shuffle-join form; what differs (and what
-    // the spec asserts) is the physical plan, which the oracle cannot
-    // see. Registering it puts the production path under the hash gate.
-    "q95_bucketed_admission" ->
-      """WITH idx AS (
-        |  SELECT md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS fp,
-        |    min(doc_id) AS keeper
-        |  FROM documents WHERE doc_id % 5 <> 4 GROUP BY 1)
-        |SELECT d.doc_id,
-        | md5(trim(regexp_replace(lower(d.text), '[^a-z0-9]+', ' ', 'g'))) AS fp,
-        | idx.keeper IS NOT NULL AS is_dup,
-        | idx.keeper
-        |FROM documents d
-        |LEFT JOIN idx ON md5(trim(regexp_replace(lower(d.text), '[^a-z0-9]+', ' ', 'g'))) = idx.fp
-        |WHERE d.doc_id % 5 = 4""".stripMargin,
-    // q96: islands-and-gaps span merge — pos and gram unnest in
-    // lockstep (DuckDB zips same-level unnests), shared grams by
-    // distinct-doc count, pos − row_number() as the island key.
-    "q96_max_spans" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |    regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS words
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id,
-        |    unnest(range(0, greatest(len(words) - 7, 0))) AS pos,
-        |    unnest(list_transform(range(0, greatest(len(words) - 7, 0)),
-        |      i -> array_to_string(list_slice(words, i + 1, i + 8), ' '))) AS gram
-        |  FROM w),
-        |shared AS (SELECT gram FROM g GROUP BY gram HAVING count(DISTINCT doc_id) >= 2),
-        |hits AS (SELECT g.doc_id, g.pos FROM g JOIN shared USING (gram)),
-        |isl AS (
-        |  SELECT doc_id, pos,
-        |    pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS island
-        |  FROM hits)
-        |SELECT doc_id, CAST(min(pos) AS BIGINT) AS span_start,
-        | CAST(max(pos) - min(pos) + 8 AS BIGINT) AS span_len,
-        | CAST(count(*) AS BIGINT) AS n_grams
-        |FROM isl GROUP BY doc_id, island""".stripMargin,
-    // q97: q61's SQL verbatim — star and min-label merges both label
-    // components by their minimum member, so the oracle cannot (and
-    // must not) tell them apart; what differs is round complexity,
-    // which the 200-node-path spec pins
-    "q97_clusters_star" ->
-      """WITH RECURSIVE docs AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(
-        |      range(0, greatest(len(words) - 3, 0) + 1),
-        |      i -> array_to_string(list_slice(words, i + 1, i + 3), ' '))) AS sh
-        |  FROM (SELECT doc_id,
-        |          regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS words
-        |        FROM documents) w),
-        |keyed AS (
-        |  SELECT doc_id, sh,
-        |    list_aggregate(list_transform(sh, s -> md5(s)), 'min') AS minsh
-        |  FROM docs),
-        |cand AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-        |          len(list_distinct(list_concat(a.sh, b.sh))), 4) AS jaccard
-        |  FROM keyed a JOIN keyed b ON a.minsh = b.minsh AND a.doc_id < b.doc_id),
-        |dup AS (SELECT doc_a, doc_b FROM cand WHERE jaccard >= 0.5),
-        |edges AS (SELECT doc_a AS a, doc_b AS b FROM dup
-        |          UNION SELECT doc_b, doc_a FROM dup),
-        |reach AS (SELECT a, b FROM edges
-        |          UNION SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a)
-        |SELECT a AS doc_id, least(a, min(b)) AS cluster
-        |FROM reach GROUP BY a""".stripMargin,
-    // q98: the oracle recomputes the 16 quantized histogram levels
-    // from the payload bytes (the q32 hex-walk generalized: one
-    // unnest over byte positions, grouped by high nibble) and
-    // brute-forces all pairs at L1 <= 2 — candidate generation is
-    // engine-private, the SEMANTIC contract is the full pair set,
-    // which the banding reaches exactly by pigeonhole
-    "q98_neardup_media" ->
-      """WITH b AS (
-        |  SELECT doc_id, lower(hex(encode(text))) AS hx,
-        |         octet_length(encode(text)) AS n
-        |  FROM documents),
-        |g AS (SELECT doc_id, n, unnest(range(n)) AS i, hx FROM b),
-        |counts AS (
-        |  SELECT doc_id, any_value(n) AS n,
-        |    strpos('0123456789abcdef', substr(hx, CAST(i*2+1 AS INT), 1)) - 1 AS nib,
-        |    count(*) AS c
-        |  FROM g GROUP BY doc_id, nib),
-        |lv AS (SELECT doc_id, nib, least(255, (c * 256) // n) AS q FROM counts),
-        |fl AS (
-        |  SELECT d.doc_id, h.h, coalesce(lv.q, 0) AS q
-        |  FROM (SELECT doc_id FROM documents) d
-        |  CROSS JOIN (SELECT unnest(range(16)) AS h) h
-        |  LEFT JOIN lv ON lv.doc_id = d.doc_id AND lv.nib = h.h)
-        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |  CAST(sum(abs(a.q - b.q)) AS BIGINT) AS dist
-        |FROM fl a JOIN fl b ON a.h = b.h AND a.doc_id < b.doc_id
-        |GROUP BY a.doc_id, b.doc_id
-        |HAVING sum(abs(a.q - b.q)) <= 2""".stripMargin,
-    // q99: q96's span CTEs extended to the trim action — covered
-    // positions unnested from each span's range, anti-joined against
-    // the word rows (same-level unnests zip in DuckDB), remaining
-    // words string_agg'd in position order; the doc roster left join
-    // keeps untouched and fully-covered docs in the output
-    "q99_span_trim" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |    regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS words
-        |  FROM documents),
-        |wr AS (
-        |  SELECT doc_id, unnest(range(len(words))) AS pos, unnest(words) AS word
-        |  FROM w),
-        |g AS (
-        |  SELECT doc_id,
-        |    unnest(range(0, greatest(len(words) - 7, 0))) AS pos,
-        |    unnest(list_transform(range(0, greatest(len(words) - 7, 0)),
-        |      i -> array_to_string(list_slice(words, i + 1, i + 8), ' '))) AS gram
-        |  FROM w),
-        |shared AS (SELECT gram FROM g GROUP BY gram HAVING count(DISTINCT doc_id) >= 2),
-        |hits AS (SELECT g.doc_id, g.pos FROM g JOIN shared USING (gram)),
-        |isl AS (
-        |  SELECT doc_id, pos,
-        |    pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS island
-        |  FROM hits),
-        |spans AS (
-        |  SELECT doc_id, min(pos) AS s, max(pos) - min(pos) + 8 AS l
-        |  FROM isl GROUP BY doc_id, island),
-        |cov AS (SELECT DISTINCT doc_id, unnest(range(s, s + l)) AS pos FROM spans),
-        |kept AS (
-        |  SELECT wr.doc_id, wr.pos, wr.word
-        |  FROM wr LEFT JOIN cov ON wr.doc_id = cov.doc_id AND wr.pos = cov.pos
-        |  WHERE cov.pos IS NULL),
-        |agg AS (
-        |  SELECT doc_id, string_agg(word, ' ' ORDER BY pos) AS clean_text,
-        |    count(*) AS n_kept
-        |  FROM kept GROUP BY doc_id),
-        |tot AS (SELECT doc_id, count(*) AS n_words FROM wr GROUP BY doc_id)
-        |SELECT t.doc_id,
-        | coalesce(a.clean_text, '') AS clean_text,
-        | CAST(coalesce(a.n_kept, 0) AS BIGINT) AS n_kept,
-        | CAST(t.n_words - coalesce(a.n_kept, 0) AS BIGINT) AS n_removed
-        |FROM tot t LEFT JOIN agg a USING (doc_id)""".stripMargin,
-    // q104: q99's whole CTE chain, then the q96 detector re-run over
-    // the trimmed text (same normalize — identity on already-clean
-    // words) — residual span count + trim totals in one summary row.
-    // The interesting value is residual_spans = 0: remove-every-
-    // occurrence trimming leaves no original-consecutive shared gram,
-    // and this corpus produces no colliding junction grams either.
-    "q104_trim_round_trip" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |    regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS words
-        |  FROM documents),
-        |wr AS (
-        |  SELECT doc_id, unnest(range(len(words))) AS pos, unnest(words) AS word
-        |  FROM w),
-        |g AS (
-        |  SELECT doc_id,
-        |    unnest(range(0, greatest(len(words) - 7, 0))) AS pos,
-        |    unnest(list_transform(range(0, greatest(len(words) - 7, 0)),
-        |      i -> array_to_string(list_slice(words, i + 1, i + 8), ' '))) AS gram
-        |  FROM w),
-        |shared AS (SELECT gram FROM g GROUP BY gram HAVING count(DISTINCT doc_id) >= 2),
-        |hits AS (SELECT g.doc_id, g.pos FROM g JOIN shared USING (gram)),
-        |isl AS (
-        |  SELECT doc_id, pos,
-        |    pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS island
-        |  FROM hits),
-        |spans AS (
-        |  SELECT doc_id, min(pos) AS s, max(pos) - min(pos) + 8 AS l
-        |  FROM isl GROUP BY doc_id, island),
-        |cov AS (SELECT DISTINCT doc_id, unnest(range(s, s + l)) AS pos FROM spans),
-        |kept AS (
-        |  SELECT wr.doc_id, wr.pos, wr.word
-        |  FROM wr LEFT JOIN cov ON wr.doc_id = cov.doc_id AND wr.pos = cov.pos
-        |  WHERE cov.pos IS NULL),
-        |agg AS (
-        |  SELECT doc_id, string_agg(word, ' ' ORDER BY pos) AS clean_text,
-        |    count(*) AS n_kept
-        |  FROM kept GROUP BY doc_id),
-        |tot AS (SELECT doc_id, count(*) AS n_words FROM wr GROUP BY doc_id),
-        |trimmed AS (
-        |  SELECT t.doc_id, coalesce(a.clean_text, '') AS text,
-        |    coalesce(a.n_kept, 0) AS n_kept,
-        |    t.n_words - coalesce(a.n_kept, 0) AS n_removed
-        |  FROM tot t LEFT JOIN agg a USING (doc_id)),
-        |w2 AS (
-        |  SELECT doc_id,
-        |    regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS words
-        |  FROM trimmed),
-        |g2 AS (
-        |  SELECT doc_id,
-        |    unnest(range(0, greatest(len(words) - 7, 0))) AS pos,
-        |    unnest(list_transform(range(0, greatest(len(words) - 7, 0)),
-        |      i -> array_to_string(list_slice(words, i + 1, i + 8), ' '))) AS gram
-        |  FROM w2),
-        |shared2 AS (SELECT gram FROM g2 GROUP BY gram HAVING count(DISTINCT doc_id) >= 2),
-        |hits2 AS (SELECT g2.doc_id, g2.pos FROM g2 JOIN shared2 USING (gram)),
-        |isl2 AS (
-        |  SELECT doc_id, pos,
-        |    pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS island
-        |  FROM hits2),
-        |spans2 AS (SELECT doc_id, island FROM isl2 GROUP BY doc_id, island)
-        |SELECT CAST((SELECT count(*) FROM trimmed) AS BIGINT) AS n_docs,
-        | CAST((SELECT sum(n_kept) FROM trimmed) AS BIGINT) AS n_kept_total,
-        | CAST((SELECT sum(n_removed) FROM trimmed) AS BIGINT) AS n_removed_total,
-        | CAST((SELECT count(*) FROM spans2) AS BIGINT) AS residual_spans""".stripMargin,
-    // q106: q91's kNN-join semantics through the bucketed (corpus-
-    // scale) path — q30's md5-plane bucket recompute, the same
-    // Hamming-1 multi-probe, then q91's rank shape restricted to the
-    // probed buckets. The approximate result is DETERMINISTIC, so it
-    // hash-gates like an exact one.
-    "q106_knn_bucketed" -> {
-      def sign(p: Int) =
-        s"(CASE WHEN substr(md5('${p}_' || CAST(i - 1 AS VARCHAR)), 1, 1) < '8' THEN 1.0 ELSE -1.0 END)"
-      val bucket = (0 until 6).map { p =>
-        s"(CASE WHEN list_sum(list_transform(range(1, len(emb) + 1), i -> emb[i] * ${sign(p)})) > 0 THEN ${1 << p} ELSE 0 END)"
-      }.mkString("\n      + ")
-      s"""WITH e AS (
-        |  SELECT vec_id, CAST(label AS INTEGER) AS label,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-        |  FROM embeddings),
-        |b AS (SELECT vec_id, label, emb,
-        |      $bucket AS bucket FROM e),
-        |q AS (SELECT vec_id AS q_id, emb AS q_emb, bucket AS qb FROM b WHERE vec_id < 20),
-        |probes AS (
-        |  SELECT q_id, q_emb, qb AS pb FROM q
-        |  UNION ALL
-        |  SELECT q_id, q_emb, xor(qb, 1 << CAST(j AS INTEGER))
-        |  FROM q, (SELECT unnest(range(6)) AS j) r),
-        |s AS (
-        |  SELECT p.q_id, b.vec_id, b.label,
-        |    round(
-        |      list_sum(list_transform(range(1, len(b.emb) + 1), i -> b.emb[i] * p.q_emb[i])) /
-        |      (sqrt(list_sum(list_transform(range(1, len(b.emb) + 1), i -> b.emb[i] * b.emb[i]))) *
-        |       sqrt(list_sum(list_transform(range(1, len(p.q_emb) + 1), i -> p.q_emb[i] * p.q_emb[i])))), 4) AS cos
-        |  FROM b JOIN probes p ON b.bucket = p.pb AND b.vec_id <> p.q_id),
-        |r AS (
-        |  SELECT *, CAST(row_number() OVER (
-        |    PARTITION BY q_id ORDER BY cos DESC, vec_id) AS BIGINT) AS rnk
-        |  FROM s)
-        |SELECT q_id, vec_id, label, cos, rnk FROM r WHERE rnk <= 3""".stripMargin
-    },
-    // q108: the exact top-k words (q44's tokenization) with TRUE
-    // flags — the Misra-Gries guarantees (presence above N/(m+1),
-    // estimate within the envelope) hold by theorem, so a sketch
-    // regression flips a flag and the hash
-    "q108_heavy_hitters" ->
-      """WITH w AS (
-        |  SELECT unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS word
-        |  FROM documents),
-        |c AS (SELECT word, CAST(count(*) AS BIGINT) AS n_exact
-        |      FROM w WHERE word <> '' GROUP BY word)
-        |SELECT word, n_exact, TRUE AS in_sketch, TRUE AS within_bound
-        |FROM c ORDER BY n_exact DESC, word LIMIT 10""".stripMargin,
-    // q109: the scrub recomputed with DuckDB's regex engine — counts
-    // on the original text, replacements chained in the same order;
-    // the PII patterns legitimately count 0 on this corpus (the
-    // machinery is proven on synthetic rows in CurationSpec), the
-    // blocklist phrases hit 68 docs so keep/n_banned are live
-    "q109_scrub" -> {
-      val email = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
-      val ipv4 = "\\b\\d{1,3}(\\.\\d{1,3}){3}\\b"
-      val banned = "\\b(customer query|big table|slow scan)\\b"
-      s"""SELECT doc_id,
-        |  CAST(len(regexp_extract_all(text, '$email')) AS BIGINT) AS n_email,
-        |  CAST(len(regexp_extract_all(text, '$ipv4')) AS BIGINT) AS n_ipv4,
-        |  CAST(len(regexp_extract_all(text, '$banned')) AS BIGINT) AS n_banned,
-        |  regexp_replace(regexp_replace(text, '$email', '<EMAIL>', 'g'),
-        |                 '$ipv4', '<IP>', 'g') AS clean_text,
-        |  (len(regexp_extract_all(text, '$banned')) = 0) AS keep
-        |FROM documents""".stripMargin
-    },
-    // q111: the same simulated v2 (delete ids ≡3 mod 17, edit ≡5,
-    // re-ingest ≡7 under id+1e6) rebuilt in SQL, statuses from the
-    // same full-outer fingerprint join
-    "q111_snapshot_diff" ->
-      """WITH v1 AS (SELECT doc_id, md5(text) AS fp FROM documents),
-        |v2 AS (
-        |  SELECT doc_id,
-        |    md5(CASE WHEN doc_id % 17 = 5 THEN text || ' v2 edit' ELSE text END) AS fp
-        |  FROM documents WHERE doc_id % 17 <> 3
-        |  UNION ALL
-        |  SELECT doc_id + 1000000 AS doc_id, md5(text) AS fp
-        |  FROM documents WHERE doc_id % 17 = 7)
-        |SELECT coalesce(v1.doc_id, v2.doc_id) AS doc_id,
-        |  CASE WHEN v2.doc_id IS NULL THEN 'removed'
-        |       WHEN v1.doc_id IS NULL THEN 'added'
-        |       WHEN v1.fp <> v2.fp THEN 'changed'
-        |       ELSE 'unchanged' END AS status
-        |FROM v1 FULL JOIN v2 ON v1.doc_id = v2.doc_id""".stripMargin,
-    // q110: q75's program-generated signature/banding SQL with the
-    // batch/corpus split — candidates are cross-slice band collisions,
-    // verified by exact string-set Jaccard (Spark verifies on xxhash64
-    // shingle hashes; Jaccard over distinct sets is invariant under an
-    // injective per-element hash), verdicts re-aggregated per batch
-    // doc with the max-jaccard-then-min-id keeper rule
-    "q110_neardup_admission" -> {
-      val P = "2147483647"
-      val h1 = s"(('0x' || substr(md5(s), 17, 15))::BIGINT % $P)"
-      val h2 = s"(('0x' || substr(md5(s), 1, 15))::BIGINT % $P)"
-      val sigCols = (0 until 24).map(i =>
-        s"list_aggregate(list_transform(sh, s -> " +
-          s"($h1 + $i * $h2) % $P), 'min') AS m$i")
-        .mkString(",\n    ")
-      val bandSelects = (0 until 8).map(bd =>
-        s"SELECT doc_id, sh, $bd AS band, " +
-          s"concat(m${3 * bd}, ',', m${3 * bd + 1}, ',', m${3 * bd + 2}) AS bucket FROM sig")
-        .mkString("\n  UNION ALL ")
-      s"""WITH docs AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(
-        |      range(0, greatest(len(words) - 3, 0) + 1),
-        |      i -> array_to_string(list_slice(words, i + 1, i + 3), ' '))) AS sh
-        |  FROM (SELECT doc_id,
-        |          regexp_split_to_array(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS words
-        |        FROM documents) w),
-        |sig AS (
-        |  SELECT doc_id, sh,
-        |    $sigCols
-        |  FROM docs),
-        |banded AS (
-        |  $bandSelects),
-        |hits AS (
-        |  SELECT DISTINCT b.doc_id AS b_id, i.doc_id AS i_id,
-        |    round(CAST(len(list_intersect(b.sh, i.sh)) AS DOUBLE) /
-        |          len(list_distinct(list_concat(b.sh, i.sh))), 4) AS j
-        |  FROM banded i JOIN banded b
-        |    ON i.band = b.band AND i.bucket = b.bucket
-        |   AND i.doc_id % 5 <> 4 AND b.doc_id % 5 = 4),
-        |good AS (SELECT * FROM hits WHERE j >= 0.5),
-        |v AS (SELECT b_id, CAST(count(*) AS BIGINT) AS n_matches, max(j) AS best_jaccard
-        |      FROM good GROUP BY 1),
-        |k AS (SELECT g.b_id, min(g.i_id) AS keeper
-        |      FROM good g JOIN v ON g.b_id = v.b_id AND g.j = v.best_jaccard GROUP BY 1)
-        |SELECT d.doc_id, v.n_matches IS NOT NULL AS is_neardup,
-        |  coalesce(v.n_matches, 0) AS n_matches, k.keeper, v.best_jaccard
-        |FROM (SELECT doc_id FROM documents WHERE doc_id % 5 = 4) d
-        |LEFT JOIN v ON d.doc_id = v.b_id
-        |LEFT JOIN k ON d.doc_id = k.b_id""".stripMargin
-    },
-    // q107: the IVF admission chain recomputed relationally — q87's
-    // centroid/assignment CTEs restricted to the index slice, batch
-    // vectors assigned to their 2 nearest centroids, exact cosine over
-    // the probed lists, per-vector best-match verdict at 0.35
-    "q107_embedding_admission" ->
-      """WITH e AS (
-        |  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-        |  FROM embeddings),
-        |idx AS (SELECT * FROM e WHERE vec_id % 5 <> 4),
-        |bat AS (SELECT * FROM e WHERE vec_id % 5 = 4),
-        |flat AS (
-        |  SELECT label AS clabel,
-        |    unnest(range(0, len(emb))) AS pos,
-        |    unnest(emb) AS v
-        |  FROM idx),
-        |cm AS (SELECT clabel, pos, avg(v) AS m FROM flat GROUP BY 1, 2),
-        |cent AS (SELECT clabel, list(m ORDER BY pos) AS cent FROM cm GROUP BY 1),
-        |adI AS (
-        |  SELECT i.vec_id, i.emb, c.clabel,
-        |    list_sum(list_transform(range(1, len(i.emb) + 1),
-        |      k -> (i.emb[k] - c.cent[k]) * (i.emb[k] - c.cent[k]))) AS d2
-        |  FROM idx i CROSS JOIN cent c),
-        |rkI AS (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d2, clabel) AS rk FROM adI),
-        |asg AS (SELECT vec_id, emb, clabel FROM rkI WHERE rk = 1),
-        |adB AS (
-        |  SELECT b.vec_id AS b_id, b.emb AS b_emb, c.clabel,
-        |    list_sum(list_transform(range(1, len(b.emb) + 1),
-        |      k -> (b.emb[k] - c.cent[k]) * (b.emb[k] - c.cent[k]))) AS d2
-        |  FROM bat b CROSS JOIN cent c),
-        |rkB AS (SELECT *, row_number() OVER (PARTITION BY b_id ORDER BY d2, clabel) AS rk FROM adB),
-        |probes AS (SELECT b_id, b_emb, clabel FROM rkB WHERE rk <= 2),
-        |cand AS (
-        |  SELECT p.b_id, a.vec_id,
-        |    round(
-        |      list_sum(list_transform(range(1, len(a.emb) + 1), k -> a.emb[k] * p.b_emb[k])) /
-        |      (sqrt(list_sum(list_transform(range(1, len(a.emb) + 1), k -> a.emb[k] * a.emb[k]))) *
-        |       sqrt(list_sum(list_transform(range(1, len(p.b_emb) + 1), k -> p.b_emb[k] * p.b_emb[k])))), 4) AS cos
-        |  FROM asg a JOIN probes p USING (clabel)),
-        |best AS (
-        |  SELECT b_id, vec_id, cos,
-        |    row_number() OVER (PARTITION BY b_id ORDER BY cos DESC, vec_id) AS rnk
-        |  FROM cand)
-        |SELECT b.vec_id,
-        | coalesce(bs.cos >= 0.35, FALSE) AS is_dup,
-        | bs.vec_id AS best_match,
-        | bs.cos AS best_cos
-        |FROM bat b LEFT JOIN (SELECT * FROM best WHERE rnk = 1) bs
-        |ON b.vec_id = bs.b_id""".stripMargin,
-    // q105: the post-re-land layout state, computed relationally —
-    // src3 keeps only the doc_id % 40 = 3 half (the re-landed
-    // content), every other source keeps its full original partition
-    "q105_dynamic_overwrite" ->
-      """WITH eff AS (
-        |  SELECT source, text FROM documents WHERE source <> 'src3'
-        |  UNION ALL
-        |  SELECT source, text FROM documents WHERE source = 'src3' AND doc_id % 40 = 3)
-        |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        | CAST(sum(length(text)) AS BIGINT) AS total_chars
-        |FROM eff GROUP BY source""".stripMargin,
-    // q100: q54's flag pattern again — the sketch's merge order (and
-    // hence its exact value) follows partitioning, so the gate carries
-    // the exact quantiles plus TRUE envelope flags; a sketch drifting
-    // past its rank-error bound turns into a hash mismatch
-    "q100_approx_quantiles" ->
-      """SELECT l_returnflag,
-        | round(quantile_cont(l_extendedprice, 0.25), 4) AS p25,
-        | TRUE AS p25_in_bound,
-        | round(quantile_cont(l_extendedprice, 0.5), 4) AS p50,
-        | TRUE AS p50_in_bound,
-        | round(quantile_cont(l_extendedprice, 0.75), 4) AS p75,
-        | TRUE AS p75_in_bound
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    // q102: q98's level recompute split into batch/index slices, all
-    // pairs brute-forced, per-batch-doc verdict aggregates (keeper and
-    // best_dist are independent minima by contract)
-    "q102_media_admission" ->
-      """WITH b0 AS (
-        |  SELECT doc_id, lower(hex(encode(text))) AS hx,
-        |         octet_length(encode(text)) AS n
-        |  FROM documents),
-        |g AS (SELECT doc_id, n, unnest(range(n)) AS i, hx FROM b0),
-        |counts AS (
-        |  SELECT doc_id, any_value(n) AS n,
-        |    strpos('0123456789abcdef', substr(hx, CAST(i*2+1 AS INT), 1)) - 1 AS nib,
-        |    count(*) AS c
-        |  FROM g GROUP BY doc_id, nib),
-        |lv AS (SELECT doc_id, nib, least(255, (c * 256) // n) AS q FROM counts),
-        |fl AS (
-        |  SELECT d.doc_id, h.h, coalesce(lv.q, 0) AS q
-        |  FROM (SELECT doc_id FROM documents) d
-        |  CROSS JOIN (SELECT unnest(range(16)) AS h) h
-        |  LEFT JOIN lv ON lv.doc_id = d.doc_id AND lv.nib = h.h),
-        |bb AS (SELECT * FROM fl WHERE doc_id % 5 = 4),
-        |ii AS (SELECT * FROM fl WHERE doc_id % 5 <> 4),
-        |hits AS (
-        |  SELECT bb.doc_id, ii.doc_id AS idx_id,
-        |    sum(abs(bb.q - ii.q)) AS dist
-        |  FROM bb JOIN ii ON bb.h = ii.h
-        |  GROUP BY bb.doc_id, ii.doc_id
-        |  HAVING sum(abs(bb.q - ii.q)) <= 2),
-        |v AS (
-        |  SELECT doc_id, count(*) AS n_hits, min(idx_id) AS keeper,
-        |    min(dist) AS best_dist
-        |  FROM hits GROUP BY doc_id)
-        |SELECT d.doc_id, v.n_hits IS NOT NULL AS is_dup,
-        | CAST(coalesce(v.n_hits, 0) AS BIGINT) AS n_hits,
-        | v.keeper, CAST(v.best_dist AS BIGINT) AS best_dist
-        |FROM (SELECT doc_id FROM documents WHERE doc_id % 5 = 4) d
-        |LEFT JOIN v USING (doc_id)""".stripMargin,
-    // q103: the oracle only sees the aggregates — the layout (one
-    // directory per source) and the pruned scan are plan facts the
-    // PlanSpec carries
-    "q103_partition_pruned" ->
-      """SELECT lang, count(*) AS n_docs,
-        | CAST(sum(length(text)) AS BIGINT) AS total_chars
-        |FROM documents WHERE source = 'src7' GROUP BY lang""".stripMargin,
-    // q93: q54's flag pattern — DataSketches HLL estimates can't
-    // hash-match DuckDB's sketch, so the gate carries exact counts +
-    // TRUE bounds flags; the union row is 'ALL'.
-    "q93_sketch_merge" ->
-      """SELECT event_type, count(DISTINCT user_id) AS n_exact,
-        | TRUE AS within_5pct
-        |FROM events GROUP BY event_type
-        |UNION ALL
-        |SELECT 'ALL' AS event_type, count(DISTINCT user_id) AS n_exact,
-        | TRUE AS within_5pct
-        |FROM events""".stripMargin,
-    // q94: the weight denominator folds in explicit source-sorted
-    // order (list_sum of an ORDER BY list ≡ Spark's aggregate over
-    // array_sort) so the one order-sensitive double sum is identical;
-    // everything else is single IEEE ops.
-    "q94_mixture_sample" ->
-      """WITH counts AS (SELECT source, count(*) AS n FROM documents GROUP BY 1),
-        |denom AS (
-        |  SELECT list_sum(list(sqrt(CAST(n AS DOUBLE)) ORDER BY source)) AS denom
-        |  FROM counts),
-        |th AS (
-        |  SELECT source,
-        |    CAST(floor(least(1.0,
-        |      100.0 * sqrt(CAST(n AS DOUBLE)) / denom / n) * 65536) AS BIGINT) AS thresh
-        |  FROM counts, denom)
-        |SELECT d.doc_id, d.source, th.thresh
-        |FROM documents d JOIN th ON d.source = th.source
-        |WHERE ('0x' || substr(md5('mix_' || CAST(d.doc_id AS VARCHAR)), 1, 4))::BIGINT
-        |      < th.thresh""".stripMargin,
-    // q201: exact long token counts, the q94 source-sorted denominator
-    // fold, floored allocation, flag on the raw epochs ratio
-    "q201_epoch_budget" ->
-      s"""WITH toks AS (
-        |  SELECT source,
-        |    CAST(sum(len(regexp_split_to_array(text, '\\s+'))) AS BIGINT) AS n_tokens
-        |  FROM documents GROUP BY 1),
-        |dims AS (
-        |  SELECT list_sum(list(sqrt(CAST(n_tokens AS DOUBLE)) ORDER BY source)) AS denom,
-        |    CAST(sum(n_tokens) AS BIGINT) AS total
-        |  FROM toks),
-        |a AS (
-        |  SELECT t.source, t.n_tokens,
-        |    sqrt(CAST(t.n_tokens AS DOUBLE)) / d.denom AS share_raw,
-        |    CAST(floor(4.0 * CAST(d.total AS DOUBLE) *
-        |      (sqrt(CAST(t.n_tokens AS DOUBLE)) / d.denom)) AS BIGINT) AS alloc
-        |  FROM toks t, dims d)
-        |SELECT source, n_tokens,
-        |  ${TextOps.roundAtSql("share_raw", 6)} AS share,
-        |  alloc AS alloc_tokens,
-        |  ${TextOps.roundAtSql("CAST(alloc AS DOUBLE) / CAST(n_tokens AS DOUBLE)", 4)} AS epochs,
-        |  CAST(alloc AS DOUBLE) / CAST(n_tokens AS DOUBLE) > 4.0 AS over_cap
-        |FROM a ORDER BY source""".stripMargin,
-    // q87: the IVF mechanism under the oracle — codebook = per-label
-    // centroids (both engines average the same doubles), assignment =
-    // argmin of the sequential (x−c)² fold with (d2, label) tie-break,
-    // probes = the query's 2 nearest centroids, rerank = exact cosine.
-    "q87_ivf_label" ->
-      """WITH e AS (
-        |  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-        |  FROM embeddings),
-        |flat AS (
-        |  SELECT label AS clabel,
-        |    unnest(range(0, len(emb))) AS pos,
-        |    unnest(emb) AS v
-        |  FROM e),
-        |cm AS (SELECT clabel, pos, avg(v) AS m FROM flat GROUP BY 1, 2),
-        |cent AS (SELECT clabel, list(m ORDER BY pos) AS cent FROM cm GROUP BY 1),
-        |ad AS (
-        |  SELECT e.vec_id, e.label, e.emb, c.clabel,
-        |    list_sum(list_transform(range(1, len(e.emb) + 1),
-        |      i -> (e.emb[i] - c.cent[i]) * (e.emb[i] - c.cent[i]))) AS d2
-        |  FROM e CROSS JOIN cent c),
-        |rk AS (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d2, clabel) AS rk FROM ad),
-        |probes AS (SELECT clabel FROM rk WHERE vec_id = 0 AND rk <= 2),
-        |q AS (SELECT emb AS q_emb FROM e WHERE vec_id = 0),
-        |cand AS (
-        |  SELECT r.vec_id, CAST(r.label AS INTEGER) AS label, r.emb, q.q_emb
-        |  FROM rk r, q
-        |  WHERE r.rk = 1 AND r.vec_id <> 0
-        |    AND r.clabel IN (SELECT clabel FROM probes)),
-        |s AS (
-        |  SELECT vec_id, label,
-        |    round(
-        |      list_sum(list_transform(range(1, len(emb) + 1), i -> emb[i] * q_emb[i])) /
-        |      (sqrt(list_sum(list_transform(range(1, len(emb) + 1), i -> emb[i] * emb[i]))) *
-        |       sqrt(list_sum(list_transform(range(1, len(q_emb) + 1), i -> q_emb[i] * q_emb[i])))), 4) AS cos
-        |  FROM cand)
-        |SELECT vec_id, label, cos FROM s ORDER BY cos DESC, vec_id LIMIT 10""".stripMargin,
-    // q101: q87's SQL verbatim — the bucketed-index probe must return
-    // the same top-k; what differs (bucket pruning, persisted
-    // assignment) is physical and spec-asserted, invisible to SQL
-    "q101_ivf_bucketed" ->
-      """WITH e AS (
-        |  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-        |  FROM embeddings),
-        |flat AS (
-        |  SELECT label AS clabel,
-        |    unnest(range(0, len(emb))) AS pos,
-        |    unnest(emb) AS v
-        |  FROM e),
-        |cm AS (SELECT clabel, pos, avg(v) AS m FROM flat GROUP BY 1, 2),
-        |cent AS (SELECT clabel, list(m ORDER BY pos) AS cent FROM cm GROUP BY 1),
-        |ad AS (
-        |  SELECT e.vec_id, e.label, e.emb, c.clabel,
-        |    list_sum(list_transform(range(1, len(e.emb) + 1),
-        |      i -> (e.emb[i] - c.cent[i]) * (e.emb[i] - c.cent[i]))) AS d2
-        |  FROM e CROSS JOIN cent c),
-        |rk AS (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d2, clabel) AS rk FROM ad),
-        |probes AS (SELECT clabel FROM rk WHERE vec_id = 0 AND rk <= 2),
-        |q AS (SELECT emb AS q_emb FROM e WHERE vec_id = 0),
-        |cand AS (
-        |  SELECT r.vec_id, CAST(r.label AS INTEGER) AS label, r.emb, q.q_emb
-        |  FROM rk r, q
-        |  WHERE r.rk = 1 AND r.vec_id <> 0
-        |    AND r.clabel IN (SELECT clabel FROM probes)),
-        |s AS (
-        |  SELECT vec_id, label,
-        |    round(
-        |      list_sum(list_transform(range(1, len(emb) + 1), i -> emb[i] * q_emb[i])) /
-        |      (sqrt(list_sum(list_transform(range(1, len(emb) + 1), i -> emb[i] * emb[i]))) *
-        |       sqrt(list_sum(list_transform(range(1, len(q_emb) + 1), i -> q_emb[i] * q_emb[i])))), 4) AS cos
-        |  FROM cand)
-        |SELECT vec_id, label, cos FROM s ORDER BY cos DESC, vec_id LIMIT 10""".stripMargin,
-  )
+  def oracleSql: Map[String, String] =
+    specs.map(q => q.name -> q.oracleSql).toMap
 }

@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   * keeping underscores) silently desynchronizes dedup clusters from
   * fingerprints. The DuckDB oracles inline the equivalent
   * `trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))`
-  * ([[sqlNorm]]), which SparkEntry's oracle strings must keep
-  * textually in lockstep with this definition.
+  * ([[sqlNorm]]), which the query registries' oracle strings must
+  * keep textually in lockstep with this definition.
   */
 object TextNorm {
 

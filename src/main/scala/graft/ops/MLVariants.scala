@@ -25,9 +25,12 @@ object MLVariants {
   private val VocabBits = 18 // 262k-dim binary shingle space
 
   /** mllib MinHashLSH near-dup: shingle sets → sparse binary vectors →
-    * approxSimilarityJoin on Jaccard distance. Deterministic seed. */
-  def nearDupMinHashML(spark: SparkSession, dir: String,
-                       threshold: Double = 0.5, numTables: Int = 10): DataFrame = {
+    * approxSimilarityJoin on Jaccard distance. Deterministic seed. Not
+    * registered: it is about 5x slower than q26's banded LSH for the
+    * same pairs (SimilarityDedupSpec cross-validates the two), and is
+    * kept as the mllib integration path. */
+  private[graft] def nearDupMinHashML(spark: SparkSession, dir: String,
+                                       threshold: Double = 0.5, numTables: Int = 10): DataFrame = {
     import spark.implicits._
     val dim = 1 << VocabBits
     val toVec = udf { (sh: Seq[Long]) =>

@@ -531,26 +531,6 @@ object RelationalExt {
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
       .select(col("w.start").as("win_start"), col("n"), col("total"))
 
-  /** Globally-ordered running sum WITHOUT a single-partition window —
-    * the classic two-phase distributed prefix sum. A plain
-    * `Window.orderBy(...)` with no partition key funnels the entire
-    * dataset through ONE task (Spark even warns); this instead:
-    *
-    *  1. range-partitions on the sort key — partition i's keys all
-    *     precede partition j's for i < j, so a per-partition running
-    *     sum is globally correct up to a constant;
-    *  2. computes that per-partition running sum with an ordinary
-    *     partitioned window (parallel, spill-safe);
-    *  3. aggregates ONE total per partition — a cluster-width frame
-    *     (≤ nPartitions rows), on which the single-partition window
-    *     is O(partitions), not O(rows) — into per-partition offsets;
-    *  4. broadcast-joins the offsets back and adds.
-    *
-    * The result is row-identical to the naive global window
-    * (spec-proven) at any scale: partition boundaries come from
-    * RangePartitioner sampling, but the sum is invariant to where
-    * the cuts fall. The value column must be numeric; rows where it
-    * is null count as 0. */
   /** Ordered-funnel analysis (view → click → purchase, strictly in
     * time order) over the events stream: per stage, the count of users
     * whose FIRST qualifying event follows their entry into the
@@ -676,21 +656,6 @@ object RelationalExt {
       .agg(count(lit(1)).as("n_active"))
   }
 
-  /** Incremental rollup maintenance (the materialized-view pattern):
-    * a daily per-type aggregate kept as a PARTIAL-AGGREGATE STATE
-    * table (count + sum — the mergeable pair), bootstrapped once from
-    * history and refreshed by merging only the new batch's partials —
-    * the history is never rescanned.
-    *
-    * The split here is deterministic (event_id mod — the q92 batch
-    * convention): "history" bootstraps the state, the "arriving"
-    * slice refreshes it, and the reported rollup must equal a from-
-    * scratch aggregation over everything (the oracle). The refresh
-    * aggregation's input is state rows + batch partials — days × types
-    * rows, not events — so at 100 TB refreshing a year-long rollup
-    * costs the new day's scan plus a state-sized merge. Averages are
-    * DERIVED from the merged pair at read time; storing avg itself
-    * would make the state non-mergeable (the mean of means bug). */
   /** Event-transition matrix (the first-order Markov summary of user
     * journeys): per-user event streams ordered by time, adjacent
     * pairs counted per (from, to) type — the sequence-analytics
@@ -758,6 +723,21 @@ object RelationalExt {
       .groupBy(col("event_type"), col("day"))
       .agg(sum(col("n")).as("n"), sum(col("sv")).as("sv"))
 
+  /** Incremental rollup maintenance (the materialized-view pattern):
+    * a daily per-type aggregate kept as a PARTIAL-AGGREGATE STATE
+    * table (count + sum — the mergeable pair), bootstrapped once from
+    * history and refreshed by merging only the new batch's partials —
+    * the history is never rescanned.
+    *
+    * The split here is deterministic (event_id mod — the q92 batch
+    * convention): "history" bootstraps the state, the "arriving"
+    * slice refreshes it, and the reported rollup must equal a from-
+    * scratch aggregation over everything (the oracle). The refresh
+    * aggregation's input is state rows + batch partials — days × types
+    * rows, not events — so at 100 TB refreshing a year-long rollup
+    * costs the new day's scan plus a state-sized merge. Averages are
+    * DERIVED from the merged pair at read time; storing avg itself
+    * would make the state non-mergeable (the mean of means bug). */
   def incrementalRollup(spark: SparkSession, dir: String,
                         batchMod: Int = 10, batchRem: Int = 7): DataFrame = {
     val ev = Tables.events(spark, dir).select(
@@ -934,6 +914,26 @@ object RelationalExt {
         | AS (column_name, n_nulls, ndv, min_d, max_d)""".stripMargin))
   }
 
+  /** Globally-ordered running sum WITHOUT a single-partition window —
+    * the classic two-phase distributed prefix sum. A plain
+    * `Window.orderBy(...)` with no partition key funnels the entire
+    * dataset through ONE task (Spark even warns); this instead:
+    *
+    *  1. range-partitions on the sort key — partition i's keys all
+    *     precede partition j's for i < j, so a per-partition running
+    *     sum is globally correct up to a constant;
+    *  2. computes that per-partition running sum with an ordinary
+    *     partitioned window (parallel, spill-safe);
+    *  3. aggregates ONE total per partition — a cluster-width frame
+    *     (≤ nPartitions rows), on which the single-partition window
+    *     is O(partitions), not O(rows) — into per-partition offsets;
+    *  4. broadcast-joins the offsets back and adds.
+    *
+    * The result is row-identical to the naive global window
+    * (spec-proven) at any scale: partition boundaries come from
+    * RangePartitioner sampling, but the sum is invariant to where
+    * the cuts fall. The value column must be numeric; rows where it
+    * is null count as 0. */
   def globalRunningSum(df: DataFrame, order: Seq[org.apache.spark.sql.Column],
                        value: org.apache.spark.sql.Column, outName: String,
                        nPartitions: Int = 0): DataFrame = {
@@ -1296,31 +1296,6 @@ object RelationalExt {
       .orderBy(col("edge"))
   }
 
-  /** q174: hourly event-rate anomaly detection — per (event_type,
-    * hour) z-scores of the event count against that type's hourly
-    * distribution, with an |z| ≥ `zThresh` flag. The ingest-telemetry
-    * monitor a pipeline runs on its own event stream (a dead
-    * collector reads z ≪ 0, a replay storm z ≫ 0) — q157 watches
-    * WHAT arrives (content drift), this watches HOW MUCH.
-    *
-    * Determinism: hourly counts are exact longs, so Σx and Σx² are
-    * exact (int64 headroom: Σx² ≤ n_buckets·max_hourly² wraps only
-    * past ~3e9 events in one hour — see the BASELINE.md exact-long
-    * audit table); mean and the textbook variance
-    * `(Σx² − (Σx)²/n)/(n−1)`
-    * are then fixed IEEE expression trees both engines share — no
-    * engine stddev function is used precisely because sample/pop
-    * conventions and accumulation orders differ across engines. An
-    * all-constant type (sd = 0) yields z = 0 rather than ±∞, and a
-    * single-bucket type (n = 1, where (n−1) = 0 makes Spark's
-    * non-ANSI divide return NULL but DuckDB's double divide return
-    * NaN) is guarded EXPLICITLY to sd = 0 on both engines — engine
-    * divide-by-zero conventions are never relied on. z is
-    * rounded at 6 for output; the flag compares the RAW z.
-    *
-    * Scale: one (type, hour) aggregation with map-side partials, one
-    * tiny per-type stats table broadcast back — the corpus shuffles
-    * once. */
   /** q209: inter-event time-gap percentiles per event type — p50 /
     * p95 / max of the gaps between consecutive events of a type, in
     * exact integer microseconds. The arrival-process companion to
@@ -2303,6 +2278,31 @@ object RelationalExt {
       col("event_type"), col("hour"))
   }
 
+  /** q174: hourly event-rate anomaly detection — per (event_type,
+    * hour) z-scores of the event count against that type's hourly
+    * distribution, with an |z| ≥ `zThresh` flag. The ingest-telemetry
+    * monitor a pipeline runs on its own event stream (a dead
+    * collector reads z ≪ 0, a replay storm z ≫ 0) — q157 watches
+    * WHAT arrives (content drift), this watches HOW MUCH.
+    *
+    * Determinism: hourly counts are exact longs, so Σx and Σx² are
+    * exact (int64 headroom: Σx² ≤ n_buckets·max_hourly² wraps only
+    * past ~3e9 events in one hour — see the BASELINE.md exact-long
+    * audit table); mean and the textbook variance
+    * `(Σx² − (Σx)²/n)/(n−1)`
+    * are then fixed IEEE expression trees both engines share — no
+    * engine stddev function is used precisely because sample/pop
+    * conventions and accumulation orders differ across engines. An
+    * all-constant type (sd = 0) yields z = 0 rather than ±∞, and a
+    * single-bucket type (n = 1, where (n−1) = 0 makes Spark's
+    * non-ANSI divide return NULL but DuckDB's double divide return
+    * NaN) is guarded EXPLICITLY to sd = 0 on both engines — engine
+    * divide-by-zero conventions are never relied on. z is
+    * rounded at 6 for output; the flag compares the RAW z.
+    *
+    * Scale: one (type, hour) aggregation with map-side partials, one
+    * tiny per-type stats table broadcast back — the corpus shuffles
+    * once. */
   def eventRateAnomaly(spark: SparkSession, dir: String,
                        zThresh: Double = 2.0): DataFrame = {
     val hourly = Tables.events(spark, dir)

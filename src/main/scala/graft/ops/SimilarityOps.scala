@@ -561,27 +561,6 @@ object SimilarityOps {
       .limit(k)
   }
 
-  /** Corpus-scale kNN join: the path [[knnJoin]]'s fail-loud guard
-    * points at when the query set is itself corpus-sized and cannot
-    * broadcast. Both sides LSH-bucket ([[withBucket]] — md5-derived
-    * planes, so the DuckDB oracle recomputes the exact buckets and the
-    * whole approximate join is hash-gated, not rows-only); queries
-    * multi-probe their own bucket plus every Hamming-1 neighbor (the
-    * [[annTopK]] recall knob); candidates score exactly within the
-    * probed buckets; per-query top-k of the candidates is the answer.
-    * Approximate BY CONTRACT: a neighbor whose bucket is ≥ 2 plane
-    * flips away is unseen — raise nPlanes' probe radius or the plane
-    * count to trade cost for recall.
-    *
-    * Scale: the candidate join's key is the BUCKET id — both sides
-    * hash-partition on it, nothing broadcasts, and a query meets only
-    * its probed buckets' corpus slice instead of the whole corpus
-    * (bucket-linear, the 2^nPlanes-way blocked nested loop). A corpus
-    * vector pairs with at most one probe row per query (one bucket per
-    * vector), so candidate volume is bounded by occupancy × queries-
-    * per-bucket. The same bounded-heap combiner as [[knnJoin]]
-    * ([[partialTopK]]) cuts each partition's contribution to ≤ k rows
-    * per query before the rank window's q_id exchange. */
   /** L2 normalization of the embedding column — the feature-prep step
     * before any cosine machinery (a normalized corpus turns cosine
     * into a plain dot product, halving every downstream kernel).
@@ -625,6 +604,27 @@ object SimilarityOps {
         col("unit_ok"))
   }
 
+  /** Corpus-scale kNN join: the path [[knnJoin]]'s fail-loud guard
+    * points at when the query set is itself corpus-sized and cannot
+    * broadcast. Both sides LSH-bucket ([[withBucket]] — md5-derived
+    * planes, so the DuckDB oracle recomputes the exact buckets and the
+    * whole approximate join is hash-gated, not rows-only); queries
+    * multi-probe their own bucket plus every Hamming-1 neighbor (the
+    * [[annTopK]] recall knob); candidates score exactly within the
+    * probed buckets; per-query top-k of the candidates is the answer.
+    * Approximate BY CONTRACT: a neighbor whose bucket is ≥ 2 plane
+    * flips away is unseen — raise nPlanes' probe radius or the plane
+    * count to trade cost for recall.
+    *
+    * Scale: the candidate join's key is the BUCKET id — both sides
+    * hash-partition on it, nothing broadcasts, and a query meets only
+    * its probed buckets' corpus slice instead of the whole corpus
+    * (bucket-linear, the 2^nPlanes-way blocked nested loop). A corpus
+    * vector pairs with at most one probe row per query (one bucket per
+    * vector), so candidate volume is bounded by occupancy × queries-
+    * per-bucket. The same bounded-heap combiner as [[knnJoin]]
+    * ([[partialTopK]]) cuts each partition's contribution to ≤ k rows
+    * per query before the rank window's q_id exchange. */
   def knnJoinBucketed(spark: SparkSession, dir: String,
                       nQueries: Long = 20L, k: Int = 3,
                       nPlanes: Int = 6): DataFrame = {
@@ -839,27 +839,6 @@ object SimilarityOps {
         TextOps.roundAt(col("rrf_raw"), 6).as("rrf"): _*)
   }
 
-  /** q163 — Johnson–Lindenstrauss random projection: every embedding
-    * reduced from its native dimension to `k` dims via a dense
-    * Rademacher (±1) projection scaled by 1/√k (Achlioptas 2003:
-    * ±1 entries give the same JL distance-preservation guarantee as
-    * Gaussians — and, as with the q30 LSH planes, the matrix is
-    * md5-derived ("rp<j>_<i>" keys, a family disjoint from the LSH
-    * planes') so BOTH engines rebuild the identical matrix and the
-    * output is hash-exact, no envelope needed). The standard
-    * compression step before shipping vectors to an ANN index when
-    * int8 (q81/q156) is not enough.
-    *
-    * Exactness: ±1 weights make each product exact in IEEE; the fold
-    * is the q28/q29-proven zip_with/aggregate ↔ list_sum sequence;
-    * the 1/√k scale is interpolated as one literal double into both
-    * engines (0.25 exactly at k=16); projections round at 6 for
-    * display.
-    *
-    * Scale: a pure narrow map — the matrix is a plan literal (k × dim
-    * doubles), each vector reads once and writes k values, zero
-    * exchanges (spec-asserted, the q147/q150 pattern); output rows
-    * are stack-unpivoted in the same narrow stage. */
   /** q180: INCREMENTAL IVF index maintenance — the append-only refresh
     * path a production ANN index runs instead of rebuilding: a batch
     * of arriving vectors (vec_id ≡ 7 mod 10 here) is assigned against
@@ -1469,35 +1448,6 @@ object SimilarityOps {
     cents
   }
 
-  /** q210: incremental (mini-batch) k-means refresh — the TRAINING-
-    * STATE member of the incremental family (q92/q110/q180 maintain
-    * indexes per batch; q143 maintains clusters; this maintains the
-    * MODEL). The centroid state is the mergeable sufficient-statistic
-    * triple (cl, n, Σx per dim): bootstrap = the q169 Lloyd loop on
-    * the first third of the corpus plus that third's statistics; each
-    * later batch is assigned against the CURRENT state centroids
-    * (Σx/n) and its per-cluster (count, per-dim sums) are ADDED into
-    * the state — history is never rescanned, which is the point at
-    * 100 TB: the full Lloyd retrain reads the corpus iters× per
-    * refresh, this reads each arriving batch once. The standard
-    * sequential mini-batch k-means trade (Sculley 2010): refreshed
-    * centroids chase the data with batch-order-dependent drift
-    * instead of re-converging globally — the spec quantifies that
-    * drift against a full retrain.
-    *
-    * Exactness: per-dim batch sums are exact (float32 in double
-    * headroom — order-independent, the q169 property); counts are
-    * longs; state folding adds exact values in batch order; the
-    * output centroid is one division per dim under the floor-form
-    * rounding. The oracle replays bootstrap, both refreshes and the
-    * state algebra as unrolled CTE stages.
-    *
-    * Scale: every collect is k-row model state (the q159/q169
-    * per-round-collect rule); each batch is touched once by one
-    * broadcast-model assignment pass + one (cluster)-keyed partial
-    * aggregation. The split bounds (max vec_id thirds) cost one
-    * 1-row probe job — driver orchestration, like the training loop
-    * itself. */
   /** Per-cluster sufficient statistics (cl, n, per-dim Σx) of a
     * (vec_id, embedding) frame assigned against given centroids —
     * the k-row model-state read both the bootstrap and every
@@ -1545,8 +1495,37 @@ object SimilarityOps {
     m.toSeq.map { case (cl, (n, s)) => (cl, n, s) }
   }
 
-  def kmeansRefresh(spark: SparkSession, dir: String, k: Int = 8,
-                    iters: Int = 3): DataFrame = {
+  /** q210: incremental (mini-batch) k-means refresh — the TRAINING-
+    * STATE member of the incremental family (q92/q110/q180 maintain
+    * indexes per batch; q143 maintains clusters; this maintains the
+    * MODEL). The centroid state is the mergeable sufficient-statistic
+    * triple (cl, n, Σx per dim): bootstrap = the q169 Lloyd loop on
+    * the first third of the corpus plus that third's statistics; each
+    * later batch is assigned against the CURRENT state centroids
+    * (Σx/n) and its per-cluster (count, per-dim sums) are ADDED into
+    * the state — history is never rescanned, which is the point at
+    * 100 TB: the full Lloyd retrain reads the corpus iters× per
+    * refresh, this reads each arriving batch once. The standard
+    * sequential mini-batch k-means trade (Sculley 2010): refreshed
+    * centroids chase the data with batch-order-dependent drift
+    * instead of re-converging globally — the spec quantifies that
+    * drift against a full retrain.
+    *
+    * Exactness: per-dim batch sums are exact (float32 in double
+    * headroom — order-independent, the q169 property); counts are
+    * longs; state folding adds exact values in batch order; the
+    * output centroid is one division per dim under the floor-form
+    * rounding. The oracle replays bootstrap, both refreshes and the
+    * state algebra as unrolled CTE stages.
+    *
+    * Scale: every collect is k-row model state (the q159/q169
+    * per-round-collect rule); each batch is touched once by one
+    * broadcast-model assignment pass + one (cluster)-keyed partial
+    * aggregation. The split bounds (max vec_id thirds) cost one
+    * 1-row probe job — driver orchestration, like the training loop
+    * itself. */
+  private[graft] def kmeansRefresh(spark: SparkSession, dir: String, k: Int = 8,
+                                    iters: Int = 3): DataFrame = {
     import spark.implicits._
     DriverResults.sortedLocal(
       kmeansRefreshState(spark, dir, k, iters).toDF("cluster", "n_members", "centroid"),
@@ -1748,6 +1727,27 @@ object SimilarityOps {
         round(col("exact"), 6).as("d2"): _*)
   }
 
+  /** q163 — Johnson–Lindenstrauss random projection: every embedding
+    * reduced from its native dimension to `k` dims via a dense
+    * Rademacher (±1) projection scaled by 1/√k (Achlioptas 2003:
+    * ±1 entries give the same JL distance-preservation guarantee as
+    * Gaussians — and, as with the q30 LSH planes, the matrix is
+    * md5-derived ("rp<j>_<i>" keys, a family disjoint from the LSH
+    * planes') so BOTH engines rebuild the identical matrix and the
+    * output is hash-exact, no envelope needed). The standard
+    * compression step before shipping vectors to an ANN index when
+    * int8 (q81/q156) is not enough.
+    *
+    * Exactness: ±1 weights make each product exact in IEEE; the fold
+    * is the q28/q29-proven zip_with/aggregate ↔ list_sum sequence;
+    * the 1/√k scale is interpolated as one literal double into both
+    * engines (0.25 exactly at k=16); projections round at 6 for
+    * display.
+    *
+    * Scale: a pure narrow map — the matrix is a plan literal (k × dim
+    * doubles), each vector reads once and writes k values, zero
+    * exchanges (spec-asserted, the q147/q150 pattern); output rows
+    * are stack-unpivoted in the same narrow stage. */
   def randomProjection(spark: SparkSession, dir: String, k: Int = 16): DataFrame = {
     val e = Tables.embeddings(spark, dir)
     val dim = Tables.embeddingDim(spark, dir)
@@ -1983,6 +1983,10 @@ object SimilarityOps {
     DriverResults.sortedLocal(out, col("dim"))
   }
 
+  /** q242's default stop-block cap, interpolated into the oracle's
+    * HAVING admission CTE so engine and SQL can never drift. */
+  val DensityMaxLabel = 1000
+
   /** q242: DBSCAN-style density clustering over the embedding corpus —
     * the density complement of centroid k-means (q169/q162): k-means
     * forces every point into a ball and fixes k up front; density
@@ -2027,10 +2031,6 @@ object SimilarityOps {
     * admitted labels' rows are bit-identical to the uncapped run
     * (DensityClusterSpec pins this plus the cap boundary). The oracle
     * mirrors the cap via a HAVING count ≤ cap admission CTE. */
-  /** q242's default stop-block cap, interpolated into the oracle's
-    * HAVING admission CTE so engine and SQL can never drift. */
-  val DensityMaxLabel = 1000
-
   def densityClusters(spark: SparkSession, dir: String,
                       threshold: Double = 0.20, minPts: Int = 3,
                       maxLabel: Option[Int] = Some(DensityMaxLabel)): DataFrame =

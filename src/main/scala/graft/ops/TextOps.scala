@@ -15,9 +15,9 @@ import graft.functions.TextNorm
   * run once per document with zero shuffles, and the derived columns
   * prune down to the parquet scan of `text` only.
   *
-  * Each heuristic is mirrored verbatim in SparkEntry.oracleSql (the
-  * regex/CASE constants below are interpolated into the SQL) so the
-  * DuckDB oracle checks the exact same function.
+  * Each heuristic is mirrored verbatim in [[TextQueries]]' oracle SQL
+  * (the regex/CASE constants below are interpolated into the SQL) so
+  * the DuckDB oracle checks the exact same function.
   */
 object TextOps {
 
@@ -68,11 +68,6 @@ object TextOps {
       roundAt(length(regexp_replace(col("text"), "\\s", "")).cast("double") /
         nMatches(col("text"), BpeTokenPattern), 4).as("avg_token_len"))
 
-  /** The blended 0..1 quality score over the `text` column, as ONE
-    * shared Column definition: [[qualityScore]] reports it and
-    * [[corpusFilter]] gates on it — a second copy of the weights
-    * would let a retune silently desynchronize the composed gate from
-    * its component query while both still pass their own oracles. */
   /** The blend BEFORE the output rounding — [[qualityCol]] is its
     * roundAt(·, 6); q217's bootstrap needs the same floor-form
     * numerator (`floor(raw·10⁶+0.5)`) as an exact long, so the raw
@@ -88,6 +83,11 @@ object TextOps {
       (lit(1.0) - least(punct / nChars * 10.0, lit(1.0))) * 0.2
   }
 
+  /** The blended 0..1 quality score over the `text` column, as ONE
+    * shared Column definition: [[qualityScore]] reports it and
+    * [[corpusFilter]] gates on it — a second copy of the weights
+    * would let a retune silently desynchronize the composed gate from
+    * its component query while both still pass their own oracles. */
   private[ops] def qualityCol: Column = roundAt(qualityRawCol, 6)
 
   /** Quality scoring: length, punctuation density, stopword density,
@@ -837,26 +837,6 @@ object TextOps {
   /** Line ending in an ellipsis (multiline anchors). */
   val EllipsisLinePattern = "(?m)\\.\\.\\.[ \\t]*$"
 
-  /** Gopher-style document quality rules (Rae et al. 2021 §A1.1,
-    * arXiv:2112.11446): the rule-based repetition-free gate every
-    * large web-scrape pipeline runs before expensive dedup/training.
-    * Per document, each rule is a boolean flag plus the conjunction:
-    *
-    *   - word count in [50, 100000]
-    *   - mean word length in [3, 10]
-    *   - symbol-to-word ratio ('#' / '...') <= 0.1
-    *   - lines starting with a bullet <= 90%
-    *   - lines ending in an ellipsis <= 30%
-    *   - >= 80% of words contain an alphabetic character
-    *   - >= 2 stopword hits
-    *
-    * Every ratio test is an EXACT integer cross-multiplication
-    * (`10 * sym <= words`, never `sym / words <= 0.1`) so the flags
-    * are bit-identical across engines — no float boundary to flip.
-    *
-    * Scale: one codegen'd narrow map over the `text` scan — zero
-    * shuffles, zero joins; at 100 TB this is a single pass that
-    * prunes to the (doc_id, text) columns. */
   /** The seven rule flags over the `text` column, as one shared
     * (name, Column) list: [[gopherRules]] reports them and
     * [[CurationOps.gateLog]] folds their conjunction into the
@@ -916,6 +896,26 @@ object TextOps {
       .orderBy(col("rule"))
   }
 
+  /** Gopher-style document quality rules (Rae et al. 2021 §A1.1,
+    * arXiv:2112.11446): the rule-based repetition-free gate every
+    * large web-scrape pipeline runs before expensive dedup/training.
+    * Per document, each rule is a boolean flag plus the conjunction:
+    *
+    *   - word count in [50, 100000]
+    *   - mean word length in [3, 10]
+    *   - symbol-to-word ratio ('#' / '...') <= 0.1
+    *   - lines starting with a bullet <= 90%
+    *   - lines ending in an ellipsis <= 30%
+    *   - >= 80% of words contain an alphabetic character
+    *   - >= 2 stopword hits
+    *
+    * Every ratio test is an EXACT integer cross-multiplication
+    * (`10 * sym <= words`, never `sym / words <= 0.1`) so the flags
+    * are bit-identical across engines — no float boundary to flip.
+    *
+    * Scale: one codegen'd narrow map over the `text` scan — zero
+    * shuffles, zero joins; at 100 TB this is a single pass that
+    * prunes to the (doc_id, text) columns. */
   def gopherRules(spark: SparkSession, dir: String): DataFrame = {
     val words = size(split(col("text"), "\\s+")).cast("bigint")
     Tables.documents(spark, dir).select(
@@ -967,26 +967,6 @@ object TextOps {
         (col("last_seq") > col("first_seq")).as("straddles"))
   }
 
-  /** Hashed-feature linear classifier scoring — the fastText-style
-    * model-based quality filter (Joulin et al. 2016 shape): each word
-    * hashes into one of `dim` feature buckets and the document's
-    * score is the sum of the bucket weights, i.e. `w · x` for a
-    * bag-of-words count vector under the hashing trick. The weight
-    * vector here is a deterministic md5-derived stand-in (integer
-    * weights in [-1000, 1000], so the score is EXACT BIGINT
-    * arithmetic — no float dot product to drift cross-engine); a
-    * trained model drops in by replacing the array.
-    *
-    * Scale: the model ships as a plan literal (for real 10⁶-dim
-    * models: a broadcast variable read by a codegen'd Expression) and
-    * scoring is `aggregate()` over `split()` — one codegen'd NARROW
-    * map over the text scan, zero shuffles, zero joins: the ideal
-    * 100 TB inference shape. Scoring cost is one md5 per word; the
-    * weight lookup is an O(1) array index, not a join.
-    *
-    * `split("\\s+")` yields a leading "" element for
-    * whitespace-leading text; it hashes like any token in BOTH
-    * engines, so parity holds without a trim pass. */
   /** Lexical-diversity stats — the vocabulary-shape quality signals
     * (MassiveText/C4 use the unique-word fraction as a boilerplate /
     * keyword-stuffing detector): per document the normalized-word
@@ -1854,6 +1834,26 @@ object TextOps {
       .orderBy(col("doc_id"))
   }
 
+  /** Hashed-feature linear classifier scoring — the fastText-style
+    * model-based quality filter (Joulin et al. 2016 shape): each word
+    * hashes into one of `dim` feature buckets and the document's
+    * score is the sum of the bucket weights, i.e. `w · x` for a
+    * bag-of-words count vector under the hashing trick. The weight
+    * vector here is a deterministic md5-derived stand-in (integer
+    * weights in [-1000, 1000], so the score is EXACT BIGINT
+    * arithmetic — no float dot product to drift cross-engine); a
+    * trained model drops in by replacing the array.
+    *
+    * Scale: the model ships as a plan literal (for real 10⁶-dim
+    * models: a broadcast variable read by a codegen'd Expression) and
+    * scoring is `aggregate()` over `split()` — one codegen'd NARROW
+    * map over the text scan, zero shuffles, zero joins: the ideal
+    * 100 TB inference shape. Scoring cost is one md5 per word; the
+    * weight lookup is an O(1) array index, not a join.
+    *
+    * `split("\\s+")` yields a leading "" element for
+    * whitespace-leading text; it hashes like any token in BOTH
+    * engines, so parity holds without a trim pass. */
   def linearQuality(spark: SparkSession, dir: String, dim: Int = 256): DataFrame = {
     val md = java.security.MessageDigest.getInstance("MD5")
     val weights: Array[Long] = Array.tabulate(dim) { b =>
@@ -2223,7 +2223,7 @@ object TextOps {
     * first `merges` learned merges as (merge_rank, left_sym,
     * right_sym, pair_count). Deterministic, so the DuckDB oracle
     * replays the full learning loop (program-generated unrolled
-    * stages, SparkEntry.bpeStagesSql). */
+    * stages, TextQueries.bpeStagesSql). */
   def bpeMerges(spark: SparkSession, dir: String, merges: Int = 16): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val (learned, _) = bpeLearnState(spark, docs, merges)
@@ -2305,16 +2305,6 @@ object TextOps {
       .orderBy(col("strategy"), col("batch_id"))
   }
 
-  /** q170 — tokenizer fertility by source: BPE tokens emitted per word
-    * occurrence, per corpus source (plus exact token/word totals).
-    * Fertility is THE tokenizer-efficiency audit (an SP-level unit in
-    * the multilingual-tokenizer literature): a source whose fertility
-    * runs hot pays proportionally more of the training budget per
-    * word, and a vocab change shifts these numbers before anything
-    * else. Same q160 tokenizer-cache shape — the learned dictionary
-    * segmentation joins onto word rows — with the per-source rollup
-    * joining the (doc_id, source) projection; exact long counts, the
-    * one float is the final ratio rounded at 4. */
   /** q235: tokenizer merge-budget ablation — [[bpeFertility]] at
     * budgets {8, 16}, tagged and unioned. The vocabulary-size
     * sensitivity readout: fertility's drop from one budget to the
@@ -2348,6 +2338,16 @@ object TextOps {
       .orderBy(col("merges"), col("source"))
   }
 
+  /** q170 — tokenizer fertility by source: BPE tokens emitted per word
+    * occurrence, per corpus source (plus exact token/word totals).
+    * Fertility is THE tokenizer-efficiency audit (an SP-level unit in
+    * the multilingual-tokenizer literature): a source whose fertility
+    * runs hot pays proportionally more of the training budget per
+    * word, and a vocab change shifts these numbers before anything
+    * else. Same q160 tokenizer-cache shape — the learned dictionary
+    * segmentation joins onto word rows — with the per-source rollup
+    * joining the (doc_id, source) projection; exact long counts, the
+    * one float is the final ratio rounded at 4. */
   def bpeFertility(spark: SparkSession, dir: String, merges: Int = 16): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val (_, seg) = bpeLearnState(spark, docs, merges)

@@ -7,7 +7,7 @@ import graft.sources.WaterML
 /** One-shot generator for the hydro ORACLE FIXTURE: the flattened
   * WaterML time-series rows (the [[WaterML.timeSeriesOf]] output
   * schema) written as a single parquet file that BOTH the Spark side
-  * (SparkEntry's q195–q197 hydro queries) and the DuckDB oracle
+  * ([[HydroQueries]]' q195–q197) and the DuckDB oracle
   * (`read_parquet` by absolute path) read — putting the flagship
   * O5–O13 dataflow under the same hash gate as every other operator.
   *

@@ -41,13 +41,21 @@ class RelationalSpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("every query has oracle sql or a documented omission") {
-    val noOracle = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    // queries without oracle must be the non-SQL-expressible set
-    assert(noOracle.forall(n => n.contains("minhash") || n.contains("simhash") ||
-      n.contains("lsh") || n.contains("multimodal") || n.contains("stream") ||
-      n.contains("ivf") || n.contains("approx")),
-      s"missing oracle for: $noOracle")
+  test("the registry: 256 unique names, each with oracle SQL, one key set") {
+    val specs = SparkEntry.specs
+    val n = specs.size
+    assert(n == 256, s"$n specs")
+    assert(specs.map(_.name).distinct.size == specs.size)
+    val blank = specs.filter(_.oracleSql.trim.isEmpty).map(_.name)
+    assert(blank.isEmpty, s"blank oracle SQL: $blank")
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
+    assert(SparkEntry.queries.keySet == specs.map(_.name).toSet)
+    // a name declared twice fails by name, never keeping one silently
+    val twice = Seq(specs(0), specs(1), QuerySpec(specs(0).name, specs(2).run, "SELECT 1"))
+    val e = intercept[IllegalArgumentException](SparkEntry.distinctNames(twice))
+    assert(e.getMessage.contains(specs(0).name) && !e.getMessage.contains(specs(1).name),
+      e.getMessage)
+    assert(SparkEntry.distinctNames(specs.take(3)) == specs.take(3))
   }
 
   test("q01 aggregates match hand-computed values on sf0.001") {

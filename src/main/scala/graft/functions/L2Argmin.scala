@@ -12,8 +12,8 @@ import org.apache.spark.sql.types._
   * `struct<d2: double, cl: bigint>`.
   *
   * This is the Lloyd-assignment hot loop (SimilarityOps.lloydAssign —
-  * q150/q162/q202/q210/q218/q238 all pass through it, and every
-  * training ROUND of lloydCentroids re-runs it over the corpus). The
+  * q150/q162/q202/q210/q218/q238 all pass through it; each training
+  * round runs its grouped sibling [[GroupedL2Argmin]]). The
   * previous form folded a broadcast `array<struct>` model column with
   * interpreted higher-order functions: HOFs are CodegenFallback, so
   * the n×k×d kernel ran boxed AND was evaluated once per getField
@@ -248,8 +248,9 @@ case class L2Scored(child: Expression, cls: Array[Long],
     copy(child = newChild)
 }
 
-/** [[L2Argmin]]'s GROUPED sibling for the product-quantizer trainer
-  * (SimilarityOps.groupedAssign — q224/q234): each row carries a group
+/** [[L2Argmin]]'s GROUPED sibling for the Lloyd trainer
+  * (SimilarityOps.groupedAssign; q224/q234 train one group per
+  * subspace, every other model one group): each row carries a group
   * id and folds only ITS group's codebook slice. The model ships as
   * parallel reference arrays pre-sorted by (g, cl); per row the
   * group's contiguous slice is located by linear scan (Σ groups is

@@ -45,8 +45,9 @@ object DedupOps {
   // ---------------------------------------------------------------
 
   /** Word 3-gram shingle set of a normalized text column (array
-    * form — convenient for small inputs and tests). */
-  def shingles(text: Column, n: Int = 3): Column = {
+    * form — the reference the specs check the row and kernel forms
+    * against; no registered query calls it). */
+  private[graft] def shingles(text: Column, n: Int = 3): Column = {
     val words = TextNorm.words(text)
     array_distinct(transform(
       sequence(lit(0), greatest(size(words) - n, lit(0))),

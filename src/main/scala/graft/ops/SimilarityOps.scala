@@ -163,13 +163,12 @@ object SimilarityOps {
     * [[labelCentroids]] construction), so assignment, probe selection
     * and rerank are all recomputable by the DuckDB oracle — the IVF
     * MECHANISM (assign → probe nprobe inverted lists → exact rerank)
-    * is hash-verified end to end, anchoring the KMeans-codebook
-    * production variant (MLVariants.ivfTopK) whose centroids are
-    * mllib-private. Assignment distance is a sequential (x−c)² fold
-    * matching list_sum's order; centroid averages can differ from
-    * DuckDB's in the last ulp, which only matters on exact
-    * assignment-distance ties — label centroids are far apart by
-    * construction. In production the codebook and the rk=1
+    * is hash-verified end to end, as it is for the Lloyd-trained
+    * codebook of [[ivfLearnedTopK]] (q184). Assignment distance is a
+    * sequential (x−c)² fold matching list_sum's order; centroid
+    * averages can differ from DuckDB's in the last ulp, which only
+    * matters on exact assignment-distance ties — label centroids are
+    * far apart by construction. In production the codebook and the rk=1
     * assignment are persisted index state, not recomputed per query;
     * the per-query work is nprobe lists + a k-row TakeOrdered.
     *
@@ -745,8 +744,7 @@ object SimilarityOps {
       .select(col("pos").cast("long").as("g"), col("vec_id"),
         col("col").as("embedding"))
     val cbs: Seq[(Long, Long, Seq[Double])] =
-      lloydCentroidsGrouped(spark, eSub, k, iters, sub)
-        .sortBy(t => (t._1, t._2))
+      lloydCentroidsGrouped(spark, eSub, k, iters)
         .map { case (g, cl, c) => (g, cl, c.toSeq) }
     val cbDf = Seq(Tuple1(cbs)).toDF("cbs")
     val q = e.filter(col("vec_id") === queryId).select(col("embedding").as("q_emb"))
@@ -1353,56 +1351,31 @@ object SimilarityOps {
       best.getField("cl").as("cluster"))
   }
 
-  /** GROUPED Lloyd: train k centroids per GROUP in one loop — the m
-    * subspace codebooks of a product quantizer in ONE corpus pass per
-    * round instead of m sequential [[lloydCentroids]] loops (m plans,
-    * m× the scan I/O, m× the scheduler latency; at 100 TB the
-    * difference between reading the residual table once or m times
-    * per round). Input rows (g, vec_id, embedding); seeds, argmin
-    * tie-break and update arithmetic are [[lloydCentroids]]'s exactly,
-    * applied per group — per-(g, cl) per-dim sums are the same
-    * order-independent values, so the trained model is identical and
-    * the unrolled per-subspace oracle CTEs keep matching. Collects
-    * only (Σ groups)×k model-state rows per round. */
-  private[ops] def lloydCentroidsGrouped(spark: SparkSession, e: DataFrame,
-                                         k: Int, iters: Int,
-                                         dim: Int): Seq[(Long, Long, Array[Double])] = {
-    var cents: Seq[(Long, Long, Array[Double])] =
-      e.filter(col("vec_id") < k).orderBy(col("g"), col("vec_id"))
-        .select(col("g"), col("vec_id"), col("embedding")).collect()
-        .map(r => (r.getLong(0), r.getLong(1), seedVector(r, 2))).toSeq
-    for (_ <- 1 until iters) {
-      val sums = groupedAssign(spark, e, cents)
-        .groupBy(col("g"), col("cluster"))
-        .agg(count(lit(1)).as("n"),
-          (0 until dim).map(i =>
-            sum(element_at(col("embedding"), i + 1).cast("double")).as(s"s$i")): _*)
-        .orderBy(col("g"), col("cluster"))
-        .collect() // (Σ groups)×k rows of model state
-      cents = sums.map { r =>
-        val n = r.getLong(2).toDouble
-        (r.getLong(0), r.getLong(1),
-          Array.tabulate(dim)(i => r.getDouble(i + 3) / n))
-      }.toSeq
-    }
-    cents
-  }
+  /** The bound on every Lloyd model-state collect: the seed centroids
+    * and each round's cluster statistics are (Σ groups)×k rows. */
+  private[graft] val MaxLloydModelRows: Int = 1 << 16
 
-  /** The (d2, cl) scored fold over a `cents` DATA column — the HOF
-    * twin of [[graft.functions.L2Scored]], kept for the one consumer
-    * whose model arrives as a column rather than a driver-side matrix
-    * (ivfPqTopK's single-row probe selection, where the probes frame
-    * must also carry the raw cents array forward for the residual
-    * ADC). Corpus-wide paths use the codegen'd expressions; this HOF
-    * form is interpreted and must stay off hot paths. */
-  private def lloydScored: Column = {
-    val d2 = (c: Column) => aggregate(
-      zip_with(col("embedding"), c, (x, w) => (x.cast("double") - w) * (x.cast("double") - w)),
-      lit(0.0d), (acc, v) => acc + v)
-    transform(col("cents"), s =>
-      struct(d2(s.getField("_2")).as("d2"), s.getField("_1").as("cl")))
+  /** Per-(g, cluster) sufficient statistics (g, cl, n, per-dim Σx) of a
+    * (g, vec_id, embedding) frame assigned against `cents`, collected
+    * under [[MaxLloydModelRows]] and (g, cl)-ascending: the model-state
+    * read of every Lloyd round and of q210's bootstrap and refresh.
+    * One codegen'd per-dim sum column each, with map-side partials and
+    * no posexplode: an exploded form re-evaluates the inlined argmin
+    * per exploded ROW (the shingleRows CollapseProject trap, measured
+    * ~3× slower). */
+  private def clusterStats(spark: SparkSession, e: DataFrame,
+                           cents: Seq[(Long, Long, Array[Double])],
+                           dim: Int): Seq[(Long, Long, Long, Array[Double])] = {
+    val stats = groupedAssign(spark, e, cents)
+      .groupBy(col("g"), col("cluster"))
+      .agg(count(lit(1)).as("n"),
+        (0 until dim).map(i =>
+          sum(element_at(col("embedding"), i + 1).cast("double")).as(s"s$i")): _*)
+    DriverResults.collectBounded(stats, MaxLloydModelRows, "Lloyd cluster statistics")
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        Array.tabulate(dim)(i => r.getDouble(i + 3))))
+      .sortBy(t => (t._1, t._2)).toSeq
   }
-
 
   /** A Lloyd seed's embedding (column `i`, preceded by its `vec_id`)
     * as doubles; a null embedding fails by name rather than as a bare
@@ -1413,66 +1386,58 @@ object SimilarityOps {
     r.getSeq[Any](i).map(_.asInstanceOf[Number].doubleValue).toArray
   }
 
-  /** The Lloyd training loop: seed from the first k vectors, `iters`
-    * assignment passes with an update after each but the last; the
-    * k×dim model is collected per round (bounded MODEL STATE, the
-    * q159 per-round-collect rule). Centroid update WITHOUT a
-    * posexplode: one codegen'd per-dim sum column each (map-side
-    * partials, no Generate — an exploded form re-evaluates the
-    * inlined argmin per exploded ROW, the shingleRows CollapseProject
-    * trap, measured ~3× slower). */
-  private[ops] def lloydCentroids(spark: SparkSession, e: DataFrame, k: Int,
-                                  iters: Int): Seq[(Long, Array[Double])] = {
-    // seeds read float OR double element types — q234 trains on
-    // RESIDUAL vectors, which are double arrays
-    var cents: Seq[(Long, Array[Double])] =
-      e.filter(col("vec_id") < k).orderBy(col("vec_id"))
-        .select(col("vec_id"), col("embedding")).collect()
-        .map(r => (r.getLong(0), seedVector(r, 1))).toSeq
-    require(cents.nonEmpty,
+  /** The Lloyd training loop, k centroids per GROUP: input rows
+    * (g, vec_id, embedding); each group seeds from its vectors with
+    * vec_id < k, then runs `iters` assignment passes with an update
+    * after each but the last. All groups train in one loop — the m
+    * subspace codebooks of a product quantizer read the residual table
+    * once per round, not m times — and per-(g, cl) sums are the same
+    * order-independent values a per-group loop would add, so the
+    * unrolled per-subspace oracle CTEs replay it. Seeds read float OR
+    * double element types (q234 trains on double residuals). Only
+    * model state reaches the driver: seeds and per-round statistics,
+    * each under [[MaxLloydModelRows]] (the q159 per-round-collect
+    * rule). */
+  private[ops] def lloydCentroidsGrouped(spark: SparkSession, e: DataFrame, k: Int,
+                                         iters: Int): Seq[(Long, Long, Array[Double])] = {
+    val seeds = DriverResults.collectBounded(
+      e.filter(col("vec_id") < k).select(col("g"), col("vec_id"), col("embedding")),
+      MaxLloydModelRows, "Lloyd seed centroids")
+    require(seeds.nonEmpty,
       s"Lloyd training has no seed centroid: no embedding row has vec_id < $k")
-    val dim = cents.head._2.length
-    for (_ <- 1 until iters) {
-      val sums = lloydAssign(spark, e, cents)
-        .groupBy(col("cluster"))
-        .agg(count(lit(1)).as("n"),
-          (0 until dim).map(i =>
-            sum(element_at(col("embedding"), i + 1).cast("double")).as(s"s$i")): _*)
-        .orderBy(col("cluster"))
-        .collect() // k rows of (cl, n, dim sums) — model state
-      cents = sums.map { r =>
-        val n = r.getLong(1).toDouble
-        (r.getLong(0), Array.tabulate(dim)(i => r.getDouble(i + 2) / n))
-      }.toSeq
-    }
+    var cents = seeds.map(r => (r.getLong(0), r.getLong(1), seedVector(r, 2)))
+      .sortBy(t => (t._1, t._2)).toSeq
+    val dim = cents.head._3.length
+    for (_ <- 1 until iters)
+      cents = clusterStats(spark, e, cents, dim).map { case (g, cl, n, s) =>
+        (g, cl, s.map(_ / n.toDouble)) }
     cents
   }
 
-  /** Per-cluster sufficient statistics (cl, n, per-dim Σx) of a
-    * (vec_id, embedding) frame assigned against given centroids —
-    * the k-row model-state read both the bootstrap and every
-    * refresh step share. */
+  /** A (vec_id, embedding) frame as the trainer's one group, g = 0. */
+  private def oneGroup(e: DataFrame): DataFrame =
+    e.select(lit(0L).as("g"), col("vec_id"), col("embedding"))
+
+  /** q169's (cl, centroid) model: [[lloydCentroidsGrouped]] over one
+    * group. */
+  private[ops] def lloydCentroids(spark: SparkSession, e: DataFrame, k: Int,
+                                  iters: Int): Seq[(Long, Array[Double])] =
+    lloydCentroidsGrouped(spark, oneGroup(e), k, iters).map { case (_, cl, c) => (cl, c) }
+
+  /** [[clusterStats]] of a (vec_id, embedding) frame against a
+    * (cl, centroid) model, as (cl, n, per-dim Σx). */
   private def kmeansStats(spark: SparkSession, df: DataFrame,
                           cs: Seq[(Long, Array[Double])],
-                          dim: Int): Array[(Long, Long, Array[Double])] =
-    lloydAssign(spark, df, cs)
-      .groupBy(col("cluster"))
-      .agg(count(lit(1)).as("n"),
-        (0 until dim).map(i =>
-          sum(element_at(col("embedding"), i + 1).cast("double")).as(s"s$i")): _*)
-      .orderBy(col("cluster"))
-      .collect() // k rows — model state, never corpus data
-      .map(r => (r.getLong(0), r.getLong(1),
-        Array.tabulate(dim)(i => r.getDouble(i + 2))))
+                          dim: Int): Seq[(Long, Long, Array[Double])] =
+    clusterStats(spark, oneGroup(df), cs.map { case (cl, c) => (0L, cl, c) }, dim)
+      .map { case (_, cl, n, s) => (cl, n, s) }
 
   /** Bootstrap the mergeable centroid state from a corpus slice: the
     * q169 Lloyd loop trains the centroids, then the slice's own
     * sufficient statistics become the initial (cl, n, Σx) state. */
   def kmeansStateBootstrap(spark: SparkSession, df: DataFrame, k: Int,
-                           iters: Int, dim: Int): Seq[(Long, Long, Array[Double])] = {
-    val boot = lloydCentroids(spark, df, k, iters)
-    kmeansStats(spark, df, boot, dim).toSeq
-  }
+                           iters: Int, dim: Int): Seq[(Long, Long, Array[Double])] =
+    kmeansStats(spark, df, lloydCentroids(spark, df, k, iters), dim)
 
   /** One mini-batch refresh step: assign `batch` against the CURRENT
     * state centroids (Σx/n) and ADD its per-cluster statistics into
@@ -1523,41 +1488,14 @@ object SimilarityOps {
     * broadcast-model assignment pass + one (cluster)-keyed partial
     * aggregation. The split bounds (max vec_id thirds) cost one
     * 1-row probe job — driver orchestration, like the training loop
-    * itself. */
-  private[graft] def kmeansRefresh(spark: SparkSession, dir: String, k: Int = 8,
-                                    iters: Int = 3): DataFrame = {
-    import spark.implicits._
-    DriverResults.sortedLocal(
-      kmeansRefreshState(spark, dir, k, iters).toDF("cluster", "n_members", "centroid"),
-      col("cluster"))
-  }
-
-  /** The refreshed centroid state as (cluster, n_members, centroid)
-    * driver rows, cluster-ascending, centroids floor-rounded at 6. */
-  private def kmeansRefreshState(spark: SparkSession, dir: String, k: Int = 8,
-                                 iters: Int = 3): Seq[(Long, Long, Seq[Double])] = {
-    val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    val dim = Tables.embeddingDim(spark, dir)
-    val total = e.agg(max(col("vec_id"))).head().getLong(0) + 1L
-    val third = total / 3
-    def slice(lo: Long, hi: Long): DataFrame =
-      e.filter(col("vec_id") >= lo && col("vec_id") < hi)
-    var state = kmeansStateBootstrap(spark, slice(0L, third), k, iters, dim)
-    Seq((third, 2 * third), (2 * third, total)).foreach { case (lo, hi) =>
-      state = kmeansStateRefresh(spark, state, slice(lo, hi), dim)
-    }
-    state.sortBy(_._1).map { case (cl, n, s) =>
-      (cl, n, s.map(v => math.floor(v / n * 1e6 + 0.5) / 1e6).toSeq)
-    }
-  }
-
-  /** q210 gate shape: [[kmeansRefresh]] with the centroid array
-    * exploded to one (cluster, n_members, dim, c_v) row per dimension
-    * — the q150 flatten convention, because the driver's oracle
-    * compare sorts rows by every column and an array<double> cell is
-    * unsortable there (CORRECTNESS_r17 recorded q210 as `err`).
-    * Same state, same floor-form rounding; shape only. The rows are
-    * flattened from the driver-side state, not from a DataFrame. */
+    * itself.
+    *
+    * Gate shape: the centroid array is exploded to one (cluster,
+    * n_members, dim, c_v) row per dimension — the q150 flatten
+    * convention, because the driver's oracle compare sorts rows by
+    * every column and an array<double> cell is unsortable there
+    * (CORRECTNESS_r17 recorded q210 as `err`). The rows are flattened
+    * from the driver-side state, not from a DataFrame. */
   def kmeansRefreshRows(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val rows = for {
@@ -1568,15 +1506,35 @@ object SimilarityOps {
       col("cluster"), col("dim"))
   }
 
+  /** The refreshed centroid state (k = 8, 3 bootstrap rounds) as
+    * (cluster, n_members, centroid) driver rows, cluster-ascending,
+    * centroids floor-rounded at 6. */
+  private def kmeansRefreshState(spark: SparkSession,
+                                 dir: String): Seq[(Long, Long, Seq[Double])] = {
+    val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
+    val dim = Tables.embeddingDim(spark, dir)
+    val total = e.agg(max(col("vec_id"))).head().getLong(0) + 1L
+    val third = total / 3
+    def slice(lo: Long, hi: Long): DataFrame =
+      e.filter(col("vec_id") >= lo && col("vec_id") < hi)
+    var state = kmeansStateBootstrap(spark, slice(0L, third), k = 8, iters = 3, dim)
+    Seq((third, 2 * third), (2 * third, total)).foreach { case (lo, hi) =>
+      state = kmeansStateRefresh(spark, state, slice(lo, hi), dim)
+    }
+    state.sortBy(_._1).map { case (cl, n, s) =>
+      (cl, n, s.map(v => math.floor(v / n * 1e6 + 0.5) / 1e6).toSeq)
+    }
+  }
+
   /** q184: IVF with a LEARNED codebook, end to end — q169's Lloyd
     * training produces the coarse centroids, every vector is assigned
     * to its nearest learned centroid (the inverted lists), the query
     * probes its `nprobe` nearest lists, and the exact cosine top-k is
-    * served from those lists only. This is the proper form of what
-    * q46 can only envelope-gate (mllib KMeans is seed-opaque): the
-    * deterministic trainer makes the ENTIRE train→index→probe chain
-    * hash-replayable in DuckDB — the one ANN architecture here where
-    * the oracle checks the learned model, the index AND the serve.
+    * served from those lists only. The deterministic trainer makes
+    * the ENTIRE train→index→probe chain hash-replayable in DuckDB —
+    * the one ANN architecture here where the oracle checks the learned
+    * model, the index AND the serve ([[ivfTopKGated]], q46, gates the
+    * same serve on recall instead).
     *
     * Probe selection is IN-PLAN: the query row's scored (d2, cl)
     * array is array_sort'ed and sliced to nprobe (no driver collect);
@@ -1609,6 +1567,41 @@ object SimilarityOps {
       .select(col("vec_id"), col("label").cast("int").as("label"), col("cos"))
       .orderBy(col("cos").desc, col("vec_id"))
       .limit(k)
+  }
+
+  /** q46: the q100/q124 envelope pattern applied to ANN recall. The
+    * output is the exact brute-force top-k (q29's rows, every value
+    * DuckDB-checkable) plus one in-plan flag, `ivf_recall_ok`: the
+    * learned-IVF leg ([[ivfLearnedTopK]] with `kClusters` lists, of
+    * which it probes `nprobe`) recovered at least `recallFloor` of
+    * those k rows. The oracle emits literal TRUE, so a recall collapse
+    * (broken training, probe selection or rerank, an empty ANN result)
+    * fails the hash gate.
+    *
+    * Floor calibration: the trainer is deterministic, so the flag is
+    * a fixed function of the embeddings table — the same table gives
+    * the same recall on every run. Probing 8 of 16 lists reads half the
+    * inverted lists, so even on an unstructured corpus (top-k spread
+    * uniformly over clusters) recall@10 is about Binomial(10, 1/2) and
+    * falls under 3 with probability ≈ 5%; on the testdata the leg
+    * recalls 10 of 10 at sf0.001, sf0.01 and sf0.1. A floor a sound
+    * ANN clears by construction and a broken one cannot reach.
+    *
+    * Scale note: the brute-force leg exists FOR the gate (exact and
+    * approximate in one plan, like q100's exact quantiles beside the
+    * sketch); q184 is the same serve without it. */
+  def ivfTopKGated(spark: SparkSession, dir: String, queryId: Long = 0L,
+                   k: Int = 10, kClusters: Int = 16, nprobe: Int = 8,
+                   recallFloor: Int = 3): DataFrame = {
+    val ann = ivfLearnedTopK(spark, dir, queryId, k, nprobe, kClusters)
+      .select(col("vec_id").as("ann_id"))
+    val exact = bruteForceTopK(spark, dir, queryId, k)
+    val recall = exact.join(ann, exact("vec_id") === ann("ann_id"), "left")
+      .agg(sum(when(col("ann_id").isNotNull, 1L).otherwise(0L)).as("recall_k"))
+    exact.crossJoin(broadcast(recall))
+      .select(col("vec_id"), col("label"), col("cos"),
+        (col("recall_k") >= recallFloor).as("ivf_recall_ok"))
+      .orderBy(col("cos").desc, col("vec_id"))
   }
 
   /** q234: IVF-PQ — THE production large-scale ANN index (Jégou 2011
@@ -1649,10 +1642,6 @@ object SimilarityOps {
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
     val sub = dim / m
     val coarse = lloydCentroids(spark, e, kCoarse, coarseIters)
-    val coarseDf = Seq(Tuple1(coarse.map { case (cl, c) => (cl, c.toSeq) }))
-      .toDF("cents")
-    def centOfCluster(centsCol: Column, cl: Column): Column =
-      element_at(filter(centsCol, t => t.getField("_1") === cl), 1).getField("_2")
     // residual build: codegen'd argmin + a k-row broadcast join for
     // the centroid vector (was an interpreted fold + per-row array
     // filter over the whole corpus)
@@ -1676,21 +1665,23 @@ object SimilarityOps {
       .select(col("pos").cast("long").as("g"), col("vec_id"),
         col("col").as("embedding"))
     val pq: Seq[(Long, Long, Seq[Double])] =
-      lloydCentroidsGrouped(spark, resSub, kPq, pqIters, sub)
-        .sortBy(t => (t._1, t._2))
+      lloydCentroidsGrouped(spark, resSub, kPq, pqIters)
         .map { case (g, cl, c) => (g, cl, c.toSeq) }
     val pqDf = Seq(Tuple1(pq)).toDF("cbs")
+    // the query's probes: the driver-side coarse model scored in-plan,
+    // as q184 selects them; each candidate's cell centroid (for the
+    // query residual) joins in from the k-row coarse table
     val probes = e.filter(col("vec_id") === queryId)
-      .crossJoin(broadcast(coarseDf))
-      .select(col("embedding").as("q_emb"), col("cents").as("q_cents"),
-        transform(slice(array_sort(lloydScored), 1, nprobe),
+      .select(col("embedding").as("q_emb"),
+        transform(slice(array_sort(
+            graft.functions.L2Argmin.l2Scored(col("embedding"), coarse)), 1, nprobe),
           s => s.getField("cl")).as("probe_cls"))
-    val cand = res.crossJoin(broadcast(pqDf)).crossJoin(broadcast(probes))
+    val cand = res.crossJoin(broadcast(probes))
       .filter(array_contains(col("probe_cls"), col("cluster")) &&
         col("vec_id") =!= queryId)
-    val qres = zip_with(col("q_emb"),
-      centOfCluster(col("q_cents"), col("cluster")),
-      (x, c) => x.cast("double") - c)
+      .join(broadcast(coarseTbl), Seq("cluster"))
+      .crossJoin(broadcast(pqDf))
+    val qres = zip_with(col("q_emb"), col("cent"), (x, c) => x.cast("double") - c)
     def d2d(a: Column, b: Column) = aggregate(
       zip_with(a, b, (x, w) => (x - w) * (x - w)), lit(0.0d), (acc, v) => acc + v)
     val per = (0 until m).map { s =>

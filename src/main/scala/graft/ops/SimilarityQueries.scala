@@ -4,8 +4,8 @@ import graft.{QuerySpec, Tables}
 
 /** The similarity family's registered queries (embedding top-k, ANN
   * indexes, quantization, clustering), each with the DuckDB SQL that checks
-  * it. q46 runs `MLVariants`' mllib IVF, whose checkable values are q29's
-  * exact top-10, so it is registered here beside q29. */
+  * it. q46's checkable values are q29's exact top-10 (its learned-IVF leg
+  * only feeds a recall flag), so it is registered here beside q29. */
 object SimilarityQueries {
 
   val specs: Seq[QuerySpec] = Seq(
@@ -48,7 +48,7 @@ object SimilarityQueries {
     }),
     // q46: exact top-10 values + literal TRUE recall envelope (the
     // ANN side cannot be SQL-replayed; its recall feeds the flag)
-    QuerySpec("q46_sim_ivf", (s, d) => MLVariants.ivfTopKGated(s, d),
+    QuerySpec("q46_sim_ivf", (s, d) => SimilarityOps.ivfTopKGated(s, d),
       s"""$bruteTopKOracleCte,
         |r AS (SELECT vec_id, label, cos FROM s
         |      ORDER BY cos DESC, vec_id LIMIT 10)
@@ -642,9 +642,9 @@ object SimilarityQueries {
     * refresh stages each assigning a batch against the CURRENT state
     * centroids (Σx/n) and ADDING its statistics into the state; the
     * final centroid is one division per dim under the floor-form
-    * rounding. Mirrors SimilarityOps.kmeansRefresh stage for stage
+    * rounding. Mirrors SimilarityOps.kmeansRefreshRows stage for stage
     * (batch-order state addition, left-join + coalesce for clusters a
-    * batch never touched); emitted in kmeansRefreshRows' exploded
+    * batch never touched), in its exploded
     * (cluster, n_members, dim, c_v) shape — the driver compare can't
     * sort an array<double> cell. */
   private lazy val kmeansRefreshOracleSql: String = {

@@ -49,4 +49,26 @@ class DegenerateEmbeddingsSpec extends AnyFunSuite {
     assert(SimilarityOps.kmeansLloyd(spark, oneRowDir).count() == 1)
     assert(SimilarityOps.pqRerank(spark, oneRowDir).count() == 0)
   }
+
+  /** q46 (16 learned lists) and q184 (8), through the registry. */
+  private val learnedIvf = Seq("q46_sim_ivf" -> 16, "q184_ivf_learned" -> 8)
+
+  test("learned IVF (q46, q184) on an empty embeddings table fails naming the missing seeds") {
+    for ((q, k) <- learnedIvf) {
+      val e = intercept[IllegalArgumentException](SparkEntry.queries(q)(spark, emptyDir))
+      assert(e.getMessage.contains(s"no embedding row has vec_id < $k"), s"$q: ${e.getMessage}")
+    }
+  }
+
+  test("learned IVF (q46, q184) on an all-null embeddings table fails naming the null seed") {
+    for ((q, _) <- learnedIvf) {
+      val e = intercept[IllegalArgumentException](SparkEntry.queries(q)(spark, allNullDir))
+      assert(e.getMessage.contains("has a null embedding"), s"$q: ${e.getMessage}")
+    }
+  }
+
+  test("a one-row embeddings table: learned IVF (q46, q184) returns no rows") {
+    for ((q, _) <- learnedIvf)
+      assert(SparkEntry.queries(q)(spark, oneRowDir).count() == 0, q)
+  }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.{DriverResults, RelationalExt, TextOps}
+import graft.ops.{DriverResults, RelationalExt, SimilarityOps, TextOps}
 
 /** The driver-side ends of a fold: `sortedLocal` orders a local result
   * exactly as `orderBy` does and leaves it a local relation, so
@@ -183,6 +183,16 @@ class DriverResultsSpec extends AnyFunSuite {
       e.getMessage.contains((n * 64).toString), e.getMessage)
     // at the bound itself the rollup runs
     assert(TextOps.qualityBootstrapOf(docs.limit(n), 64).count() == n)
+  }
+
+  test("Lloyd training's model-state collect fails by name past its bound") {
+    val n = SimilarityOps.MaxLloydModelRows
+    val e = spark.range(n.toLong + 1).select(col("id").as("vec_id"),
+      array(lit(1.0f)).as("embedding"))
+    val err = intercept[IllegalArgumentException](
+      SimilarityOps.kmeansStateBootstrap(spark, e, n + 1, 1, 1))
+    assert(err.getMessage.contains("Lloyd seed centroids") &&
+      err.getMessage.contains(n.toString), err.getMessage)
   }
 
   test("mergeIntoPartitioned's partition collect fails by name past its bound, writing nothing") {

@@ -72,8 +72,7 @@ class KMeansSpec extends AnyFunSuite {
 
   test("incremental refresh (q210): sequential driver replay parity; members conserved; state moved by later batches") {
     import org.apache.spark.sql.functions.col
-    val got = SimilarityOps.kmeansRefresh(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Double](2).toVector))
+    val got = KMeansSpec.refreshedCentroids(spark, sf)
     assert(got.nonEmpty)
     // independent sequential replay from the raw embeddings
     val all = Tables.embeddings(spark, sf)
@@ -252,4 +251,15 @@ class KMeansSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$dir2/embeddings.parquet")
     assert(SimilarityOps.kmeansSilhouette(spark, dir2, k = 4, iters = 2).isEmpty)
   }
+}
+
+object KMeansSpec {
+  /** q210's registered (cluster, n_members, dim, c_v) rows regrouped to
+    * one (cluster, n_members, centroid) per cluster, cluster-ascending. */
+  def refreshedCentroids(spark: org.apache.spark.sql.SparkSession,
+                         dir: String): Seq[(Long, Long, Vector[Double])] =
+    SimilarityOps.kmeansRefreshRows(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+      .groupBy(r => (r._1, r._2)).toSeq.sortBy(_._1._1)
+      .map { case ((cl, n), rs) => (cl, n, rs.sortBy(_._3).map(_._4).toVector) }
 }

@@ -9,6 +9,35 @@ class SimilarityDedupSpec extends AnyFunSuite {
   import TestSpark.{spark, sf}
   import spark.implicits._
 
+  /** mllib MinHashLSH near-dup, the reference the banded LSH is
+    * cross-checked against: shingle sets → sparse binary vectors in a
+    * 2^18-dim space → approxSimilarityJoin on Jaccard distance over 10
+    * hash tables, with a fixed seed. The array → ml Vector conversion
+    * is a UDF because the mllib API takes Vectors. */
+  private def nearDupMinHashML(dir: String, threshold: Double): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.ml.feature.MinHashLSH
+    import org.apache.spark.ml.linalg.Vectors
+    val dim = 1 << 18
+    val toVec = udf { (sh: Seq[Long]) =>
+      val idx = sh.map(h => ((h % dim) + dim) % dim).map(_.toInt).distinct.sorted.toArray
+      Vectors.sparse(dim, idx, Array.fill(idx.length)(1.0))
+    }
+    val docs = Tables.documents(spark, dir)
+      .select(col("doc_id"), DedupOps.shingles(col("text")).as("sh"))
+      .filter(size(col("sh")) > 0)
+      .select(col("doc_id"), toVec(transform(col("sh"), s => xxhash64(s))).as("features"))
+    val model = new MinHashLSH()
+      .setInputCol("features").setOutputCol("hashes")
+      .setNumHashTables(10).setSeed(42L)
+      .fit(docs)
+    model.approxSimilarityJoin(docs, docs, 1.0 - threshold, "dist")
+      .select(
+        col("datasetA.doc_id").as("doc_a"),
+        col("datasetB.doc_id").as("doc_b"),
+        round(lit(1.0) - col("dist"), 4).as("jaccard"))
+      .filter(col("doc_a") < col("doc_b"))
+  }
+
   test("method agreement (q203): set arithmetic matches the collected pair sets") {
     def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select(col("doc_a"), col("doc_b")).as[(Long, Long)].collect().toSet
@@ -449,28 +478,18 @@ class SimilarityDedupSpec extends AnyFunSuite {
   test("mllib MinHashLSH finds the hand-rolled high-jaccard pairs") {
     val exact = DedupOps.nearDupNgram(spark, sf, threshold = 0.9)
       .select($"doc_a", $"doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ml = graft.ops.MLVariants.nearDupMinHashML(spark, sf, threshold = 0.9)
+    val ml = nearDupMinHashML(sf, threshold = 0.9)
       .select($"doc_a", $"doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(exact.nonEmpty)
     assert(exact.subsetOf(ml), s"mllib missed: ${exact -- ml}")
-  }
-
-  test("ivf top-k agrees with brute force on cosine values") {
-    val bf = SimilarityOps.bruteForceTopK(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getDouble(2))).toMap
-    val ivf = graft.ops.MLVariants.ivfTopK(spark, sf).collect()
-    assert(ivf.nonEmpty)
-    ivf.foreach { r =>
-      bf.get(r.getLong(0)).foreach(c => assert(c == r.getDouble(2)))
-    }
   }
 
   test("gated ivf (q46): exact rows equal brute force and the recall envelope holds") {
     // the q46 gate's two halves, pinned separately: the value rows ARE
     // the exact top-10 (what the oracle hash-checks), and the in-plan
     // ANN-recall flag is true at test scale (nprobe=8/16 with floor 3;
-    // see MLVariants.ivfTopKGated's calibration argument)
-    val gated = graft.ops.MLVariants.ivfTopKGated(spark, sf).collect()
+    // see SimilarityOps.ivfTopKGated's calibration argument)
+    val gated = SimilarityOps.ivfTopKGated(spark, sf).collect()
     val bf = SimilarityOps.bruteForceTopK(spark, sf).collect()
     assert(gated.map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq ==
       bf.map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq,

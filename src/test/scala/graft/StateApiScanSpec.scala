@@ -9,7 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * calls it: a caller mentioned only in a comment or inside the def's
   * own body does not count, and the query registries count as callers.
   * `pipeline/` is not scanned, since the hydro upsert API is the
-  * reference's own `out:{reduce:'joined'}` semantics. */
+  * reference's own `out:{reduce:'joined'}` semantics. The same scan
+  * keeps spark-mllib out of src/main: every k-means runs through the
+  * deterministic Lloyd trainer, so no code there may name
+  * `org.apache.spark.ml`. */
 class StateApiScanSpec extends AnyFunSuite {
   import SourceScan._
 
@@ -80,5 +83,23 @@ class StateApiScanSpec extends AnyFunSuite {
     // a caller in another file counts
     val other = "B.scala" -> "object B { val x = A.fooMerge(2) + A.bazKernel(1) }"
     assert(uncalled(Seq("A.scala" -> src), Seq("A.scala" -> src, other)).isEmpty)
+  }
+
+  test("nothing under src/main imports or names org.apache.spark.ml") {
+    val mllib = """\borg\.apache\.spark\.ml(lib)?\.""".r
+    val files = read(sources(new File("src/main/scala")))
+    assert(files.size > 20, s"scanned ${files.size} files")
+    val offenders = for {
+      (path, text) <- files
+      (line, at) <- text.split("\n", -1).toSeq.zipWithIndex
+      if mllib.findFirstIn(line).nonEmpty
+    } yield s"$path:${at + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("mllib under src/main:\n", "\n", ""))
+    // the pattern matches an import and a qualified use, not a comment
+    val probe = stripComments(
+      "import org.apache.spark.ml.clustering.KMeans\n// org.apache.spark.ml.x\n" +
+        "val m = new org.apache.spark.mllib.linalg.DenseVector(Array(1.0))")
+    assert(probe.split("\n").map(l => mllib.findFirstIn(l).nonEmpty).toSeq ==
+      Seq(true, false, true))
   }
 }

@@ -364,8 +364,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
       st.sortBy(_._1).map { case (cl, n, s) =>
         (cl, n, s.map(v => math.floor(v / n * 1e6 + 0.5) / 1e6).toVector)
       }
-    val batchRun = SimilarityOps.kmeansRefresh(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Double](2).toVector)).toSeq
+    val batchRun = KMeansSpec.refreshedCentroids(spark, sf)
     assert(render(state) == batchRun,
       "streamed training-state fold diverged from the batch refresh")
     assert(render(state).map(_._2).sum == total, "members not conserved")

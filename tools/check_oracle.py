@@ -1,12 +1,16 @@
 #!/usr/bin/env python3
 """Local stand-in for the driver's DuckDB-oracle correctness gate.
 
-Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
+Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir> [query ...]
+       python3 tools/check_oracle.py --selftest
 
 Reads <verifyOutDir>/oracle_sql.json (written by graft.Verify), runs each
 statement in DuckDB over the parquet tables in <sfDir>, and compares with
 the parquet result Verify dumped, after sorting columns by name and rows
 by all columns. Reports per-query PASS/FAIL with first differences.
+Each optional query argument may itself be a comma-separated list; with
+none, every query in oracle_sql.json is checked. A named query that is
+not in oracle_sql.json counts as a failure.
 """
 import json
 import re
@@ -172,30 +176,29 @@ def canon(df: pd.DataFrame, side: str = "result") -> pd.DataFrame:
     return df
 
 
-def main(sf_dir: str, out_dir: str, only: str = "") -> int:
+def query_filter(args: list) -> set:
+    """The query names of every positional argument after <sfDir> and
+    <verifyOutDir>; each argument may be a comma-separated list."""
+    return {n.strip() for a in args for n in a.split(",") if n.strip()}
+
+
+def main(sf_dir: str, out_dir: str, keep: set = frozenset()) -> int:
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     with open(f"{out_dir}/oracle_sql.json") as f:
         oracle = json.load(f)
-    keep = {n.strip() for n in only.split(",") if n.strip()}
-    unknown = keep - set(oracle)
-    if keep and unknown:
-        # a typo'd filter must not print "0 pass / 0 fail" and exit 0
-        print(f"WARNING: filter names not in oracle_sql.json: {sorted(unknown)}",
-              file=sys.stderr)
-    if keep and not (keep & set(oracle)):
-        print("ERROR: query filter matched nothing; no checks ran", file=sys.stderr)
-        return 2
+    # a typo'd name must not pass as "0 fail": each one is a failure
+    unknown = sorted(set(keep) - set(oracle))
+    for name in unknown:
+        print(f"FAIL {name}: not in oracle_sql.json")
     lint_scope = {n: s for n, s in oracle.items() if not keep or n in keep}
     lint = lint_bare_decimals(lint_scope)
     for name, msg in lint:
         print(f"LINT {name}: bare-decimal multiply — {msg}")
-    n_pass, n_fail = 0, len(lint)
-    for name, sql in sorted(oracle.items()):
-        if keep and name not in keep:
-            continue
+    n_pass, n_fail = 0, len(lint) + len(unknown)
+    for name, sql in sorted(lint_scope.items()):
         try:
             exp = con.sql(sql).df()
             got = con.sql(
@@ -306,15 +309,23 @@ def selftest() -> int:
         got = lint_bare_decimals({n: s})
         if got:
             failures.append(f"decimal lint false-positive on {n}: {got}")
+    # 4. the query filter joins every positional argument, each of which
+    #    may be comma-separated (a filter once kept only the first)
+    for args, want in (([], set()),
+                       (["q61"], {"q61"}),
+                       (["q61", "q97", "q143"], {"q61", "q97", "q143"}),
+                       (["q61,q97", "q143"], {"q61", "q97", "q143"}),
+                       ([" q61 , ,q97", ","], {"q61", "q97"})):
+        if query_filter(args) != want:
+            failures.append(f"query filter {args} -> {query_filter(args)}, want {want}")
     for f in failures:
         print(f"SELFTEST FAIL: {f}")
     print(f"== selftest {'FAILED' if failures else 'passed'}: nested-output "
-          f"rejection + driver-hash replica + bare-decimal lint ==")
+          f"rejection + driver-hash replica + bare-decimal lint + query filter ==")
     return 1 if failures else 0
 
 
 if __name__ == "__main__":
     if len(sys.argv) > 1 and sys.argv[1] == "--selftest":
         sys.exit(selftest())
-    sys.exit(main(sys.argv[1], sys.argv[2],
-                  sys.argv[3] if len(sys.argv) > 3 else ""))
+    sys.exit(main(sys.argv[1], sys.argv[2], query_filter(sys.argv[3:])))

@@ -484,6 +484,23 @@ class SimilarityDedupSpec extends AnyFunSuite {
     assert(exact.subsetOf(ml), s"mllib missed: ${exact -- ml}")
   }
 
+  test("ivf top-k agrees with brute force on cosine values") {
+    // q46's ANN leg (16 learned lists, probe 8): every served score is
+    // the exact cosine, and its recall floor sits above the gate's
+    val brute = SimilarityOps.bruteForceTopK(spark, sf, k = 5000)
+      .as[(Long, Int, Double)].collect().map(t => t._1 -> t._3).toMap
+    val top10 = SimilarityOps.bruteForceTopK(spark, sf, k = 10)
+      .as[(Long, Int, Double)].collect().map(_._1).toSet
+    val served = SimilarityOps.ivfLearnedTopK(spark, sf, nprobe = 8, kClusters = 16)
+      .as[(Long, Int, Double)].collect().toSeq
+    assert(served.size == 10)
+    served.foreach { case (id, _, cos) =>
+      assert(brute(id) == cos, s"served score for $id is not the exact cosine")
+    }
+    val recall = served.count(s => top10(s._1))
+    assert(recall >= 5, s"q46 ANN-leg recall@10 collapsed: $recall/10")
+  }
+
   test("gated ivf (q46): exact rows equal brute force and the recall envelope holds") {
     // the q46 gate's two halves, pinned separately: the value rows ARE
     // the exact top-10 (what the oracle hash-checks), and the in-plan

@@ -159,7 +159,9 @@ object L2Argmin {
   * `array<struct<d2: double, cl: bigint>>` in model (cl-ascending)
   * order — what the simplified-silhouette pass (q218: a = own
   * centroid, b = nearest other) and the in-plan IVF probe selection
-  * (array_sort + slice to nprobe) consume. Same IEEE accumulation
+  * (`sort_array` + slice to nprobe: the elements are non-null structs,
+  * so `sort_array` orders them as `array_sort` would, with no lambda)
+  * consume. Same IEEE accumulation
   * order, same reference-object model, same length-mismatch → null-d2
   * omission as the old zip_with fold's null cell (mismatched
   * centroids are emitted with d2 = +Infinity rather than dropped so

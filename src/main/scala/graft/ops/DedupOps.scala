@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.{ShingleSignature, TextNorm}
-import graft.functions.CosineSimilarity.cosineSimilarity
 
 /** Deduplication operators for LLM-data pipelines (SURVEY.md §2c):
   * exact (normalized-fingerprint groupBy), n-gram Jaccard, banded
@@ -1414,14 +1413,16 @@ object DedupOps {
         coalesce(sum(when(col("mnp") === 0 &&
             (col("mxp") === 1 || col("deg") > 1L), lit(1L))
           .otherwise(lit(0L))), lit(0L)))
-    val probeRow = starProbeAgg(edges).head()
+    def probe(e: DataFrame) =
+      DriverResults.collectBounded(starProbeAgg(e), 1, "star-forest probe").head
+    val probeRow = probe(edges)
     val maxDeg = probeRow.getLong(0)
     val useSalt = maxDeg >= saltThreshold
     def minAttach(l: DataFrame, mins: DataFrame): DataFrame =
       if (useSalt) Skew.saltedJoin(l, mins, col("u"), col("nu"), skewFactor)
       else l.join(mins, col("u") === col("nu"))
     def isStarForest(e: DataFrame): Boolean =
-      starProbeAgg(e).head().getLong(1) == 0L
+      probe(e).getLong(1) == 0L
     var converged = probeRow.getLong(1) == 0L
     var rounds = 0
     // (node, min-neighbor) via hash aggregate — the partial combine is
@@ -1841,7 +1842,7 @@ object DedupOps {
     val b = e.select(col("label"), col("vec_id").as("vec_b"), col("embedding").as("emb_b"))
     a.join(b, Seq("label"))
       .filter(col("vec_a") < col("vec_b"))
-      .withColumn("cos", round(cosineSimilarity(col("emb_a"), col("emb_b")), 4))
+      .withColumn("cos", SimilarityOps.cosScore(col("emb_a"), col("emb_b")))
       .filter(col("cos") >= threshold)
       .select(col("vec_a"), col("vec_b"), col("label").cast("int").as("label"), col("cos"))
   }
@@ -1861,7 +1862,7 @@ object DedupOps {
       .agg(collect_list(struct(col("vec_id").as("doc_id"), col("embedding"))).as("members"))
     bucketPairs(buckets)
       .select(col("x.doc_id").as("vec_a"), col("y.doc_id").as("vec_b"),
-        round(cosineSimilarity(col("x.embedding"), col("y.embedding")), 4).as("cos"))
+        SimilarityOps.cosScore(col("x.embedding"), col("y.embedding")).as("cos"))
       .filter(col("cos") >= threshold)
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.CosineSimilarity.cosineSimilarity
+import graft.functions.L2Argmin.{l2Argmin, l2Scored}
 
 /** Similarity search over the `embeddings` table (SURVEY.md §2c):
   * brute-force cosine top-k as the exact baseline, and an LSH
@@ -19,6 +20,12 @@ import graft.functions.CosineSimilarity.cosineSimilarity
   *    partition key in a real deployment); queries touch only their
   *    bucket (+ optional multi-probe neighbors), turning top-k from
   *    corpus-linear into bucket-linear.
+  *  - Every single-query retrieval is probe ∘ rerank ∘ top-k: a probe
+  *    source (all rows, LSH buckets, IVF lists) narrows the corpus,
+  *    [[rerankTopK]] scores the candidates against [[queryVector]]
+  *    with [[cosScore]] and keeps the top k under [[cosOrder]]. Both
+  *    IVF codebooks, the label one and the Lloyd-trained one, are
+  *    driver-side models served by one [[ivfServe]].
   */
 object SimilarityOps {
 
@@ -36,27 +43,61 @@ object SimilarityOps {
     * recomputes the exact buckets and the whole ANN/near-dup LSH
     * pipeline is hash-checked end to end (q30/q40), not rows-only.
     * Materialized driver-side as literals — tiny (planes × dim). */
-  private def planes(nPlanes: Int, dim: Int): Array[Array[Double]] = {
+  private def planes(nPlanes: Int, dim: Int): Array[Array[Double]] =
+    md5Signs(nPlanes, dim, (p, i) => s"${p}_$i")
+
+  /** The ±1 matrix whose (j, i) sign is +1 iff the first hex nibble of
+    * md5(key(j, i)) is below 8: the LSH planes and q163's projection. */
+  private def md5Signs(rows: Int, dim: Int, key: (Int, Int) => String): Array[Array[Double]] = {
     val md = java.security.MessageDigest.getInstance("MD5")
-    Array.tabulate(nPlanes, dim) { (p, i) =>
-      val d = md.digest(s"${p}_$i".getBytes("UTF-8"))
+    Array.tabulate(rows, dim) { (j, i) =>
+      val d = md.digest(key(j, i).getBytes("UTF-8"))
       if (((d(0) >> 4) & 0xF) < 8) 1.0 else -1.0
     }
   }
+
+  /** The dot product of `emb` with one constant plane, folded in index
+    * order in double — the fold the oracles' `list_sum` replays. */
+  private def planeDot(emb: Column, plane: Array[Double]): Column =
+    aggregate(
+      zip_with(emb, array(plane.toIndexedSeq.map(v => lit(v)): _*),
+        (x, w) => x.cast("double") * w),
+      lit(0.0), (acc, v) => acc + v)
+
+  /** The exact rerank score of every retrieval query: the codegen'd
+    * cosine, rounded at 4 so both engines rank the same value. */
+  private[ops] def cosScore(a: Column, b: Column): Column =
+    round(cosineSimilarity(a, b), 4)
+
+  /** The retrieval order: `cos` descending, ties to the lower `vec_id`. */
+  private def cosOrder: Seq[Column] = Seq(col("cos").desc, col("vec_id"))
+
+  /** The one-row `q_emb` frame of the query vector `id`. */
+  private def queryVector(e: DataFrame, id: Long): DataFrame =
+    e.filter(col("vec_id") === id).select(col("embedding").as("q_emb"))
+
+  /** The single-query tail: each candidate (`vec_id`, `embedding` and
+    * `carry`) joined to the broadcast query row `q` (a [[queryVector]]
+    * frame, which may carry the query's probe set beside `q_emb`),
+    * kept where `probed` holds, scored, then the top `k` under
+    * [[cosOrder]] as one TakeOrderedAndProject — per-partition partial
+    * top-k, a k-row merge on the driver. The probe test rides on the
+    * one broadcast: a separate semi-join on the probe set would
+    * broadcast the query row twice, one more job per query. */
+  private def rerankTopK(cands: DataFrame, q: DataFrame, k: Int,
+                         probed: Column = lit(true),
+                         carry: Column = col("label").cast("int").as("label")): DataFrame =
+    cands.crossJoin(broadcast(q)).filter(probed)
+      .select(col("vec_id"), carry, cosScore(col("embedding"), col("q_emb")).as("cos"))
+      .orderBy(cosOrder: _*)
+      .limit(k)
 
   /** Exact top-k by cosine against the embedding of `queryId`.
     * Deterministic: ties broken by vec_id. */
   def bruteForceTopK(spark: SparkSession, dir: String,
                      queryId: Long = 0L, k: Int = 10): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    val q = e.filter(col("vec_id") === queryId)
-      .select(col("embedding").as("q_emb"))
-    e.filter(col("vec_id") =!= queryId)
-      .crossJoin(broadcast(q))
-      .withColumn("cos", round(cosineSimilarity(col("embedding"), col("q_emb")), 4))
-      .select(col("vec_id"), col("label").cast("int").as("label"), col("cos"))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(k)
+    rerankTopK(e.filter(col("vec_id") =!= queryId), queryVector(e, queryId), k)
   }
 
   /** LSH bucket id: sign bits of the dot products with the
@@ -83,13 +124,7 @@ object SimilarityOps {
         .headOption.map(_.getInt(0)).getOrElse(1)
     val ps = planes(nPlanes, d)
     val bucket = (0 until nPlanes).map { p =>
-      val dot = aggregate(
-        zip_with(
-          col("embedding"),
-          array(ps(p).toIndexedSeq.map(v => lit(v)): _*),
-          (x, w) => x.cast("double") * w),
-        lit(0.0), (acc, v) => acc + v)
-      when(dot > 0, shiftleft(lit(1), p)).otherwise(0)
+      when(planeDot(col("embedding"), ps(p)) > 0, shiftleft(lit(1), p)).otherwise(0)
     }.reduce((a, b) => a.bitwiseOR(b))
     df.withColumn("bucket",
       when(col("embedding").isNull, raise_error(
@@ -99,6 +134,24 @@ object SimilarityOps {
         .otherwise(raise_error(concat(
           lit(s"embedding dimension mismatch: hyperplanes are $d-dim, row has "),
           size(col("embedding")).cast("string")))))
+  }
+
+  /** The bucket and its Hamming-1 ball: the bucket, then each of its
+    * `nPlanes` single-bit flips. */
+  private def hammingBall(bucket: Column, nPlanes: Int): Column =
+    array(bucket +: (0 until nPlanes).map(i => bucket.bitwiseXOR(shiftleft(lit(1), i))): _*)
+
+  /** The LSH serve: the query row carries its probe buckets (`probes`
+    * over its own `bucket` and `embedding`, given the planes), and
+    * [[rerankTopK]] keeps the corpus rows whose bucket is one of them. */
+  private def lshTopK(spark: SparkSession, dir: String, queryId: Long, k: Int,
+                      nPlanes: Int)(probes: Array[Array[Double]] => Column): DataFrame = {
+    val dim = Tables.embeddingDim(spark, dir)
+    val e = Tables.embeddings(spark, dir)
+    val q = withBucket(queryVector(e, queryId).select(col("q_emb").as("embedding")), nPlanes, dim)
+      .select(col("embedding").as("q_emb"), probes(planes(nPlanes, dim)).as("probe_buckets"))
+    rerankTopK(withBucket(e, nPlanes, dim).filter(col("vec_id") =!= queryId), q, k,
+      probed = array_contains(col("probe_buckets"), col("bucket")))
   }
 
   /** Per-label embedding centroids in flat (label, dim, mean, n)
@@ -164,69 +217,83 @@ object SimilarityOps {
     * and rerank are all recomputable by the DuckDB oracle — the IVF
     * MECHANISM (assign → probe nprobe inverted lists → exact rerank)
     * is hash-verified end to end, as it is for the Lloyd-trained
-    * codebook of [[ivfLearnedTopK]] (q184). Assignment distance is a
-    * sequential (x−c)² fold matching list_sum's order; centroid
-    * averages can differ from DuckDB's in the last ulp, which only
-    * matters on exact assignment-distance ties — label centroids are
-    * far apart by construction. In production the codebook and the rk=1
+    * codebook of [[ivfLearnedTopK]] (q184), whose serve this is over a
+    * different model. Assignment distance is a sequential (x−c)² fold
+    * matching list_sum's order; centroid averages can differ from
+    * DuckDB's in the last ulp, which only matters on exact
+    * assignment-distance ties — label centroids are far apart by
+    * construction. In production the codebook and the rk=1
     * assignment are persisted index state, not recomputed per query;
     * the per-query work is nprobe lists + a k-row TakeOrdered.
     *
-    * Scale: the whole codebook (labels × dim doubles — KBs) collapses
-    * to ONE broadcast row holding a clabel-sorted array of centroids,
-    * and assignment is a narrow per-row argmin over that array
-    * (array_sort of (d2, clabel) structs — ascending struct order IS
-    * the (distance, label) tie-break). No corpus row is ever
-    * replicated ×labels through an exchange and no exchange carries
-    * the embedding column (PlanSpec asserts this): the only shuffles
-    * in the plan build the centroid table itself, on exploded scalar
-    * (label, dim) rows. The earlier form computed the same argmin as
-    * crossJoin(centroids) + row_number window — corpus × labels rows,
-    * each carrying the full embedding, shuffled just to pick a min. */
+    * Scale: the codebook (labels × dim doubles — KBs) is collected to
+    * the driver once ([[ivfCodebook]]) and rides in the codegen'd
+    * [[graft.functions.L2Argmin]] / [[graft.functions.L2Scored]]
+    * kernels as a reference object, so assignment is a narrow per-row
+    * map. No corpus row is ever replicated ×labels through an
+    * exchange and no exchange carries the embedding column (PlanSpec
+    * asserts this): the only shuffle builds the centroid table
+    * itself, on exploded scalar (label, dim) rows. */
   def ivfLabelTopK(spark: SparkSession, dir: String, queryId: Long = 0L,
                    k: Int = 10, nprobe: Int = 2): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    val codebook = ivfCodebook(e)
-    val assigned = e.crossJoin(broadcast(codebook))
-      .withColumn("clabel", ivfDists.getItem(0).getField("clabel"))
-    val probes = e.filter(col("vec_id") === queryId)
-      .crossJoin(broadcast(codebook))
-      .select(explode(slice(ivfDists, 1, nprobe)).as("p"))
-      .select(col("p.clabel").as("probe_label"))
-    val q = e.filter(col("vec_id") === queryId).select(col("embedding").as("q_emb"))
-    assigned.filter(col("vec_id") =!= queryId)
-      .join(broadcast(probes), col("clabel") === col("probe_label"))
-      .crossJoin(broadcast(q))
-      .withColumn("cos", round(cosineSimilarity(col("embedding"), col("q_emb")), 4))
-      .select(col("vec_id"), col("label").cast("int").as("label"), col("cos"))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(k)
+    ivfServe(e, ivfCodebook(e), queryId, k, nprobe)
   }
 
-  /** One-row codebook: clabel-sorted array of (clabel, cent) structs —
-    * the [[ivfLabelTopK]] coarse quantizer, shared with the persisted-
-    * index pair below. */
-  private[graft] def ivfCodebook(e: DataFrame): DataFrame =
-    e.select(col("label").as("clabel"), posexplode(col("embedding")))
-      .groupBy(col("clabel"), col("pos"))
+  /** The label codebook of `e`: each label's mean embedding, averaged
+    * per (label, dim) in double, as a driver-side (label, centroid)
+    * model in label-ascending order — the order that is the tie rule
+    * of every assignment and probe against it. The flat (label, dim,
+    * mean) rows are collected under [[MaxLloydModelRows]]. A null
+    * label cannot be an inverted-list id, and a dimension no vector of
+    * a label fills has no mean: both fail by name. */
+  private[graft] def ivfCodebook(e: DataFrame): Seq[(Long, Array[Double])] = {
+    val means = e.select(col("label").cast("long").as("label"), posexplode(col("embedding")))
+      .groupBy(col("label"), col("pos"))
       .agg(avg(col("col").cast("double")).as("m"))
-      .groupBy(col("clabel"))
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-        s => s.getField("m")).as("cent"))
-      .agg(array_sort(collect_list(struct(col("clabel"), col("cent")))).as("cents"))
-
-  /** Narrow argmin over the broadcast codebook row: distances to every
-    * centroid as a sorted (d2, clabel) struct array — ascending struct
-    * order IS the (distance, label) tie-break. References the
-    * `embedding` and `cents` columns of the frame it is applied to. */
-  private def ivfDists: Column = {
-    def d2(c: Column): Column = aggregate(
-      zip_with(col("embedding"), c.getField("cent"),
-        (x, cc) => (x.cast("double") - cc) * (x.cast("double") - cc)),
-      lit(0.0), (a, v) => a + v)
-    array_sort(transform(col("cents"),
-      c => struct(d2(c).as("d2"), c.getField("clabel").as("clabel"))))
+    val rows = DriverResults.collectBounded(means, MaxLloydModelRows, "IVF label codebook")
+    require(rows.forall(!_.isNullAt(0)),
+      "IVF label codebook: a null label cannot be an inverted-list id")
+    require(rows.forall(!_.isNullAt(2)),
+      "IVF label codebook: a label has a dimension with no non-null value")
+    rows.groupBy(_.getLong(0)).toSeq.sortBy(_._1).map { case (label, rs) =>
+      (label, rs.sortBy(_.getInt(1)).map(_.getDouble(2)))
+    }
   }
+
+  /** The `nprobe` nearest lists of `emb` under `model`, nearest first:
+    * the (d2, cl) structs sorted ascending, so distance ties go to the
+    * lower list id. [[graft.functions.L2Scored]]'s elements are
+    * non-null, so `sort_array` orders them as `array_sort` would, and
+    * no lambda runs. */
+  private[graft] def probeLists(emb: Column, model: Seq[(Long, Array[Double])], nprobe: Int): Column =
+    slice(sort_array(l2Scored(emb, model)), 1, nprobe).getField("cl")
+
+  /** Each (vec_id, label, embedding) row with its nearest list `clabel`
+    * under `model` — the assignment the index write, the streaming
+    * append and every IVF serve share. */
+  private[graft] def ivfAssigned(e: DataFrame, model: Seq[(Long, Array[Double])]): DataFrame =
+    e.select(col("vec_id"), col("label"), col("embedding"),
+      l2Argmin(col("embedding"), model).getField("cl").as("clabel"))
+
+  /** The IVF serve over a driver-side model: the corpus assigned to
+    * its lists, the query row carrying its [[probeLists]], and
+    * [[rerankTopK]] over the candidates in those lists. q87 serves the
+    * label codebook, q184 and q46 a Lloyd-trained one. Approximate BY
+    * CONTRACT: a neighbor assigned outside the probed lists is unseen. */
+  private def ivfServe(e: DataFrame, model: Seq[(Long, Array[Double])], queryId: Long,
+                       k: Int, nprobe: Int): DataFrame = {
+    val q = queryVector(e, queryId)
+      .select(col("q_emb"), probeLists(col("q_emb"), model, nprobe).as("probe_lists"))
+    rerankTopK(ivfAssigned(e.filter(col("vec_id") =!= queryId), model), q, k,
+      probed = array_contains(col("probe_lists"), col("clabel")))
+  }
+
+  /** The `clabel`s of `probes` on the driver, for a bucketed index
+    * scan's IN-list, which must exist at plan time to prune. */
+  private def probedLabels(probes: DataFrame): Seq[Long] =
+    DriverResults.collectBounded(probes.select(col("clabel")),
+      MaxLloydModelRows, "IVF probe labels").map(_.getLong(0)).toSeq
 
   /** Persist the IVF index: every corpus vector with its rk=1 coarse
     * assignment, as a clabel-bucketed sorted catalog table — the
@@ -246,14 +313,6 @@ object SimilarityOps {
     graft.sources.Formats.writeBucketed(
       ivfAssigned(e, ivfCodebook(e)), table, "clabel", buckets)
 
-  /** Each (vec_id, label, embedding) row with its rk=1 coarse label
-    * `clabel` against `codebook` — the assignment the index write, the
-    * streaming append and q180's rebuild witness share. */
-  private def ivfAssigned(e: DataFrame, codebook: DataFrame): DataFrame =
-    e.crossJoin(broadcast(codebook))
-      .withColumn("clabel", ivfDists.getItem(0).getField("clabel"))
-      .select(col("vec_id"), col("label"), col("embedding"), col("clabel"))
-
   /** Streaming-ingest append: assign an arriving (vec_id, label,
     * embedding) batch against a SUPPLIED frozen codebook — never the
     * batch's own statistics; an arriving batch must not move the
@@ -268,7 +327,7 @@ object SimilarityOps {
     * sequential batch replay and to a frozen-codebook rebuild. Append
     * mode creates the table when absent, so a rebuild is this method
     * applied to the full corpus in one call. */
-  def appendIvfIndexOf(batch: DataFrame, codebook: DataFrame,
+  def appendIvfIndexOf(batch: DataFrame, codebook: Seq[(Long, Array[Double])],
                        table: String, buckets: Int = 8): Unit =
     graft.sources.Formats.appendBucketed(
       ivfAssigned(batch, codebook), table, "clabel", buckets)
@@ -303,24 +362,25 @@ object SimilarityOps {
     // while the DataFrame is bound to the pinned session (executedPlan
     // is a lazy val — the decision is cached for the returned frame's
     // later actions).
-    val pinned = spark.newSession()
-    pinned.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
+    val pinned = keepBucketedScans(spark)
     val e = Tables.embeddings(pinned, dir)
-    val probeLabels = e.filter(col("vec_id") === queryId)
-      .crossJoin(broadcast(ivfCodebook(e)))
-      .select(explode(slice(ivfDists, 1, nprobe)).as("p"))
-      .select(col("p.clabel")).collect().map(_.get(0)).toSeq
-    val q = e.filter(col("vec_id") === queryId).select(col("embedding").as("q_emb"))
-    val res = pinned.table(table)
+    val q = queryVector(e, queryId)
+    val probeLabels = probedLabels(
+      q.select(explode(probeLists(col("q_emb"), ivfCodebook(e), nprobe)).as("clabel")))
+    val res = rerankTopK(pinned.table(table)
       .filter(col("clabel").isin(probeLabels: _*))
-      .filter(col("vec_id") =!= queryId)
-      .crossJoin(broadcast(q))
-      .withColumn("cos", round(cosineSimilarity(col("embedding"), col("q_emb")), 4))
-      .select(col("vec_id"), col("label").cast("int").as("label"), col("cos"))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(k)
+      .filter(col("vec_id") =!= queryId), q, k)
     res.queryExecution.executedPlan
     res
+  }
+
+  /** A session derived from `spark` whose planner keeps a bucketed
+    * scan that no join or aggregation exploits, so its bucket pruning
+    * survives (see [[ivfBucketedTopK]]). */
+  private def keepBucketedScans(spark: SparkSession): SparkSession = {
+    val pinned = spark.newSession()
+    pinned.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
+    pinned
   }
 
   /** Incremental embedding-batch admission against a persisted
@@ -335,8 +395,9 @@ object SimilarityOps {
     * the INDEX side alone (an arriving batch must not move the
     * centroids it is judged against).
     *
-    * Scale: the codebook is one broadcast row (KBs); the batch's
-    * distinct probe labels are collected driver-side (≤ nlist rows —
+    * Scale: the codebook is driver-side model state (KBs) inside the
+    * codegen'd probe kernel; the batch's distinct probe labels are
+    * collected driver-side (≤ nlist rows —
     * index STATE, not corpus data; the literal IN-list must exist at
     * plan time for the bucketed scan to prune); the probe join keys on
     * clabel, the index table's bucket column, so the corpus side reads
@@ -363,24 +424,20 @@ object SimilarityOps {
     * index and gets batch-identical admission (spec-proven), the same
     * batch-boundary independence contract as the text and media
     * admission forms. */
-  def embeddingAdmissionOf(batch: DataFrame, codebook: DataFrame,
+  def embeddingAdmissionOf(batch: DataFrame, codebook: Seq[(Long, Array[Double])],
                            index: DataFrame,
                            simThreshold: Double = 0.35,
                            nprobe: Int = 2): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val batchProbes = batch
-      .crossJoin(broadcast(codebook))
       .select(col("vec_id").as("b_id"), col("embedding").as("b_emb"),
-        explode(slice(ivfDists, 1, nprobe)).as("p"))
-      .select(col("b_id"), col("b_emb"), col("p.clabel").as("clabel"))
-    val probeLabels = batchProbes.select(col("clabel")).distinct()
-      .collect().map(_.get(0)).toSeq
-    val w = Window.partitionBy(col("b_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
+        explode(probeLists(col("embedding"), codebook, nprobe)).as("clabel"))
+    val probeLabels = probedLabels(batchProbes.select(col("clabel")).distinct())
+    val w = Window.partitionBy(col("b_id")).orderBy(cosOrder: _*)
     val best = index
       .filter(col("clabel").isin(probeLabels: _*))
       .join(batchProbes, Seq("clabel"))
-      .withColumn("cos", round(cosineSimilarity(col("embedding"), col("b_emb")), 4))
+      .withColumn("cos", cosScore(col("embedding"), col("b_emb")))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") === 1)
       .select(col("b_id"), col("vec_id").as("best_match"), col("cos").as("best_cos"))
@@ -417,7 +474,6 @@ object SimilarityOps {
     * partial top-k, k-row merge. */
   def knnJoin(spark: SparkSession, dir: String,
               nQueries: Long = 20L, k: Int = 3): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // fail-loud contract guard: the whole design rests on queries ≪
     // corpus (the batch is broadcast AND each scoring partition holds
     // a heap per query). A corpus-sized nQueries would OOM the
@@ -429,11 +485,7 @@ object SimilarityOps {
         s"per partition; nQueries=$nQueries exceeds the broadcast-sized " +
         "contract (<= 65536). Bucket both sides (withBucket) and kNN-join " +
         "per bucket for corpus-sized query sets.")
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    knnPartialTopK(spark, dir, nQueries, k)
-      .withColumn("rnk", row_number().over(w).cast("bigint"))
-      .filter(col("rnk") <= k)
+    knnRanked(knnPartialTopK(spark, dir, nQueries, k), k)
   }
 
   /** The pre-exchange stage of [[knnJoin]]: broadcast-score, then the
@@ -442,25 +494,41 @@ object SimilarityOps {
     * × k) directly. */
   private[graft] def knnPartialTopK(spark: SparkSession, dir: String,
                                   nQueries: Long, k: Int): DataFrame = {
-    import spark.implicits._
     val e = Tables.embeddings(spark, dir)
     val q = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    e.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos", round(cosineSimilarity(col("embedding"), col("q_emb")), 4))
-      // null tolerance ahead of the typed combiner: a null embedding
-      // (hence null cos) can never rank — the window's default
-      // NULLS LAST on `cos DESC` would exclude it anyway, so dropping
-      // it here preserves the untyped plan's semantics while keeping
-      // the (Long, Long, Option[Int], Double) encoder total. A null
-      // LABEL, by contrast, is a rankable neighbor — Option[Int]
-      // carries it through the heap instead of throwing.
+    knnCombined(e.crossJoin(broadcast(q)), k)
+  }
+
+  /** The kNN batch tail over (query, candidate) pairs carrying `q_id`,
+    * `q_emb`, `vec_id`, `label` and `embedding`: score each pair,
+    * then keep each partition's k best rows per query
+    * ([[partialTopK]]).
+    *
+    * A null embedding (hence null cos) can never rank — the rank
+    * window's default NULLS LAST on `cos DESC` would exclude it anyway,
+    * so dropping it here preserves the untyped plan's semantics while
+    * keeping the (Long, Long, Option[Int], Double) encoder total. A
+    * null LABEL, by contrast, is a rankable neighbor — Option[Int]
+    * carries it through the heap instead of throwing. */
+  private def knnCombined(pairs: DataFrame, k: Int): DataFrame = {
+    import pairs.sparkSession.implicits._
+    pairs.filter(col("vec_id") =!= col("q_id"))
+      .withColumn("cos", cosScore(col("embedding"), col("q_emb")))
       .filter(col("cos").isNotNull)
       .select(col("q_id"), col("vec_id"), col("label").cast("int").as("label"), col("cos"))
       .as[(Long, Long, Option[Int], Double)]
       .mapPartitions(partialTopK(_, k))
       .toDF("q_id", "vec_id", "label", "cos")
+  }
+
+  /** Each query's surviving rows ranked under [[cosOrder]] (`rnk`,
+    * bigint), the top `k` kept. */
+  private def knnRanked(cands: DataFrame, k: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    cands.withColumn("rnk",
+        row_number().over(Window.partitionBy(col("q_id")).orderBy(cosOrder: _*)).cast("bigint"))
+      .filter(col("rnk") <= k)
   }
 
   /** Exact per-partition top-k: one bounded min-heap per query id,
@@ -499,21 +567,8 @@ object SimilarityOps {
     * planes so buckets stay executor-sized and store the bucket as a
     * partition key. */
   def annTopK(spark: SparkSession, dir: String,
-              queryId: Long = 0L, k: Int = 10, nPlanes: Int = 6): DataFrame = {
-    val e = withBucket(Tables.embeddings(spark, dir), nPlanes,
-      dim = Tables.embeddingDim(spark, dir))
-    val probes = array(
-      col("bucket") +: (0 until nPlanes).map(i =>
-        col("bucket").bitwiseXOR(shiftleft(lit(1), i))): _*)
-    val q = e.filter(col("vec_id") === queryId)
-      .select(col("embedding").as("q_emb"), explode(probes).as("bucket"))
-    e.filter(col("vec_id") =!= queryId)
-      .join(broadcast(q), Seq("bucket"))
-      .withColumn("cos", round(cosineSimilarity(col("embedding"), col("q_emb")), 4))
-      .select(col("vec_id"), col("label").cast("int").as("label"), col("cos"))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(k)
-  }
+              queryId: Long = 0L, k: Int = 10, nPlanes: Int = 6): DataFrame =
+    lshTopK(spark, dir, queryId, k, nPlanes)(_ => hammingBall(col("bucket"), nPlanes))
 
   /** q181: margin-guided multi-probe LSH (Lv et al. 2007) — probe the
     * query's own bucket plus the flips of only the `t` LOWEST-MARGIN
@@ -533,32 +588,18 @@ object SimilarityOps {
     * cosine top-k end to end. Approximate BY CONTRACT like every LSH
     * probe: a neighbor outside the probed buckets is unseen. */
   def multiProbeTopK(spark: SparkSession, dir: String, queryId: Long = 0L,
-                     k: Int = 10, nPlanes: Int = 6, t: Int = 2): DataFrame = {
-    val dim = Tables.embeddingDim(spark, dir)
-    val e = withBucket(Tables.embeddings(spark, dir), nPlanes, dim)
-    val ps = planes(nPlanes, dim)
-    def dot(p: Int): Column = aggregate(
-      zip_with(col("embedding"), array(ps(p).toIndexedSeq.map(v => lit(v)): _*),
-        (x, w) => x.cast("double") * w),
-      lit(0.0), (a, v) => a + v)
-    val margins = array((0 until nPlanes).map(p =>
-      struct(round(abs(dot(p)), 4).as("m"), lit(p).as("p"))): _*)
-    val flips = slice(array_sort(margins), 1, t)
-    // 2^p via exact double pow (shiftleft needs a literal shift); the
-    // oracle mirrors with 2 ** p
-    val probes = concat(
-      array(col("bucket")),
-      transform(flips, f =>
-        col("bucket").bitwiseXOR(pow(lit(2.0d), f.getField("p")).cast("int"))))
-    val q = e.filter(col("vec_id") === queryId)
-      .select(col("embedding").as("q_emb"), explode(probes).as("bucket"))
-    e.filter(col("vec_id") =!= queryId)
-      .join(broadcast(q), Seq("bucket"))
-      .withColumn("cos", round(cosineSimilarity(col("embedding"), col("q_emb")), 4))
-      .select(col("vec_id"), col("label").cast("int").as("label"), col("cos"))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(k)
-  }
+                     k: Int = 10, nPlanes: Int = 6, t: Int = 2): DataFrame =
+    lshTopK(spark, dir, queryId, k, nPlanes) { ps =>
+      val margins = array((0 until nPlanes).map(p =>
+        struct(round(abs(planeDot(col("embedding"), ps(p))), 4).as("m"), lit(p).as("p"))): _*)
+      val flips = slice(array_sort(margins), 1, t)
+      // 2^p via exact double pow (shiftleft needs a literal shift); the
+      // oracle mirrors with 2 ** p
+      concat(
+        array(col("bucket")),
+        transform(flips, f =>
+          col("bucket").bitwiseXOR(pow(lit(2.0d), f.getField("p")).cast("int"))))
+    }
 
   /** L2 normalization of the embedding column — the feature-prep step
     * before any cosine machinery (a normalized corpus turns cosine
@@ -627,28 +668,12 @@ object SimilarityOps {
   def knnJoinBucketed(spark: SparkSession, dir: String,
                       nQueries: Long = 20L, k: Int = 3,
                       nPlanes: Int = 6): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import spark.implicits._
     val e = withBucket(Tables.embeddings(spark, dir), nPlanes,
       dim = Tables.embeddingDim(spark, dir))
-    val probes = array(
-      col("bucket") +: (0 until nPlanes).map(i =>
-        col("bucket").bitwiseXOR(shiftleft(lit(1), i))): _*)
     val q = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        explode(probes).as("bucket"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    e.join(q, Seq("bucket"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos", round(cosineSimilarity(col("embedding"), col("q_emb")), 4))
-      .filter(col("cos").isNotNull)
-      .select(col("q_id"), col("vec_id"), col("label").cast("int").as("label"), col("cos"))
-      .as[(Long, Long, Option[Int], Double)]
-      .mapPartitions(partialTopK(_, k))
-      .toDF("q_id", "vec_id", "label", "cos")
-      .withColumn("rnk", row_number().over(w).cast("bigint"))
-      .filter(col("rnk") <= k)
+        explode(hammingBall(col("bucket"), nPlanes)).as("bucket"))
+    knnRanked(knnCombined(e.join(q, Seq("bucket")), k), k)
   }
 
   /** Two-stage quantized retrieval — the int8 ANN shape: every vector
@@ -676,27 +701,23 @@ object SimilarityOps {
                       k: Int = 10): DataFrame = {
     val e = Tables.embeddings(spark, dir)
     // same left-to-right squared-norm fold as the q150 oracle parity
-    val norm = sqrt(aggregate(col("embedding"), lit(0.0d),
-      (acc, x) => acc + x.cast("double") * x.cast("double")))
-    val qArr = when(norm > 0d,
-      transform(col("embedding"), x =>
-        floor(x.cast("double") / norm * 127.0 + 0.5).cast("bigint")))
-      .otherwise(transform(col("embedding"), _ => lit(0L)))
-    val coded = e.select(col("vec_id"), col("embedding"), qArr.as("qv"))
-    val q = coded.filter(col("vec_id") === queryId)
-      .select(col("qv").as("q_qv"), col("embedding").as("q_emb"))
+    def codes(v: Column): Column = {
+      val norm = sqrt(aggregate(v, lit(0.0d),
+        (acc, x) => acc + x.cast("double") * x.cast("double")))
+      when(norm > 0d,
+        transform(v, x => floor(x.cast("double") / norm * 127.0 + 0.5).cast("bigint")))
+        .otherwise(transform(v, _ => lit(0L)))
+    }
+    val q = queryVector(e, queryId)
     // codegen'd kernel, not aggregate(zip_with(...)): the candidate
     // scan is the corpus-wide stage, and the HOF form is interpreted
-    val intDot = graft.functions.IntDotProduct.intDot(col("qv"), col("q_qv"))
-    coded.filter(col("vec_id") =!= queryId)
-      .crossJoin(broadcast(q))
-      .withColumn("int_dot", intDot)
+    val intDot = graft.functions.IntDotProduct.intDot(codes(col("embedding")), col("q_qv"))
+    val shortlist = e.filter(col("vec_id") =!= queryId)
+      .crossJoin(broadcast(q.select(codes(col("q_emb")).as("q_qv"))))
+      .select(col("vec_id"), col("embedding"), intDot.as("int_dot"))
       .orderBy(col("int_dot").desc, col("vec_id"))
       .limit(candidateK)
-      .withColumn("cos", round(cosineSimilarity(col("embedding"), col("q_emb")), 4))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(k)
-      .select(col("vec_id"), col("int_dot"), col("cos"))
+    rerankTopK(shortlist, q, k, carry = col("int_dot"))
   }
 
   /** q224: product-quantization ADC retrieval (Jégou et al. 2011,
@@ -747,7 +768,7 @@ object SimilarityOps {
       lloydCentroidsGrouped(spark, eSub, k, iters)
         .map { case (g, cl, c) => (g, cl, c.toSeq) }
     val cbDf = Seq(Tuple1(cbs)).toDF("cbs")
-    val q = e.filter(col("vec_id") === queryId).select(col("embedding").as("q_emb"))
+    val q = queryVector(e, queryId)
     def subSlice(v: Column, s: Int) = slice(v, s * sub + 1, sub)
     def d2(a: Column, cent: Column) = aggregate(
       zip_with(a, cent, (x, w) => (x.cast("double") - w) * (x.cast("double") - w)),
@@ -806,16 +827,10 @@ object SimilarityOps {
     require(queryIds.nonEmpty, "need at least one query vector")
     val e = Tables.embeddings(spark, dir)
     val legs = queryIds.zipWithIndex.map { case (qid, idx) =>
-      val q = e.filter(col("vec_id") === qid).select(col("embedding").as("q_emb"))
-      e.filter(!col("vec_id").isInCollection(queryIds))
-        .crossJoin(broadcast(q))
-        .withColumn("cos", round(cosineSimilarity(col("embedding"), col("q_emb")), 4))
-        .select(col("vec_id"), col("cos"))
-        .orderBy(col("cos").desc, col("vec_id"))
-        .limit(legK)
+      rerankTopK(e.filter(!col("vec_id").isInCollection(queryIds)), queryVector(e, qid), legK)
         .withColumn("rnk",
           row_number().over(org.apache.spark.sql.expressions.Window
-            .orderBy(col("cos").desc, col("vec_id"))).cast("bigint"))
+            .orderBy(cosOrder: _*)).cast("bigint"))
         .select(col("vec_id"), lit(idx).as("leg"), col("rnk"))
     }
     val ranks = legs.reduce(_ unionByName _)
@@ -852,7 +867,7 @@ object SimilarityOps {
     * replaying the full standing-codebook probe semantics).
     *
     * Scale: the append touches only the batch (assignment = narrow
-    * map over one broadcast codebook row); serving reads only the
+    * map against the driver-side codebook); serving reads only the
     * nprobe probed buckets of old+new files (the q101 pruned-scan
     * contract, pinned session); the rebuild serve exists here only as
     * the in-plan correctness witness. Codebook freezing is the
@@ -879,33 +894,21 @@ object SimilarityOps {
     val standing = e.filter(!isBatch)
     val batch = e.filter(isBatch)
     val codebook = ivfCodebook(standing) // FROZEN: standing slice only
-    writeIvfIndexOf(standing, tbl, 8)
+    graft.sources.Formats.writeBucketed(ivfAssigned(standing, codebook), tbl, "clabel", 8)
     appendIvfIndexOf(batch, codebook, tbl, 8)
 
     // probe labels from the frozen codebook (index state, not corpus)
-    val probeLabels = e.filter(col("vec_id") === queryId)
-      .crossJoin(broadcast(codebook))
-      .select(explode(slice(ivfDists, 1, nprobe)).as("p"))
-      .select(col("p.clabel")).collect().map(_.get(0)).toSeq
-    def serve(src: DataFrame, q: DataFrame): DataFrame = src
-      .filter(col("clabel").isin(probeLabels: _*))
-      .filter(col("vec_id") =!= queryId)
-      .crossJoin(broadcast(q))
-      .withColumn("cos", round(cosineSimilarity(col("embedding"), col("q_emb")), 4))
-      .select(col("vec_id"), col("label").cast("int").as("label"), col("cos"))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(k)
-      .withColumn("rank",
-        row_number().over(Window.orderBy(col("cos").desc, col("vec_id"))).cast("long"))
-    val pinned = spark.newSession()
-    pinned.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
+    val probeLabels = probedLabels(queryVector(e, queryId)
+      .select(explode(probeLists(col("q_emb"), codebook, nprobe)).as("clabel")))
+    def serve(src: DataFrame, q: DataFrame): DataFrame =
+      rerankTopK(src.filter(col("clabel").isin(probeLabels: _*))
+        .filter(col("vec_id") =!= queryId), q, k)
+        .withColumn("rank", row_number().over(Window.orderBy(cosOrder: _*)).cast("long"))
     // the incr serve is built ENTIRELY in the pinned session (the
     // ivfBucketedTopK discipline) so its bucketed-scan conf applies
-    val qP = Tables.embeddings(pinned, dir)
-      .filter(col("vec_id") === queryId).select(col("embedding").as("q_emb"))
-    val incr = serve(pinned.table(tbl), qP)
-    val q = e.filter(col("vec_id") === queryId).select(col("embedding").as("q_emb"))
-    val rebuild = serve(ivfAssigned(e, codebook), q)
+    val pinned = keepBucketedScans(spark)
+    val incr = serve(pinned.table(tbl), queryVector(Tables.embeddings(pinned, dir), queryId))
+    val rebuild = serve(ivfAssigned(e, codebook), queryVector(e, queryId))
       .select(col("rank").as("r_rank"), col("vec_id").as("r_vec"),
         col("cos").as("r_cos"))
     // coalesce to FALSE: a rebuild leg returning fewer rows must fail
@@ -946,13 +949,8 @@ object SimilarityOps {
   def mmrRerank(spark: SparkSession, dir: String, queryId: Long = 0L,
                 k: Int = 10, candK: Int = 50, lam: Double = 0.7): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    val q = e.filter(col("vec_id") === queryId).select(col("embedding").as("q_emb"))
-    val cand = e.filter(col("vec_id") =!= queryId)
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"),
-        round(cosineSimilarity(col("embedding"), col("q_emb")), 4).as("rel"))
-      .orderBy(col("rel").desc, col("vec_id"))
-      .limit(candK)
+    val cand = rerankTopK(e.filter(col("vec_id") =!= queryId), queryVector(e, queryId), candK)
+      .select(col("vec_id"), col("cos").as("rel"))
       .localCheckpoint(false)
     val candIds = cand.select(col("vec_id"))
     // candidate-pair sim matrix from a fresh scan (lineage-safe), all
@@ -965,7 +963,7 @@ object SimilarityOps {
       .select(col("vec_id").as("b"), col("embedding").as("eb"))
     val sims = ea.join(broadcast(eb), col("a") =!= col("b"))
       .select(col("a"), col("b"),
-        round(cosineSimilarity(col("ea"), col("eb")), 4).as("sim"))
+        cosScore(col("ea"), col("eb")).as("sim"))
     // The greedy loop runs DRIVER-SIDE over the collected candidate
     // list and sim matrix — candK and candK² rows of bounded
     // query-time model state (the house IVF-probe/q159 collect rule;
@@ -979,9 +977,15 @@ object SimilarityOps {
     // pick maximizes lam·rel − (1−lam)·msim with the vec_id
     // tie-break, and the display rounding stays Spark's own round()
     // so the output is bit-identical to the unrolled plan.
-    val candLocal = cand.orderBy(col("rel").desc, col("vec_id"))
-      .collect().map(r => (r.getLong(0), r.getDouble(1)))
-    val simLocal = sims.collect()
+    // (rel desc, vec_id asc) on the driver: Double.compare puts NaN
+    // above every number, as Spark's descending order does
+    val candLocal = DriverResults.collectBounded(cand, candK, "MMR candidates")
+      .map(r => (r.getLong(0), r.getDouble(1)))
+      .sortWith { case ((ia, ra), (ib, rb)) =>
+        val c = java.lang.Double.compare(rb, ra)
+        if (c != 0) c < 0 else ia < ib
+      }
+    val simLocal = DriverResults.collectBounded(sims, candK * candK, "MMR candidate similarities")
       .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     val msim = scala.collection.mutable.Map.empty[Long, Double]
     var picks = Vector.empty[(Long, Long, Double, Double)] // rank, id, rel, mmr
@@ -1088,7 +1092,7 @@ object SimilarityOps {
     val cents = lloydCentroids(spark, e, k, iters)
     val scored = e
       .select(col("vec_id"),
-        graft.functions.L2Argmin.l2Scored(col("embedding"), cents).as("scored"))
+        l2Scored(col("embedding"), cents).as("scored"))
       .select(col("vec_id"), col("scored"),
         aggregate(col("scored"),
           struct(lit(Double.MaxValue).as("d2"), lit(-1L).as("cl")),
@@ -1330,7 +1334,7 @@ object SimilarityOps {
     * ascending dim order, the q87/q162 fixed-order fold. */
   private[ops] def lloydAssign(spark: SparkSession, e: DataFrame,
                                cents: Seq[(Long, Array[Double])]): DataFrame = {
-    val best = graft.functions.L2Argmin.l2Argmin(col("embedding"), cents)
+    val best = l2Argmin(col("embedding"), cents)
     e.select(col("vec_id"), col("embedding"),
       best.getField("cl").as("cluster"), best.getField("d2").as("d2"))
   }
@@ -1351,8 +1355,10 @@ object SimilarityOps {
       best.getField("cl").as("cluster"))
   }
 
-  /** The bound on every Lloyd model-state collect: the seed centroids
-    * and each round's cluster statistics are (Σ groups)×k rows. */
+  /** The bound on every centroid-model collect: the Lloyd seed
+    * centroids and each round's cluster statistics ((Σ groups)×k
+    * rows), the label codebook's (label, dim) means and an IVF probe's
+    * list ids. */
   private[graft] val MaxLloydModelRows: Int = 1 << 16
 
   /** Per-(g, cluster) sufficient statistics (g, cl, n, per-dim Σx) of a
@@ -1420,8 +1426,8 @@ object SimilarityOps {
 
   /** q169's (cl, centroid) model: [[lloydCentroidsGrouped]] over one
     * group. */
-  private[ops] def lloydCentroids(spark: SparkSession, e: DataFrame, k: Int,
-                                  iters: Int): Seq[(Long, Array[Double])] =
+  private[graft] def lloydCentroids(spark: SparkSession, e: DataFrame, k: Int,
+                                    iters: Int): Seq[(Long, Array[Double])] =
     lloydCentroidsGrouped(spark, oneGroup(e), k, iters).map { case (_, cl, c) => (cl, c) }
 
   /** [[clusterStats]] of a (vec_id, embedding) frame against a
@@ -1513,7 +1519,8 @@ object SimilarityOps {
                                  dir: String): Seq[(Long, Long, Seq[Double])] = {
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val dim = Tables.embeddingDim(spark, dir)
-    val total = e.agg(max(col("vec_id"))).head().getLong(0) + 1L
+    val total = DriverResults.collectBounded(e.agg(max(col("vec_id"))), 1,
+      "q210 max vec_id").head.getLong(0) + 1L
     val third = total / 3
     def slice(lo: Long, hi: Long): DataFrame =
       e.filter(col("vec_id") >= lo && col("vec_id") < hi)
@@ -1536,37 +1543,21 @@ object SimilarityOps {
     * model, the index AND the serve ([[ivfTopKGated]], q46, gates the
     * same serve on recall instead).
     *
-    * Probe selection is IN-PLAN: the query row's scored (d2, cl)
-    * array is array_sort'ed and sliced to nprobe (no driver collect);
-    * candidates gate on array_contains against that one broadcast
-    * row. Scale: training is q169 (per-round bounded model state);
-    * assignment is the narrow broadcast-model map; the serve reads
-    * candidates ∈ probed lists — nprobe/k of the corpus, the IVF
-    * contract — then TakeOrderedAndProject. Approximate BY CONTRACT:
-    * a neighbor assigned outside the probed lists is unseen. */
+    * The serve is [[ivfServe]], the one q87 runs over its label
+    * codebook: the query's nprobe nearest lists are selected in-plan
+    * from its sorted L2Scored row (no driver collect), and candidates
+    * gate on array_contains against that one broadcast row.
+    * Scale: training is q169 (per-round bounded model state);
+    * assignment is the narrow reference-object model map; the serve
+    * reads candidates ∈ probed lists — nprobe/k of the corpus, the IVF
+    * contract — then TakeOrderedAndProject. */
   def ivfLearnedTopK(spark: SparkSession, dir: String, queryId: Long = 0L,
                      k: Int = 10, nprobe: Int = 2, kClusters: Int = 8,
                      iters: Int = 3): DataFrame = {
-    import spark.implicits._
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"), col("embedding"))
-    val cents = lloydCentroids(spark,
-      e.select(col("vec_id"), col("embedding")), kClusters, iters)
-    val probes = e.filter(col("vec_id") === queryId)
-      .select(col("embedding").as("q_emb"),
-        transform(slice(array_sort(
-            graft.functions.L2Argmin.l2Scored(col("embedding"), cents)), 1, nprobe),
-          s => s.getField("cl")).as("probe_cls"))
-    e.filter(col("vec_id") =!= queryId)
-      .select(col("vec_id"), col("label"), col("embedding"),
-        graft.functions.L2Argmin.l2Argmin(col("embedding"), cents)
-          .getField("cl").as("cluster"))
-      .crossJoin(broadcast(probes))
-      .filter(array_contains(col("probe_cls"), col("cluster")))
-      .withColumn("cos", round(cosineSimilarity(col("embedding"), col("q_emb")), 4))
-      .select(col("vec_id"), col("label").cast("int").as("label"), col("cos"))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(k)
+    ivfServe(e, lloydCentroids(spark, e.select(col("vec_id"), col("embedding")),
+      kClusters, iters), queryId, k, nprobe)
   }
 
   /** q46: the q100/q124 envelope pattern applied to ANN recall. The
@@ -1601,7 +1592,7 @@ object SimilarityOps {
     exact.crossJoin(broadcast(recall))
       .select(col("vec_id"), col("label"), col("cos"),
         (col("recall_k") >= recallFloor).as("ivf_recall_ok"))
-      .orderBy(col("cos").desc, col("vec_id"))
+      .orderBy(cosOrder: _*)
   }
 
   /** q234: IVF-PQ — THE production large-scale ANN index (Jégou 2011
@@ -1649,7 +1640,7 @@ object SimilarityOps {
       .toDF("cluster", "cent")
     val res = e
       .select(col("vec_id"), col("embedding"),
-        graft.functions.L2Argmin.l2Argmin(col("embedding"), coarse)
+        l2Argmin(col("embedding"), coarse)
           .getField("cl").as("cluster"))
       .join(broadcast(coarseTbl), Seq("cluster"))
       .select(col("vec_id"), col("cluster"),
@@ -1671,11 +1662,8 @@ object SimilarityOps {
     // the query's probes: the driver-side coarse model scored in-plan,
     // as q184 selects them; each candidate's cell centroid (for the
     // query residual) joins in from the k-row coarse table
-    val probes = e.filter(col("vec_id") === queryId)
-      .select(col("embedding").as("q_emb"),
-        transform(slice(array_sort(
-            graft.functions.L2Argmin.l2Scored(col("embedding"), coarse)), 1, nprobe),
-          s => s.getField("cl")).as("probe_cls"))
+    val probes = queryVector(e, queryId)
+      .select(col("q_emb"), probeLists(col("q_emb"), coarse, nprobe).as("probe_cls"))
     val cand = res.crossJoin(broadcast(probes))
       .filter(array_contains(col("probe_cls"), col("cluster")) &&
         col("vec_id") =!= queryId)
@@ -1700,8 +1688,7 @@ object SimilarityOps {
       .select(col("vec_id") +: col("cluster") +: codeCols :+ adc.as("adc"): _*)
       .orderBy(col("adc"), col("vec_id"))
       .limit(shortlist)
-    val qFull = e.filter(col("vec_id") === queryId)
-      .select(col("embedding").as("qe"))
+    val qFull = queryVector(e, queryId).select(col("q_emb").as("qe"))
     val exact = aggregate(
       zip_with(col("embedding"), col("qe"),
         (x, w) => (x.cast("double") - w.cast("double")) * (x.cast("double") - w.cast("double"))),
@@ -1743,17 +1730,8 @@ object SimilarityOps {
     val e = Tables.embeddings(spark, dir)
     val dim = Tables.embeddingDim(spark, dir)
     val scale = 1.0 / math.sqrt(k.toDouble)
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val signs: Array[Array[Double]] = Array.tabulate(k, dim) { (j, i) =>
-      val d = md.digest(s"rp${j}_$i".getBytes("UTF-8"))
-      if (((d(0) >> 4) & 0xF) < 8) 1.0 else -1.0
-    }
-    def proj(j: Int): Column =
-      aggregate(
-        zip_with(col("embedding"),
-          array(signs(j).toIndexedSeq.map(v => lit(v)): _*),
-          (x, w) => x.cast("double") * w),
-        lit(0.0d), (a, v) => a + v) * lit(scale)
+    val signs = md5Signs(k, dim, (j, i) => s"rp${j}_$i")
+    def proj(j: Int): Column = planeDot(col("embedding"), signs(j)) * lit(scale)
     // no orderBy: a global sort is the one Exchange this narrow map
     // would otherwise have (the correctness gate sorts rows itself —
     // the q150 convention)
@@ -1853,7 +1831,7 @@ object SimilarityOps {
       .join(withC.select(col("clabel"), col("vec_id").as("doc_b"),
         col("embedding").as("eb")), Seq("clabel"))
       .filter(col("doc_a") < col("doc_b"))
-      .filter(round(cosineSimilarity(col("ea"), col("eb")), 4) >= threshold)
+      .filter(cosScore(col("ea"), col("eb")) >= threshold)
       .select(col("clabel").as("grp"), col("doc_a"), col("doc_b"))
     // pairs are generated WITHIN clusters only, so components cannot
     // span clusters — the containment [[DedupOps.boundedComponents]]
@@ -1925,8 +1903,8 @@ object SimilarityOps {
       (0 until dim).map(j =>
         sum(col("qi") * element_at(col("q"), j + 1)).as(s"c$j"))
     val grid = flat.groupBy(col("i")).agg(aggCols.head, aggCols.tail: _*)
-    // d rows × d+2 columns: model state — the one permitted collect
-    val rows = grid.orderBy(col("i")).collect()
+    // d rows × d+2 columns: model state, ordered by i on the driver
+    val rows = DriverResults.collectBounded(grid, dim, "PCA scatter rows").sortBy(_.getInt(0))
     val n = rows.head.getAs[Long]("n")
     val sq = rows.map(_.getAs[Long]("sq"))
     // Overflow headroom (the q247 convention): cell magnitudes scale
@@ -2045,7 +2023,7 @@ object SimilarityOps {
     val b = admitted.select(col("label"), col("vec_id").as("vec_b"), col("embedding").as("emb_b"))
     val und = a.join(b, Seq("label"))
       .filter(col("vec_a") < col("vec_b"))
-      .filter(round(cosineSimilarity(col("emb_a"), col("emb_b")), 4) >= threshold)
+      .filter(cosScore(col("emb_a"), col("emb_b")) >= threshold)
       .select(col("label").cast("long").as("grp"), col("vec_a"), col("vec_b"))
       .localCheckpoint(false) // ε-edges feed degree, CC, and border
     val sym = und.select(col("vec_a").as("v"), col("vec_b").as("nb"))

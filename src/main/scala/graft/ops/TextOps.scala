@@ -2204,9 +2204,9 @@ object TextOps {
     val learned = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     val snaps = scala.collection.mutable.Map.empty[Int, DataFrame]
     for (i <- 1 to merges) {
-      val top = bpePairCounts(state)
+      val top = DriverResults.collectBounded(bpePairCounts(state)
         .orderBy(col("pc").desc, col("l").asc, col("r").asc)
-        .limit(1).collect()
+        .limit(1), 1, "BPE top merge pair")
       require(top.nonEmpty,
         s"BPE vocabulary exhausted after ${i - 1} of $merges merges")
       val (l, r, pc) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))

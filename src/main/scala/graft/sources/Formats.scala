@@ -211,13 +211,13 @@ object Formats {
     val affected = partValues(changes, "mergeIntoPartitioned change partitions")
     val layout = read(spark, root, format)
     if (validateKeyPartition) {
-      val strays = layout
+      val strays = graft.ops.DriverResults.collectBounded(layout
         .join(broadcast(changes.select(col(partCol)).distinct()),
           Seq(partCol), "left_anti")
         .join(broadcast(changes.select(col(key)).distinct()),
           Seq(key), "left_semi")
         .select(col(key), col(partCol))
-        .limit(5).collect()
+        .limit(5), 5, "mergeIntoPartitioned stray keys")
       if (strays.nonEmpty) throw new IllegalStateException(
         "mergeIntoPartitioned: change keys exist in partitions the " +
           "batch does not touch (a key moving partitions needs an " +

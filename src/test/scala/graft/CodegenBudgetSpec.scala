@@ -18,7 +18,11 @@ import graft.pipeline.HydroPipeline
   *
   * Each plan runs over 200 synthetic sites with
   * `spark.sql.codegen.fallback=false`, so a stage that does not compile
-  * fails here rather than running interpreted. */
+  * fails here rather than running interpreted.
+  *
+  * The IVF serves hold no lambda ([[CodegenBudget.fallbacks]]): every
+  * higher-order function runs interpreted and keeps its operator out
+  * of whole-stage codegen. */
 class CodegenBudgetSpec extends AnyFunSuite {
   import TestSpark.spark
 
@@ -54,5 +58,17 @@ class CodegenBudgetSpec extends AnyFunSuite {
 
   test("byVariable stays under the method limit") {
     withinBudget("byVariable", HydroPipeline.byVariable(features, HydroPipeline.StreamFlowCode))
+  }
+
+  test("the IVF serves and their gate hold no higher-order function (q46, q87, q101, q107, q180, q184)") {
+    for (q <- Seq("q46_sim_ivf", "q87_ivf_label", "q101_ivf_bucketed",
+        "q107_embedding_admission", "q180_ivf_incremental", "q184_ivf_learned")) {
+      val lambdas = CodegenBudget.fallbacks(spark)(SparkEntry.queries(q)(spark, TestSpark.sf))
+        .filter(_.higherOrder)
+      assert(lambdas.isEmpty, s"$q holds ${lambdas.mkString(", ")}")
+    }
+    // non-vacuity: q181's margin sort is still a lambda
+    assert(CodegenBudget.fallbacks(spark)(SparkEntry.queries("q181_multiprobe_lsh")(spark, TestSpark.sf))
+      .exists(f => f.higherOrder && f.cls == "ArraySort"))
   }
 }

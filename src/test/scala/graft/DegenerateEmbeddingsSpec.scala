@@ -10,7 +10,8 @@ import graft.ops.SimilarityOps
   * defined result or fail with a named IllegalArgumentException, never
   * a bare `.head` error or NullPointerException. Each table is derived
   * from sf0.001's and written to a temp dir: no rows, every embedding
-  * null, and one row. */
+  * null, one row, and every label null (a null label cannot be an
+  * inverted-list id of the label-codebook IVF). */
 class DegenerateEmbeddingsSpec extends AnyFunSuite {
   import TestSpark.{spark, sf}
 
@@ -24,6 +25,8 @@ class DegenerateEmbeddingsSpec extends AnyFunSuite {
   private lazy val allNullDir = tableDir("all-null")(
     _.withColumn("embedding", when(lit(false), col("embedding"))))
   private lazy val oneRowDir = tableDir("one-row")(_.orderBy(col("vec_id")).limit(1))
+  private lazy val nullLabelDir = tableDir("null-labels")(
+    _.withColumn("label", when(lit(false), col("label"))))
 
   test("q224 PQ rerank on an empty embeddings table fails naming the missing dimension") {
     val e = intercept[IllegalArgumentException](SimilarityOps.pqRerank(spark, emptyDir))
@@ -70,5 +73,48 @@ class DegenerateEmbeddingsSpec extends AnyFunSuite {
   test("a one-row embeddings table: learned IVF (q46, q184) returns no rows") {
     for ((q, _) <- learnedIvf)
       assert(SparkEntry.queries(q)(spark, oneRowDir).count() == 0, q)
+  }
+
+  /** The single-query retrieval family, through the registry. */
+  private val retrieval = Seq("q29_sim_topk", "q30_sim_ann_lsh", "q87_ivf_label",
+    "q101_ivf_bucketed", "q107_embedding_admission", "q180_ivf_incremental",
+    "q181_multiprobe_lsh", "q184_ivf_learned")
+
+  private val noDim = "no non-null embedding to probe a dimension from"
+  private val nullLabel = "a null label cannot be an inverted-list id"
+
+  /** Each of [[retrieval]] on the table in `dir` gives the row count
+    * `Right(n)` or fails with an IllegalArgumentException whose message
+    * contains `Left(s)`. */
+  private def expect(dir: String, want: Seq[Either[String, Int]]): Unit =
+    for ((q, w) <- retrieval.zip(want)) {
+      val got = try Right(SparkEntry.queries(q)(spark, dir).collect().length)
+        catch { case e: IllegalArgumentException => Left(e.getMessage) }
+      (got, w) match {
+        case (Left(m), Left(s)) => assert(m.contains(s), s"$q: $m")
+        case _ => assert(got == w, q)
+      }
+    }
+
+  test("retrieval (q29, q30, q87, q101, q107, q180, q181, q184) on an empty embeddings table") {
+    expect(emptyDir, Seq(Right(0), Left(noDim), Right(0), Right(0), Right(0), Right(0),
+      Left(noDim), Left("no embedding row has vec_id < 8")))
+  }
+
+  test("retrieval on an all-null embeddings table: no list to probe, and admission admits every vector") {
+    expect(allNullDir, Seq(Right(10), Left(noDim), Right(0), Right(0), Right(100), Right(0),
+      Left(noDim), Left("has a null embedding")))
+    assert(SparkEntry.queries("q107_embedding_admission")(spark, allNullDir)
+      .filter(col("is_dup") || col("best_match").isNotNull).count() == 0)
+  }
+
+  test("retrieval on a one-row embeddings table returns no rows") {
+    expect(oneRowDir, Seq.fill(retrieval.size)(Right(0)))
+  }
+
+  test("retrieval with every label null: the label-codebook IVF fails naming the null label") {
+    expect(nullLabelDir, Seq(Right(10), Right(10), Left(nullLabel), Left(nullLabel),
+      Left(nullLabel), Left(nullLabel), Right(10), Right(10)))
+    assert(SparkEntry.queries("q46_sim_ivf")(spark, nullLabelDir).count() == 10)
   }
 }

@@ -130,9 +130,9 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("ivf: assignment is a narrow broadcast argmin — no window, no exchange carries embeddings") {
-    // the codebook is one broadcast row; per-vector centroid argmin is
-    // an array_sort over that row's array — the corpus must NOT be
-    // replicated ×labels through a row_number window exchange
+    // the codebook is driver-side model state; per-vector centroid
+    // argmin is the codegen'd L2Argmin kernel over it — the corpus must
+    // NOT be replicated ×labels through a row_number window exchange
     val p = plan(SimilarityOps.ivfLabelTopK(spark, sf))
     assert(!p.contains("Window"), "argmin must not be a row_number window")
     assert(!p.linesIterator.exists(l =>

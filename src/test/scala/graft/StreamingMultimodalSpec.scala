@@ -192,7 +192,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     val e = Tables.embeddings(spark, sf)
     val isBatch = pmod($"vec_id", lit(5)) === 4
     SimilarityOps.writeIvfIndexOf(e.filter(!isBatch), "ivf_adm_stream", buckets = 8)
-    val codebook = SimilarityOps.ivfCodebook(e.filter(!isBatch)).cache()
+    val codebook = SimilarityOps.ivfCodebook(e.filter(!isBatch))
     val arriving = e.filter(isBatch)
       .select($"vec_id", $"embedding").as[(Long, Array[Float])].collect()
     val collected = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
@@ -251,7 +251,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     // b1 vector is never appended), so pick it with a pure admission
     // pre-pass against the initial index — same function, no state.
     val (b1, b2base) = arriving.splitAt(arriving.length / 2)
-    val codebook = SimilarityOps.ivfCodebook(standing).cache()
+    val codebook = SimilarityOps.ivfCodebook(standing)
     spark.sql("DROP TABLE IF EXISTS ivf_ing_pre")
     SimilarityOps.writeIvfIndexOf(standing, "ivf_ing_pre", buckets = 8)
     val preAdmitted = SimilarityOps.embeddingAdmissionOf(
